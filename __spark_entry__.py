@@ -87,7 +87,10 @@ def q_stats_cube_events(spark, sf_dir):
     """The engine's fused counts-cube stats pass (plans/fused.py) driven
     over an events-derived pages-shaped table: ONE scan yields doc counts,
     null rates, categorical fractions, exact inverse-CDF length quantiles;
-    the salted key profile yields exact per-window distinct counts."""
+    the salted key profile yields exact per-window distinct counts. The
+    series are derived by the engine's grouped drift pass
+    (drift.fused_drift), whose SR scores are dropped here."""
+    from anomalydetector_spark.drift import fused_drift
     from anomalydetector_spark.plans import fused
 
     ev = _t(spark, sf_dir, "events").select(
@@ -99,8 +102,8 @@ def q_stats_cube_events(spark, sf_dir):
     keyed = fused.keyed_input(ev, "1 day", None)
     scans = fused.build_fused_scans(keyed, unique_key="url")
     langs = ("click", "error", "purchase", "signup", "view")
-    series = fused.stats_from_cube(scans.cube, langs=langs).unionByName(
-        fused.distinct_series_from_profile(scans.profile)
+    series = fused_drift(
+        scans.cube, scans.profile, "1 day", langs, shape_drift=False
     )
     return series.select(
         "stat_name", "window_start", _r6(F.col("value")).alias("value")

@@ -204,7 +204,7 @@ def domains_dim(spark: SparkSession) -> DataFrame:
             "domain"
         )
     )
-    hot = spark.createDataFrame([(HOT_DOMAIN,)], "domain string")
+    hot = spark.range(0, 1, 1, 1).select(F.lit(HOT_DOMAIN).alias("domain"))
     return cold.unionByName(hot)
 
 

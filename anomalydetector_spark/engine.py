@@ -5,12 +5,17 @@ This is the engine analog of the reference's batch pipeline
 sink), restructured for Spark:
 
 * the all-or-nothing ``raise`` becomes per-partition verdict rows,
-* the per-column Python loop becomes one long-format stats pass + one
-  ``applyInPandas`` drift stage,
+* the per-column Python loop becomes ONE grouped pandas drift pass per
+  partition (drift.fused_drift): the persisted cube, cogrouped with the
+  profile's per-window distinct-key counts, yields every stat series
+  (scalars, lang/length shape, distinct urls) and their SR scores in one
+  worker call — one group is one partition's cube slice, windows ×
+  distinct text lengths × langs rows, never input-sized,
 * the whole verdict suite is compiled onto TWO shared scans of the input
   (plans/fused.py): a counts cube and a salted url profile — every
   verdict frame and every stat series is a rollup of one of them, so
-  adding a check never adds a scan.
+  adding a check never adds a scan; the verdict path itself is JVM-only
+  (no Python worker runs for any verdict action).
 
 The runner itself never calls ``.collect()`` on data-sized frames — only
 verdict/stat frames (bounded by partitions × checks) are ever gathered.
@@ -24,7 +29,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.drift import drift_verdicts, score_drift
+from anomalydetector_spark.drift import drift_verdicts, fused_drift
 from anomalydetector_spark.kernel.sr import SrParams
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors as E
@@ -484,85 +489,22 @@ def run_validation(
             un.violations.select("check_name", "partition_key", cfg.unique_key)
         )
 
-    stat_series = fused.stats_from_cube(cube, langs=cfg.langs).unionByName(
-        fused.distinct_series_from_profile(profile)
+    # every drift stat series (scalars, lang/length shape, distinct keys)
+    # is derived from the persisted cube + profile and SR-scored in ONE
+    # grouped pandas pass per partition; stat_series is the (partition,
+    # stat, window, value) projection of the persisted scored frame and
+    # reads its cache (a second cache of those columns only adds a job)
+    scored = fused_drift(
+        cube,
+        profile,
+        cfg.window_duration,
+        cfg.langs,
+        cfg.sr,
+        shape_drift=cfg.shape_drift,
+    ).persist()
+    stat_series = scored.select(
+        "partition_key", "stat_name", "window_start", "value"
     )
-    if cfg.shape_drift:
-        from anomalydetector_spark.operators.divergence import (
-            divergence_from_window_counts,
-        )
-
-        lang_counts = (
-            cube.filter(F.col("window_start").isNotNull())
-            .groupBy(
-                "partition_key",
-                F.col("window_start").alias("w_start"),
-                F.coalesce("lang", F.lit("<null>")).alias("cat"),
-            )
-            .agg(F.sum("_n").alias("n"))
-            .withColumn(
-                "w_end",
-                F.col("w_start") + F.expr(f"INTERVAL {cfg.window_duration}"),
-            )
-        )
-        shape_series = divergence_from_window_counts(
-            lang_counts, part_cols=["partition_key"]
-        ).select(
-            "partition_key",
-            F.lit("lang_js_divergence").alias("stat_name"),
-            "window_start",
-            F.col("js_divergence").alias("value"),
-        )
-        stat_series = stat_series.unionByName(shape_series)
-
-        # the length-histogram stats ride the same cube (the cube is
-        # keyed by exact _len, so log2 binning is a reaggregation of
-        # the tiny frame, not a scan). log2 bins: heavy-tailed lengths
-        # get stable resolution at every magnitude, no (lo, hi) tuning.
-        len_counts = (
-            cube.filter(F.col("window_start").isNotNull())
-            .groupBy(
-                "partition_key",
-                F.col("window_start").alias("w_start"),
-                F.least(
-                    F.floor(
-                        F.log2(F.coalesce(F.col("_len"), F.lit(0)) + 1)
-                    ),
-                    F.lit(31),
-                )
-                .cast("int")
-                .alias("bin"),
-            )
-            .agg(F.sum("_n").alias("n"))
-            .withColumn(
-                "w_end",
-                F.col("w_start") + F.expr(f"INTERVAL {cfg.window_duration}"),
-            )
-        )
-        # EMD + PSI of the same length histogram in ONE fused alignment
-        # pass (full_histogram_drift — value-identical to the separate
-        # operators, test-pinned; fusing matters because each tiny
-        # series otherwise costs ~1s of pure stage overhead on the 1M
-        # flagship). PSI is the complementary lens to EMD: EMD sees
-        # mass TRAVEL distance, PSI sees log-ratio reweighting — a swap
-        # between adjacent bins moves PSI more than EMD, a long-haul
-        # shift the reverse. Same tiny len_counts frame either way:
-        # zero extra input scans.
-        from anomalydetector_spark.operators.divergence import (
-            full_histogram_drift,
-        )
-
-        len_series = full_histogram_drift(
-            len_counts, part_cols=["partition_key"]
-        ).selectExpr(
-            "partition_key",
-            "window_start",
-            "stack(2, 'len_hist_emd', emd, 'len_hist_psi', psi) "
-            "AS (stat_name, value)",
-        ).select("partition_key", "stat_name", "window_start", "value")
-        stat_series = stat_series.unionByName(len_series)
-    stat_series = stat_series.persist()
-    scored = score_drift(stat_series, cfg.sr).persist()
     dverdicts = drift_verdicts(scored)
 
     cusum_scored = cusum_summary = None
@@ -626,6 +568,19 @@ def run_validation(
             divergence_attribution,
         )
 
+        lang_counts = (
+            cube.filter(F.col("window_start").isNotNull())
+            .groupBy(
+                "partition_key",
+                F.col("window_start").alias("w_start"),
+                F.coalesce("lang", F.lit("<null>")).alias("cat"),
+            )
+            .agg(F.sum("_n").alias("n"))
+            .withColumn(
+                "w_end",
+                F.col("w_start") + F.expr(f"INTERVAL {cfg.window_duration}"),
+            )
+        )
         flagged = scored.filter(
             (F.col("stat_name") == "lang_js_divergence")
             & F.col("is_anomaly")

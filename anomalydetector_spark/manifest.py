@@ -18,11 +18,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = (
-    "snapshot_id string, partition_spec string, stats_digest string, "
-    "check_name string, verdict string, metrics map<string,double>, "
-    "completed_at timestamp"
+_MANIFEST_COLUMNS = (
+    ("snapshot_id", "string"),
+    ("partition_spec", "string"),
+    ("stats_digest", "string"),
+    ("check_name", "string"),
+    ("verdict", "string"),
+    ("metrics", "map<string,double>"),
+    ("completed_at", "timestamp"),
 )
+MANIFEST_SCHEMA = ", ".join(f"{n} {t}" for n, t in _MANIFEST_COLUMNS)
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -31,7 +36,10 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
         f.endswith(".parquet") for f in os.listdir(path)
     ):
         return spark.read.parquet(path)
-    return spark.createDataFrame([], MANIFEST_SCHEMA)
+    # typed empty projection of a JVM range (not a Python RDD)
+    return spark.range(0, 0, 1, 1).select(
+        *[F.lit(None).cast(t).alias(n) for n, t in _MANIFEST_COLUMNS]
+    )
 
 
 def completed_keys(

@@ -206,25 +206,27 @@ def extract_video_metadata(media: DataFrame) -> DataFrame:
     allowlists, and resolution floors all run on this frame before any
     (codec-library) frame decode is paid for."""
 
+    fields = ("duration_ms", "width", "height", "codec", "n_tracks")
+
+    def meta(p) -> tuple:
+        try:
+            m = codecs.parse_mp4_metadata(bytes(p) if p is not None else None)
+        except ValueError:
+            return (None,) * len(fields)
+        return tuple(m[f] for f in fields)
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    m = codecs.parse_mp4_metadata(
-                        bytes(p) if p is not None else None
-                    )
-                    rows.append(
-                        (int(mid), m["duration_ms"], m["width"],
-                         m["height"], m["codec"], m["n_tracks"])
-                    )
-                except ValueError:
-                    rows.append((int(mid), None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "duration_ms", "width", "height",
-                         "codec", "n_tracks"],
-            )
+            # a NULL media_id arrives as NaN: it yields a NULL-id,
+            # NULL-metadata row (int(NaN) would raise and kill the task)
+            ids = [None if pd.isna(mid) else int(mid) for mid in pdf["media_id"]]
+            rows = [
+                meta(p) if mid is not None else (None,) * len(fields)
+                for mid, p in zip(ids, pdf["payload"])
+            ]
+            out = pd.DataFrame(rows, columns=list(fields))
+            out.insert(0, "media_id", pd.array(ids, dtype="Int64"))
+            yield out
 
     return media.select("media_id", "payload").mapInPandas(
         run, schema=VIDEO_META_SCHEMA

@@ -10,9 +10,7 @@ scans out.
 from anomalydetector_spark.plans.fused import (  # noqa: F401
     FusedScans,
     build_fused_scans,
-    distinct_series_from_profile,
     dup_keys_from_profile,
     partition_rollup,
-    stats_from_cube,
     url_profile,
 )

@@ -96,3 +96,46 @@ def assert_global_windows_bounded(df: DataFrame) -> None:
             "global-mode Window over a potentially data-sized frame "
             "(no Aggregate/LocalTableScan/limit beneath): " + "; ".join(bad)
         )
+
+
+# single-child plumbing nodes a persisted frame's own cache scan may sit
+# under
+_WRAPPERS = ("InputAdapter", "WholeStageCodegenExec", "ColumnarToRowExec")
+
+GROUPED_PANDAS_NODES = ("FlatMapGroupsInPandasExec", "FlatMapCoGroupsInPandasExec")
+
+
+def plan_node_names(df: DataFrame, cached_inputs: bool = True) -> list[str]:
+    """Class names of every physical node behind ``df``, adaptive plans
+    read through their initial (pre-stage) plan. A persisted ``df`` is
+    walked through its own cache; the other cached frames it reads are
+    walked too unless ``cached_inputs=False``, which confines the walk to
+    the work ``df`` adds on top of them."""
+    names: list[str] = []
+
+    def walk(node, own: bool) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            walk(node.inputPlan(), own)
+            return
+        names.append(name)
+        if name == "InMemoryTableScanExec":
+            if own or cached_inputs:
+                walk(node.relation().cachedPlan(), False)
+            return
+        for c in _children(node):
+            walk(c, own and name in _WRAPPERS)
+
+    walk(df._jdf.queryExecution().executedPlan(), True)
+    return names
+
+
+def python_or_rdd_nodes(df: DataFrame) -> list[str]:
+    """Nodes behind ``df`` (cached inputs included) that start Python
+    workers or replay a driver-side RDD: a frame built only from scans,
+    aggregates and literals has none."""
+    return [
+        n
+        for n in plan_node_names(df)
+        if "Python" in n or "Pandas" in n or "RDDScan" in n
+    ]

@@ -17,7 +17,10 @@ suite to its information-theoretic minimum:
   length quantiles via inverse-CDF over the length histogram. The cube is
   windows × partitions × distinct-lengths × langs rows — O(thousands)
   regardless of input size — and aggregates map-side before its one
-  shuffle (partial hash-agg in whole-stage codegen).
+  shuffle (partial hash-agg in whole-stage codegen). The per-window
+  series are derived from it (with the profile's distinct-key counts,
+  :func:`drift_inputs`) inside drift.fused_drift's one grouped pandas
+  pass per partition.
 
 * **Scan B — the url profile**: the salted two-phase uniqueness
   aggregation (north rule) re-used three ways. Phase 1 groups by
@@ -39,7 +42,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
@@ -189,72 +192,6 @@ def partition_rollup(cube: DataFrame) -> DataFrame:
     )
 
 
-def stats_from_cube(
-    cube: DataFrame, langs: tuple[str, ...] = DEFAULT_LANGS
-) -> DataFrame:
-    """Long-format stat series from the cube: doc_count, null_rate,
-    lang_frac_<l>, len_p50, len_p95 (exact inverse-CDF quantiles).
-
-    Null-timestamp rows carry no window and are excluded from series
-    (they are surfaced by the not-null verdict instead).
-    """
-    c = cube.filter(F.col("window_start").isNotNull())
-
-    aggs = [
-        F.sum("_n").cast("double").alias("doc_count"),
-        (
-            F.sum(F.when(F.col("_len").isNull(), F.col("_n")).otherwise(0))
-            / F.sum("_n")
-        ).alias("null_rate"),
-    ]
-    for lang in langs:
-        aggs.append(
-            (
-                F.sum(F.when(F.col("lang") == lang, F.col("_n")).otherwise(0))
-                / F.sum("_n")
-            ).alias(f"lang_frac_{lang}")
-        )
-    wide = c.groupBy("window_start", "partition_key").agg(*aggs)
-
-    # exact quantiles from the per-window length histogram (inverse CDF);
-    # both phases are window/agg over the tiny cube — no input re-scan
-    hist = (
-        c.filter(F.col("_len").isNotNull())
-        .groupBy("window_start", "partition_key", "_len")
-        .agg(F.sum("_n").alias("_hn"))
-    )
-    cum_w = (
-        Window.partitionBy("window_start", "partition_key")
-        .orderBy("_len")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    tot_w = Window.partitionBy("window_start", "partition_key")
-    cum = hist.withColumn("_cum", F.sum("_hn").over(cum_w)).withColumn(
-        "_tot", F.sum("_hn").over(tot_w)
-    )
-    quants = cum.groupBy("window_start", "partition_key").agg(
-        F.min(F.when(F.col("_cum") >= F.ceil(F.col("_tot") * 0.5), F.col("_len")))
-        .cast("double")
-        .alias("len_p50"),
-        F.min(F.when(F.col("_cum") >= F.ceil(F.col("_tot") * 0.95), F.col("_len")))
-        .cast("double")
-        .alias("len_p95"),
-    )
-
-    wide = wide.join(quants, ["window_start", "partition_key"], "left").fillna(
-        {"len_p50": 0.0, "len_p95": 0.0}
-    )
-    stat_cols = [
-        col for col in wide.columns if col not in ("partition_key", "window_start")
-    ]
-    return wide.unpivot(
-        ids=["partition_key", "window_start"],
-        values=stat_cols,
-        variableColumnName="stat_name",
-        valueColumnName="value",
-    ).select("partition_key", "stat_name", "window_start", "value")
-
-
 def profile_key_col(col: Column) -> Column:
     """The profile's shuffle key: 16-byte md5 of the key value.
 
@@ -330,20 +267,62 @@ def per_partition_dup_counts(profile: DataFrame) -> DataFrame:
     )
 
 
-def distinct_series_from_profile(profile: DataFrame) -> DataFrame:
-    """EXACT per-window distinct-key counts as a ``distinct_url`` stat
-    series (one profile row per distinct key per window)."""
+# log2 text-length bins for the length-histogram drift stats: bin
+# ``min(floor(log2(len + 1)), 31)``, null text in bin 0 — heavy-tailed
+# lengths get stable resolution at every magnitude, no (lo, hi) tuning
+LEN_BINS = 32
+
+
+def len_log2_bin(length: Column) -> Column:
+    """The length-histogram bin of a text length, computed by Spark so the
+    bin edges follow Spark's ``log2`` (not numpy's)."""
     return (
-        profile.filter(F.col("window_start").isNotNull())
-        .groupBy("partition_key", "window_start")
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
-        .select(
-            "partition_key",
-            F.lit("distinct_url").alias("stat_name"),
-            "window_start",
-            "value",
+        F.least(
+            F.floor(F.log2(F.coalesce(length, F.lit(0)) + 1)),
+            F.lit(LEN_BINS - 1),
         )
+        .cast("int")
     )
+
+
+def drift_inputs(
+    cube: DataFrame, profile: DataFrame, len_bins: bool = True
+) -> tuple[DataFrame, DataFrame]:
+    """The two tiny frames every drift stat series derives from.
+
+    * the cube slice ``(partition_key, window_start, _w_us, _len, lang,
+      _n[, _bin])`` — windowed rows only (null-timestamp rows carry no
+      window; the not-null verdict surfaces them), pruned to the columns
+      the series need; ``_w_us`` is the window start in epoch
+      microseconds (window pairs step in epoch time: pandas sees
+      session-local wall clocks, which skip or repeat an hour at a DST
+      switch), ``_bin`` is :func:`len_log2_bin` of ``_len``;
+    * ``(partition_key, window_start, _keys)`` — EXACT per-window
+      distinct-key counts (one profile row per distinct key per window),
+      the ``distinct_url`` series.
+    """
+    cols = [
+        "partition_key",
+        "window_start",
+        F.unix_micros("window_start").alias("_w_us"),
+        "_len",
+        "lang",
+        "_n",
+    ]
+    if len_bins:
+        cols.append(len_log2_bin(F.col("_len")).alias("_bin"))
+    cube_slice = cube.filter(F.col("window_start").isNotNull()).select(*cols)
+    # both frames descend from one keyed input: re-alias the grouping
+    # columns so the cogroup's key attributes stay unambiguous
+    keys = (
+        profile.filter(F.col("window_start").isNotNull())
+        .groupBy(
+            F.col("partition_key").alias("partition_key"),
+            F.col("window_start").alias("window_start"),
+        )
+        .agg(F.count(F.lit(1)).alias("_keys"))
+    )
+    return cube_slice, keys
 
 
 def seeded_rollup(roll: DataFrame) -> DataFrame:
@@ -352,11 +331,13 @@ def seeded_rollup(roll: DataFrame) -> DataFrame:
     failure the reference contractually raises on empty input
     (invoker.py:43-44 → NOT_ENOUGH_POINTS). The zero seed row survives
     the anti-join only when the rollup is empty."""
-    spark = roll.sparkSession
+    key, *counters = roll.schema.fields
     # zero-fill every non-key column so the seed tracks whatever counters
-    # the rollup carries (incl. per-suite `_assert_*` columns)
-    seed = spark.createDataFrame(
-        [tuple(["global"] + [0] * (len(roll.columns) - 1))], roll.schema
+    # the rollup carries (incl. per-suite `_assert_*` columns); a literal
+    # projection of a one-row JVM range, so no Python RDD joins the plan
+    seed = roll.sparkSession.range(0, 1, 1, 1).select(
+        F.lit("global").cast(key.dataType).alias(key.name),
+        *[F.lit(0).cast(f.dataType).alias(f.name) for f in counters],
     ).join(
         roll.select(F.lit(1).alias("_any")).limit(1), F.lit(True), "left_anti"
     )

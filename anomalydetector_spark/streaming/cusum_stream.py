@@ -53,6 +53,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from anomalydetector_spark.kernel.window_drift import (
+    half_up_micro as _half_up_micro,
+)
 from anomalydetector_spark.streaming.pairs import (
     ORDERED_NONE as _NONE,
     duration_us as _duration_us,
@@ -82,15 +85,6 @@ CUSUM_SCHEMA = (
     "alarm_pos boolean, alarm_neg boolean, alarm boolean, "
     "cp_pos timestamp, cp_neg timestamp"
 )
-
-
-
-def _half_up_micro(x: float) -> int:
-    """Spark ``round(double, 0)`` semantics (shortest repr → BigDecimal
-    HALF_UP) — required for bit-parity with the batch ``F.round``."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(0, rounding=ROUND_HALF_UP))
 
 
 def _make_walk_fn(

@@ -23,6 +23,8 @@ query):
    ``c_i·T_q − d_i·T_p`` in unbounded Python ints with ONE final
    cast-to-double division, so streaming values equal the batch
    operator's decimal(38,0) pipeline BIT-FOR-BIT (pinned by test, ==).
+   The per-pair math lives in :mod:`~anomalydetector_spark.kernel.
+   window_drift`, shared with the batch engine's grouped drift pass.
 
 NULL and NaN values are excluded from the histogram exactly like the
 batch operator (``floor(NaN)`` would count every NaN in bin 0 and read
@@ -39,6 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from anomalydetector_spark.kernel.window_drift import (
+    histogram_distances,
+    psi_chi2,
+)
 from anomalydetector_spark.operators.divergence import numeric_bin
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
@@ -148,27 +154,11 @@ def _make_drift_fn(n_bins: int, dur_us: int, buffer_windows: int):
             ):
                 # exact integer arithmetic, mirroring the batch
                 # decimal(38,0) pipeline term for term
-                c = [int(x) for x in cur]
-                d = [int(x) for x in prev]
-                tc, td = sum(c), sum(d)
-                x = [ci * td - di * tc for ci, di in zip(c, d)]
-                den = float(tc * td)
-                acc, emd_sum = 0, 0
-                for v in x:
-                    acc += v
-                    emd_sum += abs(acc)
                 out.append(
                     (
                         key[0],
                         pd.Timestamp(t, unit="us"),
-                        float(max(abs(v) for v in x)) / den,
-                        float(sum(abs(v) for v in x)) / den / 2.0,
-                        float(emd_sum) / den,
-                        sum(
-                            1
-                            for ci, di in zip(c, d)
-                            if ci > 0 or di > 0
-                        ),
+                        *histogram_distances(cur, prev),
                     )
                 )
         yield pd.DataFrame(
@@ -214,19 +204,7 @@ PSI_DRIFT_SCHEMA = (
 )
 
 
-def _half_up_micro(x: float) -> int:
-    """Spark ``round(double, 0)`` semantics: shortest decimal repr →
-    BigDecimal HALF_UP — required for bit-parity with the batch
-    ``psi_chi2_from_bin_counts`` (Python's ``round`` is banker's and
-    disagrees on exact .5 reprs)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(0, rounding=ROUND_HALF_UP))
-
-
 def _make_psi_fn(n_bins: int, dur_us: int, buffer_windows: int, alpha: int):
-    import math
-
     import numpy as np
 
     def fn(
@@ -260,42 +238,11 @@ def _make_psi_fn(n_bins: int, dur_us: int, buffer_windows: int, alpha: int):
                 # batch-mirror arithmetic (psi_chi2_from_bin_counts):
                 # add-alpha smoothing over the pair's UNION support,
                 # micro-quantized transcendentals, exact integer sums
-                c0 = [int(x) for x in cur]
-                d0 = [int(x) for x in prev]
-                union = [
-                    i for i in range(n_bins) if c0[i] > 0 or d0[i] > 0
-                ]
-                b = len(union)
-                tc = sum(c0) + alpha * b
-                td = sum(d0) + alpha * b
-                psi_num, chi_sum = 0, 0
-                for i in union:
-                    c, d = c0[i] + alpha, d0[i] + alpha
-                    num = c * td - d * tc
-                    lnm = _half_up_micro(
-                        math.log(
-                            (float(c) * float(td))
-                            / (float(d) * float(tc))
-                        )
-                        * 1e6
-                    )
-                    chim = _half_up_micro(
-                        float(num) * float(num)
-                        / float(tc * td * (c + d))
-                        * 1e6
-                    )
-                    psi_num += num * lnm
-                    chi_sum += chim
                 out.append(
                     (
                         key[0],
                         pd.Timestamp(t, unit="us"),
-                        float(psi_num) / float(tc * td) / 1e6,
-                        float(chi_sum) / 1e6,
-                        math.sqrt(
-                            float(chi_sum) / 1e6 / float(tc + td)
-                        ),
-                        b,
+                        *psi_chi2(cur, prev, alpha),
                     )
                 )
         yield pd.DataFrame(

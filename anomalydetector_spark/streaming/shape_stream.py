@@ -5,9 +5,10 @@ windows (the stage-1 output of ``streaming_window_stats``).
 The exactly-once consecutive-window pairing (reorder buffer + emitted
 ledger, near-sorted arrival, restart-replay immunity) is the shared
 machine in :mod:`~anomalydetector_spark.streaming.pairs`; this module
-contributes only the shape-specific halves: pivoting the long-format
-stat rows into per-window probability vectors, and the JS/TVD math per
-pair.
+contributes only the shape-specific half: pivoting the long-format
+stat rows into per-window probability vectors. The JS/TVD math per
+pair is :func:`~anomalydetector_spark.kernel.window_drift.js_tvd`,
+shared with the batch engine's grouped drift pass.
 
 Granularity note: the streaming distribution is BUCKETED to the
 configured ``langs`` plus an ``other`` residual mass (1 − Σ fracs,
@@ -27,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from anomalydetector_spark.kernel.window_drift import js_tvd
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
     duration_us as _duration_us,
@@ -86,23 +88,11 @@ def _make_div_fn(
                 wide.index.astype("datetime64[us]").astype("int64").to_numpy()
             )
 
-            for t, q, p in window_pairs(
+            for t, prev, cur in window_pairs(
                 state, ts_us, probs, n_cats, dur_us, buffer_windows
             ):
-                m = (p + q) / 2.0
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    js = 0.5 * np.where(
-                        p > 0, p * np.log2(np.divide(p, m, where=m > 0)), 0.0
-                    ).sum() + 0.5 * np.where(
-                        q > 0, q * np.log2(np.divide(q, m, where=m > 0)), 0.0
-                    ).sum()
                 out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        float(js),
-                        float(np.abs(p - q).sum() / 2.0),
-                    )
+                    (key[0], pd.Timestamp(t, unit="us"), *js_tvd(cur, prev))
                 )
         yield pd.DataFrame(
             out,

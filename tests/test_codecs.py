@@ -601,6 +601,27 @@ def test_mp4_malformed_raises_valueerror_and_quarantines(spark):
     assert rows[3].duration_ms == 1500
 
 
+def test_extract_video_metadata_null_media_id(spark):
+    """A NULL media_id yields a NULL-id, NULL-metadata row — even beside
+    a valid MP4 payload — instead of killing the mapInPandas task; the
+    other rows of the batch keep their metadata."""
+    good = codecs.build_mp4_header(1500, 64, 48)
+    media = spark.createDataFrame(
+        [(None, bytearray(good)), (7, bytearray(good)), (None, None)],
+        "media_id long, payload binary",
+    )
+    rows = multimodal.extract_video_metadata(media).collect()
+    assert len(rows) == 3
+    nulls = [r for r in rows if r.media_id is None]
+    assert len(nulls) == 2
+    assert all(
+        r.duration_ms is None and r.width is None and r.codec is None
+        for r in nulls
+    )
+    (ok,) = [r for r in rows if r.media_id == 7]
+    assert (ok.duration_ms, ok.width, ok.height) == (1500, 64, 48)
+
+
 def test_featurize_unsupported_jpeg_mode_respects_use_stub(spark):
     """Review fix: a payload whose MAGIC matches a real decoder but
     whose body is rejected (progressive JPEG here) must fall back to

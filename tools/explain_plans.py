@@ -4,7 +4,9 @@ assert the plan properties that matter at 100 TB:
 * stats pass never reads ``html`` (ReadSchema pruning),
 * referential + duplicate-violation joins go broadcast,
 * stats aggregation has a partial (map-side) aggregate before the shuffle,
-* filters on the scan are pushed (PushedFilters).
+* filters on the scan are pushed (PushedFilters),
+* the drift tail is one grouped pandas pass (no Window / sort-merge
+  join) and the verdict path runs no Python.
 
 Run: python tools/explain_plans.py  (prints plans + PASS/FAIL per property)
 """
@@ -138,6 +140,27 @@ def main() -> None:
         "fused violation extraction re-reads the input once (profile cached)",
         n_scans == 1 and "InMemoryTableScan" in viol_plan,
         f"{n_scans} executed parquet scans + cached profile",
+    )
+    # the drift tail derives and scores every stat series in ONE grouped
+    # pandas pass over the cached cube + profile; Window nodes or a
+    # sort-merge join here mean series derivation moved back into Catalyst
+    from anomalydetector_spark.plans.audit import (
+        GROUPED_PANDAS_NODES,
+        plan_node_names,
+        python_or_rdd_nodes,
+    )
+
+    drift_nodes = plan_node_names(res.drift_scored, cached_inputs=False)
+    ok &= check(
+        "drift tail is one grouped pandas pass: no Window, no sort-merge join",
+        sum(n in GROUPED_PANDAS_NODES for n in drift_nodes) == 1
+        and not any(n.startswith("Window") for n in drift_nodes)
+        and "SortMergeJoinExec" not in drift_nodes,
+        ", ".join(drift_nodes),
+    )
+    ok &= check(
+        "verdict path starts no Python worker and replays no driver RDD",
+        python_or_rdd_nodes(res.verdicts) == [],
     )
     res.unpersist()
 

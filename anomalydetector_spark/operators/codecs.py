@@ -810,7 +810,12 @@ def _jpeg_decode_table(bits: list[int], vals: list[int]):
     consecutive peek slots it prefixes. len==0 marks an invalid code.
     Plain Python lists — element access beats numpy scalar extraction
     ~3× in the per-symbol hot path — built via numpy slice fills and
-    memoized on the table content."""
+    memoized on the table content. Raises ``ValueError`` on a truncated
+    table (fewer than 16 BITS counts or fewer symbols than they sum to)
+    and on an over-subscribed one (a code that does not fit its
+    length, so its slot range would start past the 16-bit peek)."""
+    if len(bits) < 16 or len(vals) < sum(bits):
+        raise ValueError("truncated JPEG DHT segment")
     key = (tuple(bits), tuple(vals))
     hit = _JPEG_LUT_CACHE.get(key)
     if hit is not None:
@@ -821,6 +826,8 @@ def _jpeg_decode_table(bits: list[int], vals: list[int]):
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("over-subscribed JPEG Huffman table")
             start = code << (16 - length)
             end = (code + 1) << (16 - length)
             sym[start:end] = vals[k]

@@ -327,6 +327,49 @@ def politeness_schedule(
     )
 
 
+def _politeness_boundaries(
+    urls: DataFrame,
+    url_col: str,
+    domain_col: str,
+    n_buckets: int,
+    sample_mod: int,
+    sample_cap: int,
+) -> list[tuple[str, str]]:
+    """The ≤ ``n_buckets - 1`` sorted (domain, url) range boundaries of
+    :func:`politeness_schedule_bucketed`, from one driver-side job.
+
+    The capped sample keeps the ``sample_cap`` pairs with the smallest
+    ``xxhash64(domain, url)`` — a ``TakeOrderedAndProject`` (per-task
+    top-k, no global sort) — so the same rows give the same boundaries
+    whatever their partitioning (an unordered ``limit`` keeps whichever
+    rows the first tasks return). Ordering by (domain, url) instead
+    would crowd every boundary into the first domains."""
+    # NULL domains/urls are excluded from the boundary sample (a None
+    # in the sorted() below would TypeError against str); NULL-keyed
+    # rows still flow through the operator itself — their bucket
+    # comparison is NULL → bucket 0, one group per NULL domain, the
+    # same arbitrary-tie behavior as the plain window's NULL group.
+    h = F.xxhash64(F.col(domain_col), F.col(url_col))
+    key_rows = (
+        urls.filter(
+            F.col(domain_col).isNotNull()
+            & F.col(url_col).isNotNull()
+            & (F.pmod(h, F.lit(sample_mod)) == 0)
+        )
+        .select(
+            h.alias("h"),
+            F.col(domain_col).alias("d"),
+            F.col(url_col).alias("u"),
+        )
+        .orderBy("h", "d", "u")
+        .limit(sample_cap)
+        .collect()
+    )
+    sample = sorted({(r.d, r.u) for r in key_rows})
+    step = max(1, len(sample) // n_buckets)
+    return sample[step::step][: n_buckets - 1]
+
+
 def politeness_schedule_bucketed(
     urls: DataFrame,
     delays: DataFrame,
@@ -351,8 +394,9 @@ def politeness_schedule_bucketed(
 
     1. **Sampled range boundaries, driver-side, once.** A deterministic
        pseudo-sample (``xxhash64(domain, url) % sample_mod == 0``,
-       capped at ``sample_cap`` rows of the two key columns — a pruned
-       scan, never the payload) is sorted and every
+       capped at the ``sample_cap`` smallest hashes over the two key
+       columns — a pruned scan, never the payload, and the same
+       boundaries however the input is partitioned) is sorted and every
        len/``n_buckets``-th (domain, url) pair becomes a literal
        boundary. Literals make the bucket a PURE deterministic value
        column — safe to recompute on both branches below, with no
@@ -370,35 +414,17 @@ def politeness_schedule_bucketed(
        joined back on (domain, __bkt).
 
     One balanced shuffle on (domain, bucket) for the big side (plus
-    the two cheap driver sampling jobs) versus one HOT shuffle for the
+    the cheap driver sampling job) versus one HOT shuffle for the
     plain form. A degenerate sample (tiny input, ``sample_mod`` too
     coarse) yields zero boundaries and the operator collapses to the
-    plain single-bucket behavior — still exact."""
-    # NULL domains/urls are excluded from the boundary sample (a None
-    # in the sorted() below would TypeError against str); NULL-keyed
-    # rows still flow through the operator itself — their bucket
-    # comparison is NULL → bucket 0, one group per NULL domain, the
-    # same arbitrary-tie behavior as the plain window's NULL group.
-    key_rows = (
-        urls.filter(
-            F.col(domain_col).isNotNull()
-            & F.col(url_col).isNotNull()
-            & (
-                F.pmod(
-                    F.xxhash64(F.col(domain_col), F.col(url_col)),
-                    F.lit(sample_mod),
-                )
-                == 0
-            )
-        )
-        .select(F.col(domain_col).alias("d"), F.col(url_col).alias("u"))
-        .limit(sample_cap)
-        .collect()
-    )
-    sample = sorted({(r.d, r.u) for r in key_rows})
-    step = max(1, len(sample) // n_buckets)
-    boundaries = sample[step::step][: n_buckets - 1]
+    plain single-bucket behavior — still exact.
 
+    Construction is eager: calling this function runs the sampling
+    job(s) over ``urls`` right away to fix the boundary literals, before
+    the returned DataFrame is ever acted on."""
+    boundaries = _politeness_boundaries(
+        urls, url_col, domain_col, n_buckets, sample_mod, sample_cap
+    )
     key = F.struct(
         F.col(domain_col).alias("d"), F.col(url_col).alias("u")
     )

@@ -435,6 +435,45 @@ def test_jpeg_rejects_unsupported_loudly():
         codecs.encode_jpeg(img, subsampling="422")
 
 
+def _first_dht(payload: bytes) -> int:
+    """Offset of the first DHT table's Tc/Th byte."""
+    return payload.find(b"\xff\xc4") + 4
+
+
+def test_jpeg_rejects_malformed_huffman_tables():
+    img = _smooth_rgb(16, 16, seed=2)
+    good = codecs.encode_jpeg(img, quality=90)
+    at = _first_dht(good)
+    bits = list(good[at + 1 : at + 17])
+
+    # over-subscribed: three 1-bit codes cannot exist (only 0 and 1);
+    # move the counts so the table's symbol total (and layout) holds
+    j = next(i for i, b in enumerate(bits) if b >= 3 and i > 0)
+    bad = bytearray(good)
+    bad[at + 1] = bits[0] + 3
+    bad[at + 1 + j] = bits[j] - 3
+    with pytest.raises(ValueError, match="over-subscribed"):
+        codecs.decode_jpeg(bytes(bad))
+    with pytest.raises(ValueError, match="over-subscribed"):
+        codecs._jpeg_decode_table([3] + [0] * 15, [1, 2, 3])
+    # a full 1-bit level is legal: codes 0 and 1
+    sym, ln = codecs._jpeg_decode_table([2] + [0] * 15, [7, 9])
+    assert (sym[0], ln[0], sym[65535], ln[65535]) == (7, 1, 9, 1)
+
+    # truncated: the DHT segment ends one symbol short of sum(BITS)
+    bad = bytearray(good)
+    seglen = int.from_bytes(bad[at - 2 : at], "big")
+    bad[at - 2 : at] = (seglen - 1).to_bytes(2, "big")
+    cut = at - 2 + seglen - 1
+    bad[cut : cut + 1] = b""
+    with pytest.raises(ValueError, match="truncated JPEG DHT"):
+        codecs.decode_jpeg(bytes(bad))
+    with pytest.raises(ValueError, match="truncated JPEG DHT"):
+        codecs._jpeg_decode_table([0, 2] + [0] * 14, [4])
+    with pytest.raises(ValueError, match="truncated JPEG DHT"):
+        codecs._jpeg_decode_table([0, 2, 1], [4, 5, 6])
+
+
 def test_jpeg_features_and_resize_spark(spark):
     """JPEG payloads ride the same real mapInPandas decode path as
     PNG/BMP: features carry true dims + means, and resize_images

@@ -484,3 +484,28 @@ def test_politeness_schedule_bucketed_null_keys(spark):
                      r.fetch_offset_s)
     assert {key(r) for r in plain.collect()} \
         == {key(r) for r in buck.collect()}
+
+
+def test_politeness_boundaries_ignore_input_partitioning(spark):
+    """The capped boundary sample keeps the smallest key hashes, so the
+    same rows give the same boundaries under any partitioning — and the
+    boundaries still span the domains rather than piling into the
+    first ones."""
+    from anomalydetector_spark.operators.robots import (
+        _politeness_boundaries,
+    )
+
+    rows = [(f"https://d{i % 40}.example/p{i:05d}", f"d{i % 40}.example")
+            for i in range(4000)]
+    urls = spark.createDataFrame(rows, "url string, domain string")
+    # sample_mod=2 samples ~2000 keys; the cap keeps 500 of them
+    picks = [
+        _politeness_boundaries(
+            urls.repartition(n), "url", "domain", n_buckets=8,
+            sample_mod=2, sample_cap=500,
+        )
+        for n in (1, 7)
+    ]
+    assert picks[0] == picks[1]
+    assert len(picks[0]) == 7
+    assert len({d for d, _ in picks[0]}) == 7

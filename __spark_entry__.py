@@ -3233,8 +3233,9 @@ def q_partition_churn(spark, sf_dir):
     doc-in-13 of src1, and adds a brand-new srcNEW partition — the
     verdicts (removed / changed / added, everything else unchanged) come
     from one aggregation per side over order-insensitive sum digests, no
-    per-key join anywhere. The oracle reproduces the digest arithmetic
-    (length-prefixed md5, two independent 60-bit sums) in DuckDB."""
+    per-key join anywhere. The oracle derives the statuses in DuckDB
+    from its own multiset digest (length-prefixed md5, two 60-bit sums),
+    independent of the engine's xxhash64 sums."""
     from anomalydetector_spark.operators.snapshot import (
         changed_partitions,
         partition_digests,
@@ -3281,8 +3282,8 @@ def q_incremental_rows(spark, sf_dir):
     validates — every row of snapshot B whose partition is added or
     changed (src1's edit and the brand-new srcNEW; src2+ skip). At 10^12
     docs this predicate prunes untouched partitions from the scan. The
-    oracle recomputes the churn statuses with the same digest arithmetic
-    in DuckDB and joins them back onto B."""
+    oracle recomputes the churn statuses in DuckDB with its own md5-sum
+    digest and joins them back onto B."""
     from anomalydetector_spark.incremental import (
         churned_partition_condition,
     )

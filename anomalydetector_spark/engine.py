@@ -161,6 +161,10 @@ class ValidationResult:
     # per-category TVD shares for SR-flagged lang-shape windows
     # (cfg.attribution_top_n). None when off.
     drift_attribution: DataFrame | None = None
+    # persisted frames, in a fixed order: cube, profile, stat_series,
+    # drift_scored, then one violating-key frame per functional
+    # dependency; incremental_validate appends the verdicts it persists.
+    # perfbench reads [:4] to fill each layer.
     cached: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self) -> None:

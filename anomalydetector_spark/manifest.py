@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,11 +32,16 @@ MANIFEST_SCHEMA = ", ".join(f"{n} {t}" for n, t in _MANIFEST_COLUMNS)
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """Load the manifest, or an empty frame if none exists yet."""
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
-        return spark.read.parquet(path)
+    """Load the manifest, or an empty frame if ``path`` does not exist.
+
+    Any Hadoop path works (local, ``file://``, ``s3a://``, ``hdfs://``).
+    The read gives :data:`MANIFEST_SCHEMA`, so building the frame starts
+    no schema-inference job; files are listed when the frame is built."""
+    try:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
     # typed empty projection of a JVM range (not a Python RDD)
     return spark.range(0, 0, 1, 1).select(
         *[F.lit(None).cast(t).alias(n) for n, t in _MANIFEST_COLUMNS]
@@ -147,10 +153,11 @@ def run_with_resume(
     manifest_path: str,
 ) -> DataFrame:
     """Materialize only verdicts whose (partition, check) is not yet in the
-    manifest, append them, and return the merged verdict view. ``verdicts``
-    stays lazy for completed partitions — Spark prunes the skipped work via
-    the anti-join before execution when the verdict program is
-    partition-local."""
+    manifest, append them, and return the merged verdict view.
+    ``incremental_validate`` persists its verdicts, so this reads their
+    cache (filled by the caller's collect, or by this append) instead of
+    re-running the verdict DAG; a lazy ``verdicts`` frame is pruned by the
+    anti-join before execution when its program is partition-local."""
     manifest = read_manifest(spark, manifest_path)
     done = completed_keys(manifest, snapshot_id).withColumnRenamed(
         "partition_spec", "partition_key"

@@ -65,34 +65,11 @@ def _injective_tuple(df: DataFrame, cols: list[str]):
 
 def _keyed_digest(df: DataFrame, key_col: str, compare_cols: list[str]) -> DataFrame:
     # concat_ws skips nulls, which would make ("a", null) == ("a", "");
-    # wrap each column with an explicit null sentinel + length prefix so
-    # the digest is injective over the tuple. Binary columns go through
-    # base64, NOT a string cast: reinterpreting raw bytes as UTF-8 is
-    # lossy on invalid sequences, so two different blobs could otherwise
-    # digest equal.
-    from pyspark.sql.types import BinaryType
-
-    binary_cols = {
-        f.name for f in df.schema.fields if isinstance(f.dataType, BinaryType)
-    }
-
-    def _as_text(c: str):
-        return (
-            F.base64(F.col(c)) if c in binary_cols else F.col(c).cast("string")
-        )
-
+    # each column is wrapped with an explicit null sentinel + length
+    # prefix (_injective_tuple, binary via base64) and tagged with its
+    # name's length, so the digest is injective over the tuple.
     parts = [
-        F.concat(
-            F.lit(str(len(c)) + ":"),
-            F.coalesce(
-                F.concat(
-                    F.length(_as_text(c)).cast("string"),
-                    F.lit(":"),
-                    _as_text(c),
-                ),
-                F.lit("<NULL>"),
-            ),
-        )
+        F.concat(F.lit(f"{len(c)}:"), _injective_tuple(df, [c]))
         for c in compare_cols
     ]
     return df.select(
@@ -165,6 +142,26 @@ def revalidation_keys(diff: DataFrame, key_col: str = "url") -> DataFrame:
     return diff.filter(F.col("status").isin("added", "changed")).select(key_col)
 
 
+def _hash_parts(df: DataFrame, compare_cols: list[str]) -> list:
+    """``(isnull(c), c)`` per compare column, the argument list of one
+    xxhash64 chain. xxhash64 skips NULL arguments, so the flag keeps
+    NULL apart from ``''`` and ('a', NULL) apart from (NULL, 'a').
+    Nested values hash through their string rendering: xxhash64 rejects
+    MAP (``DATATYPE_MISMATCH.HASH_MAP_TYPE``) and skips NULL array
+    elements and struct fields, so [NULL, 'a'] and ['a', NULL] would
+    hash equal."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    nested = (ArrayType, MapType, StructType)
+    parts = []
+    for c in compare_cols:
+        col = F.col(c)
+        if isinstance(df.schema[c].dataType, nested):
+            col = col.cast("string")
+        parts += [F.isnull(F.col(c)), col]
+    return parts
+
+
 def partition_digests(
     df: DataFrame,
     partition_cols: list[str] | str,
@@ -175,15 +172,29 @@ def partition_digests(
     "skip this partition, it is byte-identical to the validated snapshot"
     with one aggregation and NO per-key join.
 
-    The digest is (row count, sum of two independent 60-bit per-row md5
-    digests as decimal(38,0)): a multiset digest, so row order and file
-    layout never matter; SUM not XOR because identical duplicate rows
-    (the dup-url regime) would cancel pairwise under XOR and a partition
+    The digest is (row count, two sums of per-row 64-bit hashes as
+    decimal(38,0)): a multiset digest, so row order and file layout
+    never matter; SUM not XOR because identical duplicate rows (the
+    dup-url regime) would cancel pairwise under XOR and a partition
     gaining two copies of a row would look unchanged. Sums are exact —
-    decimal(38,0) holds 10^12 rows × 2^60 with headroom, and ANSI long
-    overflow can never fire. Collision odds for an accidental match of
-    both independent sums AND the count are far below hardware error
-    rates.
+    decimal(38,0) holds 10^12 rows × 2^63 with headroom, and ANSI long
+    overflow can never fire.
+
+    Each per-row hash is a native ``xxhash64`` chain over
+    ``(isnull(c), c)`` for every compare column; the two chains are
+    seeded apart by a leading literal (1 and 2). No per-row string is
+    built, so the pass costs about what reading the compare columns
+    costs. An edit goes unnoticed only if the count and BOTH 64-bit sums
+    match: ~2^-128 per changed partition for accidental edits. The
+    question is per partition against its own previous digest, not a
+    birthday bound over keys, so 2×64 bits stand where the md5 scheme
+    this replaces kept 2×60 (the per-key ``snapshot_diff`` keeps md5).
+    xxhash64 is not a cryptographic hash: digests guard against
+    accidental change, not an adversary. Spark's hash normalises
+    floating point, so ``-0.0``/``0.0`` and NaNs with different payloads
+    hash equal (the md5 scheme's string rendering kept ``-0.0`` apart).
+    Stores written under the md5 scheme carry another ``digest_meta``
+    tag and read as absent (``incremental._digest_meta``).
     """
     if isinstance(partition_cols, str):
         partition_cols = [partition_cols]
@@ -193,8 +204,8 @@ def partition_digests(
     # leave the delimiter unescaped, so multi-column tuples like
     # ('a', null) vs (null, 'a') — or values containing the delimiter —
     # would collapse into one partition and changed_partitions could
-    # merge or mislabel them. Multi-column keys therefore use the same
-    # null-sentinel + length-prefix scheme as the compare-column digest.
+    # merge or mislabel them. Multi-column keys therefore use a
+    # null-sentinel + length-prefix encoding (_injective_tuple).
     # A single partition column needs no concatenation, so its raw value
     # is kept (human-readable, oracle-matchable); a lone NULL maps to the
     # '<NULL>' sentinel so the changed_partitions full-outer join can
@@ -205,21 +216,15 @@ def partition_digests(
         )
     else:
         part_key = _injective_tuple(df, partition_cols)
-    keyed = _keyed_digest(
-        df.withColumn("__part", part_key),
-        "__part",
-        compare_cols,
-    )
-    d1 = F.conv(F.substring(F.col("digest"), 1, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
-    d2 = F.conv(F.substring(F.col("digest"), 16, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
-    return keyed.groupBy(F.col("key").alias("partition")).agg(
+    parts = _hash_parts(df, compare_cols)
+
+    def _hash_sum(seed: int):
+        return F.sum(F.xxhash64(F.lit(seed), *parts).cast("decimal(38,0)"))
+
+    return df.groupBy(part_key.alias("partition")).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(d1).alias("digest_sum_a"),
-        F.sum(d2).alias("digest_sum_b"),
+        _hash_sum(1).alias("digest_sum_a"),
+        _hash_sum(2).alias("digest_sum_b"),
     )
 
 

@@ -139,3 +139,22 @@ def python_or_rdd_nodes(df: DataFrame) -> list[str]:
         for n in plan_node_names(df)
         if "Python" in n or "Pandas" in n or "RDDScan" in n
     ]
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted through a
+    fresh job group and the status tracker (the benchmark's tracer
+    counts the same way). Used to pin how many jobs a call may start,
+    e.g. that a frame is built without a schema-inference job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"audit-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -270,6 +270,70 @@ def test_empty_or_missing_digest_store_reads_as_absent(spark, tmp_path):
     ) is None
 
 
+def test_legacy_digest_stores_read_as_absent(spark, tmp_path):
+    """Stores written before the digest scheme was tagged — with the old
+    "<partition>|<columns>" digest_meta, or with no digest_meta column at
+    all — hold sums of another per-row hash: they read as absent (a cold
+    start) and are never compared against the current sums."""
+    from anomalydetector_spark.incremental import read_partition_digests
+    from anomalydetector_spark.operators.snapshot import partition_digests
+
+    df = spark.createDataFrame(
+        [("p1", "u1", "t1"), ("p2", "u2", "t2")],
+        "part string, url string, text string",
+    )
+    digests = partition_digests(df, "part", ["text", "url"])
+    tagged = str(tmp_path / "tagged")
+    digests.withColumn("digest_meta", F.lit("part|text,url")).withColumn(
+        "snapshot_id", F.lit("snapA")
+    ).write.partitionBy("snapshot_id").parquet(tagged)
+    untagged = str(tmp_path / "untagged")
+    digests.withColumn("snapshot_id", F.lit("snapA")).write.partitionBy(
+        "snapshot_id"
+    ).parquet(untagged)
+    for store in (tagged, untagged):
+        assert read_partition_digests(
+            spark, store, "snapA", "part", ["text", "url"]
+        ) is None
+
+
+def test_manifest_and_digest_plumbing_job_counts(spark, tmp_path):
+    """The daily job's plumbing starts only the jobs it must: manifest
+    rows read the persisted verdicts (one job, not the verdict DAG
+    again), the manifest read starts none and the digest-store read only
+    its presence probe (a schema-inference job would add one each)."""
+    from anomalydetector_spark.incremental import (
+        read_partition_digests,
+        write_partition_digests,
+    )
+    from anomalydetector_spark.operators.snapshot import partition_digests
+    from anomalydetector_spark.plans.audit import spark_jobs
+
+    pages = datagen.generate_pages(spark, 2_000, seed=5)
+    # an empty old side: every partition is added and validated
+    inc = incremental_validate(pages.filter(F.lit(False)), pages, "domain")
+    res = inc.result
+    verdicts = res.verdicts.collect()
+    rows, n_jobs = spark_jobs(
+        spark, lambda: M.verdicts_to_manifest_rows(res.verdicts, "s").collect()
+    )
+    assert n_jobs == 1
+    assert sorted((r.partition_spec, r.check_name) for r in rows) == sorted(
+        (v.partition_key, v.check_name) for v in verdicts
+    )
+
+    mpath, store = str(tmp_path / "m"), str(tmp_path / "d")
+    M.append_manifest(M.verdicts_to_manifest_rows(res.verdicts, "s"), mpath)
+    write_partition_digests(partition_digests(pages, "domain"), store, "s")
+    manifest, n_jobs = spark_jobs(spark, lambda: M.read_manifest(spark, mpath))
+    assert n_jobs == 0 and manifest.count() == len(verdicts)
+    stored, n_jobs = spark_jobs(
+        spark, lambda: read_partition_digests(spark, store, "s")
+    )
+    assert stored is not None and n_jobs == 1
+    inc.unpersist()
+
+
 def test_digest_reuse_order_insensitive_end_to_end(spark, snapshots, tmp_path):
     """compare-column ORDER must not poison reuse: digests are hashed
     over the canonically-sorted list, so stored digests from one order

@@ -133,3 +133,29 @@ def test_bucketed_output_layout_and_pruned_resume(spark, tmp_path):
         work, M.read_manifest(spark, mpath), "snapA"
     )
     assert {r.partition_spec for r in pending.collect()} == {"p2", "bad"}
+
+
+def test_read_manifest_on_uri_path(spark, tmp_path):
+    """A ``file://`` manifest (as ``s3a://`` / ``hdfs://`` ones) reads
+    back its rows: resume skips finished work and carry-forward finds
+    rows to carry. A missing path still reads as the empty manifest."""
+    uri = (tmp_path / "manifest").as_uri()
+    assert uri.startswith("file://")
+    M.append_manifest(
+        M.verdicts_to_manifest_rows(_verdicts(spark, ["p0", "bad"]), "snapA"),
+        uri,
+    )
+    got = M.read_manifest(spark, uri)
+    assert got.schema.simpleString() == M.read_manifest(
+        spark, (tmp_path / "missing").as_uri()
+    ).schema.simpleString()
+    assert {(r.partition_spec, r.verdict) for r in got.collect()} == {
+        ("p0", "pass"), ("bad", "fail")
+    }
+    assert M.read_manifest(spark, (tmp_path / "missing").as_uri()).count() == 0
+    # resume over the URI skips both finished partitions
+    out = M.run_with_resume(
+        spark, _verdicts(spark, ["p0", "bad", "p1"]), "snapA", uri
+    )
+    assert out.count() == 3
+    assert M.read_manifest(spark, uri).count() == 3

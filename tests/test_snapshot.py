@@ -233,6 +233,111 @@ def test_partition_digests_order_insensitive_and_dup_sensitive(spark):
     assert got == {"p1": "changed", "p2": "removed", "p3": "added"}
 
 
+def test_random_partition_digest_parity_vs_multiset_comparison(spark):
+    """Random multiset edits per partition must classify exactly as a
+    direct multiset comparison of the rows: a byte flip in a binary
+    column, a timestamp moved by 1 µs, NULL <-> '', a value swapped
+    between two string columns, a duplicated row and a changed map value
+    all flip their partition; reordering and repartitioning flip none.
+    A map compare column must hash without raising."""
+    import datetime as dt
+    from collections import Counter
+
+    import numpy as np
+
+    from anomalydetector_spark.operators.snapshot import (
+        changed_partitions,
+        partition_digests,
+    )
+
+    schema = (
+        "part string, s1 string, s2 string, b binary, ts timestamp, "
+        "m map<string,int>"
+    )
+    strs = [None, "", "a", "b", "ab", "ab:c", "x" * 40]
+    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
+
+    def edit(rows, kind, rng):
+        i = int(rng.integers(len(rows)))
+        part, s1, s2, b, ts, m = rows[i]
+        if kind == "byte_flip":
+            b = bytearray(b or b"\x00")
+            j = int(rng.integers(len(b)))
+            b[j] ^= 1 << int(rng.integers(8))
+            b = bytes(b)
+        elif kind == "ts_plus_1us":
+            ts = (ts or t0) + dt.timedelta(microseconds=1)
+        elif kind == "null_empty":
+            s1 = "" if s1 is None else None if s1 == "" else None
+        elif kind == "swap_columns":
+            s1, s2 = (s2, s1) if s1 != s2 else ("a", "b")
+        elif kind == "dup_row":
+            return rows + [rows[i]]
+        elif kind == "map_value":
+            m = dict(m or {"k": 0})
+            k = sorted(m)[0]
+            m[k] += 1
+        return rows[:i] + [(part, s1, s2, b, ts, m)] + rows[i + 1:]
+
+    def key(r):
+        m = None if r[5] is None else tuple(r[5].items())
+        return (r[1], r[2], None if r[3] is None else bytes(r[3]), r[4], m)
+
+    kinds = [
+        "byte_flip", "ts_plus_1us", "null_empty", "swap_columns",
+        "dup_row", "map_value", "reorder",
+    ]
+    for seed in (3, 17):
+        rng = np.random.default_rng(seed)
+        old, new = [], []
+        for p in range(2 * len(kinds) + 1):
+            rows = []
+            for _ in range(int(rng.integers(2, 7))):
+                rows.append((
+                    f"p{p}",
+                    strs[int(rng.integers(len(strs)))],
+                    strs[int(rng.integers(len(strs)))],
+                    None if rng.random() < 0.2
+                    else bytes(rng.integers(0, 256, 3).tolist()),
+                    None if rng.random() < 0.2
+                    else t0 + dt.timedelta(seconds=int(rng.integers(1000))),
+                    None if rng.random() < 0.2
+                    else {"k": int(rng.integers(5)), "j": 1},
+                ))
+            old += rows
+            if p == 2 * len(kinds):
+                continue  # removed partition
+            new += edit(rows, kinds[p % len(kinds)], rng)
+        new += [("added", "a", "b", b"x", t0, {"k": 1})]
+        new = [new[i] for i in rng.permutation(len(new))]
+
+        got = {
+            r["partition"]: r["status"]
+            for r in changed_partitions(
+                partition_digests(spark.createDataFrame(old, schema), "part"),
+                partition_digests(
+                    spark.createDataFrame(new, schema).repartition(5), "part"
+                ),
+            ).collect()
+        }
+        o = {}
+        for r in old:
+            o.setdefault(r[0], Counter())[key(r)] += 1
+        n = {}
+        for r in new:
+            n.setdefault(r[0], Counter())[key(r)] += 1
+        exp = {
+            p: "added" if p not in o else "removed" if p not in n
+            else "unchanged" if o[p] == n[p] else "changed"
+            for p in set(o) | set(n)
+        }
+        assert got == exp
+        # every edit kind flipped its partitions, reorder flipped none
+        for p in range(2 * len(kinds)):
+            want = "unchanged" if kinds[p % len(kinds)] == "reorder" else "changed"
+            assert got[f"p{p}"] == want, (seed, p, kinds[p % len(kinds)])
+
+
 def test_partition_digests_multicol_null_and_delimiter_safe(spark):
     """Multi-column partition tuples must stay distinct under NULLs and
     delimiter-looking values: ('a', NULL) vs (NULL, 'a') are different

@@ -7,6 +7,9 @@ assert the plan properties that matter at 100 TB:
 * filters on the scan are pushed (PushedFilters),
 * the drift tail is one grouped pandas pass (no Window / sort-merge
   join) and the verdict path runs no Python,
+* the incremental job's manifest rows read its persisted verdicts (one
+  job) and the manifest
+  and digest-store reads start no schema-inference job,
 * a warm rerun of the same validation recompiles (almost) no generated
   code.
 
@@ -186,6 +189,53 @@ def main() -> None:
     ok &= check(
         "verdict path starts no Python worker and replays no driver RDD",
         python_or_rdd_nodes(res.verdicts) == [],
+    )
+
+    # the daily job's manifest and digest-store plumbing: manifest rows
+    # of the incremental job's collected verdicts read their cache (one
+    # job, not the verdict DAG again), and the manifest / digest-store
+    # reads give their schemas (no schema-inference job; the digest
+    # read's one job is its presence probe)
+    import shutil
+
+    from anomalydetector_spark import manifest as M
+    from anomalydetector_spark.incremental import (
+        incremental_validate,
+        read_partition_digests,
+        write_partition_digests,
+    )
+    from anomalydetector_spark.operators.snapshot import partition_digests
+    from anomalydetector_spark.plans.audit import spark_jobs
+
+    # an empty old side: every partition is added and validated
+    inc = incremental_validate(pages.filter(F.lit(False)), pages, "domain")
+    inc.result.verdicts.collect()
+    _, row_jobs = spark_jobs(
+        spark,
+        lambda: M.verdicts_to_manifest_rows(
+            inc.result.verdicts, "explain"
+        ).collect(),
+    )
+    inc.unpersist()
+    mpath, dpath = "/tmp/explain_manifest", "/tmp/explain_digests"
+    shutil.rmtree(mpath, ignore_errors=True)
+    shutil.rmtree(dpath, ignore_errors=True)
+    M.append_manifest(M.verdicts_to_manifest_rows(res.verdicts, "s"), mpath)
+    write_partition_digests(partition_digests(pages, "domain"), dpath, "s")
+    _, manifest_jobs = spark_jobs(spark, lambda: M.read_manifest(spark, mpath))
+    stored, digest_jobs = spark_jobs(
+        spark, lambda: read_partition_digests(spark, dpath, "s")
+    )
+    ok &= check(
+        "incremental manifest rows of collected verdicts run 1 job; "
+        "manifest read "
+        "starts 0 jobs, digest-store read only its presence probe",
+        row_jobs == 1
+        and manifest_jobs == 0
+        and stored is not None
+        and digest_jobs == 1,
+        f"jobs: manifest rows {row_jobs}, manifest read {manifest_jobs}, "
+        f"digest read {digest_jobs}",
     )
     res.unpersist()
 

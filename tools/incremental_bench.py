@@ -13,8 +13,15 @@ tests/test_incremental.py), then times, warm and min-of-reps:
                never shuffles) plus the engine on only the churned
                partitions.
 
-Both legs materialize verdicts + violations the same way. Prints one
-JSON line. Usage: python tools/incremental_bench.py [rows] [reps]
+Both legs materialize verdicts + violations the same way. A third,
+DIGEST, leg times ``partition_digests(B, "domain").collect()`` alone,
+warm, in wall and CPU seconds (CPU as perfbench counts it: JVM threads
+except the JIT compilers, Python workers and this process): the daily
+job's only full-input read, i.e. its per-document cost. Prints one JSON
+line.
+
+Usage: python tools/incremental_bench.py [rows] [reps] [all|digest]
+("digest" runs only the digest leg)
 """
 
 from __future__ import annotations
@@ -26,11 +33,13 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(1, os.path.join(REPO, "perfbench"))
 
 
 def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    legs = sys.argv[3] if len(sys.argv) > 3 else "all"
 
     import pyspark.sql.functions as F
 
@@ -93,10 +102,28 @@ def main() -> None:
         inc.unpersist()
         return dt
 
+    from anomalydetector_spark.operators.snapshot import partition_digests
+    from run import job_cpu_s  # perfbench's CPU-seconds probe
+
+    def digest_leg() -> tuple[float, float]:
+        c0, t0 = job_cpu_s(), time.perf_counter()
+        partition_digests(new, "domain").collect()
+        return time.perf_counter() - t0, job_cpu_s() - c0
+
+    digest_leg()  # warm
+    digests = [digest_leg() for _ in range(reps)]
+    digest = {
+        "rows": rows,
+        "digest_sec": min(w for w, _ in digests),
+        "digest_cpu_sec": min(c for _, c in digests),
+        "all_digest": [[round(w, 2), round(c, 2)] for w, c in digests],
+    }
+    if legs == "digest":
+        print(json.dumps(digest))
+        return
+
     # steady state: yesterday's digests come from the store (computed by
     # yesterday's run) — materialize them once, outside the timed leg
-    from anomalydetector_spark.operators.snapshot import partition_digests
-
     stored = partition_digests(old, "domain").persist()
     stored.count()
 
@@ -118,6 +145,7 @@ def main() -> None:
         "all_full": [round(x, 2) for x in fulls],
         "all_incremental_cold": [round(x, 2) for x in incrs],
         "all_incremental_stored": [round(x, 2) for x in cached],
+        **digest,
     }
     print(json.dumps(out))
 

@@ -372,8 +372,8 @@ def q_lang_histogram(spark, sf_dir):
 
 def q_length_quantiles(spark, sf_dir):
     """Exact length quantiles per source (north-rule stat; exact
-    ``percentile`` here so the oracle can match; the 100-TB path uses
-    percentile_approx — see stats.py)."""
+    ``percentile`` here so the oracle can match; the engine derives exact
+    inverse-CDF quantiles from its counts cube — see drift.fused_drift)."""
     docs = _t(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         _r6(F.expr("percentile(n_chars, 0.5)")).alias("len_p50"),

@@ -11,8 +11,7 @@ Layout:
     functions/  column-expression helpers
     plans/      check-suite compiler (single-scan stats planning)
     streaming/  incremental / windowed variants
-    stats.py    per-window column-stats pass
-    drift.py    SR drift scoring via applyInPandas
+    drift.py    stat series + SR drift scoring via applyInPandas
     engine.py   check-suite runner producing verdicts + violations
     manifest.py checkpoint/resume manifest
     datagen.py  deterministic synthetic pages table

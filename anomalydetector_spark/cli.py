@@ -128,7 +128,7 @@ def _detect_columns(
     series in one ``applyInPandas`` shuffle, pivot results back wide with
     reference-style ``{result}_{col}`` names (sr_detector.py:51-62).
     Single-column inputs keep the reference's unsuffixed names."""
-    from anomalydetector_spark.drift import _make_group_fn
+    from anomalydetector_spark.drift import score_drift
 
     long = (
         df.select(
@@ -143,12 +143,7 @@ def _detect_columns(
         )
         .withColumn("partition_key", F.lit("cli"))
     )
-    from anomalydetector_spark.drift import DRIFT_MARGIN_SCHEMA, DRIFT_SCHEMA
-
-    schema = DRIFT_MARGIN_SCHEMA if params.with_margin else DRIFT_SCHEMA
-    scored = long.groupBy("partition_key", "stat_name").applyInPandas(
-        _make_group_fn(params), schema=schema
-    )
+    scored = score_drift(long, params)
 
     base_cols = {
         "mag": "mag",

@@ -34,7 +34,6 @@ from anomalydetector_spark.kernel.sr import SrParams
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors as E
 from anomalydetector_spark.plans import fused
-from anomalydetector_spark.stats import compute_window_stats  # noqa: F401 (public API)
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -43,11 +42,10 @@ PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 class ValidationConfig:
     window_duration: str = "1 day"
     partition_by: str | None = None  # column name for per-partition verdicts
-    langs: tuple[str, ...] = ("en", "de", "fr", "zh", "es")
+    langs: tuple[str, ...] = fused.DEFAULT_LANGS
     sr: SrParams = field(default_factory=SrParams)
     min_points: int = 12
     unique_key: str = "url"
-    batch_size: int = 0
     # opt-in: the one check pair that must read the ``html`` binary /
     # full ``text`` bytes (north-rule byte-identity invariant). Off by
     # default so the standard suite never scans html.
@@ -67,11 +65,11 @@ class ValidationConfig:
     # quantile scalars:
     #   * lang_js_divergence — Jensen-Shannon of the lang distribution,
     #   * len_hist_emd — binned earth-mover's distance of the text
-    #     LENGTH histogram (log2 bins, exact integer arithmetic via
-    #     operators/divergence.numeric_drift_from_bin_counts),
+    #     LENGTH histogram (log2 bins, exact integer arithmetic in
+    #     kernel/window_drift.histogram_distances),
     #   * len_hist_psi — PSI of the same histogram (complementary lens:
     #     EMD sees mass TRAVEL distance, PSI sees log-ratio
-    #     reweighting; operators/divergence.psi_chi2_from_bin_counts).
+    #     reweighting; kernel/window_drift.psi_chi2).
     shape_drift: bool = True
     # user-defined constraints (operators/asserts.py). Row asserts ride
     # the fused cube scan and the shared violation-extraction scan; all
@@ -182,7 +180,9 @@ def run_validation(
     config: ValidationConfig | None = None,
 ) -> ValidationResult:
     cfg = config or ValidationConfig()
-    C.validate_batch_size(cfg.batch_size, cfg.min_points)
+    # the SR kernel reads sr.batch_size; a 0 < batch < MIN_POINTS would
+    # be clamped there silently, so reject it like the reference does
+    C.validate_batch_size(cfg.sr.batch_size)
 
     keyed = fused.keyed_input(pages, cfg.window_duration, cfg.partition_by)
     if domains is not None and "domain" not in pages.columns:

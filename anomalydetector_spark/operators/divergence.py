@@ -660,137 +660,6 @@ def numeric_window_drift_equidepth(
     return numeric_drift_from_bin_counts(counts)
 
 
-def full_histogram_drift(
-    counts: DataFrame,
-    part_cols: list[str] | tuple[str, ...] = (),
-    alpha: int = 1,
-) -> DataFrame:
-    """The WHOLE histogram-drift battery in ONE alignment pass:
-    ``(*part_cols, window_start, linf, tvd, emd, psi, chi2, cramers_v,
-    n_bins_hit, n_bins_union)`` — value-identical to running
-    :func:`numeric_drift_from_bin_counts` and
-    :func:`psi_chi2_from_bin_counts` separately (test-pinned ``==``),
-    but the window-pair join, the per-window totals, and the per-bin
-    terms are built once. Exists because each separate series costs
-    ~0.5-1s of pure stage overhead on a 1M-row flagship even though the
-    frames are tiny — fusing them is free capability (the engine's
-    ``len_hist_emd`` + ``len_hist_psi`` stats ride one pass here).
-
-    Same conventions as the parents: EMD/L∞/TVD on RAW counts with
-    gap-weighted sparse cumulative sums; PSI/chi²/V on add-α-smoothed
-    counts over the pair's union support with micro-quantized
-    transcendentals.
-    """
-    if alpha < 0:
-        raise ValueError("alpha must be a non-negative integer")
-    part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "bin", F.col("n").alias("c"),
-        F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "bin",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "bin"], "full_outer")
-    per_w = Window.partitionBy(*part, "w_start")
-    pairs = (
-        pairs.withColumn("tc", F.max("tc").over(per_w))
-        .withColumn("td", F.max("td").over(per_w))
-        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
-        .withColumn("b", F.count(F.lit(1)).over(per_w).cast(dec))
-        .select(
-            *part,
-            "w_start",
-            "bin",
-            F.coalesce("c", F.lit(0).cast(dec)).alias("c"),
-            F.coalesce("d", F.lit(0).cast(dec)).alias("d"),
-            "tc",
-            "td",
-            "b",
-        )
-    )
-    # --- raw-count branch (identical to numeric_drift_from_bin_counts)
-    diff = F.col("c") * F.col("td") - F.col("d") * F.col("tc")
-    by_bin = Window.partitionBy(*part, "w_start").orderBy("bin")
-    gap_w = (
-        F.coalesce(F.lead("bin").over(by_bin), F.col("bin") + 1)
-        - F.col("bin")
-    ).cast(dec)
-    # --- smoothed branch (identical to psi_chi2_from_bin_counts)
-    a = F.lit(alpha).cast(dec)
-    cs, ds = F.col("c") + a, F.col("d") + a
-    tcs = F.col("tc") + a * F.col("b")
-    tds = F.col("td") + a * F.col("b")
-    csd, dsd = cs.cast("double"), ds.cast("double")
-    tcsd, tdsd = tcs.cast("double"), tds.cast("double")
-    ln_micro = F.round(
-        F.log((csd * tdsd) / (dsd * tcsd)) * F.lit(1e6), 0
-    ).cast(dec)
-    num_s = cs * tds - ds * tcs
-    chi2_micro = F.round(
-        num_s.cast("double")
-        * num_s.cast("double")
-        / (tcs * tds * (cs + ds)).cast("double")
-        * F.lit(1e6),
-        0,
-    ).cast(dec)
-    pairs = (
-        pairs.withColumn("x", diff)
-        .withColumn("cum", F.sum("x").over(by_bin))
-        .withColumn("gw", gap_w)
-        .withColumn("psi_term", num_s * ln_micro)
-        .withColumn("chi_term", chi2_micro)
-        .withColumn("sden", (tcs * tds).cast("double"))
-        .withColumn("snb", (tcs + tds).cast("double"))
-    )
-    den = (F.col("tc") * F.col("td")).cast("double")
-    return (
-        pairs.groupBy(*part, "w_start")
-        .agg(
-            (F.max(F.abs(F.col("x"))).cast("double") / F.first(den)).alias(
-                "linf"
-            ),
-            (
-                F.sum(F.abs(F.col("x"))).cast(dec).cast("double")
-                / F.first(den)
-                / F.lit(2.0)
-            ).alias("tvd"),
-            (
-                F.sum(F.abs(F.col("cum")) * F.col("gw"))
-                .cast(dec)
-                .cast("double")
-                / F.first(den)
-            ).alias("emd"),
-            (
-                F.sum("psi_term").cast(dec).cast("double")
-                / F.first(F.col("sden"))
-                / F.lit(1e6)
-            ).alias("psi"),
-            (
-                F.sum("chi_term").cast(dec).cast("double") / F.lit(1e6)
-            ).alias("chi2"),
-            F.sqrt(
-                F.sum("chi_term").cast(dec).cast("double")
-                / F.lit(1e6)
-                / F.first(F.col("snb"))
-            ).alias("cramers_v"),
-            F.count(F.lit(1)).alias("n_bins_hit"),
-            F.first(F.col("b").cast("long")).alias("n_bins_union"),
-        )
-        .withColumnRenamed("w_start", "window_start")
-    )
-
-
 def topk_churn(
     counts: DataFrame,
     k: int = 10,

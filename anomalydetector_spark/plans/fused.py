@@ -29,9 +29,8 @@ suite to its information-theoretic minimum:
   profile derive (a) duplicate keys + per-partition duplicate-row counts
   (the uniqueness verdict), and (b) EXACT per-window distinct-url counts
   (the ``distinct_url`` drift series) — the distinct-count shuffle is
-  already paid for by the uniqueness check, so exactness is free and the
-  HLL sketch (kept in stats.compute_window_stats for stats-only runs) is
-  not needed here.
+  already paid for by the uniqueness check, so exactness is free and no
+  HLL sketch is needed.
 
 Violation-row extraction still reads the input (it must — the rows are
 the output), but only in the violations DAG, which the caller
@@ -304,7 +303,10 @@ def drift_inputs(
     cols = [
         "partition_key",
         "window_start",
-        F.unix_micros("window_start").alias("_w_us"),
+        # window_start keeps the input's timestamp type; NTZ (and date)
+        # starts are session-local wall clocks, so the cast recovers
+        # their instant (a no-op for TIMESTAMP input)
+        F.unix_micros(F.col("window_start").cast("timestamp")).alias("_w_us"),
         "_len",
         "lang",
         "_n",

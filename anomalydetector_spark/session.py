@@ -39,6 +39,14 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 1024
 
 
+def _host_heap() -> str:
+    """A quarter of the host's physical memory (``MemTotal``): the rest
+    stays for the Python workers, off-heap shuffle buffers and the page
+    cache."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 4 // 2**20}m"
+
+
 def _launcher_conf() -> dict[str, str]:
     """``spark.*`` settings fixed by the launcher of this driver.
 
@@ -63,11 +71,16 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores`` drives both ``local[N]`` and the default shuffle-partition
-    count. On a real cluster, launch with ``spark-submit --master ...``
-    and size ``spark.sql.shuffle.partitions`` to ~2-3× total executor
-    cores there: the launcher's settings win over these defaults.
+    count; unset, it is ``SPARK_GRAFT_CPUS`` or else the CPUs this process
+    may run on. The driver heap is ``SPARK_GRAFT_DRIVER_MEM`` or else a
+    quarter of the host's memory. On a real cluster, launch with
+    ``spark-submit --master ...`` and size ``spark.sql.shuffle.partitions``
+    to ~2-3× total executor cores there: the launcher's settings win over
+    these defaults.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle = shuffle_partitions or max(cores, 8)
 
     defaults = {
@@ -88,7 +101,8 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _host_heap(),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),

@@ -41,8 +41,7 @@ from pyspark.sql.types import (
 )
 
 from anomalydetector_spark.kernel.sr import MIN_POINTS, SrParams, sr_detect
-
-DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
+from anomalydetector_spark.plans.fused import DEFAULT_LANGS
 
 # state: the retained series, as epoch-micros + values, plus the global
 # index of the first retained point (0 in whole-series mode; a tumbling

@@ -29,13 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from anomalydetector_spark.kernel.window_drift import js_tvd
+from anomalydetector_spark.plans.fused import DEFAULT_LANGS
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
     duration_us as _duration_us,
     window_pairs,
 )
-
-DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
 
 # kept as the historical export name; the layout (and the v2
 # loud-failure rationale) lives with the shared machine in pairs.py

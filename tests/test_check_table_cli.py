@@ -5,10 +5,13 @@ on disk, CI exit-code gate, referential dim_path resolution."""
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 from anomalydetector_spark.plans.suite import specs_from_json
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_specs_from_json_validation():
@@ -67,7 +70,7 @@ def test_check_table_cli_end_to_end(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc.returncode == 3, proc.stdout + proc.stderr
     assert "FAIL" in proc.stdout and "PASS" in proc.stdout
@@ -96,6 +99,6 @@ def test_check_table_cli_end_to_end(spark, tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc2.returncode == 0, proc2.stdout + proc2.stderr

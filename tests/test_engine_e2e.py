@@ -5,13 +5,30 @@ verdicts, and the drift check must flag exactly the injected windows."""
 import datetime
 
 import pyspark.sql.functions as F
+import pytest
 
 from anomalydetector_spark import datagen
 from anomalydetector_spark.engine import ValidationConfig, run_validation
+from drift_oracle import drift_series
 
 
 def _win_start(widx: int) -> datetime.datetime:
     return datetime.datetime(2025, 1, 1) + datetime.timedelta(days=widx)
+
+
+@pytest.fixture(scope="module")
+def oracle(pages):
+    """The DuckDB drift series of the shared pages table (one global
+    partition, the default languages)."""
+    return drift_series(
+        pages.select("warc_ts", "text", "lang", "url").toPandas(),
+        ValidationConfig().langs,
+    )
+
+
+def _global(series: dict) -> dict:
+    """``{window_start: value}`` of the global partition's series."""
+    return {w: v for (part, w), v in series.items() if part == "global"}
 
 
 def test_run_validation_end_to_end(spark, pages):
@@ -232,14 +249,11 @@ def test_drift_margin_mode_spark(spark):
     assert (scored["unit"] >= 1.0).all()  # reference clips units to >= 1
 
 
-def test_shape_drift_series_and_verdict(spark, pages):
+def test_shape_drift_series_and_verdict(spark, pages, oracle):
     """The engine's cube-derived lang_js_divergence series equals the
-    standalone raw-row operator, and SR flags the injected lang-shift
-    window (or its revert — the distribution also jumps back)."""
-    from anomalydetector_spark.operators.divergence import (
-        categorical_window_divergence,
-    )
-
+    DuckDB oracle over the raw rows, and SR flags the injected
+    lang-shift window (or its revert — the distribution also jumps
+    back)."""
     res = run_validation(pages, None, ValidationConfig())
     got = {
         r.window_start: r.value
@@ -249,14 +263,7 @@ def test_shape_drift_series_and_verdict(spark, pages):
     }
     assert got, "shape-drift series missing"
 
-    raw = categorical_window_divergence(
-        pages.filter(F.col("warc_ts").isNotNull()).withColumn(
-            "lang", F.coalesce("lang", F.lit("<null>"))
-        ),
-        ts_col="warc_ts",
-        cat_col="lang",
-    )
-    exp = {r.window_start: r.js_divergence for r in raw.collect()}
+    exp = _global(oracle["lang_js_divergence"])
     assert set(got) == set(exp)
     for w, v in exp.items():
         assert abs(got[w] - v) < 1e-12, (w, got[w], v)
@@ -284,14 +291,10 @@ def test_shape_drift_series_and_verdict(spark, pages):
     res_off.unpersist()
 
 
-def test_length_histogram_drift_series_and_verdict(spark, pages):
-    """The cube-derived len_hist_emd series equals an independent
-    raw-row computation with the same log2 binning, and SR flags the
-    injected length-shift window (or its revert)."""
-    from anomalydetector_spark.operators.divergence import (
-        numeric_drift_from_bin_counts,
-    )
-
+def test_length_histogram_drift_series_and_verdict(spark, pages, oracle):
+    """The cube-derived len_hist_emd series equals the DuckDB oracle
+    over the raw rows (same log2 binning, exact integer arithmetic),
+    and SR flags the injected length-shift window (or its revert)."""
     res = run_validation(pages, None, ValidationConfig())
     got = {
         r.window_start: r.value
@@ -301,33 +304,7 @@ def test_length_histogram_drift_series_and_verdict(spark, pages):
     }
     assert got, "length-drift series missing"
 
-    raw_counts = (
-        pages.filter(F.col("warc_ts").isNotNull())
-        .groupBy(
-            F.window("warc_ts", "1 day").alias("w"),
-            F.least(
-                F.floor(
-                    F.log2(
-                        F.coalesce(F.length("text"), F.lit(0)) + 1
-                    )
-                ),
-                F.lit(31),
-            )
-            .cast("int")
-            .alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
-    )
-    exp = {
-        r.window_start: r.emd
-        for r in numeric_drift_from_bin_counts(raw_counts).collect()
-    }
+    exp = _global(oracle["len_hist_emd"])
     assert set(got) == set(exp)
     for w, v in exp.items():
         assert got[w] == v, (w, got[w], v)  # exact integer arithmetic
@@ -343,15 +320,11 @@ def test_length_histogram_drift_series_and_verdict(spark, pages):
     res.unpersist()
 
 
-def test_length_histogram_psi_series_and_verdict(spark, pages):
-    """The cube-derived len_hist_psi series equals an independent
-    raw-row psi computation with the same log2 binning, and SR flags
-    the injected length-shift window (or its revert) through the PSI
-    lens too."""
-    from anomalydetector_spark.operators.divergence import (
-        psi_chi2_from_bin_counts,
-    )
-
+def test_length_histogram_psi_series_and_verdict(spark, pages, oracle):
+    """The cube-derived len_hist_psi series equals the DuckDB oracle's
+    PSI over the raw rows (same log2 binning), and SR flags the
+    injected length-shift window (or its revert) through the PSI lens
+    too."""
     res = run_validation(pages, None, ValidationConfig())
     got = {
         r.window_start: r.value
@@ -361,33 +334,7 @@ def test_length_histogram_psi_series_and_verdict(spark, pages):
     }
     assert got, "length-psi series missing"
 
-    raw_counts = (
-        pages.filter(F.col("warc_ts").isNotNull())
-        .groupBy(
-            F.window("warc_ts", "1 day").alias("w"),
-            F.least(
-                F.floor(
-                    F.log2(
-                        F.coalesce(F.length("text"), F.lit(0)) + 1
-                    )
-                ),
-                F.lit(31),
-            )
-            .cast("int")
-            .alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
-    )
-    exp = {
-        r.window_start: r.psi
-        for r in psi_chi2_from_bin_counts(raw_counts).collect()
-    }
+    exp = _global(oracle["len_hist_psi"])
     assert set(got) == set(exp)
     for w, v in exp.items():
         assert got[w] == v, (w, got[w], v)

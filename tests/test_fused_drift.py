@@ -1,10 +1,10 @@
 """The engine's drift tail is ONE grouped pandas pass per partition
 (drift.fused_drift): every stat series derived from the persisted cube
-and profile, then SR-scored. Its values must equal the Spark operators on
-raw rows — exactly, except 1e-12 for JS divergence — over the cases the
-old Catalyst tail handled implicitly (gaps, null timestamps and text,
-languages outside ``cfg.langs``, partitions too short to score, margin
-mode); its plan must stay one grouped pandas node with no Window or
+and profile, then SR-scored. Its values must equal a DuckDB oracle over
+the raw rows (tests/drift_oracle.py) — exactly, except 1e-12 for JS
+divergence — over the cases the old Catalyst tail handled implicitly
+(gaps, null timestamps and text, languages outside ``cfg.langs``,
+partitions too short to score, margin mode); its plan must stay one grouped pandas node with no Window or
 sort-merge join; and the verdict path must run no Python at all."""
 
 import datetime
@@ -17,18 +17,12 @@ from anomalydetector_spark import manifest as M
 from anomalydetector_spark.drift import DRIFT_MARGIN_SCHEMA
 from anomalydetector_spark.engine import ValidationConfig, run_validation
 from anomalydetector_spark.kernel.sr import MIN_POINTS, SrParams
-from anomalydetector_spark.operators.divergence import (
-    divergence_from_window_counts,
-    numeric_drift_from_bin_counts,
-    psi_chi2_from_bin_counts,
-)
 from anomalydetector_spark.plans.audit import (
     GROUPED_PANDAS_NODES,
     plan_node_names,
     python_or_rdd_nodes,
 )
-from anomalydetector_spark.plans.fused import len_log2_bin
-from anomalydetector_spark.stats import compute_window_stats
+from drift_oracle import drift_series
 
 T0 = datetime.datetime(2025, 3, 1)
 EPOCH0 = int((T0 - datetime.datetime(1970, 1, 1)).total_seconds())
@@ -95,97 +89,35 @@ def fused_case(spark):
     pages.unpersist()
 
 
-def test_scalar_series_match_window_stats(fused_case):
-    pages, res = fused_case
-    # compute_window_stats averages (lang == l) and so skips null-lang
-    # rows; the cube counts them in the denominator like every other row
-    exp = compute_window_stats(
-        pages.withColumn("lang", F.coalesce("lang", F.lit("<null>"))),
-        partition_by="part",
-        langs=LANGS,
+@pytest.fixture(scope="module")
+def oracle(fused_case):
+    pages, _ = fused_case
+    return drift_series(
+        pages.select("part", "warc_ts", "text", "lang", "url").toPandas(),
+        LANGS,
+        part_col="part",
     )
-    stats = ["doc_count", "null_rate", "len_p50", "len_p95"] + [
-        f"lang_frac_{x}" for x in LANGS
-    ]
-    for stat in stats:
-        want = {
-            (r.partition_key, r.window_start): r.value
-            for r in exp.filter(F.col("stat_name") == stat).collect()
-        }
-        got = _series(res, stat)
-        assert got == want, stat
+
+
+def test_scalar_series_match_window_stats(fused_case, oracle):
+    _, res = fused_case
+    stats = ["doc_count", "null_rate", "len_p50", "len_p95", "distinct_url"]
+    for stat in stats + [f"lang_frac_{x}" for x in LANGS]:
+        assert _series(res, stat) == oracle[stat], stat
     windows = set(_series(res, "doc_count"))
     assert len(windows) == len(LONG_WINDOWS) + len(SHORT_WINDOWS)
 
-    distinct = {
-        (r.part, r.window_start): float(r.n)
-        for r in pages.filter(F.col("warc_ts").isNotNull())
-        .groupBy("part", F.window("warc_ts", "1 day").start.alias("window_start"))
-        .agg(F.countDistinct("url").alias("n"))
-        .collect()
-    }
-    assert _series(res, "distinct_url") == distinct
 
-
-def test_shape_series_match_divergence_operators(fused_case):
-    pages, res = fused_case
-    lang_counts = (
-        pages.filter(F.col("warc_ts").isNotNull())
-        .groupBy(
-            F.col("part").alias("partition_key"),
-            F.window("warc_ts", "1 day").alias("w"),
-            F.coalesce("lang", F.lit("<null>")).alias("cat"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "partition_key",
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "cat",
-            "n",
-        )
-    )
-    js_want = {
-        (r.partition_key, r.window_start): r.js_divergence
-        for r in divergence_from_window_counts(
-            lang_counts, part_cols=["partition_key"]
-        ).collect()
-    }
+def test_shape_series_match_divergence_operators(fused_case, oracle):
+    _, res = fused_case
+    js_want = oracle["lang_js_divergence"]
     js_got = _series(res, "lang_js_divergence")
     assert set(js_got) == set(js_want)
     for k, v in js_want.items():
         assert abs(js_got[k] - v) <= 1e-12, (k, js_got[k], v)
 
-    bin_counts = (
-        pages.filter(F.col("warc_ts").isNotNull())
-        .groupBy(
-            F.col("part").alias("partition_key"),
-            F.window("warc_ts", "1 day").alias("w"),
-            len_log2_bin(F.length("text")).alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "partition_key",
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
-    )
-    emd_want = {
-        (r.partition_key, r.window_start): r.emd
-        for r in numeric_drift_from_bin_counts(
-            bin_counts, part_cols=["partition_key"]
-        ).collect()
-    }
-    psi_want = {
-        (r.partition_key, r.window_start): r.psi
-        for r in psi_chi2_from_bin_counts(
-            bin_counts, part_cols=["partition_key"]
-        ).collect()
-    }
-    assert _series(res, "len_hist_emd") == emd_want
-    assert _series(res, "len_hist_psi") == psi_want
+    assert _series(res, "len_hist_emd") == oracle["len_hist_emd"]
+    assert _series(res, "len_hist_psi") == oracle["len_hist_psi"]
 
     # pairs only with the window exactly one day earlier: the first
     # window and the one after the gap carry no shape value
@@ -230,6 +162,26 @@ def test_pairs_step_in_epoch_time_across_dst(spark, fused_case):
     finally:
         spark.conf.set(key, tz)
     assert got == want
+
+
+def test_timestamp_ntz_input_gives_the_same_series(fused_case):
+    """A ``timestamp_ntz`` warc_ts keeps its type through the cube's
+    window starts; the drift pass still pairs windows in epoch time and
+    yields the TIMESTAMP run's series."""
+    pages, res = fused_case
+
+    def rows(r):
+        return sorted(map(tuple, r.stat_series.collect()))
+
+    ntz = run_validation(
+        pages.withColumn("warc_ts", F.col("warc_ts").cast("timestamp_ntz")),
+        None,
+        ValidationConfig(partition_by="part", langs=LANGS),
+    )
+    try:
+        assert rows(ntz) == rows(res)
+    finally:
+        ntz.unpersist()
 
 
 def test_short_partition_unscored_and_margin_schema(fused_case):

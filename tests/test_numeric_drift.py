@@ -489,51 +489,6 @@ def test_equidepth_drift_equals_manual_binning(spark):
     assert frozen == auto
 
 
-# ---- fused battery (full_histogram_drift) ----
-
-from anomalydetector_spark.operators.divergence import (  # noqa: E402
-    full_histogram_drift,
-    numeric_drift_from_bin_counts,
-    psi_chi2_from_bin_counts,
-)
-
-
-def test_full_histogram_drift_equals_separate_operators(spark):
-    rng = random.Random(53)
-    rows = []
-    for d in range(6):
-        for _ in range(rng.randint(40, 120)):
-            rows.append(
-                (T0 + dt.timedelta(days=d, seconds=rng.randint(0, 86000)),
-                 min(max(rng.gauss(3 + d, 1.5), 0.0), 9.99)),
-            )
-    df = spark.createDataFrame(rows, "ts timestamp, value double")
-    counts = (
-        df.groupBy(
-            F.window("ts", "1 day").alias("w"),
-            numeric_bin(F.col("value"), LO, HI, NB).alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("w_start"),
-                F.col("w.end").alias("w_end"), "bin", "n")
-    )
-    fused = {r.window_start: r for r in
-             full_histogram_drift(counts).collect()}
-    emd = {r.window_start: r for r in
-           numeric_drift_from_bin_counts(counts).collect()}
-    psi = {r.window_start: r for r in
-           psi_chi2_from_bin_counts(counts).collect()}
-    assert set(fused) == set(emd) == set(psi)
-    for w, r in fused.items():
-        assert (r.linf, r.tvd, r.emd, r.n_bins_hit) == (
-            emd[w].linf, emd[w].tvd, emd[w].emd, emd[w].n_bins_hit
-        )
-        assert (r.psi, r.chi2, r.cramers_v, r.n_bins_union) == (
-            psi[w].psi, psi[w].chi2, psi[w].cramers_v,
-            psi[w].n_bins_union,
-        )
-
-
 # ------------------------------------------------- windowed correlation
 def test_numeric_window_corr_mirror(spark):
     import datetime as dt

@@ -2,12 +2,16 @@
 every status exercised by hand, exact tolerance edges, partition
 invariance."""
 
+from pathlib import Path
+
 import pytest
 
 from anomalydetector_spark.operators.reconcile import (
     reconcile_aggregate,
     reconcile_verdict,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _frames(spark):
@@ -131,7 +135,7 @@ def test_reconcile_cli_end_to_end(spark, tmp_path):
             "--summary-value", "total",
             "--output-path", f"{root}/out",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert proc.returncode == 3, proc.stdout + proc.stderr
     assert "2 matched" in proc.stdout and "1 mismatched" in proc.stdout

@@ -19,13 +19,15 @@ REPO = Path(__file__).resolve().parents[1]
 
 _PROBE = """
 import json
+import sys
 from anomalydetector_spark.session import get_spark
 
-s = get_spark("probe", cores=3)
+s = get_spark("probe", cores=int(sys.argv[1]) if len(sys.argv) > 1 else None)
 print("PROBE " + json.dumps({
     "master": s.sparkContext.master,
     "shuffle": s.conf.get("spark.sql.shuffle.partitions"),
     "cache": s.sparkContext.getConf().get("spark.sql.codegen.cache.maxEntries"),
+    "heap": s.sparkContext.getConf().get("spark.driver.memory"),
 }))
 s.stop()
 """
@@ -44,19 +46,25 @@ def _spark_submit() -> str | None:
     return shutil.which("spark-submit")
 
 
-def _run_probe(tmp_path, launcher: list[str]) -> dict:
+def _run_probe(tmp_path, launcher: list[str], host_sized=False) -> dict:
     script = tmp_path / "probe.py"
     script.write_text(_PROBE)
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (str(REPO), env.get("PYTHONPATH")) if p
     )
-    # a small heap: the probe runs beside the shared test session
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    if host_sized:
+        env.pop("SPARK_GRAFT_CPUS", None)
+        env.pop("SPARK_GRAFT_DRIVER_MEM", None)
+    else:
+        # a small heap: the probe runs beside the shared test session
+        env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     env.pop("PYSPARK_GATEWAY_PORT", None)
     env.pop("PYSPARK_GATEWAY_SECRET", None)
+    # host-sized: no cores argument either
+    args = [] if host_sized else ["3"]
     proc = subprocess.run(
-        [*launcher, str(script)],
+        [*launcher, str(script), *args],
         capture_output=True,
         text=True,
         cwd=tmp_path,
@@ -93,6 +101,19 @@ def test_plain_driver_gets_engine_defaults(tmp_path):
     assert got["master"] == "local[3]"
     assert got["shuffle"] == "8"
     assert got["cache"] == "1024"
+
+
+def test_unset_sizes_follow_the_host(tmp_path):
+    """Without ``cores`` and the two environment variables, the session
+    takes the CPUs this process may use and a heap the host can hold."""
+    got = _run_probe(tmp_path, [sys.executable], host_sized=True)
+    assert got["master"] == f"local[{len(os.sched_getaffinity(0))}]"
+    assert got["heap"].endswith("m")
+    with open("/proc/meminfo") as f:
+        mem_kib = int(
+            next(x for x in f if x.startswith("MemTotal")).split()[1]
+        )
+    assert 0 < int(got["heap"][:-1]) * 1024 <= mem_kib
 
 
 def _compiles(spark) -> int:

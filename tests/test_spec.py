@@ -53,6 +53,23 @@ def test_unknown_field_rejected_loudly():
         config_from_dict(["window"])
 
 
+def test_drift_batch_size_is_validated(spark):
+    """The SR kernel reads ``drift.batch_size``; a batch below the
+    kernel's minimum is rejected before any job rather than silently
+    clamped, and there is no second, top-level batch size."""
+    from anomalydetector_spark import datagen
+    from anomalydetector_spark.engine import run_validation
+    from anomalydetector_spark.kernel.sr import MIN_POINTS
+    from anomalydetector_spark.operators.errors import INVALID_BATCH_SIZE
+
+    pages = datagen.generate_pages(spark, 200)
+    with pytest.raises(ValueError) as err:
+        run_validation(pages, None, config_from_dict({"drift": {"batch_size": 5}}))
+    assert str(err.value) == INVALID_BATCH_SIZE.format(MIN_POINTS)
+    with pytest.raises(ValueError, match="unknown suite field 'batch_size'"):
+        config_from_dict({"batch_size": 0})
+
+
 def test_round_trip():
     cfg = ValidationConfig(
         window_duration="2 hours", min_points=5, langs=("zh",)

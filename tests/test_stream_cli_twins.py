@@ -7,11 +7,14 @@ and every emitted row matches the batch operators / set arithmetic."""
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from anomalydetector_spark import datagen
+
+REPO = Path(__file__).resolve().parents[1]
 
 N_ROWS = 6_000
 
@@ -26,7 +29,7 @@ def test_stream_validate_cli_round3_twins_subprocess(spark, tmp_path):
     out = str(tmp_path / "out")
 
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = str(REPO)
     env["SPARK_GRAFT_CPUS"] = "8"
     proc = subprocess.run(
         [
@@ -42,7 +45,7 @@ def test_stream_validate_cli_round3_twins_subprocess(spark, tmp_path):
             "--window-corr", "length(text),wid",
             "--stream-buffer-windows", "4",
         ],
-        env=env, cwd="/root/repo",
+        env=env, cwd=REPO,
         capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -136,7 +139,7 @@ def test_stream_validate_cli_robots_gate_subprocess(spark, tmp_path):
 
     out = str(tmp_path / "out")
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = str(REPO)
     env["SPARK_GRAFT_CPUS"] = "8"
     proc = subprocess.run(
         [
@@ -148,7 +151,7 @@ def test_stream_validate_cli_robots_gate_subprocess(spark, tmp_path):
             "--available-now",
             "--robots-gate", dim_dir,
         ],
-        env=env, cwd="/root/repo",
+        env=env, cwd=REPO,
         capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]

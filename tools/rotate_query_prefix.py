@@ -22,10 +22,12 @@ tool says so.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-ENTRY = "/root/repo/__spark_entry__.py"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENTRY = os.path.join(ROOT, "__spark_entry__.py")
 
 
 def main() -> None:
@@ -55,7 +57,7 @@ def main() -> None:
     # which queries have oracles? import the module for oracle_sql()
     import importlib.util
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     spec = importlib.util.spec_from_file_location("entry", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -36,6 +36,7 @@ from anomalydetector_spark.kernel.sr import (
     VALUE_UPPER_BOUND,
 )
 from anomalydetector_spark.operators import errors
+from anomalydetector_spark.operators.checks import validate_batch_size
 
 
 def _read_any(spark: SparkSession, path: str) -> DataFrame:
@@ -52,8 +53,7 @@ def _validate_series_input(
     n = df.count()
     if n < MIN_POINTS:
         raise Exception(errors.NOT_ENOUGH_POINTS.format(MIN_POINTS))
-    if 0 < batch_size < MIN_POINTS:
-        raise Exception(errors.INVALID_BATCH_SIZE.format(MIN_POINTS))
+    validate_batch_size(batch_size)
     for col in [ts_col, *value_cols]:
         if col not in df.columns:
             raise Exception(errors.COLUMN_NOT_FOUND.format(col))
@@ -226,6 +226,35 @@ def _write_violations(violations, out: str, args) -> None:
     )
 
 
+def _write_results(res, out: str, args) -> None:
+    """Row-level outputs shared by validate / incremental-validate:
+    violations, drift scores and verdicts, the optional CUSUM / EWMA /
+    lens-consensus / attribution frames, and with --quarantine the
+    clean/quarantined row split."""
+    # violations are read back selectively ("show me the unique_url rows
+    # for partition X") — physical partitioning makes those reads prune
+    # instead of scanning the full violation set
+    _write_violations(res.violations, out, args)
+    frames = {
+        "drift_scores": res.drift_scored,
+        "drift_verdicts": res.drift_verdicts,
+        "cusum_scores": res.cusum_scored,
+        "cusum_verdicts": res.cusum_verdicts,
+        "ewma_scores": res.ewma_scored,
+        "lens_consensus": res.lens_consensus,
+        "drift_attribution": res.drift_attribution,
+    }
+    for name, frame in frames.items():
+        if frame is not None:
+            frame.write.mode("overwrite").parquet(f"{out}/{name}")
+    if getattr(args, "quarantine", False):
+        # dead-letter flow: ONE scan writes rows/validation_status=clean
+        # (the training corpus) and =quarantined (+ violated_checks tags)
+        from anomalydetector_spark.operators.quarantine import write_split
+
+        write_split(res.row_status, f"{out}/rows")
+
+
 def cmd_validate(args, spark: SparkSession) -> None:
     from anomalydetector_spark import manifest as M
     from anomalydetector_spark.engine import ValidationConfig, run_validation
@@ -269,36 +298,7 @@ def cmd_validate(args, spark: SparkSession) -> None:
     res = run_validation(pages, domains, cfg)
 
     out = args.output_path.rstrip("/")
-    # violations are read back selectively ("show me the unique_url rows
-    # for partition X") — physical partitioning makes those reads prune
-    # instead of scanning the full violation set
-    _write_violations(res.violations, out, args)
-    res.drift_scored.write.mode("overwrite").parquet(f"{out}/drift_scores")
-    res.drift_verdicts.write.mode("overwrite").parquet(f"{out}/drift_verdicts")
-    if res.cusum_scored is not None:
-        res.cusum_scored.write.mode("overwrite").parquet(f"{out}/cusum_scores")
-        res.cusum_verdicts.write.mode("overwrite").parquet(
-            f"{out}/cusum_verdicts"
-        )
-    if res.ewma_scored is not None:
-        res.ewma_scored.write.mode("overwrite").parquet(
-            f"{out}/ewma_scores"
-        )
-    if res.lens_consensus is not None:
-        res.lens_consensus.write.mode("overwrite").parquet(
-            f"{out}/lens_consensus"
-        )
-    if res.drift_attribution is not None:
-        res.drift_attribution.write.mode("overwrite").parquet(
-            f"{out}/drift_attribution"
-        )
-
-    if getattr(args, "quarantine", False):
-        # dead-letter flow: ONE scan writes rows/validation_status=clean
-        # (the training corpus) and =quarantined (+ violated_checks tags)
-        from anomalydetector_spark.operators.quarantine import write_split
-
-        write_split(res.row_status, f"{out}/rows")
+    _write_results(res, out, args)
 
     snapshot = table_version(spark, args.input_path)
     verdict_frame = (
@@ -533,30 +533,7 @@ def cmd_incremental_validate(args, spark: SparkSession) -> None:
         return
 
     res = inc.result
-    _write_violations(res.violations, out, args)
-    res.drift_scored.write.mode("overwrite").parquet(f"{out}/drift_scores")
-    res.drift_verdicts.write.mode("overwrite").parquet(f"{out}/drift_verdicts")
-    if res.cusum_scored is not None:
-        res.cusum_scored.write.mode("overwrite").parquet(f"{out}/cusum_scores")
-        res.cusum_verdicts.write.mode("overwrite").parquet(
-            f"{out}/cusum_verdicts"
-        )
-    if res.ewma_scored is not None:
-        res.ewma_scored.write.mode("overwrite").parquet(
-            f"{out}/ewma_scores"
-        )
-    if res.lens_consensus is not None:
-        res.lens_consensus.write.mode("overwrite").parquet(
-            f"{out}/lens_consensus"
-        )
-    if res.drift_attribution is not None:
-        res.drift_attribution.write.mode("overwrite").parquet(
-            f"{out}/drift_attribution"
-        )
-    if getattr(args, "quarantine", False):
-        from anomalydetector_spark.operators.quarantine import write_split
-
-        write_split(res.row_status, f"{out}/rows")
+    _write_results(res, out, args)
     if args.manifest:
         # carry unchanged partitions first so the merged view below
         # covers every partition of the new snapshot

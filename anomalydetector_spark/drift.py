@@ -143,62 +143,6 @@ def score_drift(
     )
 
 
-def gap_adjust_scored(scored: DataFrame, max_back: int = 1000) -> DataFrame:
-    """Optional W15 post-rule over SR-scored drift series (reference
-    srcnn/utils.py:302-311): windows arriving after a gap larger than the
-    series' minimum window interval are forced anomalous when a detection
-    occurred fewer than ``max_back`` windows back — the reference's
-    treatment of missing stretches in irregular series.  Run between
-    :func:`score_drift` and :func:`drift_verdicts`; adds ``gap_forced``.
-
-    Same shuffle key as scoring itself ((partition_key, stat_name)), so
-    AQE reuses the partitioning when chained directly after score_drift.
-    """
-    from anomalydetector_spark.operators.evaluate import gap_adjusted_detections
-
-    keyed = (
-        scored.withColumn(
-            "_series", F.concat_ws(" ", "partition_key", "stat_name")
-        )
-        # unscored (too-short) series carry null is_anomaly: feed the
-        # kernel zeros and restore the nulls afterwards
-        .withColumn("_was_null", F.col("is_anomaly").isNull())
-        .withColumn(
-            "_det", F.coalesce(F.col("is_anomaly").cast("int"), F.lit(0))
-        )
-    )
-    adjusted = gap_adjusted_detections(
-        keyed,
-        series_col="_series",
-        ts_col="window_start",
-        det_col="_det",
-        score_col="score",
-        max_back=max_back,
-    )
-    return (
-        adjusted.withColumn(
-            "is_anomaly",
-            F.when(F.col("_was_null"), F.lit(None).cast("boolean")).otherwise(
-                F.col("_det") == 1
-            ),
-        )
-        # unscored windows round-trip their null score through pandas as
-        # NaN (which sorts ABOVE every double in Spark, poisoning
-        # drift_verdicts' max(score)), and the gap rule may have stamped
-        # 1.0 onto them: restore NULL score and drop the phantom force.
-        .withColumn(
-            "score",
-            F.when(F.col("_was_null"), F.lit(None).cast("double")).otherwise(
-                F.col("score")
-            ),
-        )
-        .withColumn(
-            "gap_forced", F.when(F.col("_was_null"), F.lit(False)).otherwise(F.col("gap_forced"))
-        )
-        .drop("_series", "_det", "_was_null")
-    )
-
-
 def drift_verdicts(scored: DataFrame) -> DataFrame:
     """Collapse scored series into per-(partition, stat) verdict rows:
     pass/fail + anomalous-window count + worst score, the engine's analog

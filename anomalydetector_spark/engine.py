@@ -446,15 +446,8 @@ def run_validation(
     from anomalydetector_spark.operators import quarantine as Q
 
     base_cols = [c for c in pages.columns if c in tagged.columns]
-    row_status = tagged.select(
-        *base_cols,
-        "partition_key",
-        F.array_sort(hit).alias(Q.VIOLATED_COL),
-    ).withColumn(
-        Q.STATUS_COL,
-        F.when(F.size(Q.VIOLATED_COL) > 0, F.lit(Q.QUARANTINED)).otherwise(
-            F.lit(Q.CLEAN)
-        ),
+    row_status = Q.tag_rows(tagged, (), extra_tags=tags).select(
+        *base_cols, "partition_key", Q.VIOLATED_COL, Q.STATUS_COL
     )
 
     if cfg.verify_text_extraction:

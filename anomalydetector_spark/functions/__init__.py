@@ -91,11 +91,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def is_finite(col: Column) -> Column:
-    c = col.cast("double")
-    return c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
-
-
 def lenient_utf8(col: Column) -> Column:
     """Binary → string with malformed UTF-8 becoming NULL rather than an
     error: under Spark 4's default ANSI mode ``decode(col,'UTF-8')``

@@ -141,21 +141,3 @@ def bloom_contains(
             == F.col("mask")
         ).alias("maybe_present")
     )
-
-
-def bloom_filter_new(
-    frontier: DataFrame,
-    bloom: DataFrame,
-    key_col: str = "url",
-    m_bits: int = 1 << 20,
-    n_hashes: int = 7,
-    seed: int = 0,
-) -> DataFrame:
-    """Keep only the frontier rows that are DEFINITELY unseen. Lossless
-    in the direction that matters (no false negatives means nothing
-    seen ever re-enters); loses frontier rows at the FP rate — the
-    standard frontier trade-off, tune with :func:`bloom_params`."""
-    verdict = bloom_contains(
-        frontier, bloom, key_col, m_bits, n_hashes, seed
-    ).filter(~F.col("maybe_present"))
-    return frontier.join(verdict.select(key_col), key_col, "left_semi")

@@ -127,18 +127,6 @@ def c4_page_flags(
     ).drop("_c4k")
 
 
-def c4_clean(
-    df: DataFrame, text_col: str = "text", **thresholds
-) -> DataFrame:
-    """Pages passing every C4 rule, with ``text_col`` replaced by the
-    line-cleaned text; other columns unchanged."""
-    flagged = c4_page_flags(df, text_col=text_col, **thresholds)
-    others = [c for c in df.columns if c != text_col]
-    return flagged.filter(F.col("keep")).select(
-        *others, F.col("clean_text").alias(text_col)
-    )
-
-
 def span_occurrences(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -382,14 +382,6 @@ def sniff(payload: bytes) -> str:
     return "unknown"
 
 
-def resize_nearest(raster: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample of an HxWx3 raster (pure indexing)."""
-    h, w = raster.shape[:2]
-    rows = (np.arange(height) * (h / height)).astype(np.int64).clip(0, h - 1)
-    cols = (np.arange(width) * (w / width)).astype(np.int64).clip(0, w - 1)
-    return raster[rows][:, cols]
-
-
 # --------------------------------------------------------------------------
 # JPEG — baseline sequential 8-bit JFIF (pure stdlib + numpy)
 # --------------------------------------------------------------------------

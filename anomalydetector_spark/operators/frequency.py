@@ -55,33 +55,6 @@ def heavy_hitters(
     )
 
 
-def skew_report(
-    df: DataFrame,
-    key_col: str = "domain",
-    partition_by: str | None = None,
-    hot_threshold: float = 0.2,
-) -> DataFrame:
-    """One row per partition: is it skewed, and by which key?
-    ``(partition_key, rows_scanned, top_key, top_fraction, is_skewed)``.
-    ``hot_threshold`` mirrors the datagen fixture's ≥20% hot domain."""
-    top = heavy_hitters(df, key_col=key_col, k=1, partition_by=partition_by)
-    part = (
-        F.col(partition_by).cast("string") if partition_by else F.lit("global")
-    )
-    totals = (
-        df.withColumn("partition_key", part)
-        .groupBy("partition_key")
-        .agg(F.count(F.lit(1)).alias("rows_scanned"))
-    )
-    return totals.join(top, "partition_key", "left").select(
-        "partition_key",
-        "rows_scanned",
-        F.col("key").alias("top_key"),
-        F.col("hot_fraction").alias("top_fraction"),
-        (F.col("hot_fraction") >= hot_threshold).alias("is_skewed"),
-    )
-
-
 def vocab_top_k(
     docs: DataFrame,
     text_col: str = "text",

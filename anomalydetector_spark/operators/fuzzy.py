@@ -96,55 +96,3 @@ def fuzzy_key_pairs(
     return cand.withColumn("distance", dist).filter(
         F.col("distance") <= F.lit(int(max_dist))
     )
-
-
-def fuzzy_duplicate_flags(
-    df: DataFrame,
-    key_col: str,
-    id_col: str,
-    max_dist: int = 1,
-    max_len: int = 64,
-) -> DataFrame:
-    """Row-level view: every input row flagged with whether its key has
-    a fuzzy twin elsewhere in the corpus, and the canonical (minimum)
-    key of its fuzzy neighborhood — the direct dedup verdict for
-    gather-then-pick-one pipelines. Exact-duplicate keys (same key on
-    many rows) count as twins too (distance 0 by definition)."""
-    pairs = fuzzy_key_pairs(df, key_col, max_dist, max_len)
-    # neighbor map: key -> min neighboring key (both directions); its
-    # size is bounded by the number of keys WITH a fuzzy twin — AQE
-    # broadcasts it when small, no forced hint (it is corpus-bounded)
-    nbrs = (
-        pairs.select(
-            F.col("key_a").alias("_fk"), F.col("key_b").alias("_fnbr")
-        )
-        .unionByName(
-            pairs.select(
-                F.col("key_b").alias("_fk"), F.col("key_a").alias("_fnbr")
-            )
-        )
-        .groupBy("_fk")
-        .agg(F.min("_fnbr").alias("_min_nbr"))
-    )
-    k = F.col(key_col)
-    dup_keys = (
-        df.filter(k.isNotNull())
-        .groupBy(k.alias("_fk"))
-        .agg(F.count(F.lit(1)).alias("_n_rows"))
-    )
-    keyed = (
-        df.withColumn("_fk", k)
-        .join(nbrs, "_fk", "left")
-        .join(dup_keys, "_fk", "left")
-    )
-    has_twin = (F.col("_n_rows") > 1) | F.col("_min_nbr").isNotNull()
-    canonical = F.when(
-        F.col("_min_nbr").isNotNull() & (F.col("_min_nbr") < F.col("_fk")),
-        F.col("_min_nbr"),
-    ).otherwise(F.col("_fk"))
-    return keyed.select(
-        id_col,
-        F.col("_fk").alias(key_col),
-        F.coalesce(has_twin, F.lit(False)).alias("has_fuzzy_twin"),
-        canonical.alias("neighborhood_min_key"),
-    )

@@ -13,8 +13,7 @@ Scale shape (10^12 docs): EVERYTHING is in-row. Paragraph splitting,
 per-paragraph language votes (``lang_id`` nests inside a ``transform``
 lambda), token-weighted majority election, and the filtered rebuild are
 one fully-codegen projection — zero shuffle, zero join, zero Python,
-text never leaves its row (the `scrub.py` ethos; the only exploded
-surface is the optional inspection view). At 100 TB the pass is
+text never leaves its row (the `scrub.py` ethos). At 100 TB the pass is
 scan-bound like the other pure projections.
 
 Determinism contract (mirrored by the DuckDB oracle):
@@ -86,28 +85,6 @@ def _majority(paras: Column, langs: Column) -> Column:
     return F.greatest(*per_lang)
 
 
-def paragraph_langs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
-    """Inspection view: one row per paragraph — ``(id_col, para_idx,
-    para_lang, n_tokens)``, 0-based index in document order. The only
-    exploding surface in the module; the summary and the surgery never
-    pay it."""
-    paras = _paras(text_col, sep)
-    out = docs.select(
-        F.col(id_col), F.posexplode_outer(paras).alias("para_idx", "_p")
-    )
-    return out.select(
-        id_col,
-        "para_idx",
-        lang_id(F.col("_p")).alias("para_lang"),
-        F.size(tokens(F.lower(F.col("_p")))).alias("n_tokens"),
-    )
-
-
 def lang_segmentation(
     docs: DataFrame,
     text_col: str = "text",
@@ -155,7 +132,7 @@ def lang_segmentation(
 
 
 def _py_segment(text: str, sep: str, markers, langs_desc):
-    """Shared pure-Python segmentation core for the Arrow twins:
+    """Pure-Python segmentation core of the Arrow twin:
     returns (paras, para_langs, para_tokens). Mirrors the HOF
     semantics exactly on ASCII input; the \\s-class divergence between
     Java regex and Python str.split is the same documented tokenizer
@@ -188,69 +165,6 @@ def _py_majority(plangs, ptoks, langs_desc):
         if sums.get(lang, 0) > best:
             best_lang, best = lang, sums[lang]
     return best_lang, best, sum(sums.values())
-
-
-def lang_segmentation_arrow(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-    min_dominant_share: float = 0.8,
-) -> DataFrame:
-    """SCALE twin of :func:`lang_segmentation`: same columns, same
-    values (pytest-pinned), one Arrow batch pass instead of interpreted
-    Catalyst HOF lambdas — measured 11.3k docs/s (HOF) vs the Arrow
-    rate in BENCH.md at 920k pages. Only ``id_col`` and the text cross
-    the Arrow boundary."""
-    import pandas as pd  # noqa: F401
-
-    spark_id_type = dict(docs.dtypes)[id_col]
-    markers = {l: set(m) for l, m in LANG_MARKERS.items()}
-    langs_desc = sorted(LANG_MARKERS, reverse=True)
-    thresh = min_dominant_share
-
-    def batch(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {
-                id_col: pdf[id_col],
-                "n_paragraphs": [],
-                "majority_lang": [],
-                "majority_tokens": [],
-                "voting_tokens": [],
-                "dominant_share": [],
-                "is_mixed": [],
-            }
-            for text in pdf[text_col]:
-                if text is None:
-                    row = (0, "und", 0, 0, None, False)
-                else:
-                    paras, plangs, ptoks = _py_segment(
-                        text, sep, markers, langs_desc
-                    )
-                    maj, mtok, vtok = _py_majority(plangs, ptoks, langs_desc)
-                    share = round(mtok / vtok, 6) if vtok > 0 else None
-                    row = (
-                        len(paras),
-                        maj,
-                        mtok,
-                        vtok,
-                        share,
-                        bool(share is not None and share < thresh),
-                    )
-                for k, v in zip(list(out)[1:], row):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return docs.select(id_col, text_col).mapInPandas(
-        batch,
-        schema=(
-            f"{id_col} {spark_id_type}, n_paragraphs int, "
-            "majority_lang string, majority_tokens bigint, "
-            "voting_tokens bigint, dominant_share double, is_mixed boolean"
-        ),
-    )
 
 
 def keep_majority_paragraphs_arrow(

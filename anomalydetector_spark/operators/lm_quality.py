@@ -235,37 +235,6 @@ def score_documents(
     return out
 
 
-def lm_quality_filter(
-    docs: DataFrame,
-    ref_docs: DataFrame,
-    max_pseudo_perplexity: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lowercase: bool = True,
-    min_count: int = 1,
-    alpha: float = DEFAULT_ALPHA,
-) -> DataFrame:
-    """One-call composition: train on ``ref_docs``, score ``docs``,
-    gate on ``max_pseudo_perplexity``. Returns the scored frame with
-    ``keep`` (see :func:`score_documents`)."""
-    lm, oov = train_unigram_lm(
-        ref_docs,
-        text_col=text_col,
-        lowercase=lowercase,
-        min_count=min_count,
-        alpha=alpha,
-    )
-    return score_documents(
-        docs,
-        lm,
-        oov,
-        text_col=text_col,
-        id_col=id_col,
-        lowercase=lowercase,
-        max_pseudo_perplexity=max_pseudo_perplexity,
-    )
-
-
 def train_bigram_lm(
     ref_docs: DataFrame,
     text_col: str = "text",

@@ -233,113 +233,6 @@ def extract_video_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms int"
-)
-
-
-def _resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """REAL for BMP/PPM/PNG/JPEG/GIF: decode → nearest-neighbor resample
-    (pure numpy indexing) → re-encode in the same format (PNG keeps its
-    RGBA channel if present; JPEG re-encodes baseline 4:4:4 q90).
-    Codec-bound formats (video) still raise."""
-    fmt = codecs.sniff(payload)
-    if fmt == "bmp":
-        return codecs.encode_bmp(
-            codecs.resize_nearest(codecs.decode_bmp(payload), width, height)
-        )
-    if fmt == "ppm":
-        return codecs.encode_ppm(
-            codecs.resize_nearest(codecs.decode_ppm(payload), width, height)
-        )
-    if fmt == "png":
-        return codecs.encode_png(
-            codecs.resize_nearest(codecs.decode_png(payload), width, height)
-        )
-    if fmt == "jpeg":
-        return codecs.encode_jpeg(
-            codecs.resize_nearest(
-                codecs.decode_jpeg(payload), width, height
-            ),
-            quality=90,
-        )
-    if fmt == "gif":
-        # nearest-neighbor keeps the palette <= 256 colors, so the
-        # re-encode stays lossless
-        return codecs.encode_gif(
-            codecs.resize_nearest(codecs.decode_gif(payload), width, height)
-        )
-    raise NotImplementedError(
-        "image resize for this format requires a codec library"
-    )
-
-
-def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake for non-parseable payloads: length-scaled byte
-    payload (area ratio), so batch shapes and size accounting behave
-    like a real resample."""
-    if payload is None:
-        return b""
-    target = max(1, int(len(payload) * min(1.0, (width * height) / (64 * 48))))
-    reps = target // max(len(payload), 1) + 1
-    return (payload * reps)[:target]
-
-
-def resize_images(
-    media: DataFrame, width: int = 32, height: int = 24, use_stub: bool = True
-) -> DataFrame:
-    """Resize image payloads via ``mapInPandas`` (same Arrow-batch contract
-    as :func:`extract_features`); non-image rows pass through unchanged.
-    Parseable payloads (BMP/PPM/PNG) are ALWAYS really resampled; unknown
-    formats use the fake when ``use_stub=True`` and raise otherwise.
-    Output schema equals the input media schema with updated dimensions."""
-
-    def one(p, w, h):
-        if codecs.sniff(p) in ("bmp", "ppm", "png", "jpeg", "gif"):
-            return _resize_image(p, w, h)
-        if use_stub:
-            return _fake_resize(p, w, h)
-        return _resize_image(p, w, h)  # raises the marked stub error
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            is_img = out["kind"] == "image"
-            out.loc[is_img, "payload"] = [
-                one(p, width, height) for p in out.loc[is_img, "payload"]
-            ]
-            out.loc[is_img, "width"] = width
-            out.loc[is_img, "height"] = height
-            yield out
-
-    return media.select(
-        "media_id", "kind", "payload", "mime", "width", "height", "duration_ms"
-    ).mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def frame_sample_plan(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms)
-    derived from metadata — the pure-Spark half of frame extraction (the
-    per-frame decode needs a video codec — the marked stub above).
-    ``sequence`` keeps the expansion JVM-side."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def synth_media(spark, n: int = 100) -> DataFrame:
     """Deterministic media table for tests: image rows carry REAL BMP
     payloads (8x6 raster filled with ``media_id % 251``), audio rows

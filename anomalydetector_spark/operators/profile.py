@@ -469,16 +469,3 @@ def profile_json_keys(
             >= F.lit(float(min_presence))
         ).alias("required"),
     )
-
-
-def suggest_json_schema(
-    profile_rows, min_presence: float = 0.95
-) -> dict[str, str]:
-    """Collapse a (collected) :func:`profile_json_keys` frame into the
-    ``{key: type}`` mapping ``check_json_schema`` takes — only the
-    ``required`` keys, in key order (deterministic)."""
-    return {
-        r.key: r.inferred_type
-        for r in sorted(profile_rows, key=lambda r: r.key)
-        if r.required
-    }

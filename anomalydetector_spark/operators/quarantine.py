@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.operators.asserts import RowAssert
+from anomalydetector_spark.operators.asserts import RowAssert, row_assert_tags
 
 STATUS_COL = "validation_status"
 VIOLATED_COL = "violated_checks"
@@ -32,13 +32,13 @@ def tag_rows(
     failed check; empty when clean) and ``validation_status``.
 
     ``extra_tags`` lets callers ride additional ``when(cond, name)``
-    columns (the engine adds its duplicate-key / dangling-dimension tags
-    here so everything stays one scan)."""
+    columns: the engine passes its whole violation tag list (null
+    timestamp, duplicate key, row asserts, JSON schema, functional
+    dependencies, dangling dimension), so the status is one projection
+    over the scan its violation rows come from."""
     if not asserts and not extra_tags:
         raise ValueError("tag_rows needs at least one assert or extra tag")
-    tags = [
-        F.when(a.violated(), F.lit(f"assert_{a.name}")) for a in asserts
-    ] + list(extra_tags or [])
+    tags = row_assert_tags(tuple(asserts)) + list(extra_tags or [])
     hit = F.array_sort(F.filter(F.array(*tags), lambda t: t.isNotNull()))
     return df.withColumn(VIOLATED_COL, hit).withColumn(
         STATUS_COL,

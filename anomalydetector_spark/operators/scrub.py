@@ -216,24 +216,6 @@ def redact_pii(
     return df.withColumn(out_col or text_col, col)
 
 
-def pii_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    kinds: tuple[str, ...] = ("email", "ipv4", "phone"),
-) -> DataFrame:
-    """``(id_col, n_<kind>...)`` match counts per document — the audit
-    surface to run before/after :func:`redact_pii` (after a clean
-    redaction every count is zero). Pure ``regexp_count`` projection."""
-    cols = [F.col(id_col)]
-    for kind in kinds:
-        pat, _ = PII_PATTERNS[kind]
-        cols.append(
-            F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{kind}")
-        )
-    return df.select(*cols)
-
-
 # ---------------------------------------------------------------------------
 # payment-card redaction: regex candidates + Luhn checksum validation
 # ---------------------------------------------------------------------------

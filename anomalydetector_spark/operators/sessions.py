@@ -17,10 +17,9 @@ Both boundary conventions exist in the wild, so both are offered:
 analytics-industry reading of "MORE than 30 minutes apart starts a new
 session") and ``closed="exclusive"`` (distance == gap splits — the strict reading
 some pipelines standardize on). Spark's native ``session_window``
-merges at exactly ``gap`` (empirically pinned in
-tests/test_sessions_stream.py), so the INCLUSIVE default is also the
-mode that reconciles bit-for-bit with a Structured-Streaming
-``session_window`` aggregation (``streaming/sessions_stream.py``).
+merges at exactly ``gap`` (pinned in tests/test_sessions.py), so the
+INCLUSIVE default is also the mode whose sessions equal a
+``session_window`` aggregation's.
 
 Plan shape: ONE shuffle on the key. ``lag`` and the running sum of
 new-session flags share a single Window node (same partition + order),

@@ -125,55 +125,6 @@ def fast_fingerprint(col: Column) -> Column:
     return F.xxhash64(F.concat_ws(" ", tokens(F.lower(col))))
 
 
-def text_profile(
-    df: DataFrame, text_col: str = "text", rolling_fingerprint: bool = False
-) -> DataFrame:
-    """All text stats in one projection — single scan, fully codegen'd.
-
-    The tokenized array is materialized ONCE as an intermediate column and
-    every derived stat reads it: Spark's subexpression elimination does
-    not reliably merge the repeated ``split`` trees across output columns,
-    and re-tokenizing per stat measurably dominates the pass (~25% wall at
-    1M docs)."""
-    c = F.col(text_col)
-    lt = F.col("_lt")
-    n_tok = F.size(lt).cast("double")
-    stop = F.size(
-        F.filter(lt, lambda t: t.isin(*[F.lit(s) for s in STOPWORDS]))
-    ) / F.greatest(F.size(lt), F.lit(1)).cast("double")
-    rep = F.lit(1.0) - F.size(F.array_distinct(lt)) / F.greatest(
-        F.size(lt), F.lit(1)
-    ).cast("double")
-    pr = punct_ratio(c)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 10000), 1.0).otherwise(
-        F.least(n_tok / 10.0, F.lit(1.0))
-    )
-    quality = (
-        len_ok
-        + F.least(stop * 5.0, F.lit(1.0))
-        + (F.lit(1.0) - F.least(pr * 4.0, F.lit(1.0)))
-        + (F.lit(1.0) - rep)
-    ) / 4.0
-    return (
-        df.withColumn("_lt", tokens(F.lower(c)))
-        .withColumns(
-            {
-                "n_tokens": F.size(lt),
-                "n_subwords": subword_count(c),
-                "punct_ratio": pr,
-                "stopword_ratio": stop,
-                "repetition_ratio": rep,
-                "quality": quality,
-                "lang_pred": lang_id(c, toks=lt),
-                "fingerprint": fingerprint(c)
-                if rolling_fingerprint
-                else F.xxhash64(F.concat_ws(" ", lt)),
-            }
-        )
-        .drop("_lt")
-    )
-
-
 def repetition_profile(
     df: DataFrame,
     text_col: str = "text",

@@ -15,9 +15,10 @@ per window per series):
   Sen 1968): monotone drift magnitude with a 29% breakdown point, so a
   few anomalous windows cannot fake or hide a trend.
 * :func:`series_autocorr` — exact sample autocorrelation at lags
-  ``1..L`` + dominant-lag summary: periodicity/seasonality discovery
-  for stat series (the "is this daily-periodic" question that decides
-  whether a drift alarm is seasonality or a real shift).
+  ``1..L``, whose largest positive acf marks the period:
+  periodicity/seasonality discovery for stat series (the "is this
+  daily-periodic" question that decides whether a drift alarm is
+  seasonality or a real shift).
 
 Determinism contract (the repo's cross-engine float rule): series
 values micro-quantize once at entry (``round(v·1e6)`` HALF_UP →
@@ -535,22 +536,6 @@ def series_autocorr(
     )
 
 
-def dominant_lag(acf: DataFrame, part_cols: Sequence[str]) -> DataFrame:
-    """Seasonality summary over :func:`series_autocorr` output: the lag
-    with the largest POSITIVE acf per series (the candidate period — a
-    period-p signal peaks at lag p, while |acf| would pick the
-    anti-phase lag p/2; deterministic tie-break: smaller lag), plus its
-    value — ``(*part_cols, lag, acf)``. NULL-acf rows (constant series)
-    are ignored; a series with no positive-acf lag is absent."""
-    part = list(part_cols)
-    ok = acf.filter(F.col("acf").isNotNull() & (F.col("acf") > 0))
-    return ok.groupBy(*part).agg(
-        F.min_by(
-            F.struct("lag", "acf"), F.struct(-F.col("acf"), F.col("lag"))
-        ).alias("_best")
-    ).select(*part, F.col("_best.lag").alias("lag"), F.col("_best.acf").alias("acf"))
-
-
 def ewma_chart(
     series: DataFrame,
     part_cols: Sequence[str],
@@ -759,35 +744,3 @@ def seasonal_expectation(
         flagged.alias("flagged"),
         F.coalesce(F.col("_m"), F.lit(0)).cast("int").alias("n_history"),
     )
-
-
-def detect_season_lag(
-    series: DataFrame,
-    part_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    max_lag: int = 14,
-    min_acf: float = 0.3,
-) -> int | None:
-    """Auto-detect a single seasonal period for
-    :func:`seasonal_expectation`: the GLOBAL dominant positive-ACF lag
-    — the lag winning the most per-series :func:`dominant_lag` votes
-    (ties: smaller lag), provided the winners' acf clears ``min_acf``
-    (median over voting series). Returns None when no series shows a
-    positive-ACF lag at or above the floor — callers fall back to a
-    domain default. The collect is over the bounded per-series
-    dominant-lag frame (one row per series)."""
-    best = dominant_lag(
-        series_autocorr(series, part_cols, order_col, value_col, max_lag),
-        part_cols,
-    ).collect()
-    votes: dict[int, list] = {}
-    for r in best:
-        votes.setdefault(int(r.lag), []).append(float(r.acf))
-    if not votes:
-        return None
-    # winner by vote count, ties to the smaller lag
-    lag = min(votes, key=lambda l: (-len(votes[l]), l))
-    acfs = sorted(votes[lag])
-    med = acfs[(len(acfs) + 1) // 2 - 1]
-    return lag if med >= min_acf else None

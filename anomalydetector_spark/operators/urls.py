@@ -261,21 +261,3 @@ def domain_blocklist_flags(
     return hosted.join(hits, id_col, "left").withColumn(
         "blocked", F.coalesce(F.col("blocked"), F.lit(False))
     )
-
-
-def blocklist_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Input minus blocklisted-domain rows (ids-only anti-join — the
-    full boolean frame is never materialized)."""
-    hosted = df.withColumn("_host", url_host(F.col(url_col)))
-    chain = hosted.select(
-        F.col(id_col), F.explode(host_suffix_chain(F.col("_host"))).alias("_sfx")
-    )
-    bl = blocklist.select(F.lower(F.col(domain_col)).alias("_sfx")).distinct()
-    hits = chain.join(F.broadcast(bl), "_sfx", "left_semi").select(id_col).distinct()
-    return df.join(hits, id_col, "left_anti")

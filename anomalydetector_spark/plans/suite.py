@@ -13,9 +13,11 @@ set of scans:
   ``ascending``) compile to the single-aggregation programs in
   operators/checks.py — one scan each, still never a collect.
 
-``engine.run_validation`` is this compiler applied to the fixed
-pages-table suite (with its extra drift stages); :func:`run_suite` is
-the general surface for arbitrary tables.
+``engine.run_validation`` does not go through this compiler. It reads the
+same fused scans (plans/fused.py), but builds its own verdicts for the
+fixed pages-table checks as one ``inline(array(struct))`` projection over
+the cube rollup, and its violation rows from one tagged scan.
+:func:`run_suite` is the general surface for arbitrary tables.
 """
 
 from __future__ import annotations

@@ -45,19 +45,6 @@ def table_version(spark: SparkSession, ref: str) -> str:
     return snapshot_id_for_path(ref)
 
 
-def write_output(df: DataFrame, ref: str, mode: str = "overwrite") -> None:
-    """Sink twin of read_table: ``writeTo`` for catalog tables, parquet
-    for paths."""
-    if is_iceberg_ref(ref):
-        writer = df.writeTo(ref)
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-    else:
-        df.write.mode(mode).parquet(ref)
-
-
 def write_output_bucketed(
     df: DataFrame,
     ref: str,

@@ -29,11 +29,6 @@ from anomalydetector_spark.streaming.cusum_stream import (  # noqa: F401
     CUSUM_STATE_SCHEMA,
     cusum_walk_stream,
 )
-from anomalydetector_spark.streaming.ewma_stream import (  # noqa: F401
-    EWMA_SCHEMA,
-    EWMA_STATE_SCHEMA,
-    ewma_stream,
-)
 from anomalydetector_spark.streaming.seasonal_stream import (  # noqa: F401
     SEASONAL_SCHEMA,
     SEASONAL_STATE_SCHEMA,
@@ -58,9 +53,7 @@ from anomalydetector_spark.streaming.numeric_stream import (  # noqa: F401
     CORR_SCHEMA,
     HIST_SCHEMA,
     NUMERIC_DRIFT_SCHEMA,
-    PSI_DRIFT_SCHEMA,
     numeric_drift_stream,
-    psi_drift_stream,
     streaming_window_corr,
     streaming_window_histogram,
 )

@@ -41,10 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from anomalydetector_spark.kernel.window_drift import (
-    histogram_distances,
-    psi_chi2,
-)
+from anomalydetector_spark.kernel.window_drift import histogram_distances
 from anomalydetector_spark.operators.divergence import numeric_bin
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
@@ -192,97 +189,6 @@ def numeric_drift_stream(
             n_bins, _duration_us(window_duration), buffer_windows
         ),
         outputStructType=NUMERIC_DRIFT_SCHEMA,
-        stateStructType=PAIR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-PSI_DRIFT_SCHEMA = (
-    "partition_key string, window_start timestamp, "
-    "psi double, chi2 double, cramers_v double, n_bins_union bigint"
-)
-
-
-def _make_psi_fn(n_bins: int, dur_us: int, buffer_windows: int, alpha: int):
-    import numpy as np
-
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        out = []
-        if not pdf.empty:
-            pdf = pdf.sort_values("window_start")
-            vecs = np.stack(
-                [
-                    np.asarray(b, dtype="float64")
-                    for b in pdf["bin_counts"]
-                ]
-            )
-            if vecs.shape[1] != n_bins:
-                raise ValueError(
-                    f"bin_counts width {vecs.shape[1]} != n_bins {n_bins}"
-                )
-            ts_us = (
-                pdf["window_start"]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
-            )
-            for t, prev, cur in window_pairs(
-                state, ts_us, vecs, n_bins, dur_us, buffer_windows
-            ):
-                # batch-mirror arithmetic (psi_chi2_from_bin_counts):
-                # add-alpha smoothing over the pair's UNION support,
-                # micro-quantized transcendentals, exact integer sums
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        *psi_chi2(cur, prev, alpha),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "partition_key",
-                "window_start",
-                "psi",
-                "chi2",
-                "cramers_v",
-                "n_bins_union",
-            ],
-        )
-
-    return fn
-
-
-def psi_drift_stream(
-    hist_stream: DataFrame,
-    window_duration: str = "1 day",
-    n_bins: int = 20,
-    buffer_windows: int = 64,
-    alpha: int = 1,
-) -> DataFrame:
-    """PSI + chi-square + Cramér's V from a stream of finalized window
-    histograms — the streaming twin of
-    :func:`~anomalydetector_spark.operators.divergence.psi_chi2_from_bin_counts`,
-    sharing :func:`streaming_window_histogram` (stage 1) and the
-    exactly-once pairing machine with :func:`numeric_drift_stream`.
-    Values equal the batch operator BIT-FOR-BIT on the same rows
-    (pinned by test): same union-support add-α smoothing, same
-    HALF_UP micro-quantization of the per-bin transcendentals, same
-    exact integer sums with one final double division chain."""
-    if alpha < 0:
-        raise ValueError("alpha must be a non-negative integer")
-    return hist_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_psi_fn(
-            n_bins, _duration_us(window_duration), buffer_windows, alpha
-        ),
-        outputStructType=PSI_DRIFT_SCHEMA,
         stateStructType=PAIR_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

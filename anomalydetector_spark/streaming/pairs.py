@@ -137,7 +137,7 @@ def ordered_drain(
     buf: dict, last_ts: int, dur_us: int, horizon: int,
     trust_first: bool = False,
 ) -> tuple[list, int]:
-    """Shared consume rule for ORDER-SENSITIVE walks (CUSUM, EWMA):
+    """Shared consume rule for ORDER-SENSITIVE walks (CUSUM, seasonal):
     pop buffered ``{ts_us: value}`` windows in strict timestamp order —
     the oldest window is consumable when it is contiguous with the last
     consumed one (``last_ts + dur_us``, the fast path) or when more

@@ -12,7 +12,7 @@ integer ``(m·vq − s)`` numerators, the same pinned double chains, the
 same zero-history / all-zero-history conventions.
 
 Ordering/exactly-once: the shared ``ordered_drain`` consume rule with
-the consume pointer as the ledger (the CUSUM/EWMA machinery) — the
+the consume pointer as the ledger (the CUSUM machinery) — the
 row-index walk is order-sensitive by definition.
 """
 

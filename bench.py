@@ -13,7 +13,6 @@ Runs the engine's headline operations at ``$SPARK_GRAFT_SF_DIR`` (default
 * uniqueness_lineitem — two-phase salted duplicate counting, 600k rows.
 * dedup_minhash_docs — shingle → 16 minhashes → banded LSH self-join.
 * embedding_topk — brute-force cosine top-k.
-* text_profile_docs — full JVM-side text analysis pass.
 
 Output: {"metric": "...", "value": <total sec>, "unit": "sec",
          "queries": {name: sec}, "sf": <sf>, "docs_per_sec": ...}
@@ -119,7 +118,6 @@ def main() -> None:
     from anomalydetector_spark import datagen
     from anomalydetector_spark.engine import ValidationConfig, run_validation
     from anomalydetector_spark.operators.dedup import minhash_lsh_candidates
-    from anomalydetector_spark.operators.text import text_profile
     from anomalydetector_spark.operators.similarity import cosine_topk_bruteforce
     from anomalydetector_spark.operators.uniqueness import duplicate_key_counts
     import __spark_entry__ as entry
@@ -199,13 +197,6 @@ def main() -> None:
         lambda: materialize(
             cosine_topk_bruteforce(emb, emb.filter(F.col("vec_id") < 10), k=5)
         ),
-    )
-
-    # text profiling over the (cached) pages table — documents.parquet is
-    # only ~5k rows at sf0.1, too small to measure anything but overhead
-    timed(
-        "text_profile_pages",
-        lambda: materialize(text_profile(pages.select("url", "text"))),
     )
 
     from anomalydetector_spark.operators.frequency import heavy_hitters

@@ -6,7 +6,6 @@ import pytest
 
 from anomalydetector_spark.operators.bloom import (
     bloom_contains,
-    bloom_filter_new,
     bloom_params,
     build_bloom,
 )
@@ -45,7 +44,9 @@ def test_filter_new_keeps_only_unseen(spark):
     seen = _urls(spark, 0, 300)
     bloom = build_bloom(seen, m_bits=M, n_hashes=K)
     frontier = _urls(spark, 200, 600)  # 100 overlap + 300 new
-    new = bloom_filter_new(frontier, bloom, m_bits=M, n_hashes=K)
+    new = bloom_contains(frontier, bloom, m_bits=M, n_hashes=K).filter(
+        ~F.col("maybe_present")
+    )
     urls = {r.url for r in new.collect()}
     # nothing seen survives (no false negatives in the other direction)
     assert not any(int(u.rsplit("/", 1)[1]) < 300 for u in urls)

@@ -6,7 +6,6 @@ import random
 import pyspark.sql.functions as F
 
 from anomalydetector_spark.operators.c4 import (
-    c4_clean,
     c4_page_flags,
     c4_span_dedup,
 )
@@ -73,8 +72,10 @@ def test_page_flags_match_pure_python(spark):
 def test_clean_keeps_passing_pages_with_rewritten_text(spark):
     df = spark.createDataFrame(PAGES, "doc_id bigint, text string")
     got = {
-        r.doc_id: r.text
-        for r in c4_clean(df, badwords=("zorblax",)).collect()
+        r.doc_id: r.clean_text
+        for r in c4_page_flags(df, badwords=("zorblax",))
+        .filter("keep")
+        .collect()
     }
     # 2: <5 sentences, 3: lorem, 4: brace, 5: empty, 6: badword
     assert set(got) == {1}

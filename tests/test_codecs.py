@@ -5,7 +5,6 @@ errors, and feature extraction over real bytes end-to-end in Spark."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql.functions import lit as F_lit
 
 from anomalydetector_spark.operators import codecs, multimodal
 
@@ -72,18 +71,6 @@ def test_malformed_inputs_raise():
     with pytest.raises(ValueError):
         codecs.decode_bmp(codecs.encode_bmp(raster)[:-8])
     assert codecs.sniff(b"\x89PNG") == "unknown"
-
-
-def test_resize_nearest_identity_and_constant():
-    rng = np.random.default_rng(4)
-    raster = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
-    np.testing.assert_array_equal(
-        codecs.resize_nearest(raster, 8, 6), raster
-    )
-    up = codecs.resize_nearest(raster, 16, 12)
-    assert up.shape == (12, 16, 3)
-    # 2x nearest-neighbor upsample = pixel duplication
-    np.testing.assert_array_equal(up[::2, ::2], raster)
 
 
 def test_extract_features_real_bytes(spark):
@@ -240,11 +227,10 @@ def test_png_rejects_unsupported_loudly():
         codecs.decode_png(short)
 
 
-def test_png_features_and_resize_spark(spark):
+def test_png_features_spark(spark):
     """End-to-end Spark: real PNG bytes (independent encoder, mixed
     filters) through extract_features — features equal the same raster
-    shipped as BMP — and through resize_images, round-tripping to the
-    resampled raster."""
+    shipped as BMP."""
     rng = np.random.default_rng(99)
     raster = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
     png = _png_encode_independent(raster, [0, 1, 2, 3, 4])
@@ -263,20 +249,6 @@ def test_png_features_and_resize_spark(spark):
             multimodal.extract_features(df, use_stub=False).collect()}
     assert rows[1] == rows[2]          # same raster, different container
     assert rows[3] == rows[1]          # alpha dropped for features
-    # resize: PNG payloads come back as PNG of the resampled raster
-    df2 = df.withColumn("mime", F_lit("image/png")) \
-            .withColumn("width", F_lit(8)).withColumn("height", F_lit(6)) \
-            .withColumn("duration_ms", F_lit(None).cast("int"))
-    out = {r.media_id: bytes(r.payload) for r in
-           multimodal.resize_images(df2, width=4, height=3,
-                                    use_stub=False).collect()}
-    want = codecs.resize_nearest(raster, 4, 3)
-    np.testing.assert_array_equal(codecs.decode_png(out[1]), want)
-    got_a = codecs.decode_png(out[3])
-    assert got_a.shape == (3, 4, 4)    # RGBA preserved through resize
-    np.testing.assert_array_equal(
-        got_a, codecs.resize_nearest(rgba, 4, 3)
-    )
 
 
 def test_png_unfilter_hypothesis_fuzz():
@@ -474,10 +446,9 @@ def test_jpeg_rejects_malformed_huffman_tables():
         codecs._jpeg_decode_table([0, 2, 1], [4, 5, 6])
 
 
-def test_jpeg_features_and_resize_spark(spark):
+def test_jpeg_features_spark(spark):
     """JPEG payloads ride the same real mapInPandas decode path as
-    PNG/BMP: features carry true dims + means, and resize_images
-    re-encodes a decodable JPEG at the target size."""
+    PNG/BMP: features carry true dims + means."""
     rows = []
     for i, v in enumerate((60, 128, 200)):
         img = np.full((16, 24), v, dtype=np.uint8)
@@ -496,11 +467,6 @@ def test_jpeg_features_and_resize_spark(spark):
         f = feats[i]
         assert f[0] == 16.0 and f[1] == 24.0
         assert abs(f[2] * 255.0 - v) < 0.5  # flat q50 decode is exact
-
-    resized = multimodal.resize_images(media, width=8, height=6).collect()
-    for r in resized:
-        out = codecs.decode_jpeg(bytes(r.payload))
-        assert out.shape == (6, 8, 3)
 
 
 # --------------------------------------------------------------------------
@@ -745,7 +711,7 @@ def test_gif_transparency_animation_and_errors():
         codecs.encode_gif(many)
 
 
-def test_gif_features_and_resize_spark(spark):
+def test_gif_features_spark(spark):
     rows = []
     for i, v in enumerate((30, 128, 250)):
         img = np.full((12, 20, 3), v, dtype=np.uint8)
@@ -759,10 +725,6 @@ def test_gif_features_and_resize_spark(spark):
         assert (f[0], f[1]) == (12.0, 20.0)
         # lossless decode; feature rides float32, so ~1e-5 precision
         assert abs(f[2] * 255.0 - v) < 1e-3
-    resized = multimodal.resize_images(media, width=10, height=6).collect()
-    for r in resized:
-        out = codecs.decode_gif(bytes(r.payload))
-        assert out.shape == (6, 10, 3)
 
 
 def test_gif_lzw_dictionary_reset_roundtrip():

@@ -326,64 +326,6 @@ def test_kill_and_resume_continues_the_walk(spark, tmp_path):
     df.unpersist()
 
 
-def test_ewma_stream_matches_batch_bit_for_bit(spark, cusum_stream_env):
-    """The EWMA stream replays the batch walk's exact float sequence —
-    bit-equal ewma/ucl/lcl/alarm across micro-batch boundaries."""
-    from anomalydetector_spark.operators.trend import ewma_chart
-    from anomalydetector_spark.streaming import ewma_stream
-
-    env = cusum_stream_env
-    stream = (
-        spark.readStream.schema(
-            "partition_key string, stat_name string, "
-            "window_start timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(env["in"])
-    )
-    out_dir = f"{env['root']}/ewma_out"
-    q = (
-        ewma_stream(
-            stream, env["ref"], lam=0.25, L=3.0,
-            window_duration="1 day", buffer_windows=4,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{env['root']}/ewma_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.stat_name, r.window_start): r
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    exp = {
-        (r.stat_name, r.window_start): r
-        for r in ewma_chart(
-            env["series"],
-            ["partition_key", "stat_name"],
-            "window_start",
-            "value",
-            lam=0.25,
-            L=3.0,
-            reference=env["ref"],
-        ).collect()
-    }
-    m1 = [k for k in got if k[0] == "m1"]
-    assert len(m1) >= N_DAYS - 4
-    assert any(got[k].alarm for k in m1)  # the 6-unit shift alarms
-    for key, g in got.items():
-        e = exp[key]
-        assert (g.value, g.ewma, g.ucl, g.lcl, g.alarm) == (
-            e.value, e.ewma, e.ucl, e.lcl, e.alarm,
-        ), key
-    flat = [got[k] for k in got if k[0] == "flat"]
-    assert flat and all(r.ewma is None and not r.alarm for r in flat)
-
-
 def test_seasonal_stream_matches_batch_bit_for_bit(
     spark, cusum_stream_env
 ):

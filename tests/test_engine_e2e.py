@@ -249,6 +249,54 @@ def test_drift_margin_mode_spark(spark):
     assert (scored["unit"] >= 1.0).all()  # reference clips units to >= 1
 
 
+def test_drift_verdicts_spike_and_too_short_series(spark):
+    """score_drift + drift_verdicts: a spiked series fails, and a series
+    too short to score keeps a null is_anomaly and a null max_score."""
+    import numpy as np
+    import pandas as pd
+    from anomalydetector_spark.drift import drift_verdicts, score_drift
+
+    # 40 hourly windows with one spike and a 3-window hole after it
+    base = pd.Timestamp("2025-01-01")
+    idx = [i for i in range(40) if i not in (21, 22, 23)]
+    vals = [10.0] * 40
+    vals[20] = 500.0
+    rows = pd.DataFrame(
+        {
+            "partition_key": "p0",
+            "stat_name": "null_rate",
+            "window_start": [base + pd.Timedelta(hours=i) for i in idx],
+            "value": [vals[i] for i in idx],
+        }
+    )
+    # plus a too-short series whose is_anomaly must stay null
+    short = pd.DataFrame(
+        {
+            "partition_key": "p1",
+            "stat_name": "null_rate",
+            "window_start": [base + pd.Timedelta(hours=i) for i in range(5)],
+            "value": [1.0] * 5,
+        }
+    )
+    scored = score_drift(spark.createDataFrame(pd.concat([rows, short])))
+    p1 = scored.toPandas().query("partition_key == 'p1'")
+    assert p1["is_anomaly"].isna().all()
+
+    v = drift_verdicts(scored).toPandas()
+    assert (
+        v[v["partition_key"] == "p0"]["verdict"].iloc[0] == "fail"
+    )
+    # the too-short series' verdict row must not surface NaN max_score
+    # (NaN sorts above every double in Spark, so it would win any max)
+    p1v = v[v["partition_key"] == "p1"]
+    assert p1v["verdict"].iloc[0] == "error:not_enough_points"
+    assert p1v["max_score"].isna().all()
+    # and the verdict over ALL series must never carry NaN — only real
+    # scores or true nulls
+    finite = v["max_score"].dropna().to_numpy()
+    assert np.isfinite(finite).all()
+
+
 def test_shape_drift_series_and_verdict(spark, pages, oracle):
     """The engine's cube-derived lang_js_divergence series equals the
     DuckDB oracle over the raw rows, and SR flags the injected

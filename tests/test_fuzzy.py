@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from anomalydetector_spark.operators.fuzzy import (
     deletion_variants,
-    fuzzy_duplicate_flags,
     fuzzy_key_pairs,
 )
 
@@ -83,20 +82,6 @@ def test_pairs_exclude_long_and_null_keys(spark):
     assert [(r.key_a, r.key_b, r.distance) for r in got] == [
         ("short", "shorx", 1)
     ]
-
-
-def test_duplicate_flags_and_canonical(spark):
-    rows = [
-        (1, "apple"), (2, "aple"),    # fuzzy twins (deletion)
-        (3, "banana"), (4, "banana"),  # exact twins
-        (5, "cherry"),                 # loner
-    ]
-    df = spark.createDataFrame(rows, "id long, k string")
-    got = {r.id: (r.has_fuzzy_twin, r.neighborhood_min_key)
-           for r in fuzzy_duplicate_flags(df, "k", "id").collect()}
-    assert got[1] == (True, "aple") and got[2] == (True, "aple")
-    assert got[3] == (True, "banana") and got[4] == (True, "banana")
-    assert got[5] == (False, "cherry")
 
 
 def test_partition_invariance(spark):

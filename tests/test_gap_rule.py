@@ -1,10 +1,9 @@
 """W15 gap-as-anomaly rule: kernel parity with the reference's scan
-(srcnn/utils.py:302-311) and the distributed operator/drift wiring."""
+(srcnn/utils.py:302-311) and the distributed operator."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from anomalydetector_spark.kernel.sr import apply_gap_rule
 
@@ -113,68 +112,3 @@ def test_gap_adjusted_detections_operator(spark):
         got = out[out["series_id"] == s]
         assert got["pred"].to_list() == want_det, s
         np.testing.assert_allclose(got["score"].to_numpy(), want_sc)
-
-
-def test_gap_adjust_scored_drift_wiring(spark):
-    from anomalydetector_spark.drift import (
-        drift_verdicts,
-        gap_adjust_scored,
-        score_drift,
-    )
-
-    # 40 regular windows with one spike, then a 3-window hole right after
-    # the spike; the first window after the hole must be gap-forced
-    base = pd.Timestamp("2025-01-01")
-    idx = [i for i in range(40) if i not in (21, 22, 23)]
-    vals = [10.0] * 40
-    vals[20] = 500.0
-    rows = pd.DataFrame(
-        {
-            "partition_key": "p0",
-            "stat_name": "null_rate",
-            "window_start": [base + pd.Timedelta(hours=i) for i in idx],
-            "value": [vals[i] for i in idx],
-        }
-    )
-    # plus a too-short series whose is_anomaly must stay null
-    short = pd.DataFrame(
-        {
-            "partition_key": "p1",
-            "stat_name": "null_rate",
-            "window_start": [base + pd.Timedelta(hours=i) for i in range(5)],
-            "value": [1.0] * 5,
-        }
-    )
-    scored = score_drift(spark.createDataFrame(pd.concat([rows, short])))
-    adj_df = gap_adjust_scored(scored, max_back=1000)
-    adj = adj_df.toPandas()
-
-    p0 = adj[adj["partition_key"] == "p0"].sort_values("window_start")
-    after_hole = p0[p0["window_start"] == base + pd.Timedelta(hours=24)]
-    assert bool(after_hole["gap_forced"].iloc[0])
-    assert bool(after_hole["is_anomaly"].iloc[0])
-    assert float(after_hole["score"].iloc[0]) == 1.0
-
-    p1 = adj[adj["partition_key"] == "p1"]
-    assert p1["is_anomaly"].isna().all()
-    assert not p1["gap_forced"].any()
-    # unscored windows must come back with NULL score (not NaN, and not
-    # a gap-stamped 1.0) — Spark-side null check, pandas maps it to NaN
-    n_null_scores = adj_df.filter(
-        (F.col("partition_key") == "p1") & F.col("score").isNull()
-    ).count()
-    assert n_null_scores == 5
-
-    v = drift_verdicts(adj_df.drop("gap_forced")).toPandas()
-    assert (
-        v[v["partition_key"] == "p0"]["verdict"].iloc[0] == "fail"
-    )
-    # the too-short series' verdict row must not surface NaN max_score
-    # (NaN sorts above every double in Spark, so it would win any max)
-    p1v = v[v["partition_key"] == "p1"]
-    assert p1v["verdict"].iloc[0] == "error:not_enough_points"
-    assert p1v["max_score"].isna().all()
-    # and the verdict over ALL series must never carry NaN — only real
-    # scores or true nulls
-    finite = v["max_score"].dropna().to_numpy()
-    assert np.isfinite(finite).all()

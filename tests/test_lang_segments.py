@@ -8,7 +8,6 @@ import pyspark.sql.functions as F
 from anomalydetector_spark.operators.lang_segments import (
     keep_majority_paragraphs,
     lang_segmentation,
-    paragraph_langs,
 )
 from anomalydetector_spark.operators.text import LANG_MARKERS
 
@@ -37,19 +36,6 @@ def _df(spark, rows=ROWS):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_paragraph_view(spark):
-    got = {
-        (r.doc_id, r.para_idx): (r.para_lang, r.n_tokens)
-        for r in paragraph_langs(_df(spark)).collect()
-    }
-    assert got[(1, 0)] == ("en", 7)
-    assert got[(1, 1)] == ("de", 7)
-    assert got[(1, 2)] == ("en", 6)
-    assert got[(3, 1)] == ("und", 0)  # blank paragraph
-    assert got[(4, 0)] == ("und", 0)  # empty text = one empty paragraph
-    assert (5, None) in got or (5, 0) not in got  # null text: outer row
-
-
 def test_paragraph_vote_matches_pure_python_fuzz(spark):
     vocab = sum((list(m) for m in LANG_MARKERS.values()), []) + [
         "qqq", "zzz", "foo"
@@ -62,13 +48,27 @@ def test_paragraph_vote_matches_pure_python_fuzz(spark):
         ))
         for i in range(120)
     ]
+    df = _df(spark, rows)
     got = {
-        (r.doc_id, r.para_idx): r.para_lang
-        for r in paragraph_langs(_df(spark, rows)).collect()
+        r.doc_id: (r.n_paragraphs, r.majority_lang, r.majority_tokens, r.voting_tokens)
+        for r in lang_segmentation(df).collect()
     }
+    kept = {r.doc_id: r.text for r in keep_majority_paragraphs(df).collect()}
     for did, text in rows:
-        for i, p in enumerate(text.split("\n")):
-            assert got[(did, i)] == pure_lang(p), (did, i, p)
+        paras = text.split("\n")
+        langs = [pure_lang(p) for p in paras]
+        votes = {}
+        for p, lang in zip(paras, langs):
+            if lang != "und":
+                votes[lang] = votes.get(lang, 0) + len(p.split())
+        best = max(sorted(votes.items()), key=lambda kv: (kv[1], kv[0]), default=("und", 0))
+        want = (len(paras), best[0], best[1], sum(votes.values()))
+        assert got[did] == want, (did, text)
+        # every paragraph's vote decides whether the surgery keeps it
+        want_text = "\n".join(
+            p for p, lang in zip(paras, langs) if lang in (best[0], "und")
+        )
+        assert kept[did] == want_text, (did, text)
 
 
 def test_summary_share_and_mixed(spark):
@@ -122,7 +122,6 @@ def test_summary_and_surgery_are_zero_shuffle(spark):
 def test_arrow_twins_value_equal(spark):
     from anomalydetector_spark.operators.lang_segments import (
         keep_majority_paragraphs_arrow,
-        lang_segmentation_arrow,
     )
 
     vocab = sum((list(m) for m in LANG_MARKERS.values()), []) + ["qq", "zz"]
@@ -135,9 +134,6 @@ def test_arrow_twins_value_equal(spark):
         for i in range(80)
     ]
     df = _df(spark, rows)
-    hof = sorted(map(tuple, lang_segmentation(df).collect()), key=str)
-    arr = sorted(map(tuple, lang_segmentation_arrow(df).collect()), key=str)
-    assert hof == arr
     hof_s = sorted(map(tuple, keep_majority_paragraphs(df).collect()), key=str)
     arr_s = sorted(
         map(tuple, keep_majority_paragraphs_arrow(df).collect()), key=str

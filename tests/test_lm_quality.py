@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from anomalydetector_spark.operators.lm_quality import (
-    lm_quality_filter,
     score_documents,
     train_unigram_lm,
 )
@@ -16,6 +15,13 @@ ALPHA = 0.5
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def _gate(docs, ref, max_pseudo_perplexity):
+    lm, oov = train_unigram_lm(ref)
+    return score_documents(
+        docs, lm, oov, max_pseudo_perplexity=max_pseudo_perplexity
+    )
 
 
 def _py_model(texts, min_count=1, alpha=ALPHA):
@@ -105,7 +111,7 @@ def test_scores_match_python_twin(spark):
 def test_empty_doc_emitted_and_rejected(spark):
     ref = _docs(spark, [(1, "x y z")])
     docs = _docs(spark, [(2, ""), (3, "x y")])
-    out = lm_quality_filter(docs, ref, max_pseudo_perplexity=1e9)
+    out = _gate(docs, ref, max_pseudo_perplexity=1e9)
     rows = {r.doc_id: r for r in out.collect()}
     assert rows[2].n_tokens == 0
     assert rows[2].cross_entropy is None
@@ -139,7 +145,7 @@ def test_partition_invariance(spark):
 def test_keep_gate_on_rounded_value(spark):
     ref = _docs(spark, [(1, "a b c d")])
     docs = _docs(spark, [(2, "a b"), (3, "nope nada")])
-    out = lm_quality_filter(docs, ref, max_pseudo_perplexity=8.0)
+    out = _gate(docs, ref, max_pseudo_perplexity=8.0)
     rows = {r.doc_id: (r.pseudo_perplexity, r.keep) for r in out.collect()}
     for ppl, keep in rows.values():
         assert keep == (ppl is not None and ppl <= 8.0)

@@ -250,85 +250,6 @@ def test_drift_values_match_hand_computation():
     assert row.n_bins_hit == 3
 
 
-# ---- streaming PSI/chi2 (psi_drift_stream) ----
-
-
-def test_streaming_psi_matches_batch_bit_for_bit(
-    spark, numeric_stream_dirs
-):
-    from anomalydetector_spark.operators.divergence import (
-        numeric_window_psi,
-    )
-    from anomalydetector_spark.streaming import psi_drift_stream
-
-    in_dir, root = numeric_stream_dirs["in"], numeric_stream_dirs["root"]
-    events = numeric_stream_dirs["events"]
-
-    stream = (
-        spark.readStream.schema("ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    hist = streaming_window_histogram(
-        stream, value_col="value", lo=LO, hi=HI, n_bins=N_BINS,
-        window_duration="1 day", watermark_delay="1 day", ts_col="ts",
-    )
-    hist_dir, out_dir = f"{root}/psi_hist_out", f"{root}/psi_out"
-    q1 = (
-        hist.writeStream.format("parquet")
-        .option("path", hist_dir)
-        .option("checkpointLocation", f"{root}/psi_hist_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(300)
-
-    hstream = (
-        spark.readStream.schema(
-            "partition_key string, window_start timestamp, "
-            "bin_counts array<bigint>"
-        )
-        .option("maxFilesPerTrigger", 2)
-        .parquet(hist_dir)
-    )
-    q2 = (
-        psi_drift_stream(
-            hstream, window_duration="1 day", n_bins=N_BINS
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{root}/psi_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(300)
-
-    got = {
-        r["window_start"]: (
-            r["psi"], r["chi2"], r["cramers_v"], r["n_bins_union"]
-        )
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    exp = {
-        r["window_start"]: (
-            r["psi"], r["chi2"], r["cramers_v"], r["n_bins_union"]
-        )
-        for r in numeric_window_psi(
-            events, ts_col="ts", value_col="value",
-            lo=LO, hi=HI, n_bins=N_BINS, window="1 day", alpha=1,
-        ).collect()
-    }
-    assert len(got) >= 7
-    for w, vals in got.items():
-        assert w in exp, w
-        assert vals == exp[w], (w, vals, exp[w])  # bit-for-bit
-    assert all(
-        v[0] >= 0 and 0 <= v[2] <= 1 for v in got.values()
-    )
-
-
 def test_streaming_window_corr_matches_batch_bit_for_bit(
     spark, tmp_path
 ):

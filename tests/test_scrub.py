@@ -11,7 +11,6 @@ from anomalydetector_spark.operators.scrub import (
     boilerplate_line_set,
     doc_lines,
     drop_boilerplate_lines,
-    pii_profile,
     redact_pii,
 )
 
@@ -75,12 +74,6 @@ def test_redact_pii_all_kinds(spark):
     assert out[1] == "mail <EMAIL> end <IP> tel <PHONE> ok"
     assert out[2] == "clean text, no pii at all"
     assert out[3] is None
-    prof = {r.doc_id: r for r in pii_profile(df).collect()}
-    assert (prof[1].n_email, prof[1].n_ipv4, prof[1].n_phone) == (1, 1, 1)
-    assert (prof[2].n_email, prof[2].n_ipv4, prof[2].n_phone) == (0, 0, 0)
-    # post-redaction profile is all zero (the redaction is complete)
-    post = pii_profile(redact_pii(df)).filter(F.col("doc_id") == 1).first()
-    assert (post.n_email, post.n_ipv4, post.n_phone) == (0, 0, 0)
 
 
 def test_redact_pii_out_col_keeps_original(spark):
@@ -92,20 +85,19 @@ def test_redact_pii_out_col_keeps_original(spark):
 
 
 def test_pii_plans_have_no_shuffle_or_python(spark):
-    """Redaction and profiling are pure codegen projections."""
+    """Redaction is a pure codegen projection."""
     import io
     from contextlib import redirect_stdout
 
     df = spark.createDataFrame(
         pd.DataFrame([(1, "x")], columns=["doc_id", "text"])
     )
-    for frame in (redact_pii(df), pii_profile(df)):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            frame.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        redact_pii(df).explain("formatted")
+    plan = buf.getvalue()
+    assert "Exchange" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_kind_subset_and_order_independence(spark):

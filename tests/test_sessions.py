@@ -101,6 +101,31 @@ def test_exact_gap_boundary(spark):
     assert strict == {1: 1, 2: 2, 3: 3, 4: 3}  # == gap splits
 
 
+def test_native_session_window_merges_at_exact_gap(spark):
+    """Spark's own ``session_window`` groups like the INCLUSIVE default:
+    distance == gap merges, gap + 1 microsecond splits. The
+    operators/sessions.py docstring cites this pin."""
+    rows = [
+        (1, 0, T0),
+        (2, 0, T0 + dt.timedelta(seconds=GAP_S)),
+        (3, 0, T0 + dt.timedelta(seconds=2 * GAP_S, microseconds=1)),
+        (4, 0, T0 + dt.timedelta(seconds=2 * GAP_S, microseconds=1)),
+    ]
+    df = _df(spark, rows)
+    cols = ["user_id", "session_start", "session_end", "n_events"]
+    native = df.groupBy(
+        "user_id", F.session_window("ts", f"{GAP_S} seconds")
+    ).agg(
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+    batch = session_stats(sessionize(df, "user_id", "ts", GAP_S), "user_id", "ts")
+    got = sorted(map(tuple, native.select(cols).collect()))
+    assert got == sorted(map(tuple, batch.select(cols).collect()))
+    assert got == [(0, rows[0][2], rows[1][2], 2), (0, rows[2][2], rows[2][2], 2)]
+
+
 @pytest.mark.parametrize(
     "bucket,seed,hot,closed",
     [

@@ -35,10 +35,10 @@ def test_suite_on_events(spark):
         r.passed
         for r in res.verdicts.filter("check_name = 'min_row_count'").collect()
     )
-    assert all(
-        r.passed
-        for r in res.verdicts.filter("check_name = 'not_null_ts'").collect()
-    ) or True  # name is not_null_ts -> not_null_{col}
+    # the fixture has no null ts: one passing verdict per event_type
+    not_null = res.verdicts.filter("check_name = 'not_null_ts'").collect()
+    assert len(not_null) == n_types == 5
+    assert all(r.passed and r.violation_count == 0 for r in not_null)
     # event_id is unique in the fixture
     assert all(
         r.passed

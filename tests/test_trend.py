@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from anomalydetector_spark.operators.trend import (
     cusum_verdicts,
-    dominant_lag,
     series_autocorr,
     series_cusum,
     theil_sen_trend,
@@ -191,8 +190,9 @@ def test_autocorr_period_discovery(spark):
         [("p", t, pattern[t % 5] + 0.001 * t) for t in range(60)],
         "k string, t int, v double",
     )
-    acf = series_autocorr(df, ["k"], "t", "v", max_lag=9)
-    best = dominant_lag(acf, ["k"]).collect()[0]
+    acf = series_autocorr(df, ["k"], "t", "v", max_lag=9).collect()
+    # the period is the lag with the largest positive acf
+    best = max((r for r in acf if r.acf is not None), key=lambda r: r.acf)
     assert best.lag == 5
     assert best.acf > 0.9
 
@@ -203,9 +203,6 @@ def test_autocorr_constant_series_null(spark):
     )
     got = series_autocorr(df, ["k"], "t", "v", max_lag=3).collect()
     assert all(r.acf is None for r in got)
-    assert dominant_lag(
-        series_autocorr(df, ["k"], "t", "v", max_lag=3), ["k"]
-    ).count() == 0
 
 
 def test_autocorr_partition_invariance(spark):
@@ -349,6 +346,19 @@ def test_seasonal_expectation_weekly_mask(spark):
     )
     assert got[13].n_history == 1 and got[42].n_history == 4
 
+    # clean period-7 series with different phases + noise: nothing flags
+    rnd = random.Random(47)
+    rows = []
+    for s in range(3):
+        for t in range(56):
+            v = 50.0 + (30.0 if (t + s) % 7 == 0 else 0.0)
+            rows.append((f"s{s}", t, v + rnd.uniform(-1, 1)))
+    clean = spark.createDataFrame(rows, "k string, t int, v double")
+    got = seasonal_expectation(
+        clean, ["k"], "t", "v", season_lag=7, n_seasons=4, tolerance=0.3
+    )
+    assert got.filter("flagged").count() == 0
+
 
 def test_seasonal_expectation_zero_history_and_invariance(spark):
     from anomalydetector_spark.operators.trend import seasonal_expectation
@@ -371,36 +381,6 @@ def test_seasonal_expectation_zero_history_and_invariance(spark):
     assert [(r.expected, r.rel_dev, r.flagged) for r in a] == [
         (r.expected, r.rel_dev, r.flagged) for r in b
     ]
-
-
-def test_detect_season_lag(spark):
-    from anomalydetector_spark.operators.trend import (
-        detect_season_lag,
-        seasonal_expectation,
-    )
-
-    # three series, all period 7 with different phases + noise
-    rnd = random.Random(47)
-    rows = []
-    for s in range(3):
-        for t in range(56):
-            v = 50.0 + (30.0 if (t + s) % 7 == 0 else 0.0)
-            rows.append((f"s{s}", t, v + rnd.uniform(-1, 1)))
-    df = spark.createDataFrame(rows, "k string, t int, v double")
-    lag = detect_season_lag(df, ["k"], "t", "v", max_lag=10)
-    assert lag == 7
-    # the detected lag drives the check end to end
-    got = seasonal_expectation(
-        df, ["k"], "t", "v", season_lag=lag, n_seasons=4, tolerance=0.3
-    )
-    assert got.filter("flagged").count() == 0  # clean periodic data
-
-    # white noise: no credible period
-    noise = spark.createDataFrame(
-        [("n", t, rnd.uniform(0, 1)) for t in range(60)],
-        "k string, t int, v double",
-    )
-    assert detect_season_lag(noise, ["k"], "t", "v") is None
 
 
 def test_seasonal_expectation_negative_series(spark):

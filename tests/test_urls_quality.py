@@ -269,10 +269,7 @@ def test_domain_blocklist_subdomain_semantics(spark):
     deep host blocks only that host; lookalike suffixes (notbad.com vs
     bad.com) never match — the chain join is label-aligned, not a
     string-suffix test."""
-    from anomalydetector_spark.operators.urls import (
-        blocklist_filter,
-        domain_blocklist_flags,
-    )
+    from anomalydetector_spark.operators.urls import domain_blocklist_flags
 
     rows = [
         (1, "https://bad.com/x"),
@@ -291,8 +288,6 @@ def test_domain_blocklist_subdomain_semantics(spark):
         for r in domain_blocklist_flags(df, bl).collect()
     }
     assert got == {1: True, 2: True, 3: True, 4: False, 5: False, 6: False}
-    kept = {r["doc_id"] for r in blocklist_filter(df, bl).collect()}
-    assert kept == {4, 5, 6}
 
 
 def test_host_suffix_chain_exact(spark):

@@ -147,22 +147,19 @@ def drift_verdicts(scored: DataFrame) -> DataFrame:
     """Collapse scored series into per-(partition, stat) verdict rows:
     pass/fail + anomalous-window count + worst score, the engine's analog
     of the reference's whole-job raise (SURVEY.md §3 EP2)."""
-    return (
-        scored.groupBy("partition_key", "stat_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_windows"),
-            F.sum(F.col("is_anomaly").cast("int")).alias("n_anomalous"),
-            F.max("score").alias("max_score"),
-            F.max(F.when(F.col("is_anomaly"), F.col("window_start"))).alias(
-                "last_anomalous_window"
-            ),
-        )
-        .withColumn(
-            "verdict",
-            F.when(F.col("n_windows") < MIN_POINTS, F.lit("error:not_enough_points"))
-            .when(F.col("n_anomalous") > 0, F.lit("fail"))
-            .otherwise(F.lit("pass")),
-        )
+    anomalous = "sum(CAST(is_anomaly AS INT))"
+    return scored.groupBy("partition_key", "stat_name").agg(
+        F.expr("count(1) AS n_windows"),
+        F.expr(f"{anomalous} AS n_anomalous"),
+        F.expr("max(score) AS max_score"),
+        F.expr(
+            "max(CASE WHEN is_anomaly THEN window_start END) "
+            "AS last_anomalous_window"
+        ),
+        F.expr(
+            f"CASE WHEN count(1) < {MIN_POINTS} THEN 'error:not_enough_points' "
+            f"WHEN {anomalous} > 0 THEN 'fail' ELSE 'pass' END AS verdict"
+        ),
     )
 
 
@@ -342,11 +339,12 @@ def fused_drift(
     on the same counts (``operators/divergence``; JS within ~1e-15), via
     the shared math in ``kernel/window_drift``.
 
-    Bound: one group holds one partition's cube slice — windows ×
+    Size: one group holds one partition's cube slice — windows ×
     distinct text lengths × langs rows (31.5k for 50k pages over 48
     daily windows in one partition) — plus one distinct-key row per
-    window; the input size never enters. A partition is never split
-    across groups.
+    window. The slice grows with the number of distinct text lengths per
+    window, so a large partition gives a large group: a partition is
+    never split across groups.
     """
     p = params or SrParams()
     langs = tuple(langs)

@@ -10,7 +10,9 @@ sink), restructured for Spark:
   profile's per-window distinct-key counts, yields every stat series
   (scalars, lang/length shape, distinct urls) and their SR scores in one
   worker call — one group is one partition's cube slice, windows ×
-  distinct text lengths × langs rows, never input-sized,
+  distinct text lengths × langs rows: it grows with the number of
+  distinct text lengths (31,521 rows for 50,000 pages over 48 windows in
+  one partition), not with the row count alone,
 * the whole verdict suite is compiled onto TWO shared scans of the input
   (plans/fused.py): a counts cube and a salted url profile — every
   verdict frame and every stat series is a rollup of one of them, so
@@ -23,10 +25,11 @@ verdict/stat frames (bounded by partitions × checks) are ever gathered.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import cached_property, reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anomalydetector_spark.drift import drift_verdicts, fused_drift
@@ -88,9 +91,9 @@ class ValidationConfig:
     # pairs — every non-null determinant value must map to exactly one
     # dependent value (checks.check_functional_dependency). Each pair
     # costs ONE hash-aggregate scan per run: the (rare) violating keys
-    # are persisted, the per-partition verdict rides the shared rollup
-    # projection as a broadcast count of that cached frame, and the same
-    # frame is broadcast back onto the shared violation-extraction scan,
+    # are persisted, the per-partition verdict counts that cached frame's
+    # rows in the shared rollup aggregation, and the same frame is
+    # broadcast back onto the shared violation-extraction scan,
     # so FD violations surface as full rows in row_status/violations
     # like every other row-addressable check.
     functional_deps: tuple = ()  # tuple[tuple[str, str], ...]
@@ -139,13 +142,11 @@ class ValidationResult:
     stat_series: DataFrame  # long-format per-window stats
     drift_scored: DataFrame  # SR-scored stat series
     drift_verdicts: DataFrame  # per-(partition, stat) pass/fail
-    # input rows + violated_checks array + validation_status — the
-    # quarantine split (operators/quarantine.py). Shares the violation
-    # extraction's one-scan DAG (so it covers the row-addressable checks:
-    # null ts, duplicate key, dangling dim, row asserts — not the opt-in
-    # html byte-identity pair, which scans separately by design); sink
-    # clean+quarantined in one pass with quarantine.write_split.
-    row_status: DataFrame | None = None
+    # builds row_status (below) on first read; only the quarantine split
+    # reads it, so other callers never pay for planning it
+    row_status_of: Callable[[], DataFrame] | None = field(
+        default=None, repr=False
+    )
     # CUSUM second opinion (cfg.cusum): per-window walks + per-series
     # summaries with changepoint estimates. None when off.
     cusum_scored: DataFrame | None = None
@@ -164,6 +165,17 @@ class ValidationResult:
     # dependency; incremental_validate appends the verdicts it persists.
     # perfbench reads [:4] to fill each layer.
     cached: list[DataFrame] = field(default_factory=list)
+
+    @cached_property
+    def row_status(self) -> DataFrame | None:
+        """Input rows + violated_checks array + validation_status — the
+        quarantine split (operators/quarantine.py). Shares the violation
+        extraction's one-scan DAG (so it covers the row-addressable
+        checks: null ts, duplicate key, dangling dim, row asserts — not
+        the opt-in html byte-identity pair, which scans separately by
+        design); sink clean+quarantined in one pass with
+        quarantine.write_split."""
+        return self.row_status_of() if self.row_status_of else None
 
     def unpersist(self) -> None:
         for df in self.cached:
@@ -184,11 +196,12 @@ def run_validation(
     # be clamped there silently, so reject it like the reference does
     C.validate_batch_size(cfg.sr.batch_size)
 
-    keyed = fused.keyed_input(pages, cfg.window_duration, cfg.partition_by)
+    extra = None
     if domains is not None and "domain" not in pages.columns:
-        keyed = keyed.withColumn(
-            "domain", F.regexp_extract("url", r"^https?://([^/]+)/", 1)
-        )
+        extra = {"domain": F.regexp_extract("url", r"^https?://([^/]+)/", 1)}
+    keyed = fused.keyed_input(
+        pages, cfg.window_duration, cfg.partition_by, extra=extra
+    )
 
     from anomalydetector_spark.operators import asserts as A
 
@@ -217,87 +230,74 @@ def run_validation(
     cube = scans.cube.persist()
     profile = scans.profile.persist()
 
-    # per-partition scalars — every cheap verdict is a projection of this
-    # one tiny frame (the cube rollup), evaluated once per action at most
-    roll = fused.partition_rollup(cube)
-
-    # empty input must still fail min-row-count (reference contract)
-    roll = fused.seeded_rollup(roll)
-
     # Every rollup-derived verdict (min-rows, not-null, uniqueness,
-    # referential, row asserts) is ONE projection of ONE enriched rollup:
-    # an inline(array(<struct per check>)) generator. Compared to one
-    # frame per check unioned (round ≤2 shape), the rollup aggregation
-    # executes once per action instead of once per check, and the
-    # verdicts plan has one branch instead of N — Catalyst optimization +
-    # codegen compile are paid per FRESH plan (every run_validation call
-    # persists new scans), so plan size is real per-run wall time, not
-    # just driver elegance (measured: verdicts action 5.4s → see
-    # BENCH.md round-3 note).
+    # referential, row asserts, functional dependencies) is ONE
+    # projection of ONE per-partition rollup: an inline(array(<struct per
+    # check>)) generator. The rollup is one aggregation over the cube and
+    # the per-partition contributions of the other checks (duplicate-key
+    # rows of the cached profile, violating FD keys), so the verdicts
+    # plan has one branch and one rollup shuffle however many checks run;
+    # Catalyst optimization + codegen compile are paid per FRESH plan
+    # (every run_validation call persists new scans), so plan size is
+    # real per-run time, not just driver elegance. The structs are SQL
+    # text: the JVM parses each in one call, where a Column chain costs a
+    # py4j round trip per method.
     uniq_name = f"unique_{cfg.unique_key}"
-    dup_counts = fused.per_partition_dup_counts(profile).withColumnRenamed(
-        "violation_count", "_dup_rows"
-    )
-    enriched = roll.join(dup_counts, "partition_key", "left")
+    contributions = [fused.dup_counts(profile, "_dup_rows")]
 
-    def _verdict_struct(name: str, viol: Column, message: str) -> Column:
-        """The _verdict_from_violation_count contract as a struct."""
-        return F.struct(
-            F.lit(name).alias("check_name"),
-            (viol == 0).alias("passed"),
-            F.when(viol > 0, F.lit(message)).alias("error_message"),
-            viol.cast("long").alias("violation_count"),
+    def _verdict(name: str, failed: str, message: str, viol: str) -> str:
+        """One verdict row of the rollup, in the verdict frame's order."""
+        return (
+            f"named_struct('check_name', {C.sql_string(name)}, "
+            "'partition_key', partition_key, "
+            f"'passed', NOT ({failed}), "
+            f"'error_message', CASE WHEN {failed} "
+            f"THEN {C.sql_string(message)} END, "
+            f"'violation_count', CAST({viol} AS BIGINT), "
+            "'rows_scanned', rows_scanned)"
         )
 
-    _short = F.col("rows_scanned") < cfg.min_points
+    def _count_verdict(name: str, viol: str, message: str) -> str:
+        """The _verdict_from_violation_count contract as a struct."""
+        return _verdict(name, f"{viol} > 0", message, viol)
+
+    short = f"rows_scanned < {int(cfg.min_points)}"
     verdict_structs = [
-        F.struct(
-            F.lit("min_row_count").alias("check_name"),
-            (~_short).alias("passed"),
-            F.when(_short, F.lit(E.NOT_ENOUGH_POINTS.format(cfg.min_points))).alias(
-                "error_message"
-            ),
-            F.when(_short, F.col("rows_scanned"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("violation_count"),
+        _verdict(
+            "min_row_count",
+            short,
+            E.NOT_ENOUGH_POINTS.format(cfg.min_points),
+            f"CASE WHEN {short} THEN rows_scanned ELSE 0 END",
         ),
-        _verdict_struct(
-            "not_null_warc_ts", F.col("null_ts"), E.INVALID_TIMESTAMPS
-        ),
-        _verdict_struct(
-            uniq_name,
-            F.coalesce(F.col("_dup_rows"), F.lit(0)),
-            E.DUPLICATE_KEY.format(cfg.unique_key),
+        _count_verdict("not_null_warc_ts", "null_ts", E.INVALID_TIMESTAMPS),
+        _count_verdict(
+            uniq_name, "_dup_rows", E.DUPLICATE_KEY.format(cfg.unique_key)
         ),
     ]
     for i, a in enumerate(row_asserts):
-        v = F.coalesce(F.col(f"_assert_{i}"), F.lit(0))
-        budget = F.col("rows_scanned") * F.lit(a.max_violation_fraction)
+        frac = float(a.max_violation_fraction)
+        budget = f"rows_scanned * CAST({frac!r} AS DOUBLE)"
         verdict_structs.append(
-            F.struct(
-                F.lit(f"assert_{a.name}").alias("check_name"),
-                (v <= budget).alias("passed"),
-                F.when(
-                    v > budget,
-                    F.lit(A.ROW_ASSERT_FAILED.format(a.name, a.expr)),
-                ).alias("error_message"),
-                v.cast("long").alias("violation_count"),
+            _verdict(
+                f"assert_{a.name}",
+                f"_assert_{i} > {budget}",
+                A.ROW_ASSERT_FAILED.format(a.name, a.expr),
+                f"_assert_{i}",
             )
         )
     if domains is not None:
         verdict_structs.append(
-            _verdict_struct(
+            _count_verdict(
                 "ref_domain",
-                F.col("dangling"),
+                "dangling",
                 E.DANGLING_REFERENCE.format("domain", "domain"),
             )
         )
     # functional dependencies: ONE hash-aggregate scan per pair fills a
     # persisted frame of the (rare) violating determinant keys; both the
-    # per-partition verdict (a broadcast count of that frame riding the
-    # shared rollup projection) and the row tags below reuse the cache —
-    # no second pass over the input per pair.
+    # per-partition verdict (its rows counted in the shared rollup) and
+    # the row tags below reuse the cache — no second pass over the input
+    # per pair.
     fd_bad: list[DataFrame] = []
     for i, (det, dep) in enumerate(cfg.functional_deps):
         fd = C.check_functional_dependency(
@@ -312,26 +312,21 @@ def run_validation(
             ],
         ).persist()
         fd_bad.append(bad)
-        counts = bad.groupBy("partition_key").agg(
-            F.count(F.lit(1)).alias(f"_fd_viol_{i}")
+        contributions.append(
+            bad.selectExpr("partition_key", f"1 AS _fd_viol_{i}")
         )
-        enriched = enriched.join(F.broadcast(counts), "partition_key", "left")
         verdict_structs.append(
-            _verdict_struct(
+            _count_verdict(
                 f"fd_{C.fd_label(det)}_{C.fd_label(dep)}",
-                F.coalesce(F.col(f"_fd_viol_{i}"), F.lit(0)),
+                f"_fd_viol_{i}",
                 E.FD_VIOLATION.format(C.fd_label(det), C.fd_label(dep)),
             )
         )
-    rollup_verdicts = enriched.select(
-        "partition_key", "rows_scanned", F.inline(F.array(*verdict_structs))
-    ).select(
-        "check_name",
-        "partition_key",
-        "passed",
-        "error_message",
-        "violation_count",
-        "rows_scanned",
+    roll = fused.partition_rollup(
+        cube, contributions, partitioned=cfg.partition_by is not None
+    )
+    rollup_verdicts = roll.selectExpr(
+        f"inline(array({', '.join(verdict_structs)}))"
     )
 
     verdict_frames = [
@@ -368,21 +363,16 @@ def run_validation(
         )
 
     # violation ROWS must come from the input — extraction is inherent,
-    # but all row-addressable checks share ONE scan: broadcast-join the
-    # (small) duplicate-key and dimension sets, tag each row with every
+    # but all row-addressable checks share ONE scan: probe the (small)
+    # broadcast duplicate-key and dimension sets, tag each row with every
     # check it violates, explode. The DAG lives apart from the verdicts
     # and is materialized only when the caller sinks violations.
-    dups = fused.dup_keys_from_profile(profile).select(
-        F.col("key"), F.lit(True).alias("_is_dup")
-    )
-    tagged = keyed.join(
-        F.broadcast(dups),
-        fused.profile_key_col(keyed[cfg.unique_key]) == dups["key"],
-        "left",
+    tagged = keyed.withColumn(
+        "_is_dup", fused.is_dup_key(cfg.unique_key, profile)
     )
     tags = [
-        F.when(F.col("warc_ts").isNull(), F.lit("not_null_warc_ts")),
-        F.when(F.col("_is_dup"), F.lit(uniq_name)),
+        F.expr("CASE WHEN warc_ts IS NULL THEN 'not_null_warc_ts' END"),
+        F.expr(f"CASE WHEN _is_dup THEN {C.sql_string(uniq_name)} END"),
         *A.row_assert_tags(row_asserts),
     ]
     if cfg.json_schema:
@@ -398,7 +388,8 @@ def run_validation(
     for i, (det, dep) in enumerate(cfg.functional_deps):
         # reuse the persisted violating-key frame from the verdict pass;
         # the join is per (partition_key, determinant tuple) because a
-        # key may violate in one partition and not another
+        # key may violate in one partition and not another (a NULL
+        # partition_key is a partition too, hence the null-safe match)
         det_cols = C.fd_cols(det)
         key_aliases = [f"_fd_k_{i}_{j}" for j in range(len(det_cols))]
         bad = fd_bad[i].select(
@@ -406,7 +397,7 @@ def run_validation(
             *key_aliases,
             F.lit(True).alias(f"_fd_hit_{i}"),
         )
-        cond = F.col("partition_key") == F.col(f"_fd_pk_{i}")
+        cond = F.col("partition_key").eqNullSafe(F.col(f"_fd_pk_{i}"))
         for c, a in zip(det_cols, key_aliases):
             cond = cond & (F.col(c) == F.col(a))
         tagged = tagged.join(F.broadcast(bad), cond, "left").drop(
@@ -431,9 +422,9 @@ def run_validation(
             salt_on=F.col(cfg.unique_key),
         )
         tags.append(
-            F.when(
-                F.col("domain").isNotNull() & F.col("_known").isNull(),
-                F.lit("ref_domain"),
+            F.expr(
+                "CASE WHEN domain IS NOT NULL AND _known IS NULL "
+                "THEN 'ref_domain' END"
             )
         )
     hit = F.filter(F.array(*tags), lambda t: t.isNotNull())
@@ -441,14 +432,18 @@ def run_validation(
         F.explode(hit).alias("check_name"), "partition_key", cfg.unique_key
     )
 
-    # quarantine view over the SAME tagged frame: every input row with
-    # the sorted array of checks it violates + clean/quarantined status
-    from anomalydetector_spark.operators import quarantine as Q
+    def row_status() -> DataFrame:
+        """Quarantine view over the SAME tagged frame: every input row
+        with the sorted array of checks it violates + clean/quarantined
+        status."""
+        from anomalydetector_spark.operators import quarantine as Q
 
-    base_cols = [c for c in pages.columns if c in tagged.columns]
-    row_status = Q.tag_rows(tagged, (), extra_tags=tags).select(
-        *base_cols, "partition_key", Q.VIOLATED_COL, Q.STATUS_COL
-    )
+        base_cols = [c for c in pages.columns if c in tagged.columns]
+        return tagged.select(
+            *base_cols,
+            "partition_key",
+            *[c.alias(n) for n, c in Q.status_columns(tags).items()],
+        )
 
     if cfg.verify_text_extraction:
         # byte-identity invariant (north rule): text == extract_text(html)
@@ -596,7 +591,7 @@ def run_validation(
         stat_series=stat_series,
         drift_scored=scored,
         drift_verdicts=dverdicts,
-        row_status=row_status,
+        row_status_of=row_status,
         cusum_scored=cusum_scored,
         cusum_verdicts=cusum_summary,
         ewma_scored=ewma_scored,

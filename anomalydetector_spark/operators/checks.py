@@ -85,14 +85,21 @@ def _metadata_verdict(
     a literal projection of a one-row JVM range: a ``createDataFrame``
     list would compile to a Python RDD and start Python workers on every
     action over the unioned verdicts."""
-    return spark.range(0, 1, 1, 1).select(
-        F.lit(check_name).alias("check_name"),
-        F.lit("global").alias("partition_key"),
-        F.lit(violations == 0).alias("passed"),
-        F.lit(message).cast("string").alias("error_message"),
-        F.lit(violations).cast("long").alias("violation_count"),
-        F.lit(0).cast("long").alias("rows_scanned"),
+    return spark.range(0, 1, 1, 1).selectExpr(
+        f"{sql_string(check_name)} AS check_name",
+        "'global' AS partition_key",
+        f"{violations == 0} AS passed",
+        f"CAST({'NULL' if message is None else sql_string(message)} AS STRING)"
+        " AS error_message",
+        f"CAST({int(violations)} AS BIGINT) AS violation_count",
+        "CAST(0 AS BIGINT) AS rows_scanned",
     )
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (for expressions built as SQL
+    text, which the JVM parses in one call)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def check_column_presence(

@@ -23,29 +23,34 @@ VIOLATED_COL = "violated_checks"
 CLEAN, QUARANTINED = "clean", "quarantined"
 
 
+def status_columns(tags: list[Column]) -> dict[str, Column]:
+    """``violated_checks`` (sorted array of the names of every failed
+    check; empty when clean) and ``validation_status`` from the
+    ``when(cond, name)`` tag expressions, for one projection."""
+    hit = F.array_sort(F.filter(F.array(*tags), lambda t: t.isNotNull()))
+    return {
+        VIOLATED_COL: hit,
+        STATUS_COL: F.when(F.size(hit) > 0, F.lit(QUARANTINED)).otherwise(
+            F.lit(CLEAN)
+        ),
+    }
+
+
 def tag_rows(
     df: DataFrame,
     asserts: tuple[RowAssert, ...] | list[RowAssert],
     extra_tags: list[Column] | None = None,
 ) -> DataFrame:
-    """Append ``violated_checks`` (sorted array of the names of every
-    failed check; empty when clean) and ``validation_status``.
+    """Append ``violated_checks`` and ``validation_status``
+    (:func:`status_columns`).
 
     ``extra_tags`` lets callers ride additional ``when(cond, name)``
-    columns: the engine passes its whole violation tag list (null
-    timestamp, duplicate key, row asserts, JSON schema, functional
-    dependencies, dangling dimension), so the status is one projection
-    over the scan its violation rows come from."""
+    columns beside the asserts' tags, so the status is one projection
+    over the scan the violation rows come from."""
     if not asserts and not extra_tags:
         raise ValueError("tag_rows needs at least one assert or extra tag")
     tags = row_assert_tags(tuple(asserts)) + list(extra_tags or [])
-    hit = F.array_sort(F.filter(F.array(*tags), lambda t: t.isNotNull()))
-    return df.withColumn(VIOLATED_COL, hit).withColumn(
-        STATUS_COL,
-        F.when(F.size(VIOLATED_COL) > 0, F.lit(QUARANTINED)).otherwise(
-            F.lit(CLEAN)
-        ),
-    )
+    return df.withColumns(status_columns(tags))
 
 
 def split_counts(tagged: DataFrame) -> DataFrame:

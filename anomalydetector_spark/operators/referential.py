@@ -6,7 +6,9 @@ Physical strategy is a ladder, chosen by dimension size:
 * ``broadcast`` (default, the north rule's stated shape): the dimension
   (domains, allowed langs, …) is small relative to the fact table, so
   the join is forced broadcast — no shuffle of the 10^12-row side, each
-  task streams its split against an in-memory hash set.
+  task streams its split against an in-memory hash set. The key column
+  ships as is: a membership probe needs no distinct (and so no shuffle
+  stage in front of the broadcast).
 * ``auto``: no hint. Catalyst picks from statistics and AQE re-plans at
   runtime (a sort-merge join whose built side turns out under
   ``spark.sql.adaptive.autoBroadcastJoinThreshold`` is promoted to
@@ -84,21 +86,37 @@ def dim_join(
     salt_on: Column | str | None = None,
     bloom_fp: float = 0.01,
 ) -> DataFrame:
-    """Join ``fact`` against the distinct parent key set under the chosen
+    """Match ``fact`` against the parent key set under the chosen
     physical strategy. ``how='left'`` appends a ``_known`` boolean column
     (True where the key exists, NULL otherwise); ``how='left_anti'`` /
-    ``'left_semi'`` return the usual filtered fact rows. ``bloom_fp``
+    ``'left_semi'`` return the usual filtered fact rows. Every rung gives
+    the same rows, whether or not the parent repeats a key. ``bloom_fp``
     sizes the ``shuffle_bloom`` rung's bitmap (ignored elsewhere)."""
     if strategy not in REF_STRATEGIES:
         raise ValueError(
             f"strategy must be one of {REF_STRATEGIES}, got {strategy!r}"
         )
-    dim = _dim_keys(parent, parent_col or child_col, child_col)
+    if how not in ("left", "left_semi", "left_anti"):
+        raise ValueError(f"{strategy} dim_join does not support how={how!r}")
+    parent_col = parent_col or child_col
+    if strategy == "broadcast":
+        # membership probes against the broadcast key column: an IN
+        # subquery plans as a broadcast ExistenceJoin, so duplicate
+        # dimension keys never multiply fact rows and need no distinct
+        # (a shuffle stage in front of every broadcast)
+        keys = F.broadcast(
+            parent.selectExpr(f"`{parent_col}` AS `{child_col}`")
+        )
+        if how == "left":
+            return fact.withColumn(
+                "_known", F.when(F.col(child_col).isin(keys), F.lit(True))
+            )
+        return fact.join(keys, child_col, how)
+
+    dim = _dim_keys(parent, parent_col, child_col)
     if how == "left":
         dim = dim.withColumn("_known", F.lit(True))
 
-    if strategy == "broadcast":
-        return fact.join(F.broadcast(dim), child_col, how)
     if strategy == "auto":
         return fact.join(dim, child_col, how)
     if strategy == "shuffle":
@@ -176,13 +194,11 @@ def _bloom_reduced_join(
         return candidates.join(dim_h, child_col, "left_anti").unionByName(
             negatives
         )
-    if how == "left":
-        # dim already carries _known=True (added by dim_join for left)
-        joined = candidates.join(dim_h, child_col, "left")
-        return joined.unionByName(
-            negatives.withColumn("_known", F.lit(None).cast("boolean"))
-        )
-    raise ValueError(f"shuffle_bloom does not support how={how!r}")
+    # how == "left": dim already carries _known=True (added by dim_join)
+    joined = candidates.join(dim_h, child_col, "left")
+    return joined.unionByName(
+        negatives.withColumn("_known", F.lit(None).cast("boolean"))
+    )
 
 
 def check_referential(

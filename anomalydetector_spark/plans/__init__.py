@@ -10,7 +10,7 @@ scans out.
 from anomalydetector_spark.plans.fused import (  # noqa: F401
     FusedScans,
     build_fused_scans,
-    dup_keys_from_profile,
+    dup_rows,
     partition_rollup,
     url_profile,
 )

@@ -14,20 +14,25 @@ suite to its information-theoretic minimum:
   statistic any check needs is a rollup of this cube: per-partition row
   counts (min-rows verdict), null-timestamp counts, dangling-reference
   counts, per-window doc counts / null rates / lang fractions, and EXACT
-  length quantiles via inverse-CDF over the length histogram. The cube is
-  windows × partitions × distinct-lengths × langs rows — O(thousands)
-  regardless of input size — and aggregates map-side before its one
-  shuffle (partial hash-agg in whole-stage codegen). The per-window
-  series are derived from it (with the profile's distinct-key counts,
+  length quantiles via inverse-CDF over the length histogram. The cube
+  has one row per (window, partition, exact text length, lang, ref_ok)
+  combination that occurs, so it grows with the number of distinct text
+  lengths per window: 31,521 rows for 50,000 pages over 48 daily windows
+  in one partition. It aggregates map-side before its one shuffle
+  (partial hash-agg in whole-stage codegen). The per-window series are
+  derived from it (with the profile's distinct-key counts,
   :func:`drift_inputs`) inside drift.fused_drift's one grouped pandas
   pass per partition.
 
 * **Scan B — the url profile**: the salted two-phase uniqueness
   aggregation (north rule) re-used three ways. Phase 1 groups by
   ``(partition_key, window_start, url, salt)`` so one pathological url
-  cannot stall a reducer; phase 2 collapses salts. From the phase-2
-  profile derive (a) duplicate keys + per-partition duplicate-row counts
-  (the uniqueness verdict), and (b) EXACT per-window distinct-url counts
+  cannot stall a reducer; phase 2 collapses salts on a shuffle by the
+  key alone, so each key's rows share a task and the profile carries
+  the key's input-wide count ``_key_cnt`` without another shuffle. From
+  the profile derive (a) the duplicated keys and per-partition
+  duplicate-row counts (the uniqueness verdict, :func:`dup_rows`) as
+  filters of the cache, and (b) EXACT per-window distinct-url counts
   (the ``distinct_url`` drift series) — the distinct-count shuffle is
   already paid for by the uniqueness check, so exactness is free and no
   HLL sketch is needed.
@@ -35,11 +40,16 @@ suite to its information-theoretic minimum:
 Violation-row extraction still reads the input (it must — the rows are
 the output), but only in the violations DAG, which the caller
 materializes separately.
+
+Planning runs on every validation, so the expressions here are mostly
+SQL text: the JVM parses one in a single py4j call, where a Column chain
+costs a round trip per method.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -78,13 +88,17 @@ def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:
     # by the not-null check), not ANSI cast errors — but the string
     # round-trip is only needed when the column isn't a timestamp already
     # (this expression runs inside the hot cube scan)
-    dt = df.schema[ts_col].dataType.typeName()
-    if dt in ("timestamp", "timestamp_ntz", "date"):
-        epoch = F.col(ts_col).cast("timestamp").cast("double")
+    dtype = df.schema[ts_col].dataType
+    if dtype.typeName() in ("timestamp", "timestamp_ntz", "date"):
+        epoch = f"CAST(CAST(`{ts_col}` AS TIMESTAMP) AS DOUBLE)"
     else:
-        epoch = F.col(ts_col).cast("string").try_cast("timestamp").cast("double")
-    start = F.timestamp_seconds((F.floor(epoch / sec) * sec).cast("long"))
-    return start.cast(df.schema[ts_col].dataType)
+        epoch = (
+            f"CAST(try_cast(CAST(`{ts_col}` AS STRING) AS TIMESTAMP) AS DOUBLE)"
+        )
+    return F.expr(
+        f"CAST(timestamp_seconds(CAST(floor({epoch} / {sec}) * {sec} AS BIGINT))"
+        f" AS {dtype.simpleString()})"
+    )
 
 
 @dataclass
@@ -93,7 +107,7 @@ class FusedScans:
     verdict/stat frame below is a rollup of one of them)."""
 
     cube: DataFrame  # window_start, partition_key, _len, lang, _ok, _n
-    profile: DataFrame  # partition_key, window_start, key, cnt
+    profile: DataFrame  # partition_key, window_start, key, cnt, _key_cnt
     has_ref: bool
 
 
@@ -102,8 +116,10 @@ def keyed_input(
     window_duration: str,
     partition_by: Column | str | None,
     ts_col: str = "warc_ts",
+    extra: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """Attach the two bucketing columns every fused consumer shares."""
+    """Attach the two bucketing columns every fused consumer shares (and
+    any ``extra`` derived columns) in one projection."""
     part = (
         F.lit("global")
         if partition_by is None
@@ -113,8 +129,12 @@ def keyed_input(
             else partition_by.cast("string")
         )
     )
-    return df.withColumn("partition_key", part).withColumn(
-        "window_start", window_start_col(df, ts_col, window_duration)
+    return df.withColumns(
+        {
+            "partition_key": part,
+            "window_start": window_start_col(df, ts_col, window_duration),
+            **(extra or {}),
+        }
     )
 
 
@@ -152,19 +172,18 @@ def build_fused_scans(
             strategy=ref_strategy,
             salts=ref_salts,
             salt_on=F.col(unique_key),
-        ).withColumn(
-            "_ok", F.col(ref_child_col).isNull() | F.col("_known").isNotNull()
         )
+        ok = f"`{ref_child_col}` IS NULL OR _known IS NOT NULL"
     else:
-        flagged = keyed.withColumn("_ok", F.lit(True))
+        flagged, ok = keyed, "true"
 
     cube = flagged.groupBy(
         "window_start",
         "partition_key",
-        F.length("text").alias("_len"),
+        F.expr("length(text) AS _len"),
         "lang",
-        "_ok",
-    ).agg(F.count(F.lit(1)).alias("_n"), *(extra_cube_aggs or []))
+        F.expr(f"{ok} AS _ok"),
+    ).agg(F.expr("count(1) AS _n"), *(extra_cube_aggs or []))
 
     return FusedScans(
         cube=cube,
@@ -173,25 +192,63 @@ def build_fused_scans(
     )
 
 
-def partition_rollup(cube: DataFrame) -> DataFrame:
-    """Per-partition scalars for the cheap verdicts — one tiny rollup:
-    ``(partition_key, rows_scanned, null_ts, dangling)`` plus, when the
-    cube carries per-assert counters (``_assert_*``), their per-partition
-    sums."""
-    extra = [
-        F.sum(c).alias(c) for c in cube.columns if c.startswith("_assert_")
-    ]
-    return cube.groupBy("partition_key").agg(
-        F.sum("_n").alias("rows_scanned"),
-        F.sum(F.when(F.col("window_start").isNull(), F.col("_n")).otherwise(0)).alias(
-            "null_ts"
-        ),
-        F.sum(F.when(~F.col("_ok"), F.col("_n")).otherwise(0)).alias("dangling"),
-        *extra,
+def partition_rollup(
+    cube: DataFrame,
+    extra: list[DataFrame] | tuple[DataFrame, ...] = (),
+    partitioned: bool = True,
+) -> DataFrame:
+    """Per-partition counters for the cheap verdicts in ONE aggregation:
+    ``(partition_key, rows_scanned, null_ts, dangling)``, the sums of the
+    cube's per-assert counters (``_assert_*``), and the sums of every
+    counter column of the ``extra`` frames (``partition_key`` plus
+    counters, e.g. duplicate rows per partition) — 0 where a partition
+    has none. The frames are unioned and grouped once, not joined, so a
+    NULL ``partition_key`` keeps every one of its counts.
+
+    The result has at least one row: an EMPTY input has no partitions,
+    yet must fail min-row-count (reference contract, invoker.py:43-44 →
+    NOT_ENOUGH_POINTS), so an empty result becomes one all-zero
+    ``global`` row. Unpartitioned (every row's key is ``global``), a zero
+    row rides the union; partitioned, the grouped rows are gathered into
+    one array (one row per partition) and the zero row replaces an empty
+    array."""
+    asserts = [c for c in cube.columns if c.startswith("_assert_")]
+    base = cube.selectExpr(
+        "partition_key",
+        "_n AS rows_scanned",
+        "CASE WHEN window_start IS NULL THEN _n ELSE 0 END AS null_ts",
+        "CASE WHEN _ok THEN 0 ELSE _n END AS dangling",
+        *asserts,
+    )
+    frames = [base, *extra]
+    if not partitioned:
+        # a literal projection of a one-row JVM range: no Python RDD
+        frames.append(
+            cube.sparkSession.range(0, 1, 1, 1).selectExpr(
+                "'global' AS partition_key"
+            )
+        )
+    counters = [c for f in frames for c in f.columns if c != "partition_key"]
+    roll = (
+        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        .groupBy("partition_key")
+        .agg(
+            *[
+                F.expr(f"CAST(coalesce(sum(`{c}`), 0) AS BIGINT) AS `{c}`")
+                for c in counters
+            ]
+        )
+    )
+    if not partitioned:
+        return roll
+    zero = ", ".join(f"'{c}', 0L" for c in counters)
+    return roll.agg(F.expr("collect_list(struct(*)) AS _rows")).selectExpr(
+        "inline(CASE WHEN size(_rows) > 0 THEN _rows ELSE "
+        f"array(named_struct('partition_key', 'global', {zero})) END)"
     )
 
 
-def profile_key_col(col: Column) -> Column:
+def profile_key_col(col: str) -> Column:
     """The profile's shuffle key: 16-byte md5 of the key value.
 
     Shuffling the 128-bit digest instead of the raw url string cuts the
@@ -201,69 +258,72 @@ def profile_key_col(col: Column) -> Column:
     ~(10^12)²/2^129 ≈ 1.5e-15 — far below any hardware error rate. (A
     64-bit hash would NOT do: ~27k expected birthday collisions at that
     cardinality, i.e. guaranteed false duplicates.) Null keys hash to
-    null, preserving the join semantics of raw keys."""
-    return F.unhex(F.md5(F.encode(col.cast("string"), "UTF-8")))
+    null, preserving the join semantics of raw keys. ``col`` names the
+    key column."""
+    return F.expr(f"unhex(md5(encode(CAST(`{col}` AS STRING), 'UTF-8')))")
 
 
 def url_profile(
     keyed: DataFrame, key_col: str, n_salts: int = 64, hash_key: bool = True
 ) -> DataFrame:
     """Two-phase salted key profile → ``(partition_key, window_start, key,
-    cnt)`` with one row per distinct key per window per partition.
+    cnt, _key_cnt)`` with one row per distinct key per window per
+    partition; ``_key_cnt`` is the key's count over the whole input.
 
     The phase-1 salt is positional (``monotonically_increasing_id``), not
     content-derived: identical rows MUST land on different reducers —
     that's exactly the hot case being split (SURVEY.md §4 item 1).
+    Phase 2 shuffles by the key alone (at most windows × partitions ×
+    salts rows per key): its aggregation and the per-key window sum that
+    yields ``_key_cnt`` run on that one shuffle, and the cached profile
+    keeps the key partitioning.
 
     With ``hash_key`` (the scale default) the profile carries
     :func:`profile_key_col` digests; consumers that join back to the
     input must hash their side the same way.
     """
-    key = F.col(key_col)
-    if hash_key:
-        key = profile_key_col(key)
+    key = profile_key_col(key_col) if hash_key else F.col(key_col)
     phase1 = (
-        keyed.select("partition_key", "window_start", key.alias("key"))
-        .withColumn(
-            "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
+        keyed.select(
+            "partition_key",
+            "window_start",
+            key.alias("key"),
+            F.expr(f"pmod(monotonically_increasing_id(), {n_salts}) AS _salt"),
         )
         .groupBy("partition_key", "window_start", "key", "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
+        .agg(F.expr("count(1) AS _partial"))
     )
-    return phase1.groupBy("partition_key", "window_start", "key").agg(
-        F.sum("_partial").alias("cnt")
-    )
-
-
-def dup_keys_from_profile(profile: DataFrame) -> DataFrame:
-    """Globally duplicated keys ``(key, cnt)`` — cnt summed across windows
-    and partitions, matching
-    ``operators.uniqueness.duplicate_key_counts``."""
     return (
-        profile.groupBy("key")
-        .agg(F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") > 1)
+        phase1.repartition("key")
+        .groupBy("partition_key", "window_start", "key")
+        .agg(F.expr("sum(_partial) AS cnt"))
+        .withColumn("_key_cnt", F.expr("sum(cnt) OVER (PARTITION BY key)"))
     )
 
 
-def per_partition_dup_counts(profile: DataFrame) -> DataFrame:
-    """``(partition_key, violation_count)`` where violation_count is the
-    number of rows in the partition whose key occurs more than once
-    globally.
+def dup_rows(profile: DataFrame) -> DataFrame:
+    """Profile rows of the keys that occur more than once in the whole
+    input (NULL keys never match a key, so never count): summing ``cnt``
+    per partition gives the uniqueness verdict's violation count, and the
+    ``key`` column holds the duplicate-key set (a key once per window and
+    partition it occurs in), as ``operators.uniqueness.
+    duplicate_key_counts`` defines it. A filter of the cached profile —
+    no shuffle."""
+    return profile.filter("key IS NOT NULL AND _key_cnt > 1")
 
-    Shape matters at 10^12 keys: the duplicate-key SET is small (it is a
-    data-quality defect), so semi-joining the profile against its
-    broadcast beats a ``Window.partitionBy(key)`` pass — the window
-    variant shuffles AND SORTS the full profile; this is one sort-free
-    hash aggregation plus a broadcast probe. Catalyst falls back to a
-    shuffle join automatically if the dup set outgrows the broadcast
-    threshold."""
-    dups = dup_keys_from_profile(profile).select("key")
-    return (
-        profile.join(F.broadcast(dups), "key", "left_semi")
-        .groupBy("partition_key")
-        .agg(F.sum("cnt").alias("violation_count"))
-    )
+
+def dup_counts(profile: DataFrame, name: str) -> DataFrame:
+    """``(partition_key, <name>)`` rows whose per-partition sum is the
+    uniqueness verdict's violation count: a :func:`partition_rollup`
+    contribution."""
+    return dup_rows(profile).selectExpr("partition_key", f"cnt AS `{name}`")
+
+
+def is_dup_key(col: str, profile: DataFrame) -> Column:
+    """True where column ``col``'s value is a duplicated key of
+    ``profile`` (hashed as the profile hashes it), NULL or false
+    otherwise: a probe against the broadcast duplicate-key column."""
+    return profile_key_col(col).isin(F.broadcast(dup_rows(profile).select("key")))
 
 
 # log2 text-length bins for the length-histogram drift stats: bin
@@ -272,15 +332,13 @@ def per_partition_dup_counts(profile: DataFrame) -> DataFrame:
 LEN_BINS = 32
 
 
-def len_log2_bin(length: Column) -> Column:
-    """The length-histogram bin of a text length, computed by Spark so the
-    bin edges follow Spark's ``log2`` (not numpy's)."""
+def len_log2_bin(length: str) -> str:
+    """The length-histogram bin of the text-length column ``length``, as
+    SQL: computed by Spark so the bin edges follow Spark's ``log2`` (not
+    numpy's)."""
     return (
-        F.least(
-            F.floor(F.log2(F.coalesce(length, F.lit(0)) + 1)),
-            F.lit(LEN_BINS - 1),
-        )
-        .cast("int")
+        f"CAST(least(floor(log2(coalesce({length}, 0) + 1)), {LEN_BINS - 1}) "
+        "AS INT)"
     )
 
 
@@ -306,41 +364,22 @@ def drift_inputs(
         # window_start keeps the input's timestamp type; NTZ (and date)
         # starts are session-local wall clocks, so the cast recovers
         # their instant (a no-op for TIMESTAMP input)
-        F.unix_micros(F.col("window_start").cast("timestamp")).alias("_w_us"),
+        "unix_micros(CAST(window_start AS TIMESTAMP)) AS _w_us",
         "_len",
         "lang",
         "_n",
     ]
     if len_bins:
-        cols.append(len_log2_bin(F.col("_len")).alias("_bin"))
-    cube_slice = cube.filter(F.col("window_start").isNotNull()).select(*cols)
+        cols.append(f"{len_log2_bin('_len')} AS _bin")
+    cube_slice = cube.filter("window_start IS NOT NULL").selectExpr(*cols)
     # both frames descend from one keyed input: re-alias the grouping
     # columns so the cogroup's key attributes stay unambiguous
     keys = (
-        profile.filter(F.col("window_start").isNotNull())
+        profile.filter("window_start IS NOT NULL")
         .groupBy(
-            F.col("partition_key").alias("partition_key"),
-            F.col("window_start").alias("window_start"),
+            F.expr("partition_key AS partition_key"),
+            F.expr("window_start AS window_start"),
         )
-        .agg(F.count(F.lit(1)).alias("_keys"))
+        .agg(F.expr("count(1) AS _keys"))
     )
     return cube_slice, keys
-
-
-def seeded_rollup(roll: DataFrame) -> DataFrame:
-    """Guarantee the rollup has at least one row: an EMPTY input produces
-    no partition rows, which would silently skip the min-row-count
-    failure the reference contractually raises on empty input
-    (invoker.py:43-44 → NOT_ENOUGH_POINTS). The zero seed row survives
-    the anti-join only when the rollup is empty."""
-    key, *counters = roll.schema.fields
-    # zero-fill every non-key column so the seed tracks whatever counters
-    # the rollup carries (incl. per-suite `_assert_*` columns); a literal
-    # projection of a one-row JVM range, so no Python RDD joins the plan
-    seed = roll.sparkSession.range(0, 1, 1, 1).select(
-        F.lit("global").cast(key.dataType).alias(key.name),
-        *[F.lit(0).cast(f.dataType).alias(f.name) for f in counters],
-    ).join(
-        roll.select(F.lit(1).alias("_any")).limit(1), F.lit(True), "left_anti"
-    )
-    return roll.unionByName(seed)

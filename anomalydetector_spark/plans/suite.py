@@ -209,15 +209,17 @@ def run_suite(
 
     if cube_specs or uniq_specs:
         ts_col = ts_spec.column if ts_spec else None
-        keyed = df.withColumn(
-            "partition_key",
-            F.lit("global") if partition_by is None
-            else F.col(partition_by).cast("string"),
-        ).withColumn(
-            "window_start",
-            fused.window_start_col(df, ts_col, window_duration)
-            if ts_col
-            else F.lit(None).cast("timestamp"),
+        keyed = df.withColumns(
+            {
+                "partition_key": F.lit("global")
+                if partition_by is None
+                else F.col(partition_by).cast("string"),
+                "window_start": fused.window_start_col(
+                    df, ts_col, window_duration
+                )
+                if ts_col
+                else F.lit(None).cast("timestamp"),
+            }
         )
         key_col = uniq_specs[0].column if uniq_specs else None
 
@@ -246,7 +248,20 @@ def run_suite(
         if persist_scans:
             cube = cube.persist()
             cached.append(cube)
-        roll = fused.seeded_rollup(fused.partition_rollup(cube))
+        profiles = []
+        for s in uniq_specs:
+            profile = fused.url_profile(keyed, s.column)
+            if persist_scans:
+                profile = profile.persist()
+                cached.append(profile)
+            profiles.append(profile)
+        # one rollup: the cube's counters + each unique spec's duplicate
+        # rows per partition (_dup_<i>)
+        roll = fused.partition_rollup(
+            cube,
+            [fused.dup_counts(p, f"_dup_{i}") for i, p in enumerate(profiles)],
+            partitioned=partition_by is not None,
+        )
 
         for s in cube_specs:
             if s.kind == "min_rows":
@@ -296,35 +311,17 @@ def run_suite(
                     )
                 )
 
-        for s in uniq_specs:
-            profile = fused.url_profile(keyed, s.column)
-            if persist_scans:
-                profile = profile.persist()
-                cached.append(profile)
+        for i, (s, profile) in enumerate(zip(uniq_specs, profiles)):
             name = f"unique_{s.column}"
             verdicts.append(
                 C._verdict_from_violation_count(
-                    roll.select("partition_key", "rows_scanned")
-                    .join(
-                        fused.per_partition_dup_counts(profile),
-                        "partition_key",
-                        "left",
-                    )
-                    .withColumn(
-                        "violation_count",
-                        F.coalesce(F.col("violation_count"), F.lit(0)),
-                    ),
+                    roll.withColumn("violation_count", F.col(f"_dup_{i}")),
                     name,
                     E.DUPLICATE_KEY.format(s.column),
                 )
             )
-            dups = fused.dup_keys_from_profile(profile)
             violations.append(
-                keyed.join(
-                    F.broadcast(dups),
-                    fused.profile_key_col(keyed[s.column]) == dups["key"],
-                    "left_semi",
-                ).select(
+                keyed.filter(fused.is_dup_key(s.column, profile)).select(
                     F.lit(name).alias("check_name"), "partition_key", s.column
                 )
             )

@@ -166,7 +166,8 @@ def test_engine_integration(spark):
 
 
 def test_engine_empty_input_with_asserts(spark):
-    """seeded_rollup must seed the widened (assert-carrying) rollup."""
+    """The empty-input zero row must carry the widened (assert-carrying)
+    rollup's counters."""
     from anomalydetector_spark.engine import ValidationConfig, run_validation
 
     empty = spark.createDataFrame(

@@ -8,7 +8,10 @@ import pytest
 
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors
-from anomalydetector_spark.operators.referential import check_referential
+from anomalydetector_spark.operators.referential import (
+    REF_STRATEGIES,
+    check_referential,
+)
 from anomalydetector_spark.operators.uniqueness import check_unique_key
 
 
@@ -264,6 +267,42 @@ def test_bloom_rung_all_join_types_exact(spark):
 
     with pytest.raises(ValueError, match="shuffle_bloom"):
         dim_join(fact, dim, "k", how="inner", strategy="shuffle_bloom")
+
+
+@pytest.mark.parametrize("strategy", REF_STRATEGIES)
+def test_dim_join_rungs_match_membership(spark, strategy):
+    """Every rung of the ladder gives the rows plain key membership
+    defines, for a dimension that repeats keys and holds a NULL key and
+    for NULL fact keys: ``left`` keeps each fact row once with ``_known``
+    True/NULL, ``left_semi`` keeps the members, ``left_anti`` the rest
+    (NULL fact keys included)."""
+    from anomalydetector_spark.operators.referential import dim_join
+
+    fact = spark.range(3000).select(
+        F.when(F.col("id") % 11 == 0, None)
+        .otherwise(F.col("id") % 400)
+        .alias("k"),
+        F.col("id").alias("rid"),
+    )
+    # keys 0..299, each twice, plus a NULL key
+    dim = spark.range(600).select((F.col("id") % 300).alias("k")).unionByName(
+        spark.range(1).select(F.lit(None).cast("long").alias("k"))
+    )
+    members = set(range(300))
+    rows = [(r, None if r % 11 == 0 else r % 400) for r in range(3000)]
+
+    left = dim_join(fact, dim, "k", how="left", strategy=strategy, salts=4)
+    assert sorted(
+        (r.rid, r.k, r._known) for r in left.select("rid", "k", "_known").collect()
+    ) == sorted((r, k, True if k in members else None) for r, k in rows)
+    semi = dim_join(fact, dim, "k", how="left_semi", strategy=strategy, salts=4)
+    assert sorted((r.rid, r.k) for r in semi.collect()) == sorted(
+        (r, k) for r, k in rows if k in members
+    )
+    anti = dim_join(fact, dim, "k", how="left_anti", strategy=strategy, salts=4)
+    assert sorted((r.rid, r.k) for r in anti.collect()) == sorted(
+        (r, k) for r, k in rows if k not in members
+    )
 
 
 def test_engine_ref_strategy_parity(spark):

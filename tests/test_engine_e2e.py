@@ -551,3 +551,83 @@ def test_cusum_frozen_reference_period(spark, pages):
     # the frozen-reference z at the shift dwarfs the self-contaminated
     # full-series z (the shift inflates its own sigma)
     assert burst.z > full[_win_start(truth["lang_window"])].z
+
+
+def test_null_partition_keeps_its_unique_and_fd_counts(spark):
+    """A NULL partition_key is a partition like any other: its uniqueness
+    and functional-dependency verdicts count its own duplicate rows and
+    violating keys, matching the violation rows tagged for it."""
+    import datetime as dt
+
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [
+        (f"https://x/{i}", t0 + dt.timedelta(hours=i), None, "t" * (i + 1),
+         "en", "a.org")
+        for i in range(14)
+    ] + [
+        ("https://dup/", t0, None, "dup text", "en", None),
+        ("https://dup/", t0 + dt.timedelta(days=1), None, "dup text", "de", None),
+        ("https://solo/", t0, None, "solo", "en", None),
+    ]
+    pages = spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string, domain string",
+    )
+    res = run_validation(
+        pages,
+        config=ValidationConfig(
+            partition_by="domain", functional_deps=(("url", "lang"),)
+        ),
+    )
+    v = {
+        (r.partition_key, r.check_name): r
+        for r in res.verdicts.collect()
+    }
+    viol = sorted(
+        (r.partition_key, r.check_name, r.url)
+        for r in res.violations.collect()
+    )
+    res.unpersist()
+    assert v[(None, "min_row_count")].rows_scanned == 3
+    uniq = v[(None, "unique_url")]
+    assert (uniq.passed, uniq.violation_count) == (False, 2)
+    fd = v[(None, "fd_url_lang")]
+    assert (fd.passed, fd.violation_count) == (False, 1)
+    assert v[("a.org", "unique_url")].violation_count == 0
+    assert v[("a.org", "fd_url_lang")].violation_count == 0
+    assert viol == [
+        (None, "fd_url_lang", "https://dup/"),
+        (None, "fd_url_lang", "https://dup/"),
+        (None, "unique_url", "https://dup/"),
+        (None, "unique_url", "https://dup/"),
+    ]
+
+
+@pytest.mark.parametrize("partition_by", [None, "domain"])
+def test_warm_run_job_counts(spark, partition_by):
+    """The per-run fixed cost in Spark jobs: a warm run's verdicts action
+    and its violation count start at most these many jobs (each adaptive
+    query stage and each broadcast is one job). The verdict path is one
+    rollup over the cube and the profile's duplicate rows: no distinct
+    in front of the dimension broadcast, no duplicate-key shuffle, no
+    empty-input seed join."""
+    from anomalydetector_spark.plans.audit import spark_jobs
+
+    pages = datagen.generate_pages(spark, 3_000, seed=5)
+    domains = datagen.domains_dim(spark)
+    cfg = ValidationConfig(partition_by=partition_by)
+    counts = []
+    for _ in range(2):
+        res = run_validation(pages, domains, cfg)
+        _, verdict_jobs = spark_jobs(spark, lambda: res.verdicts.collect())
+        _, viol_jobs = spark_jobs(
+            spark,
+            lambda: res.violations.groupBy("check_name", "partition_key")
+            .count()
+            .collect(),
+        )
+        res.unpersist()
+        counts.append((verdict_jobs, viol_jobs))
+    want = {None: (8, 4), "domain": (9, 4)}[partition_by]
+    assert counts[-1][0] <= want[0] and counts[-1][1] <= want[1], counts

@@ -157,10 +157,7 @@ def test_warm_runs_reuse_generated_code(spark, partition_by):
     """Runs 2 and 3 of the same validation in one session find every
     generated class in the codegen cache. Spark's default 100-entry cache
     holds less than one run's ~110-170 classes and recompiled 68-73 per
-    warm run here; with 1024 entries a warm run compiles 2-6. That
-    residue is ``fused.seeded_rollup``'s ``limit(1)``, whose stage embeds
-    a fresh ``_limit_counter_N`` name from a global id on every plan, so
-    it never hits the cache."""
+    warm run here; with 1024 entries a warm run compiles 0-6."""
     pages = datagen.generate_pages(spark, 5_000)
     domains = datagen.domains_dim(spark)
     cfg = ValidationConfig(partition_by=partition_by)

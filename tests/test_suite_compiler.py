@@ -92,3 +92,23 @@ def test_suite_empty_input_fails_min_rows(spark):
     v = {r.check_name: r for r in res.verdicts.collect()}
     assert v["min_row_count"].passed is False
     assert v["min_row_count"].rows_scanned == 0
+
+
+def test_suite_null_partition_counts_its_duplicates(spark):
+    """The suite's uniqueness verdict of a NULL partition counts its own
+    duplicate rows, like every other partition's."""
+    from anomalydetector_spark.plans import suite as S
+
+    df = spark.createDataFrame(
+        [("u1", "a"), ("u2", "a"), ("d", None), ("d", None), ("e", None)],
+        "url string, domain string",
+    )
+    res = S.run_suite(
+        df, [S.min_rows(1), S.unique("url")], partition_by="domain",
+        persist_scans=False,
+    )
+    v = {(r.partition_key, r.check_name): r for r in res.verdicts.collect()}
+    assert v[(None, "unique_url")].violation_count == 2
+    assert not v[(None, "unique_url")].passed
+    assert v[("a", "unique_url")].violation_count == 0
+    assert v[(None, "min_row_count")].rows_scanned == 3

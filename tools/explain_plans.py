@@ -93,6 +93,27 @@ def _warm_rerun_compiles(spark, pages, domains, runs: int = 3) -> list[int]:
     return added
 
 
+def _warm_run_jobs(spark, pages, domains, partition_by) -> tuple[int, int]:
+    """Spark jobs of a warm validation's verdicts action and of its
+    violation count (the second of two identical runs)."""
+    from anomalydetector_spark.engine import ValidationConfig, run_validation
+    from anomalydetector_spark.plans.audit import spark_jobs
+
+    for _ in range(2):
+        res = run_validation(
+            pages, domains, ValidationConfig(partition_by=partition_by)
+        )
+        _, verdict_jobs = spark_jobs(spark, lambda: res.verdicts.collect())
+        _, viol_jobs = spark_jobs(
+            spark,
+            lambda: res.violations.groupBy("check_name", "partition_key")
+            .count()
+            .collect(),
+        )
+        res.unpersist()
+    return verdict_jobs, viol_jobs
+
+
 def check(name: str, ok: bool, detail: str = "") -> bool:
     print(f"{'PASS' if ok else 'FAIL'}  {name}" + (f"  ({detail})" if detail else ""))
     return ok
@@ -226,11 +247,24 @@ def main() -> None:
     )
     res.unpersist()
 
+    # the per-run fixed cost in jobs (each adaptive query stage and each
+    # broadcast is one): the verdicts are one rollup over the cube and
+    # the profile's duplicate rows (no distinct before the dimension
+    # broadcast, no duplicate-key shuffle, no empty-input seed join); a
+    # partitioned run adds one stage that gathers the partition rows
+    for part, want in ((None, (8, 4)), ("domain", (9, 4))):
+        got = _warm_run_jobs(spark, pages, domains, part)
+        ok &= check(
+            f"warm run (partition_by={part}) starts <= {want[0]} verdict "
+            f"jobs and <= {want[1]} violation-count jobs",
+            got[0] <= want[0] and got[1] <= want[1],
+            f"jobs: verdicts {got[0]}, violation count {got[1]}",
+        )
+
     # a warm rerun finds every generated class in the codegen cache
-    # (session.CODEGEN_CACHE_ENTRIES): only the seeded rollup's limit(1),
-    # whose stage names a fresh _limit_counter_N per plan, recompiles. A
-    # per-run literal inlined into a hot stage, or a session left at
-    # Spark's 100-entry cache, recompiles ~70 classes per run.
+    # (session.CODEGEN_CACHE_ENTRIES). A per-run literal inlined into a
+    # hot stage, or a session left at Spark's 100-entry cache, recompiles
+    # ~70 classes per run.
     compiles = _warm_rerun_compiles(spark, pages, domains)
     ok &= check(
         "warm reruns reuse generated code (<= 20 compiles per run)",

@@ -43,7 +43,6 @@ from anomalydetector_spark.operators.evaluate import (
     per_series_f1,
     segment_adjust_predictions,
 )
-from anomalydetector_spark.operators.referential import check_referential
 from anomalydetector_spark.operators.similarity import (
     cosine_topk_bruteforce,
     embedding_near_duplicates,
@@ -51,6 +50,7 @@ from anomalydetector_spark.operators.similarity import (
     lsh_bucket_ann,
 )
 from anomalydetector_spark.operators.uniqueness import duplicate_key_counts
+from anomalydetector_spark.plans import suite as S
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -113,7 +113,9 @@ def q_stats_cube_events(spark, sf_dir):
 def q_min_rows_verdict(spark, sf_dir):
     """P1 min-row-count verdicts per partition (invoker.py:43-44)."""
     ev = _t(spark, sf_dir, "events")
-    v = C.check_min_rows(ev, "event_type", min_points=2000).verdicts
+    v = S.run_suite(
+        ev, [S.min_rows(2000)], partition_by="event_type", persist_scans=False
+    ).verdicts
     return v.select("check_name", "partition_key", "passed", "violation_count",
                     "rows_scanned")
 
@@ -254,16 +256,28 @@ def q_value_bounds(spark, sf_dir):
     )
 
 
-def q_referential_anti(spark, sf_dir):
-    """Referential violation rows via broadcast LEFT ANTI (north rule)."""
+def _referential_verdicts(spark, sf_dir, **rung):
+    """Per-priority verdicts of the suite's ``o_custkey`` → customer
+    referential check under the dimension-join rung ``rung``."""
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
-    r = check_referential(orders, "o_custkey", cust, "c_custkey", "o_orderpriority")
+    r = S.run_suite(
+        orders,
+        [S.referential("o_custkey", cust, "c_custkey", **rung)],
+        partition_by="o_orderpriority",
+        persist_scans=False,
+    )
     return r.verdicts.select(
         F.col("partition_key").alias("o_orderpriority"),
         "violation_count",
         "rows_scanned",
     )
+
+
+def q_referential_anti(spark, sf_dir):
+    """Referential verdicts via the broadcast membership probe (north
+    rule)."""
+    return _referential_verdicts(spark, sf_dir)
 
 
 def q_referential_anti_shuffle(spark, sf_dir):
@@ -273,16 +287,8 @@ def q_referential_anti_shuffle(spark, sf_dir):
     rows are identical to `referential_anti` by construction — the
     replicated dim carries every salt for every key — so the same oracle
     certifies the salted physical plan."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    r = check_referential(
-        orders, "o_custkey", cust, "c_custkey", "o_orderpriority",
-        strategy="shuffle_salted", salts=8, salt_on="o_orderkey",
-    )
-    return r.verdicts.select(
-        F.col("partition_key").alias("o_orderpriority"),
-        "violation_count",
-        "rows_scanned",
+    return _referential_verdicts(
+        spark, sf_dir, strategy="shuffle_salted", salts=8
     )
 
 
@@ -290,22 +296,12 @@ def q_referential_anti_bloom(spark, sf_dir):
     """Same referential check on the semi-join-reduction rung
     (strategy='shuffle_bloom'): the dim's Bloom bitmap rides as a
     broadcast 1-row map column, every fact row gets a pure-codegen
-    membership probe, bloom-NEGATIVE rows are emitted as definite
-    violations without ever shuffling, and only the bloom-positive
-    remainder (hits + the FP fraction) enters the shuffle-hash anti
-    join. Exact because the filter has no false negatives; the same
-    oracle as `referential_anti_shuffle` certifies this physical plan."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    r = check_referential(
-        orders, "o_custkey", cust, "c_custkey", "o_orderpriority",
-        strategy="shuffle_bloom",
-    )
-    return r.verdicts.select(
-        F.col("partition_key").alias("o_orderpriority"),
-        "violation_count",
-        "rows_scanned",
-    )
+    membership probe, bloom-NEGATIVE rows are flagged as dangling without
+    ever shuffling, and only the bloom-positive remainder (hits + the FP
+    fraction) enters the shuffle-hash join. Exact because the filter has
+    no false negatives; the same oracle as `referential_anti_shuffle`
+    certifies this physical plan."""
+    return _referential_verdicts(spark, sf_dir, strategy="shuffle_bloom")
 
 
 def q_fd_check(spark, sf_dir):

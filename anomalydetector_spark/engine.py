@@ -232,53 +232,24 @@ def run_validation(
 
     # Every rollup-derived verdict (min-rows, not-null, uniqueness,
     # referential, row asserts, functional dependencies) is ONE
-    # projection of ONE per-partition rollup: an inline(array(<struct per
-    # check>)) generator. The rollup is one aggregation over the cube and
-    # the per-partition contributions of the other checks (duplicate-key
-    # rows of the cached profile, violating FD keys), so the verdicts
-    # plan has one branch and one rollup shuffle however many checks run;
-    # Catalyst optimization + codegen compile are paid per FRESH plan
-    # (every run_validation call persists new scans), so plan size is
-    # real per-run time, not just driver elegance. The structs are SQL
-    # text: the JVM parses each in one call, where a Column chain costs a
-    # py4j round trip per method.
+    # projection of ONE per-partition rollup (fused.rollup_verdicts). The
+    # rollup is one aggregation over the cube and the per-partition
+    # contributions of the other checks (duplicate-key rows of the cached
+    # profile, violating FD keys).
     uniq_name = f"unique_{cfg.unique_key}"
     contributions = [fused.dup_counts(profile, "_dup_rows")]
-
-    def _verdict(name: str, failed: str, message: str, viol: str) -> str:
-        """One verdict row of the rollup, in the verdict frame's order."""
-        return (
-            f"named_struct('check_name', {C.sql_string(name)}, "
-            "'partition_key', partition_key, "
-            f"'passed', NOT ({failed}), "
-            f"'error_message', CASE WHEN {failed} "
-            f"THEN {C.sql_string(message)} END, "
-            f"'violation_count', CAST({viol} AS BIGINT), "
-            "'rows_scanned', rows_scanned)"
-        )
-
-    def _count_verdict(name: str, viol: str, message: str) -> str:
-        """The _verdict_from_violation_count contract as a struct."""
-        return _verdict(name, f"{viol} > 0", message, viol)
-
-    short = f"rows_scanned < {int(cfg.min_points)}"
-    verdict_structs = [
-        _verdict(
-            "min_row_count",
-            short,
-            E.NOT_ENOUGH_POINTS.format(cfg.min_points),
-            f"CASE WHEN {short} THEN rows_scanned ELSE 0 END",
-        ),
-        _count_verdict("not_null_warc_ts", "null_ts", E.INVALID_TIMESTAMPS),
-        _count_verdict(
+    checks = [
+        fused.min_rows_check(cfg.min_points),
+        fused.count_check("not_null_warc_ts", "null_ts", E.INVALID_TIMESTAMPS),
+        fused.count_check(
             uniq_name, "_dup_rows", E.DUPLICATE_KEY.format(cfg.unique_key)
         ),
     ]
     for i, a in enumerate(row_asserts):
         frac = float(a.max_violation_fraction)
         budget = f"rows_scanned * CAST({frac!r} AS DOUBLE)"
-        verdict_structs.append(
-            _verdict(
+        checks.append(
+            (
                 f"assert_{a.name}",
                 f"_assert_{i} > {budget}",
                 A.ROW_ASSERT_FAILED.format(a.name, a.expr),
@@ -286,8 +257,8 @@ def run_validation(
             )
         )
     if domains is not None:
-        verdict_structs.append(
-            _count_verdict(
+        checks.append(
+            fused.count_check(
                 "ref_domain",
                 "dangling",
                 E.DANGLING_REFERENCE.format("domain", "domain"),
@@ -315,8 +286,8 @@ def run_validation(
         contributions.append(
             bad.selectExpr("partition_key", f"1 AS _fd_viol_{i}")
         )
-        verdict_structs.append(
-            _count_verdict(
+        checks.append(
+            fused.count_check(
                 f"fd_{C.fd_label(det)}_{C.fd_label(dep)}",
                 f"_fd_viol_{i}",
                 E.FD_VIOLATION.format(C.fd_label(det), C.fd_label(dep)),
@@ -325,9 +296,7 @@ def run_validation(
     roll = fused.partition_rollup(
         cube, contributions, partitioned=cfg.partition_by is not None
     )
-    rollup_verdicts = roll.selectExpr(
-        f"inline(array({', '.join(verdict_structs)}))"
-    )
+    rollup_verdicts = fused.rollup_verdicts(roll, checks)
 
     verdict_frames = [
         C.check_column_presence(pages, PAGES_COLUMNS).verdicts,
@@ -416,7 +385,6 @@ def run_validation(
             tagged,
             domains,
             "domain",
-            how="left",
             strategy=cfg.ref_strategy,
             salts=cfg.ref_salts,
             salt_on=F.col(cfg.unique_key),

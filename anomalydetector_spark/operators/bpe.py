@@ -3,8 +3,7 @@
 BPE (Sennrich et al. 2016, "Neural Machine Translation of Rare Words
 with Subword Units" — public method) learns a merge table by repeatedly
 fusing the most frequent adjacent symbol pair, then segments text by
-replaying those merges. The repo's `subword_count` estimates subword
-counts with a regex; this operator learns and applies a REAL merge
+replaying those merges. This operator learns and applies a REAL merge
 table, closing the tokenizer half of the training-data pipeline
 (vocab_top_k → stopwords; learn_bpe_merges → subword vocabulary).
 

@@ -12,7 +12,10 @@ Each check is a declarative DataFrame program that produces
 Design rules for 10^12-doc scale:
 * every check is a single aggregation or window pass over pruned columns
   (never reads ``html`` unless the check targets it),
-* cheap verdicts ride ONE shared scan via :func:`run_checks` in engine.py,
+* the count-shaped verdicts (min rows, null timestamps, uniqueness,
+  referential integrity) are not here: they compile onto the shared
+  scans and one rollup (plans/fused.py), for the pages engine and for
+  the check suite (plans/suite.py) alike,
 * violations are lazily-evaluated DataFrames — only materialized when the
   caller sinks them.
 """
@@ -150,34 +153,6 @@ def check_schema_types(
             len(problems),
         )
     )
-
-
-def check_min_rows(
-    df: DataFrame,
-    partition_by: Column | str | None = None,
-    min_points: int = MIN_POINTS,
-    check_name: str = "min_row_count",
-) -> CheckResult:
-    """P1 — per-partition minimum row count (invoker.py:43-44,
-    constants.py:3)."""
-    p = _part(df, partition_by)
-    counted = p.groupBy("partition_key").agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    verdicts = counted.select(
-        F.lit(check_name).alias("check_name"),
-        "partition_key",
-        (F.col("rows_scanned") >= min_points).alias("passed"),
-        F.when(
-            F.col("rows_scanned") < min_points,
-            F.lit(errors.NOT_ENOUGH_POINTS.format(min_points)),
-        ).alias("error_message"),
-        F.when(F.col("rows_scanned") < min_points, F.col("rows_scanned"))
-        .otherwise(F.lit(0))
-        .alias("violation_count"),
-        "rows_scanned",
-    )
-    return CheckResult(verdicts)
 
 
 def check_not_null(

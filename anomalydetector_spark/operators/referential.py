@@ -1,7 +1,10 @@
-"""Referential-integrity checks as semi/anti joins (north rule;
-SURVEY.md §2.2 referential note).
+"""Dimension membership under a physical-strategy ladder (north rule;
+SURVEY.md §2.2 referential note): :func:`dim_join` flags each fact row
+whose key exists in a dimension. The referential verdicts and violation
+rows of the pages engine and of the check suite are built on that flag
+(plans/fused.ref_flag).
 
-Physical strategy is a ladder, chosen by dimension size:
+The strategy is chosen by dimension size:
 
 * ``broadcast`` (default, the north rule's stated shape): the dimension
   (domains, allowed langs, …) is small relative to the fact table, so
@@ -27,27 +30,20 @@ Physical strategy is a ladder, chosen by dimension size:
 * ``shuffle_bloom``: semi-join reduction for dimensions too big to
   broadcast but whose MISSES dominate (or whose hits do — either way
   most rows are decidable without the join). The dim's Bloom bitmap
-  (``operators/bloom``) rides as a broadcast 1-row map column; every
-  fact row gets a pure-codegen membership probe, and only
-  bloom-POSITIVE rows enter the shuffle join. No false negatives by
-  construction, so bloom-negative rows are DEFINITE non-members: for
-  an anti join they are emitted directly, for a semi join dropped —
-  exact either way, with shuffled bytes cut to (hit rate + FP rate) of
-  the fact. The bitmap must fit a broadcast row (~1.2 MB per 10^6 dim
-  keys at 1% FP) — for 10^9-key dims stay on ``shuffle``/``salted``.
+  (``operators/bloom``, sized for a 1 % false-positive rate) rides as a
+  broadcast 1-row map column; every fact row gets a pure-codegen
+  membership probe, and only bloom-POSITIVE rows enter the shuffle
+  join. No false negatives by construction, so bloom-negative rows are
+  DEFINITE non-members and skip the join — exact, with shuffled bytes
+  cut to (hit rate + FP rate) of the fact. The bitmap must fit a
+  broadcast row (~1.2 MB per 10^6 dim keys at 1% FP) — for 10^9-key
+  dims stay on ``shuffle``/``salted``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from anomalydetector_spark.operators import errors
-from anomalydetector_spark.operators.checks import (
-    CheckResult,
-    _part,
-    _verdict_from_violation_count,
-)
 
 REF_STRATEGIES = (
     "broadcast",
@@ -56,6 +52,9 @@ REF_STRATEGIES = (
     "shuffle_salted",
     "shuffle_bloom",
 )
+
+# false-positive rate the shuffle_bloom rung sizes its bitmap for
+BLOOM_FP = 0.01
 
 
 def _salt_expr(salt_on: Column | str | None, salts: int) -> Column:
@@ -80,24 +79,18 @@ def dim_join(
     parent: DataFrame,
     child_col: str,
     parent_col: str | None = None,
-    how: str = "left",
     strategy: str = "broadcast",
     salts: int = 16,
     salt_on: Column | str | None = None,
-    bloom_fp: float = 0.01,
 ) -> DataFrame:
-    """Match ``fact`` against the parent key set under the chosen
-    physical strategy. ``how='left'`` appends a ``_known`` boolean column
-    (True where the key exists, NULL otherwise); ``how='left_anti'`` /
-    ``'left_semi'`` return the usual filtered fact rows. Every rung gives
-    the same rows, whether or not the parent repeats a key. ``bloom_fp``
-    sizes the ``shuffle_bloom`` rung's bitmap (ignored elsewhere)."""
+    """``fact`` with a ``_known`` column: True where ``child_col``'s value
+    is a key of ``parent[parent_col]``, NULL otherwise, under the chosen
+    physical strategy. Every rung keeps each fact row once, whether or
+    not the parent repeats a key."""
     if strategy not in REF_STRATEGIES:
         raise ValueError(
             f"strategy must be one of {REF_STRATEGIES}, got {strategy!r}"
         )
-    if how not in ("left", "left_semi", "left_anti"):
-        raise ValueError(f"{strategy} dim_join does not support how={how!r}")
     parent_col = parent_col or child_col
     if strategy == "broadcast":
         # membership probes against the broadcast key column: an IN
@@ -107,30 +100,29 @@ def dim_join(
         keys = F.broadcast(
             parent.selectExpr(f"`{parent_col}` AS `{child_col}`")
         )
-        if how == "left":
-            return fact.withColumn(
-                "_known", F.when(F.col(child_col).isin(keys), F.lit(True))
-            )
-        return fact.join(keys, child_col, how)
+        return fact.withColumn(
+            "_known", F.when(F.col(child_col).isin(keys), F.lit(True))
+        )
 
-    dim = _dim_keys(parent, parent_col, child_col)
-    if how == "left":
-        dim = dim.withColumn("_known", F.lit(True))
-
+    dim = _dim_keys(parent, parent_col, child_col).withColumn(
+        "_known", F.lit(True)
+    )
     if strategy == "auto":
-        return fact.join(dim, child_col, how)
+        return fact.join(dim, child_col, "left")
     if strategy == "shuffle":
-        return fact.join(dim.hint("shuffle_hash"), child_col, how)
+        return fact.join(dim.hint("shuffle_hash"), child_col, "left")
 
     if strategy == "shuffle_bloom":
-        return _bloom_reduced_join(fact, dim, child_col, how, bloom_fp)
+        return _bloom_reduced_join(fact, dim, child_col)
 
     # shuffle_salted: spread each hot fact key across `salts` tasks
     fact_s = fact.withColumn("_ref_salt", _salt_expr(salt_on, salts))
     dim_s = dim.withColumn(
         "_ref_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     ).hint("shuffle_hash")
-    return fact_s.join(dim_s, [child_col, "_ref_salt"], how).drop("_ref_salt")
+    return fact_s.join(dim_s, [child_col, "_ref_salt"], "left").drop(
+        "_ref_salt"
+    )
 
 
 def _bloom_probe(key: Column, m_bits: int, n_hashes: int, seed: int) -> Column:
@@ -155,22 +147,18 @@ def _bloom_probe(key: Column, m_bits: int, n_hashes: int, seed: int) -> Column:
 
 
 def _bloom_reduced_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    child_col: str,
-    how: str,
-    bloom_fp: float,
+    fact: DataFrame, dim: DataFrame, child_col: str
 ) -> DataFrame:
     """Semi-join reduction: probe every fact row against the dim's
     broadcast Bloom bitmap in codegen; only bloom-positive rows (true
     members + the FP fraction) reach the shuffle join. Bloom-negative
-    rows are definite non-members — emitted directly for anti/left,
-    dropped for semi. Exact for every ``how`` because the filter has no
-    false negatives."""
+    rows are definite non-members and get a NULL ``_known`` directly —
+    exact because the filter has no false negatives. ``dim`` carries
+    ``_known`` = True."""
     from anomalydetector_spark.operators.bloom import bloom_params, build_bloom
 
     n_keys = dim.count()  # dim is already distinct; bounded action
-    m_bits, n_hashes = bloom_params(max(n_keys, 1), bloom_fp)
+    m_bits, n_hashes = bloom_params(max(n_keys, 1), BLOOM_FP)
     bloom_row = F.broadcast(
         build_bloom(dim, child_col, m_bits=m_bits, n_hashes=n_hashes).agg(
             F.map_from_entries(
@@ -183,74 +171,9 @@ def _bloom_reduced_join(
         F.col(child_col).isNotNull()
         & _bloom_probe(F.col(child_col), m_bits, n_hashes, seed=0),
     )
-    candidates = (
-        probed.filter(F.col("_maybe")).drop("_bloom", "_maybe")
-    )
+    candidates = probed.filter(F.col("_maybe")).drop("_bloom", "_maybe")
     negatives = probed.filter(~F.col("_maybe")).drop("_bloom", "_maybe")
-    dim_h = dim.hint("shuffle_hash")
-    if how == "left_semi":
-        return candidates.join(dim_h, child_col, "left_semi")
-    if how == "left_anti":
-        return candidates.join(dim_h, child_col, "left_anti").unionByName(
-            negatives
-        )
-    # how == "left": dim already carries _known=True (added by dim_join)
-    joined = candidates.join(dim_h, child_col, "left")
+    joined = candidates.join(dim.hint("shuffle_hash"), child_col, "left")
     return joined.unionByName(
         negatives.withColumn("_known", F.lit(None).cast("boolean"))
     )
-
-
-def check_referential(
-    child: DataFrame,
-    child_col: str,
-    parent: DataFrame,
-    parent_col: str,
-    partition_by: Column | str | None = None,
-    keep: list[str] | None = None,
-    strategy: str = "broadcast",
-    salts: int = 16,
-    salt_on: Column | str | None = None,
-    bloom_fp: float = 0.01,
-) -> CheckResult:
-    """Every non-null ``child[child_col]`` must exist in
-    ``parent[parent_col]``. Violations via LEFT ANTI join under the
-    chosen ``strategy`` (see module docstring); the passing set is the
-    LEFT SEMI complement (not materialized here)."""
-    name = f"ref_{child_col}"
-    p = _part(child, partition_by)
-
-    dangling = dim_join(
-        p.filter(F.col(child_col).isNotNull()),
-        parent,
-        child_col,
-        parent_col,
-        how="left_anti",
-        strategy=strategy,
-        salts=salts,
-        salt_on=salt_on,
-        bloom_fp=bloom_fp,
-    )
-
-    counted = (
-        p.groupBy("partition_key")
-        .agg(F.count(F.lit(1)).alias("rows_scanned"))
-        .join(
-            dangling.groupBy("partition_key").agg(
-                F.count(F.lit(1)).alias("_bad")
-            ),
-            "partition_key",
-            "left",
-        )
-        .withColumn("violation_count", F.coalesce(F.col("_bad"), F.lit(0)))
-        .drop("_bad")
-    )
-    verdicts = _verdict_from_violation_count(
-        counted,
-        name,
-        errors.DANGLING_REFERENCE.format(child_col, parent_col),
-    )
-    violations = dangling.select(
-        F.lit(name).alias("check_name"), "partition_key", *(keep or [child_col])
-    )
-    return CheckResult(verdicts, violations)

@@ -36,19 +36,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def subword_count(col: Column) -> Column:
-    """BPE-ish proxy: count alphanumeric runs and punctuation marks as
-    separate units (what a byte-pair tokenizer's pre-tokenizer does).
-
-    Computed as ``regexp_count(\\w+) + regexp_count([^\\w\\s])`` — exactly
-    the pieces the lookaround-split formulation produces (verified equal
-    on 1M docs) without materializing a per-character array (1.5×
-    faster)."""
-    return F.regexp_count(col, F.lit(r"\w+")) + F.regexp_count(
-        col, F.lit(r"[^\w\s]")
-    )
-
-
 def punct_ratio(col: Column) -> Column:
     stripped = F.regexp_replace(col, r"[\p{L}\p{N}\s]", "")
     return F.length(stripped) / F.greatest(F.length(col), F.lit(1))

@@ -1,34 +1,29 @@
-"""Key-uniqueness check with explicit skew handling (north rule).
+"""Duplicate-key counting with explicit skew handling (north rule).
 
 At 10^12 docs a plain ``groupBy(url).count()`` is correct but a single
 pathological url (or a domain-heavy shuffle partition) can stall the
 reduce stage. The two-phase salted aggregation bounds any reducer's input:
 
     phase 1: group by (url, salt) where salt spreads identical urls over
-             ``n_salts`` reducers → local counts,
-    phase 2: re-aggregate the (at most ``n_salts``) partial rows per url.
+             ``N_SALTS`` reducers → local counts,
+    phase 2: re-aggregate the (at most ``N_SALTS``) partial rows per url.
 
 Phase-1 keys are near-unique, so AQE's skew mitigation plus map-side
 partial aggregation keep every task bounded; phase 2's input is already
-tiny. (SURVEY.md §2.2 P6, §4 item 1.)
+tiny. (SURVEY.md §2.2 P6, §4 item 1.) The uniqueness verdict itself is
+compiled onto the shared key profile (plans/fused.url_profile), which
+salts the same way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.operators import errors
-from anomalydetector_spark.operators.checks import (
-    CheckResult,
-    _part,
-    _verdict_from_violation_count,
-)
+from anomalydetector_spark.plans.fused import N_SALTS
 
 
-def duplicate_key_counts(
-    df: DataFrame, key_col: str, n_salts: int = 64
-) -> DataFrame:
+def duplicate_key_counts(df: DataFrame, key_col: str) -> DataFrame:
     """Two-phase duplicate counter → ``(key, cnt)`` for keys with cnt > 1.
 
     The salt must differ across physically identical rows, so it is drawn
@@ -38,7 +33,7 @@ def duplicate_key_counts(
     """
     phase1 = (
         df.select(F.col(key_col).alias("key"))
-        .withColumn("_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)))
+        .withColumn("_salt", F.pmod(F.monotonically_increasing_id(), F.lit(N_SALTS)))
         .groupBy("key", "_salt")
         .agg(F.count(F.lit(1)).alias("_partial"))
     )
@@ -47,42 +42,3 @@ def duplicate_key_counts(
         .agg(F.sum("_partial").alias("cnt"))
         .filter(F.col("cnt") > 1)
     )
-
-
-def check_unique_key(
-    df: DataFrame,
-    key_col: str,
-    partition_by: Column | str | None = None,
-    n_salts: int = 64,
-) -> CheckResult:
-    """Uniqueness verdict per partition + violation rows (every row whose
-    key occurs more than once). The duplicate-key set is usually small, so
-    the violation join broadcasts it; Catalyst falls back to a shuffle
-    join automatically if it grows past the broadcast threshold."""
-    name = f"unique_{key_col}"
-    p = _part(df, partition_by)
-
-    dups = duplicate_key_counts(p, key_col, n_salts=n_salts)
-
-    # per-partition violation_count = extra occurrences beyond the first
-    per_part = (
-        p.select("partition_key", F.col(key_col).alias("key"))
-        .join(F.broadcast(dups), "key", "inner")
-        .groupBy("partition_key")
-        .agg(F.count(F.lit(1)).alias("_dup_rows"))
-    )
-    totals = p.groupBy("partition_key").agg(F.count(F.lit(1)).alias("rows_scanned"))
-    counted = (
-        totals.join(per_part, "partition_key", "left")
-        .withColumn("violation_count", F.coalesce(F.col("_dup_rows"), F.lit(0)))
-        .drop("_dup_rows")
-    )
-    verdicts = _verdict_from_violation_count(
-        counted, name, errors.DUPLICATE_KEY.format(key_col)
-    )
-
-    violations = (
-        p.join(F.broadcast(dups), p[key_col] == dups["key"], "left_semi")
-        .select(F.lit(name).alias("check_name"), "partition_key", key_col)
-    )
-    return CheckResult(verdicts, violations)

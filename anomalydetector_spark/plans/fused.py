@@ -37,6 +37,13 @@ suite to its information-theoretic minimum:
   already paid for by the uniqueness check, so exactness is free and no
   HLL sketch is needed.
 
+Both verdict compilers build on these pieces: ``engine.run_validation``
+over the pages cube above, and ``plans/suite.run_suite`` over a cube of
+any table whose extra aggregates are its checks' counters.
+:func:`partition_rollup` gathers every counter per partition in one
+aggregation, and :func:`rollup_verdicts` turns it into every verdict row
+in one projection.
+
 Violation-row extraction still reads the input (it must — the rows are
 the output), but only in the violations DAG, which the caller
 materializes separately.
@@ -54,7 +61,14 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetector_spark.operators import errors as E
+from anomalydetector_spark.operators.checks import sql_string
+
 DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
+
+# phase-1 salts of the salted key profile: one hot key's rows spread over
+# this many groups (operators/uniqueness.duplicate_key_counts salts alike)
+N_SALTS = 64
 
 _UNIT_SECONDS = {
     "second": 1,
@@ -74,6 +88,21 @@ def duration_seconds(duration: str) -> int:
     return int(n) * _UNIT_SECONDS[unit]
 
 
+def epoch_seconds_sql(df: DataFrame, ts_col: str) -> str:
+    """Column ``ts_col`` as epoch seconds, as SQL: NULL where the value is
+    NULL or, for a non-timestamp column, does not parse as a timestamp.
+    Malformed values surface as NULL (counted by the not-null check), not
+    as ANSI cast errors; the string round-trip is only paid when the
+    column isn't a timestamp already (this expression runs inside the hot
+    cube scan)."""
+    dtype = df.schema[ts_col].dataType
+    if dtype.typeName() in ("timestamp", "timestamp_ntz", "date"):
+        return f"CAST(CAST(`{ts_col}` AS TIMESTAMP) AS DOUBLE)"
+    return (
+        f"CAST(try_cast(CAST(`{ts_col}` AS STRING) AS TIMESTAMP) AS DOUBLE)"
+    )
+
+
 def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:
     """Tumbling-window start, arithmetically.
 
@@ -81,23 +110,14 @@ def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:
     implicit ``IsNotNull(ts)`` filter, which would silently DROP
     null-timestamp rows from the shared scans — but the not-null check
     needs to count and extract exactly those rows. Epoch-floor bucketing
-    aligns to the same 1970-epoch grid as ``F.window`` and maps null ts to
-    a null bucket instead of dropping the row."""
+    aligns to the same 1970-epoch grid as ``F.window`` and maps a null or
+    unparseable ts (:func:`epoch_seconds_sql`) to a null bucket instead of
+    dropping the row."""
     sec = duration_seconds(duration)
-    # malformed timestamp values must surface as null-window rows (counted
-    # by the not-null check), not ANSI cast errors — but the string
-    # round-trip is only needed when the column isn't a timestamp already
-    # (this expression runs inside the hot cube scan)
-    dtype = df.schema[ts_col].dataType
-    if dtype.typeName() in ("timestamp", "timestamp_ntz", "date"):
-        epoch = f"CAST(CAST(`{ts_col}` AS TIMESTAMP) AS DOUBLE)"
-    else:
-        epoch = (
-            f"CAST(try_cast(CAST(`{ts_col}` AS STRING) AS TIMESTAMP) AS DOUBLE)"
-        )
+    epoch = epoch_seconds_sql(df, ts_col)
     return F.expr(
         f"CAST(timestamp_seconds(CAST(floor({epoch} / {sec}) * {sec} AS BIGINT))"
-        f" AS {dtype.simpleString()})"
+        f" AS {df.schema[ts_col].dataType.simpleString()})"
     )
 
 
@@ -108,18 +128,19 @@ class FusedScans:
 
     cube: DataFrame  # window_start, partition_key, _len, lang, _ok, _n
     profile: DataFrame  # partition_key, window_start, key, cnt, _key_cnt
-    has_ref: bool
 
 
 def keyed_input(
     df: DataFrame,
-    window_duration: str,
+    window_duration: str | None,
     partition_by: Column | str | None,
     ts_col: str = "warc_ts",
     extra: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Attach the two bucketing columns every fused consumer shares (and
-    any ``extra`` derived columns) in one projection."""
+    any ``extra`` derived columns) in one projection. With no
+    ``window_duration`` every row's ``window_start`` is NULL: a frame
+    keyed so has one window, for checks that read no series."""
     part = (
         F.lit("global")
         if partition_by is None
@@ -132,10 +153,63 @@ def keyed_input(
     return df.withColumns(
         {
             "partition_key": part,
-            "window_start": window_start_col(df, ts_col, window_duration),
+            "window_start": F.expr("CAST(NULL AS TIMESTAMP)")
+            if window_duration is None
+            else window_start_col(df, ts_col, window_duration),
             **(extra or {}),
         }
     )
+
+
+def ref_flag(
+    keyed: DataFrame,
+    dim: DataFrame,
+    child_col: str,
+    parent_col: str,
+    strategy: str = "broadcast",
+    salts: int = 16,
+    salt_on: Column | str | None = None,
+    known: str = "_known",
+) -> tuple[DataFrame, str]:
+    """``keyed`` with a ``known`` column (True where ``child_col``'s value
+    is a key of ``dim[parent_col]``, NULL otherwise) under the chosen
+    dimension-join rung (operators/referential.dim_join), and the SQL of
+    the row's referential verdict: true unless a non-null value dangles.
+    Several flags ride one frame under distinct ``known`` names."""
+    from anomalydetector_spark.operators.referential import dim_join
+
+    flagged = dim_join(
+        keyed,
+        dim,
+        child_col,
+        parent_col,
+        strategy=strategy,
+        salts=salts,
+        salt_on=salt_on,
+    )
+    if known != "_known":
+        flagged = flagged.withColumnRenamed("_known", known)
+    return flagged, f"`{child_col}` IS NULL OR {known} IS NOT NULL"
+
+
+def counts_cube(
+    flagged: DataFrame,
+    ok: str = "true",
+    groups: tuple[str, ...] = (),
+    aggs: list[Column] | None = None,
+) -> DataFrame:
+    """The counts cube: row counts ``_n`` grouped by ``(window_start,
+    partition_key, *groups, _ok)``, ``groups`` and the referential flag
+    ``ok`` as SQL, and the ``aggs`` counters after ``_n``. The pages
+    engine groups by text length and lang for its drift series; a check
+    suite over any table groups by none and carries its checks' counters
+    as ``aggs``."""
+    return flagged.groupBy(
+        "window_start",
+        "partition_key",
+        *[F.expr(g) for g in groups],
+        F.expr(f"{ok} AS _ok"),
+    ).agg(F.expr("count(1) AS _n"), *(aggs or []))
 
 
 def build_fused_scans(
@@ -144,12 +218,12 @@ def build_fused_scans(
     ref_child_col: str = "domain",
     ref_parent_col: str = "domain",
     unique_key: str = "url",
-    n_salts: int = 64,
     extra_cube_aggs: list[Column] | None = None,
     ref_strategy: str = "broadcast",
     ref_salts: int = 16,
 ) -> FusedScans:
-    """Build (lazily) the two shared aggregates from a keyed input.
+    """Build (lazily) the pages table's two shared aggregates from a keyed
+    input.
 
     ``extra_cube_aggs`` rides additional aggregate columns on the cube
     scan (e.g. per-row-assert violation counters from
@@ -161,34 +235,22 @@ def build_fused_scans(
     shuffle / shuffle_salted; the salted rung salts on ``unique_key`` so
     the salt is deterministic under task retry."""
     if ref_dim is not None:
-        from anomalydetector_spark.operators.referential import dim_join
-
-        flagged = dim_join(
+        flagged, ok = ref_flag(
             keyed,
             ref_dim,
             ref_child_col,
             ref_parent_col,
-            how="left",
             strategy=ref_strategy,
             salts=ref_salts,
             salt_on=F.col(unique_key),
         )
-        ok = f"`{ref_child_col}` IS NULL OR _known IS NOT NULL"
     else:
         flagged, ok = keyed, "true"
-
-    cube = flagged.groupBy(
-        "window_start",
-        "partition_key",
-        F.expr("length(text) AS _len"),
-        "lang",
-        F.expr(f"{ok} AS _ok"),
-    ).agg(F.expr("count(1) AS _n"), *(extra_cube_aggs or []))
-
     return FusedScans(
-        cube=cube,
-        profile=url_profile(keyed, unique_key, n_salts=n_salts),
-        has_ref=ref_dim is not None,
+        cube=counts_cube(
+            flagged, ok, ("length(text) AS _len", "lang"), extra_cube_aggs
+        ),
+        profile=url_profile(keyed, unique_key),
     )
 
 
@@ -199,11 +261,12 @@ def partition_rollup(
 ) -> DataFrame:
     """Per-partition counters for the cheap verdicts in ONE aggregation:
     ``(partition_key, rows_scanned, null_ts, dangling)``, the sums of the
-    cube's per-assert counters (``_assert_*``), and the sums of every
-    counter column of the ``extra`` frames (``partition_key`` plus
-    counters, e.g. duplicate rows per partition) — 0 where a partition
-    has none. The frames are unioned and grouped once, not joined, so a
-    NULL ``partition_key`` keeps every one of its counts.
+    cube's counters after ``_n`` (e.g. per-assert ``_assert_*``), and the
+    sums of every counter column of the ``extra`` frames
+    (``partition_key`` plus counters, e.g. duplicate rows per partition)
+    — 0 where a partition has none. The frames are unioned and grouped
+    once, not joined, so a NULL ``partition_key`` keeps every one of its
+    counts.
 
     The result has at least one row: an EMPTY input has no partitions,
     yet must fail min-row-count (reference contract, invoker.py:43-44 →
@@ -212,13 +275,14 @@ def partition_rollup(
     row rides the union; partitioned, the grouped rows are gathered into
     one array (one row per partition) and the zero row replaces an empty
     array."""
-    asserts = [c for c in cube.columns if c.startswith("_assert_")]
+    cols = cube.columns
+    counted = cols[cols.index("_n") + 1 :]
     base = cube.selectExpr(
         "partition_key",
         "_n AS rows_scanned",
         "CASE WHEN window_start IS NULL THEN _n ELSE 0 END AS null_ts",
         "CASE WHEN _ok THEN 0 ELSE _n END AS dangling",
-        *asserts,
+        *counted,
     )
     frames = [base, *extra]
     if not partitioned:
@@ -248,6 +312,53 @@ def partition_rollup(
     )
 
 
+def rollup_verdicts(
+    roll: DataFrame, checks: list[tuple[str, str, str, str]]
+) -> DataFrame:
+    """Every rollup-derived verdict as ONE projection of the
+    :func:`partition_rollup` frame: an ``inline(array(<struct per check>))``
+    generator, so the verdicts plan has one branch and one rollup shuffle
+    however many checks run. Catalyst optimization and codegen are paid
+    per fresh plan (every run builds new scans), so plan size is real
+    per-run time. Each check is ``(check_name, failed, message,
+    violations)``, the last three SQL over the rollup's columns; the rows
+    have the verdict frame's columns in its order. The structs are SQL
+    text: the JVM parses each in one call, where a Column chain costs a
+    py4j round trip per method."""
+    structs = [
+        f"named_struct('check_name', {sql_string(name)}, "
+        "'partition_key', partition_key, "
+        f"'passed', NOT ({failed}), "
+        f"'error_message', CASE WHEN {failed} "
+        f"THEN {sql_string(message)} END, "
+        f"'violation_count', CAST({viol} AS BIGINT), "
+        "'rows_scanned', rows_scanned)"
+        for name, failed, message, viol in checks
+    ]
+    return roll.selectExpr(f"inline(array({', '.join(structs)}))")
+
+
+def count_check(
+    name: str, counter: str, message: str
+) -> tuple[str, str, str, str]:
+    """A :func:`rollup_verdicts` check that fails when the rollup column
+    ``counter`` is positive and reports it as the violation count."""
+    return name, f"{counter} > 0", message, counter
+
+
+def min_rows_check(min_points: int) -> tuple[str, str, str, str]:
+    """The min-row-count :func:`rollup_verdicts` check: a partition with
+    fewer than ``min_points`` rows fails, its row count the violation
+    count (invoker.py:43-44)."""
+    short = f"rows_scanned < {int(min_points)}"
+    return (
+        "min_row_count",
+        short,
+        E.NOT_ENOUGH_POINTS.format(min_points),
+        f"CASE WHEN {short} THEN rows_scanned ELSE 0 END",
+    )
+
+
 def profile_key_col(col: str) -> Column:
     """The profile's shuffle key: 16-byte md5 of the key value.
 
@@ -263,9 +374,7 @@ def profile_key_col(col: str) -> Column:
     return F.expr(f"unhex(md5(encode(CAST(`{col}` AS STRING), 'UTF-8')))")
 
 
-def url_profile(
-    keyed: DataFrame, key_col: str, n_salts: int = 64, hash_key: bool = True
-) -> DataFrame:
+def url_profile(keyed: DataFrame, key_col: str) -> DataFrame:
     """Two-phase salted key profile → ``(partition_key, window_start, key,
     cnt, _key_cnt)`` with one row per distinct key per window per
     partition; ``_key_cnt`` is the key's count over the whole input.
@@ -278,17 +387,15 @@ def url_profile(
     yields ``_key_cnt`` run on that one shuffle, and the cached profile
     keeps the key partitioning.
 
-    With ``hash_key`` (the scale default) the profile carries
-    :func:`profile_key_col` digests; consumers that join back to the
-    input must hash their side the same way.
+    ``key`` is the :func:`profile_key_col` digest of the key column;
+    consumers that join back to the input hash their side the same way.
     """
-    key = profile_key_col(key_col) if hash_key else F.col(key_col)
     phase1 = (
         keyed.select(
             "partition_key",
             "window_start",
-            key.alias("key"),
-            F.expr(f"pmod(monotonically_increasing_id(), {n_salts}) AS _salt"),
+            profile_key_col(key_col).alias("key"),
+            F.expr(f"pmod(monotonically_increasing_id(), {N_SALTS}) AS _salt"),
         )
         .groupBy("partition_key", "window_start", "key", "_salt")
         .agg(F.expr("count(1) AS _partial"))
@@ -304,11 +411,11 @@ def url_profile(
 def dup_rows(profile: DataFrame) -> DataFrame:
     """Profile rows of the keys that occur more than once in the whole
     input (NULL keys never match a key, so never count): summing ``cnt``
-    per partition gives the uniqueness verdict's violation count, and the
-    ``key`` column holds the duplicate-key set (a key once per window and
-    partition it occurs in), as ``operators.uniqueness.
-    duplicate_key_counts`` defines it. A filter of the cached profile —
-    no shuffle."""
+    per partition gives the uniqueness verdict's violation count
+    (:func:`dup_counts`), and the ``key`` column holds the duplicate-key
+    set (a key once per window and partition it occurs in), which
+    :func:`is_dup_key` probes for the violation rows. A filter of the
+    cached profile — no shuffle."""
     return profile.filter("key IS NOT NULL AND _key_cnt > 1")
 
 

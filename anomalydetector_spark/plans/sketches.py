@@ -271,9 +271,10 @@ def window_theta_sketches(
     partition_by: str | None = None,
 ) -> DataFrame:
     """One theta sketch of ``key_col`` per (partition, window) —
-    ``(partition_key, window_start, sketch, rows_scanned)``. Feeds
-    :func:`new_key_rate_series`; at 10^12 docs the shuffle carries one
-    ~4 KB sketch per window per partition."""
+    ``(partition_key, window_start, sketch, rows_scanned)``; the keys new
+    in a window are the ``theta_difference`` of its sketch and the
+    previous window's. At 10^12 docs the shuffle carries one ~4 KB sketch
+    per window per partition."""
     from anomalydetector_spark.plans.fused import window_start_col
 
     part = (
@@ -288,29 +289,4 @@ def window_theta_sketches(
             F.theta_sketch_agg(key_col).alias("sketch"),
             F.count(F.lit(1)).alias("rows_scanned"),
         )
-    )
-
-
-def new_key_rate_series(window_sketches: DataFrame) -> DataFrame:
-    """Crawl-churn drift series: per window, the fraction of its distinct
-    keys NOT seen in the chronologically previous window —
-    ``estimate(cur − prev) / estimate(cur)``. Output is the engine's long
-    stat-series shape ``(partition_key, stat_name='new_url_rate',
-    window_start, value)``, ready to union into the drift stats and be
-    SR-scored. The first window of each partition has no predecessor and
-    is omitted (SR needs no seed value; the series just starts one window
-    later). All set algebra runs on the tiny per-window sketch table."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("partition_key").orderBy("window_start")
-    lagged = window_sketches.withColumn("_prev", F.lag("sketch").over(w)).filter(
-        F.col("_prev").isNotNull()
-    )
-    cur = F.theta_sketch_estimate("sketch")
-    new = F.theta_sketch_estimate(F.theta_difference("sketch", "_prev"))
-    return lagged.select(
-        "partition_key",
-        F.lit("new_url_rate").alias("stat_name"),
-        "window_start",
-        F.when(cur > 0, new / cur).otherwise(F.lit(0.0)).alias("value"),
     )

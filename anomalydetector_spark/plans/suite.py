@@ -5,19 +5,16 @@ checks with whole-job raises (aml_component/invoker.py:43-82). Here a
 suite is DATA: a list of :class:`CheckSpec`, compiled onto the minimal
 set of scans:
 
-* count-shaped specs (``min_rows``, ``not_null``, ``referential``) ride
-  the shared counts-cube rollup (plans/fused.py) — one scan total no
-  matter how many of them the suite contains;
-* ``unique`` rides the salted url-profile scan;
+* count-shaped specs (``min_rows``, ``not_null_ts``, ``referential``,
+  ``unique``) compile through the same planner as
+  ``engine.run_validation`` (plans/fused.py): each spec's counter rides
+  one counts cube (every dimension flag on one keyed frame) or, for
+  ``unique``, a salted key profile; one per-partition rollup gathers
+  them, and one ``inline(array(struct))`` projection of it
+  (:func:`fused.rollup_verdicts`) yields every one of their verdicts;
 * value-shaped specs (``finite``, ``bounds``, ``float_castable``,
-  ``ascending``) compile to the single-aggregation programs in
+  ``ascending``, …) compile to the single-aggregation programs in
   operators/checks.py — one scan each, still never a collect.
-
-``engine.run_validation`` does not go through this compiler. It reads the
-same fused scans (plans/fused.py), but builds its own verdicts for the
-fixed pages-table checks as one ``inline(array(struct))`` projection over
-the cube rollup, and its violation rows from one tagged scan.
-:func:`run_suite` is the general surface for arbitrary tables.
 """
 
 from __future__ import annotations
@@ -33,7 +30,8 @@ from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors as E
 from anomalydetector_spark.plans import fused
 
-CUBE_KINDS = {"min_rows", "not_null_ts", "referential"}
+# the kinds compiled onto the shared cube, key profiles and rollup
+ROLLUP_KINDS = {"min_rows", "not_null_ts", "referential", "unique"}
 
 
 @dataclass(frozen=True)
@@ -188,147 +186,31 @@ def run_suite(
     df: DataFrame,
     specs: list[CheckSpec],
     partition_by: str | None = None,
-    window_duration: str = "1 day",
     persist_scans: bool = True,
 ) -> SuiteResult:
     """Compile and lazily build the suite's verdict + violation frames.
 
-    The cube/profile scans are built at most once regardless of how many
-    specs route onto them; value-shaped specs fall back to per-check
-    single-aggregation programs.
+    The count-shaped specs share one cube and one rollup however many of
+    them the suite holds, plus one key profile per ``unique`` spec;
+    value-shaped specs fall back to per-check single-aggregation
+    programs. ``persist_scans`` caches the cube and the profiles (worth
+    it when the verdicts and the violations are both read).
     """
     verdicts: list[DataFrame] = []
     violations: list[DataFrame] = []
     cached: list[DataFrame] = []
 
-    cube_specs = [s for s in specs if s.kind in CUBE_KINDS]
-    uniq_specs = [s for s in specs if s.kind == "unique"]
-
-    ref = next((s for s in cube_specs if s.kind == "referential"), None)
-    ts_spec = next((s for s in cube_specs if s.kind == "not_null_ts"), None)
-
-    if cube_specs or uniq_specs:
-        ts_col = ts_spec.column if ts_spec else None
-        keyed = df.withColumns(
-            {
-                "partition_key": F.lit("global")
-                if partition_by is None
-                else F.col(partition_by).cast("string"),
-                "window_start": fused.window_start_col(
-                    df, ts_col, window_duration
-                )
-                if ts_col
-                else F.lit(None).cast("timestamp"),
-            }
+    rolled = [s for s in specs if s.kind in ROLLUP_KINDS]
+    if rolled:
+        checks, rows, cached = _compile_rollup(
+            df, rolled, partition_by, persist_scans
         )
-        key_col = uniq_specs[0].column if uniq_specs else None
-
-        if ref is not None:
-            from anomalydetector_spark.operators.referential import dim_join
-
-            flagged = dim_join(
-                keyed,
-                ref.dim,
-                ref.column,
-                ref.dim_column,
-                how="left",
-                strategy=ref.strategy,
-                salts=ref.salts,
-                salt_on=F.col(key_col) if key_col else None,
-            ).withColumn(
-                "_ok",
-                F.col(ref.column).isNull() | F.col("_known").isNotNull(),
-            )
-        else:
-            flagged = keyed.withColumn("_ok", F.lit(True))
-
-        cube = flagged.groupBy("window_start", "partition_key", "_ok").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        if persist_scans:
-            cube = cube.persist()
-            cached.append(cube)
-        profiles = []
-        for s in uniq_specs:
-            profile = fused.url_profile(keyed, s.column)
-            if persist_scans:
-                profile = profile.persist()
-                cached.append(profile)
-            profiles.append(profile)
-        # one rollup: the cube's counters + each unique spec's duplicate
-        # rows per partition (_dup_<i>)
-        roll = fused.partition_rollup(
-            cube,
-            [fused.dup_counts(p, f"_dup_{i}") for i, p in enumerate(profiles)],
-            partitioned=partition_by is not None,
-        )
-
-        for s in cube_specs:
-            if s.kind == "min_rows":
-                verdicts.append(
-                    roll.select(
-                        F.lit("min_row_count").alias("check_name"),
-                        "partition_key",
-                        (F.col("rows_scanned") >= s.min_points).alias("passed"),
-                        F.when(
-                            F.col("rows_scanned") < s.min_points,
-                            F.lit(E.NOT_ENOUGH_POINTS.format(s.min_points)),
-                        ).alias("error_message"),
-                        F.when(
-                            F.col("rows_scanned") < s.min_points,
-                            F.col("rows_scanned"),
-                        ).otherwise(F.lit(0)).alias("violation_count"),
-                        "rows_scanned",
-                    )
-                )
-            elif s.kind == "not_null_ts":
-                verdicts.append(
-                    C._verdict_from_violation_count(
-                        roll.withColumn("violation_count", F.col("null_ts")),
-                        f"not_null_{s.column}",
-                        E.INVALID_TIMESTAMPS,
-                    )
-                )
-                violations.append(
-                    keyed.filter(F.col(s.column).isNull()).select(
-                        F.lit(f"not_null_{s.column}").alias("check_name"),
-                        "partition_key",
-                    )
-                )
-            elif s.kind == "referential":
-                verdicts.append(
-                    C._verdict_from_violation_count(
-                        roll.withColumn("violation_count", F.col("dangling")),
-                        f"ref_{s.column}",
-                        E.DANGLING_REFERENCE.format(s.column, s.dim_column),
-                    )
-                )
-                violations.append(
-                    flagged.filter(~F.col("_ok")).select(
-                        F.lit(f"ref_{s.column}").alias("check_name"),
-                        "partition_key",
-                        s.column,
-                    )
-                )
-
-        for i, (s, profile) in enumerate(zip(uniq_specs, profiles)):
-            name = f"unique_{s.column}"
-            verdicts.append(
-                C._verdict_from_violation_count(
-                    roll.withColumn("violation_count", F.col(f"_dup_{i}")),
-                    name,
-                    E.DUPLICATE_KEY.format(s.column),
-                )
-            )
-            violations.append(
-                keyed.filter(fused.is_dup_key(s.column, profile)).select(
-                    F.lit(name).alias("check_name"), "partition_key", s.column
-                )
-            )
+        verdicts.append(checks)
+        violations += rows
 
     # value-shaped / metadata specs — per-check programs
     for s in specs:
-        if s.kind in CUBE_KINDS or s.kind == "unique":
+        if s.kind in ROLLUP_KINDS:
             continue
         if s.kind == "column_presence":
             r = C.check_column_presence(df, list(s.required))
@@ -382,6 +264,92 @@ def run_suite(
             violations.append(r.violations)
 
     return SuiteResult(_union(verdicts), _union(violations), cached)
+
+
+def _compile_rollup(
+    df: DataFrame,
+    specs: list[CheckSpec],
+    partition_by: str | None,
+    persist_scans: bool,
+) -> tuple[DataFrame, list[DataFrame], list[DataFrame]]:
+    """``(verdicts, violation frames, cached frames)`` of the count-shaped
+    specs. Each spec gets its own counter: ``_v<i>``, a cube aggregate
+    for ``not_null_ts`` and ``referential`` (one dimension flag per
+    referential spec on the one flagged frame), a profile contribution
+    for ``unique``; ``min_rows`` reads ``rows_scanned``. A table has no
+    stat series here, so the keyed frame has no windows."""
+    keyed = fused.keyed_input(df, None, partition_by)
+    # the salted referential rung salts on a unique key when the suite
+    # has one (deterministic under task retry)
+    salt_on = next((s.column for s in specs if s.kind == "unique"), None)
+    flagged = keyed
+    aggs: list[Column] = []
+    contributions: list[DataFrame] = []
+    checks: list[tuple[str, str, str, str]] = []
+    violations: list[DataFrame] = []
+    cached: list[DataFrame] = []
+    # cube-counted specs first: the unioned violation frame's columns come
+    # in order of first appearance
+    for i, s in enumerate(sorted(specs, key=lambda s: s.kind == "unique")):
+        counter = f"_v{i}"
+        if s.kind == "min_rows":
+            checks.append(fused.min_rows_check(s.min_points))
+            continue
+        if s.kind == "not_null_ts":
+            name, message = f"not_null_{s.column}", E.INVALID_TIMESTAMPS
+            bad = f"{fused.epoch_seconds_sql(df, s.column)} IS NULL"
+            aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
+            violations.append(
+                keyed.filter(bad).selectExpr(
+                    f"{C.sql_string(name)} AS check_name", "partition_key"
+                )
+            )
+        elif s.kind == "referential":
+            name = f"ref_{s.column}"
+            message = E.DANGLING_REFERENCE.format(s.column, s.dim_column)
+            flagged, ok = fused.ref_flag(
+                flagged,
+                s.dim,
+                s.column,
+                s.dim_column,
+                strategy=s.strategy,
+                salts=s.salts,
+                salt_on=salt_on,
+                known=f"_known{i}",
+            )
+            aggs.append(F.expr(f"count_if(NOT ({ok})) AS {counter}"))
+            violations.append(
+                flagged.filter(f"NOT ({ok})").selectExpr(
+                    f"{C.sql_string(name)} AS check_name",
+                    "partition_key",
+                    f"`{s.column}`",
+                )
+            )
+        else:  # unique
+            name = f"unique_{s.column}"
+            message = E.DUPLICATE_KEY.format(s.column)
+            profile = fused.url_profile(keyed, s.column)
+            if persist_scans:
+                profile = profile.persist()
+                cached.append(profile)
+            contributions.append(fused.dup_counts(profile, counter))
+            violations.append(
+                keyed.filter(fused.is_dup_key(s.column, profile)).selectExpr(
+                    f"{C.sql_string(name)} AS check_name",
+                    "partition_key",
+                    f"`{s.column}`",
+                )
+            )
+        checks.append(fused.count_check(name, counter, message))
+
+    cube = fused.counts_cube(flagged, aggs=aggs)
+    if persist_scans:
+        cube = cube.persist()
+        cached.append(cube)
+    roll = fused.partition_rollup(
+        cube, contributions, partitioned=partition_by is not None
+    )
+    return fused.rollup_verdicts(roll, checks), violations, cached
 
 
 def specs_from_json(

@@ -8,11 +8,8 @@ import pytest
 
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors
-from anomalydetector_spark.operators.referential import (
-    REF_STRATEGIES,
-    check_referential,
-)
-from anomalydetector_spark.operators.uniqueness import check_unique_key
+from anomalydetector_spark.operators.referential import REF_STRATEGIES
+from anomalydetector_spark.plans import suite as S
 
 
 def _one(df):
@@ -37,7 +34,9 @@ def test_min_rows_per_partition(spark):
     )
     res = {
         r.partition_key: r
-        for r in C.check_min_rows(df, "k").verdicts.collect()
+        for r in S.run_suite(
+            df, [S.min_rows()], partition_by="k", persist_scans=False
+        ).verdicts.collect()
     }
     assert res["a"].passed
     assert not res["b"].passed
@@ -118,7 +117,7 @@ def test_unique_key_check(spark):
         [("a", "u1"), ("a", "u1"), ("a", "u2"), ("b", "u3")],
         "k string, url string",
     )
-    res = check_unique_key(df, "url", "k")
+    res = S.run_suite(df, [S.unique("url")], partition_by="k")
     v = {r.partition_key: r for r in res.verdicts.collect()}
     assert not v["a"].passed and v["a"].violation_count == 2  # both dup rows
     assert v["a"].error_message == errors.DUPLICATE_KEY.format("url")
@@ -132,7 +131,9 @@ def test_referential_check(spark):
         "k string, domain string",
     )
     parent = spark.createDataFrame([("d1",), ("d2",)], "domain string")
-    res = check_referential(child, "domain", parent, "domain", "k")
+    res = S.run_suite(
+        child, [S.referential("domain", parent)], partition_by="k"
+    )
     r = _one(res.verdicts)
     assert not r.passed and r.violation_count == 1  # null is not a violation
     viol = res.violations.collect()
@@ -195,11 +196,11 @@ def test_functional_dependency_composite(spark):
 
 
 def test_referential_strategy_ladder(spark):
-    """All four dim-join rungs (broadcast / auto / shuffle /
-    shuffle_salted) return identical verdicts and violation row sets —
-    the salted rung replicates the dim once per salt, so match/no-match
-    per fact row is provably unchanged — and each rung's physical plan is
-    the one asked for."""
+    """All five dim-join rungs (broadcast / auto / shuffle /
+    shuffle_salted / shuffle_bloom) return identical suite verdicts and
+    violation row sets — the salted rung replicates the dim once per
+    salt, so match/no-match per fact row is provably unchanged — and each
+    rung's physical plan is the one asked for."""
     import pyspark.sql.functions as F2
 
     n, hot = 20_000, 10_000  # one domain owns 50% of rows (north-rule skew)
@@ -220,9 +221,10 @@ def test_referential_strategy_ladder(spark):
     for strategy in (
         "broadcast", "auto", "shuffle", "shuffle_salted", "shuffle_bloom"
     ):
-        res = check_referential(
-            child, "domain", parent, "domain",
-            strategy=strategy, salts=8, salt_on="k",
+        res = S.run_suite(
+            child,
+            [S.referential("domain", parent, strategy=strategy, salts=8)],
+            persist_scans=False,
         )
         v = _one(res.verdicts)
         viol = sorted(r.domain for r in res.violations.collect())
@@ -242,40 +244,15 @@ def test_referential_strategy_ladder(spark):
     assert base[1] > 0 and all(d == "dangling.example.com" for d in base[3])
 
     with pytest.raises(ValueError, match="strategy"):
-        check_referential(child, "domain", parent, "domain", strategy="bogus")
-
-
-def test_bloom_rung_all_join_types_exact(spark):
-    """shuffle_bloom is exact for anti/semi/left (no false negatives by
-    construction: every dim-key bit is set), including NULL fact keys
-    and a dim larger than the probe's hit set."""
-    import pyspark.sql.functions as F2
-
-    from anomalydetector_spark.operators.referential import dim_join
-
-    fact = spark.range(5000).select(
-        F2.when(F2.col("id") % 13 == 0, None)
-        .otherwise(F2.col("id") % 700)
-        .alias("k"),
-        F2.col("id").alias("rid"),
-    )
-    dim = spark.range(500).select(F2.col("id").alias("k"))
-    for how in ("left_anti", "left_semi", "left"):
-        a = dim_join(fact, dim, "k", how=how, strategy="broadcast")
-        b = dim_join(fact, dim, "k", how=how, strategy="shuffle_bloom")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    with pytest.raises(ValueError, match="shuffle_bloom"):
-        dim_join(fact, dim, "k", how="inner", strategy="shuffle_bloom")
+        S.run_suite(child, [S.referential("domain", parent, strategy="bogus")])
 
 
 @pytest.mark.parametrize("strategy", REF_STRATEGIES)
 def test_dim_join_rungs_match_membership(spark, strategy):
     """Every rung of the ladder gives the rows plain key membership
     defines, for a dimension that repeats keys and holds a NULL key and
-    for NULL fact keys: ``left`` keeps each fact row once with ``_known``
-    True/NULL, ``left_semi`` keeps the members, ``left_anti`` the rest
-    (NULL fact keys included)."""
+    for NULL fact keys: each fact row once, with ``_known`` True for the
+    members and NULL for the rest (NULL fact keys included)."""
     from anomalydetector_spark.operators.referential import dim_join
 
     fact = spark.range(3000).select(
@@ -291,18 +268,10 @@ def test_dim_join_rungs_match_membership(spark, strategy):
     members = set(range(300))
     rows = [(r, None if r % 11 == 0 else r % 400) for r in range(3000)]
 
-    left = dim_join(fact, dim, "k", how="left", strategy=strategy, salts=4)
+    left = dim_join(fact, dim, "k", strategy=strategy, salts=4)
     assert sorted(
         (r.rid, r.k, r._known) for r in left.select("rid", "k", "_known").collect()
     ) == sorted((r, k, True if k in members else None) for r, k in rows)
-    semi = dim_join(fact, dim, "k", how="left_semi", strategy=strategy, salts=4)
-    assert sorted((r.rid, r.k) for r in semi.collect()) == sorted(
-        (r, k) for r, k in rows if k in members
-    )
-    anti = dim_join(fact, dim, "k", how="left_anti", strategy=strategy, salts=4)
-    assert sorted((r.rid, r.k) for r in anti.collect()) == sorted(
-        (r, k) for r, k in rows if k not in members
-    )
 
 
 def test_engine_ref_strategy_parity(spark):
@@ -338,10 +307,7 @@ def test_uniqueness_under_extreme_hot_key(spark):
     its rows over n_salts phase-1 groups, and the re-aggregated count is
     exact."""
     import pyspark.sql.functions as F
-    from anomalydetector_spark.operators.uniqueness import (
-        check_unique_key,
-        duplicate_key_counts,
-    )
+    from anomalydetector_spark.operators.uniqueness import duplicate_key_counts
 
     n, hot = 50_000, 15_000
     df = spark.range(n).select(
@@ -352,7 +318,7 @@ def test_uniqueness_under_extreme_hot_key(spark):
     dups = {r.key: r.cnt for r in duplicate_key_counts(df, "url").collect()}
     assert dups == {"https://hot.example.com/only": hot}
 
-    res = check_unique_key(df, "url")
+    res = S.run_suite(df, [S.unique("url")], persist_scans=False)
     v = res.verdicts.collect()[0]
     assert not v.passed and v.violation_count == hot and v.rows_scanned == n
 

@@ -151,42 +151,6 @@ def test_theta_snapshot_churn(spark, tmp_path):
     assert abs(churn.dropped - 500) < 20
 
 
-def test_new_key_rate_series(spark):
-    """new_url_rate == exact (cur − prev)/cur distinct fractions, and a
-    churn burst is visible in the series the drift engine consumes."""
-    import datetime
-
-    base = datetime.datetime(2025, 3, 1)
-    rows = []
-    # windows 0-5: urls 0..99 repeat (rate 0); window 6: all-new urls
-    for w in range(7):
-        ids = range(1000, 1100) if w == 6 else range(100)
-        for i in ids:
-            rows.append((f"https://x.org/{i}", base + datetime.timedelta(days=w)))
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp")
-
-    wsk = S.window_theta_sketches(df, window_duration="1 day")
-    series = (
-        S.new_key_rate_series(wsk).toPandas().sort_values("window_start")
-    )
-    assert len(series) == 6  # first window has no predecessor
-    assert (series["stat_name"] == "new_url_rate").all()
-    vals = series["value"].to_numpy()
-    # theta sketches are exact at this cardinality
-    np.testing.assert_allclose(vals[:-1], 0.0, atol=1e-9)
-    np.testing.assert_allclose(vals[-1], 1.0, atol=1e-9)
-
-    # the series shape plugs straight into the drift scorer
-    from anomalydetector_spark.drift import score_drift
-    from anomalydetector_spark.kernel.sr import SrParams
-
-    scored = score_drift(spark.createDataFrame(series), SrParams()).toPandas()
-    # 6 windows < MIN_POINTS → rows pass through UNscored (null score),
-    # per the drift layer's NotEnoughPoints contract
-    assert len(scored) == 6
-    assert scored["score"].isna().all()
-
-
 def test_resume_dedupes_duplicate_rows_and_skips_when_done(spark, tmp_path):
     """ADVICE round-1: a run that failed between write and read leaves a
     second sketch row per partition — resume must return the latest row

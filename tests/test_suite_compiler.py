@@ -103,8 +103,13 @@ def test_suite_null_partition_counts_its_duplicates(spark):
         [("u1", "a"), ("u2", "a"), ("d", None), ("d", None), ("e", None)],
         "url string, domain string",
     )
+    # "e" is the one url the dimension lacks: a dangling row in the NULL
+    # partition
+    urls = spark.createDataFrame([("u1",), ("u2",), ("d",)], "url string")
     res = S.run_suite(
-        df, [S.min_rows(1), S.unique("url")], partition_by="domain",
+        df,
+        [S.min_rows(1), S.unique("url"), S.referential("url", urls)],
+        partition_by="domain",
         persist_scans=False,
     )
     v = {(r.partition_key, r.check_name): r for r in res.verdicts.collect()}
@@ -112,3 +117,88 @@ def test_suite_null_partition_counts_its_duplicates(spark):
     assert not v[(None, "unique_url")].passed
     assert v[("a", "unique_url")].violation_count == 0
     assert v[(None, "min_row_count")].rows_scanned == 3
+    assert v[(None, "ref_url")].violation_count == 1
+    assert not v[(None, "ref_url")].passed
+    assert v[("a", "ref_url")].violation_count == 0
+    dangling = res.violations.filter("check_name = 'ref_url'").collect()
+    assert [(r.partition_key, r.url) for r in dangling] == [(None, "e")]
+
+
+def test_suite_gives_each_spec_its_own_counter(spark):
+    """Two referential specs and two not-null-timestamp specs on
+    different columns: each verdict counts its own column's violations
+    and lists its own rows. An unparseable string timestamp counts as
+    null in the verdict and in the violation rows alike."""
+    df = spark.createDataFrame(
+        [
+            ("a.com", "en", "2024-01-01 00:00:00", None),
+            ("a.com", "xx", "2024-01-01 00:00:00", "2024-01-02 00:00:00"),
+            ("zz.com", "en", None, "2024-01-02 00:00:00"),
+            ("a.com", "yy", "2024-01-01 00:00:00", "not a time"),
+        ],
+        "domain string, lang string, ts1 string, ts2 string",
+    ).withColumn("ts1", F.col("ts1").cast("timestamp"))
+    doms = spark.createDataFrame([("a.com",)], "domain string")
+    langs = spark.createDataFrame([("en",), ("de",)], "lang string")
+    res = S.run_suite(
+        df,
+        [
+            S.referential("domain", doms),
+            S.referential("lang", langs),
+            S.not_null_ts("ts1"),
+            S.not_null_ts("ts2"),
+        ],
+        persist_scans=False,
+    )
+    v = {r.check_name: r for r in res.verdicts.collect()}
+    assert {n: v[n].violation_count for n in v} == {
+        "ref_domain": 1,
+        "ref_lang": 2,
+        "not_null_ts1": 1,
+        "not_null_ts2": 2,
+    }
+    assert all(not r.passed and r.rows_scanned == 4 for r in v.values())
+    rows = res.violations.collect()
+    assert sorted(r.lang for r in rows if r.check_name == "ref_lang") == [
+        "xx",
+        "yy",
+    ]
+    assert [r.domain for r in rows if r.check_name == "ref_domain"] == [
+        "zz.com"
+    ]
+    assert sum(r.check_name == "not_null_ts2" for r in rows) == 2
+
+
+def test_suite_verdicts_read_one_rollup(spark):
+    """The count-shaped specs compile like the engine's checks: above the
+    cached cube and key profile, the verdicts are one rollup aggregation
+    read through one generator, not a branch per spec."""
+    from anomalydetector_spark.plans.audit import plan_node_names
+
+    df = spark.createDataFrame(
+        [("u1", "a.com", "2024-01-01 00:00:00"), ("u1", "b.com", None)],
+        "url string, domain string, ts string",
+    )
+    doms = spark.createDataFrame([("a.com",)], "domain string")
+    res = S.run_suite(
+        df,
+        [
+            S.min_rows(1),
+            S.not_null_ts("ts"),
+            S.unique("url"),
+            S.referential("domain", doms),
+        ],
+    )
+    nodes = plan_node_names(res.verdicts, cached_inputs=False)
+    assert nodes.count("GenerateExec") == 1, nodes
+    # one aggregation: its partial and final halves
+    assert nodes.count("HashAggregateExec") == 2, nodes
+    assert nodes.count("InMemoryTableScanExec") == 2, nodes
+    v = {r.check_name: r.violation_count for r in res.verdicts.collect()}
+    assert v == {
+        "min_row_count": 0,
+        "not_null_ts": 1,
+        "unique_url": 2,
+        "ref_domain": 1,
+    }
+    res.unpersist()

@@ -3,7 +3,8 @@ assert the plan properties that matter at 100 TB:
 
 * the counts cube never reads ``html`` (ReadSchema pruning) and
   partial-aggregates map-side before its shuffle,
-* referential + duplicate-violation joins go broadcast,
+* referential + duplicate-violation joins go broadcast, and a check
+  suite's verdicts read one rollup through one generator,
 * filters on the scan are pushed (PushedFilters),
 * the drift tail is one grouped pandas pass (no Window / sort-merge
   join) and the verdict path runs no Python,
@@ -124,8 +125,7 @@ def main() -> None:
 
     from anomalydetector_spark.session import get_spark
     from anomalydetector_spark import datagen
-    from anomalydetector_spark.operators.referential import check_referential
-    from anomalydetector_spark.operators.uniqueness import check_unique_key
+    from anomalydetector_spark.plans import suite as S
 
     spark = get_spark("explain", cores=8)
 
@@ -138,13 +138,39 @@ def main() -> None:
     ok = True
 
     ref_plan = plan_of(
-        check_referential(pages, "domain", domains, "domain").violations
+        S.run_suite(
+            pages, [S.referential("domain", domains)], persist_scans=False
+        ).violations
     )
     ok &= check("referential violations use broadcast join",
                 "Broadcast" in ref_plan)
 
-    uniq_plan = plan_of(check_unique_key(pages, "url").violations)
+    uniq_plan = plan_of(
+        S.run_suite(pages, [S.unique("url")], persist_scans=False).violations
+    )
     ok &= check("duplicate-violation join is broadcast", "Broadcast" in uniq_plan)
+
+    # the suite compiles its count-shaped checks like the engine: every
+    # verdict reads one rollup aggregation through one generator
+    from anomalydetector_spark.plans.audit import plan_node_names
+
+    suite = S.run_suite(
+        pages,
+        [
+            S.min_rows(),
+            S.not_null_ts("warc_ts"),
+            S.unique("url"),
+            S.referential("domain", domains),
+        ],
+    )
+    suite_nodes = plan_node_names(suite.verdicts, cached_inputs=False)
+    ok &= check(
+        "suite verdicts: one rollup aggregation through one Generate",
+        suite_nodes.count("GenerateExec") == 1
+        and suite_nodes.count("HashAggregateExec") == 2,
+        ", ".join(suite_nodes),
+    )
+    suite.unpersist()
 
     # the fused engine path: cube + profile + one-scan violations
     from anomalydetector_spark.engine import ValidationConfig, run_validation
@@ -636,17 +662,16 @@ def main() -> None:
         and "xxhash64" in ss_plan,
     )
 
-    from anomalydetector_spark.operators.referential import check_referential
-
     ref_plan = plan_of(
-        check_referential(
+        S.run_suite(
             docs.select("doc_id", "lang"),
-            "lang",
-            docs.select("lang"),
-            "lang",
-            strategy="shuffle_salted",
-            salts=8,
-            salt_on="doc_id",
+            [
+                S.referential(
+                    "lang", docs.select("lang"), strategy="shuffle_salted",
+                    salts=8,
+                )
+            ],
+            persist_scans=False,
         ).violations
     )
     ok &= check(

@@ -100,10 +100,13 @@ def q_stats_cube_events(spark, sf_dir):
         F.col("event_type").alias("lang"),
     )
     keyed = fused.keyed_input(ev, "1 day", None)
-    scans = fused.build_fused_scans(keyed, unique_key="url")
     langs = ("click", "error", "purchase", "signup", "view")
     series = fused_drift(
-        scans.cube, scans.profile, "1 day", langs, shape_drift=False
+        fused.counts_cube(keyed, groups=fused.PAGES_GROUPS),
+        fused.url_profile(keyed, "url"),
+        "1 day",
+        langs,
+        shape_drift=False,
     )
     return series.select(
         "stat_name", "window_start", _r6(F.col("value")).alias("value")
@@ -246,9 +249,14 @@ def q_ascending_violations(spark, sf_dir):
 
 
 def q_value_bounds(spark, sf_dir):
-    """P8/P9 finite + range checks (invoker.py:76-80)."""
+    """P9 range check (invoker.py:79-80) as a suite ``bounds`` spec."""
     li = _t(spark, sf_dir, "lineitem")
-    r = C.check_value_bounds(li, "l_quantity", "l_returnflag", lower=0.0, upper=45.0)
+    r = S.run_suite(
+        li,
+        [S.bounds("l_quantity", 0.0, 45.0)],
+        partition_by="l_returnflag",
+        persist_scans=False,
+    )
     return r.verdicts.select(
         F.col("partition_key").alias("l_returnflag"),
         "violation_count",
@@ -2987,17 +2995,16 @@ def q_ks_drift(spark, sf_dir):
 
 
 def q_json_schema(spark, sf_dir):
-    """JSON payload validation (operators/checks.check_json_schema)
-    over events.props with deterministic in-query corruption (the
-    testdata payloads are all valid): event_id % 17 truncates the
+    """JSON payload validation (a suite ``json_schema`` spec,
+    operators/checks.json_schema_reason) over events.props with
+    deterministic in-query corruption (the testdata payloads are all
+    valid): event_id % 17 truncates the
     closing brace (malformed), % 23 swaps in a payload missing the
     required key, % 29 makes the key a non-numeric string (type
     violation). Verdicts per event_type; JVM-side try_parse_json /
     get_json_object / try_cast — zero Python. The DuckDB twin guards
     json_extract behind json_valid (DuckDB's extract THROWS on
     malformed JSON where Spark returns null)."""
-    from anomalydetector_spark.operators.checks import check_json_schema
-
     ev = _t(spark, sf_dir, "events").withColumn(
         "props2",
         F.when(
@@ -3008,8 +3015,11 @@ def q_json_schema(spark, sf_dir):
         .when(F.col("event_id") % 29 == 0, F.lit('{"k": "x"}'))
         .otherwise(F.col("props")),
     )
-    return check_json_schema(
-        ev, "props2", {"k": "bigint"}, partition_by="event_type"
+    return S.run_suite(
+        ev,
+        [S.json_schema("props2", {"k": "bigint"})],
+        partition_by="event_type",
+        persist_scans=False,
     ).verdicts
 
 
@@ -3102,23 +3112,20 @@ def q_json_profile(spark, sf_dir):
 
 
 def q_freshness(spark, sf_dir):
-    """Freshness/staleness verdicts (operators/checks.check_freshness —
-    dbt source-freshness shape) over events bucketed by user_id % 50:
+    """Freshness/staleness verdicts (a suite ``freshness`` spec — dbt
+    source-freshness shape) over events bucketed by user_id % 50:
     per-partition max(ts) must lag the EXPLICIT reference instant
     2024-01-31 00:00:00 by ≤ 3600s. Exact integer-microsecond lag
     floored to seconds; the explicit reference (never wall-clock now())
     is what makes verdicts retry-stable and SQL-twinnable."""
-    from anomalydetector_spark.operators.checks import check_freshness
-
     ev = _t(spark, sf_dir, "events").withColumn(
         "bucket", (F.col("user_id") % 50).cast("string")
     )
-    return check_freshness(
+    return S.run_suite(
         ev,
-        "ts",
-        max_lag_seconds=3600,
-        reference_ts="2024-01-31 00:00:00",
+        [S.freshness("ts", 3600, "2024-01-31 00:00:00")],
         partition_by="bucket",
+        persist_scans=False,
     ).verdicts
 
 
@@ -3823,16 +3830,15 @@ def q_pattern_profile(spark, sf_dir):
 
 
 def q_pattern_check(spark, sf_dir):
-    """Pattern compliance (operators/patterns.check_value_pattern):
-    every c_name must match the collapsed 'Aa+#9+' signature — the
-    enforce half of the discover → suggest → enforce loop."""
-    from anomalydetector_spark.operators.patterns import (
-        check_value_pattern,
-    )
-
+    """Pattern compliance (a suite ``pattern`` spec): every c_name must
+    match the collapsed 'Aa+#9+' signature — the enforce half of the
+    discover → suggest → enforce loop."""
     c = _t(spark, sf_dir, "customer")
-    return check_value_pattern(
-        c, "c_name", ["Aa+#9+"], partition_by="c_mktsegment"
+    return S.run_suite(
+        c,
+        [S.pattern("c_name", ["Aa+#9+"])],
+        partition_by="c_mktsegment",
+        persist_scans=False,
     ).verdicts
 
 

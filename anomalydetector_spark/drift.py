@@ -14,11 +14,11 @@ when requested), matching the reference's output frame
 (spectral_residual.py:78-105).
 
 The engine does not build the stat-series table in Catalyst first:
-:func:`fused_drift` cogroups the persisted counts cube with the url
-profile's per-window distinct-key counts and, in ONE pandas call per
-partition, derives every series (window-pair math shared with the
-streaming twins in ``kernel/window_drift``) and scores it with the same
-per-series scorer as :func:`score_drift`.
+:func:`fused_drift` groups the union of the persisted counts cube's
+slice and the url profile's per-window distinct-key counts and, in ONE
+pandas call per partition, derives every series (window-pair math
+shared with the streaming twins in ``kernel/window_drift``) and scores
+it with the same per-series scorer as :func:`score_drift`.
 """
 
 from __future__ import annotations
@@ -320,9 +320,10 @@ def fused_drift(
     """Derive every drift stat series from the fused scans and SR-score
     each one, in ONE grouped pandas pass per ``partition_key``.
 
-    The persisted counts cube (plans/fused.py) is cogrouped with the
-    per-window distinct-key counts of the url profile
-    (``fused.drift_inputs``); one worker call per partition derives
+    The persisted counts cube's slice (plans/fused.py) and the per-window
+    distinct-key counts of the url profile arrive as one union
+    (``fused.drift_inputs``) grouped by ``partition_key``, so each side
+    is shuffled once; one worker call per partition derives
 
     * ``doc_count``, ``null_rate``, ``lang_frac_<l>`` for each l in
       ``langs``, and the exact inverse-CDF ``len_p50`` / ``len_p95``,
@@ -349,27 +350,27 @@ def fused_drift(
     p = params or SrParams()
     langs = tuple(langs)
     duration_us = duration_seconds(window_duration) * 1_000_000
-    cube_slice, keys = drift_inputs(cube, profile, len_bins=shape_drift)
 
-    def derive_and_score(key, cube_pdf: pd.DataFrame, keys_pdf: pd.DataFrame):
-        # a partition reaches the cogroup only through a non-empty side,
-        # so there is always at least one series
+    def derive_and_score(key, pdf):
+        # a partition reaches the group only through at least one row, so
+        # there is always at least one series
+        is_keys = pdf["_keys"].notna()
         return _scored_frame(
             [
                 _score_series(key[0], name, w, v, p)
                 for name, w, v in _derive_series(
-                    cube_pdf, keys_pdf, langs, duration_us, shape_drift
+                    pdf[~is_keys], pdf[is_keys], langs, duration_us,
+                    shape_drift,
                 )
                 if len(w)
             ]
         )
 
     return (
-        cube_slice.groupBy("partition_key")
-        .cogroup(keys.groupBy("partition_key"))
+        drift_inputs(cube, profile, len_bins=shape_drift)
+        .groupBy("partition_key")
         .applyInPandas(
             derive_and_score,
             schema=DRIFT_MARGIN_SCHEMA if p.with_margin else DRIFT_SCHEMA,
         )
     )
-

@@ -6,18 +6,20 @@ sink), restructured for Spark:
 
 * the all-or-nothing ``raise`` becomes per-partition verdict rows,
 * the per-column Python loop becomes ONE grouped pandas drift pass per
-  partition (drift.fused_drift): the persisted cube, cogrouped with the
-  profile's per-window distinct-key counts, yields every stat series
-  (scalars, lang/length shape, distinct urls) and their SR scores in one
-  worker call — one group is one partition's cube slice, windows ×
+  partition (drift.fused_drift): the persisted cube's slice, unioned
+  with the profile's per-window distinct-key counts, yields every stat
+  series (scalars, lang/length shape, distinct urls) and their SR scores
+  in one worker call — one group is one partition's cube slice, windows ×
   distinct text lengths × langs rows: it grows with the number of
   distinct text lengths (31,521 rows for 50,000 pages over 48 windows in
   one partition), not with the row count alone,
-* the whole verdict suite is compiled onto TWO shared scans of the input
+* the whole verdict suite is a spec list compiled like any table's check
+  suite (plans/suite.compile_checks) onto TWO shared scans of the input
   (plans/fused.py): a counts cube and a salted url profile — every
-  verdict frame and every stat series is a rollup of one of them, so
-  adding a check never adds a scan; the verdict path itself is JVM-only
-  (no Python worker runs for any verdict action).
+  verdict and every stat series is a rollup of one of them, so adding a
+  check never adds a scan, and every violation row comes from one more
+  tagged scan; the verdict path itself is JVM-only (no Python worker
+  runs for any verdict action).
 
 The runner itself never calls ``.collect()`` on data-sized frames — only
 verdict/stat frames (bounded by partitions × checks) are ever gathered.
@@ -35,8 +37,8 @@ from pyspark.sql import functions as F
 from anomalydetector_spark.drift import drift_verdicts, fused_drift
 from anomalydetector_spark.kernel.sr import SrParams
 from anomalydetector_spark.operators import checks as C
-from anomalydetector_spark.operators import errors as E
 from anomalydetector_spark.plans import fused
+from anomalydetector_spark.plans import suite as S
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -99,14 +101,14 @@ class ValidationConfig:
     functional_deps: tuple = ()  # tuple[tuple[str, str], ...]
     # freshness gate on warc_ts: (max_lag_seconds, reference_ts). The
     # reference instant is EXPLICIT (ISO string) so verdicts stay
-    # retry-stable and oracle-able; None = check off. One extra
-    # (partition, max(ts)) aggregation pass over pruned columns.
+    # retry-stable and oracle-able; None = check off. The newest
+    # timestamp is one more counter on the cube scan.
     freshness: tuple | None = None  # (int, str)
     # JSON payload schema over a string column:
     # {"column": <name>, "keys": {<json_key>: <spark_type>, ...}}.
-    # The per-row reason predicate is pure codegen, so violations ride
-    # the SHARED one-scan extraction (and the quarantine split) like
-    # row asserts; the verdict costs one extra pruned aggregation.
+    # The per-row reason predicate is pure codegen, so it is a counter
+    # on the cube scan and its violations ride the SHARED one-scan
+    # extraction (and the quarantine split) like row asserts.
     json_schema: dict | None = None
     # CUSUM second opinion on every stat series: (k, h) in σ units
     # (operators/trend.series_cusum). SR is a SALIENCY detector — a
@@ -205,12 +207,9 @@ def run_validation(
 
     from anomalydetector_spark.operators import asserts as A
 
-    row_asserts = tuple(cfg.asserts)
-    agg_asserts = tuple(cfg.agg_asserts)
-    A._check_names_unique(row_asserts + agg_asserts)
-    fd_names = [
-        f"fd_{C.fd_label(d)}_{C.fd_label(p)}" for d, p in cfg.functional_deps
-    ]
+    A._check_names_unique(tuple(cfg.asserts) + tuple(cfg.agg_asserts))
+    fd_pairs = [tuple(pair) for pair in cfg.functional_deps]
+    fd_names = [S.check_name(pair) for pair in fd_pairs]
     if len(set(fd_names)) != len(fd_names):
         dupes = sorted({n for n in fd_names if fd_names.count(n) > 1})
         raise ValueError(
@@ -218,186 +217,73 @@ def run_validation(
             "(determinant, dependent) pair must be unique (a repeated "
             "pair would double-tag every violating row)"
         )
-
-    scans = fused.build_fused_scans(
-        keyed,
-        ref_dim=domains,
-        unique_key=cfg.unique_key,
-        extra_cube_aggs=A.row_assert_counts(row_asserts) or None,
-        ref_strategy=cfg.ref_strategy,
-        ref_salts=cfg.ref_salts,
-    )
-    cube = scans.cube.persist()
-    profile = scans.profile.persist()
-
-    # Every rollup-derived verdict (min-rows, not-null, uniqueness,
-    # referential, row asserts, functional dependencies) is ONE
-    # projection of ONE per-partition rollup (fused.rollup_verdicts). The
-    # rollup is one aggregation over the cube and the per-partition
-    # contributions of the other checks (duplicate-key rows of the cached
-    # profile, violating FD keys).
-    uniq_name = f"unique_{cfg.unique_key}"
-    contributions = [fused.dup_counts(profile, "_dup_rows")]
-    checks = [
-        fused.min_rows_check(cfg.min_points),
-        fused.count_check("not_null_warc_ts", "null_ts", E.INVALID_TIMESTAMPS),
-        fused.count_check(
-            uniq_name, "_dup_rows", E.DUPLICATE_KEY.format(cfg.unique_key)
-        ),
+    # The verdict set as a spec list, compiled like any table's check
+    # suite (plans/suite.compile_checks): every check's counter rides the
+    # cube or the url profile, ONE projection of ONE per-partition rollup
+    # yields every verdict, and every row-addressable check tags the rows
+    # it rejects on ONE violation scan. Tags and probe columns come in
+    # list order.
+    specs = [
+        S.min_rows(cfg.min_points),
+        S.not_null_ts("warc_ts"),
+        S.unique(cfg.unique_key),
+        *cfg.asserts,
     ]
-    for i, a in enumerate(row_asserts):
-        frac = float(a.max_violation_fraction)
-        budget = f"rows_scanned * CAST({frac!r} AS DOUBLE)"
-        checks.append(
-            (
-                f"assert_{a.name}",
-                f"_assert_{i} > {budget}",
-                A.ROW_ASSERT_FAILED.format(a.name, a.expr),
-                f"_assert_{i}",
+    if cfg.json_schema:
+        specs.append(
+            S.json_schema(
+                cfg.json_schema["column"], dict(cfg.json_schema["keys"])
             )
         )
+    if cfg.freshness:
+        max_lag, ref_ts = cfg.freshness
+        specs.append(S.freshness("warc_ts", int(max_lag), ref_ts))
+    specs += fd_pairs
     if domains is not None:
-        checks.append(
-            fused.count_check(
-                "ref_domain",
-                "dangling",
-                E.DANGLING_REFERENCE.format("domain", "domain"),
+        specs.append(
+            S.referential(
+                "domain", domains, strategy=cfg.ref_strategy,
+                salts=cfg.ref_salts,
             )
         )
-    # functional dependencies: ONE hash-aggregate scan per pair fills a
-    # persisted frame of the (rare) violating determinant keys; both the
-    # per-partition verdict (its rows counted in the shared rollup) and
-    # the row tags below reuse the cache — no second pass over the input
-    # per pair.
-    fd_bad: list[DataFrame] = []
-    for i, (det, dep) in enumerate(cfg.functional_deps):
-        fd = C.check_functional_dependency(
-            keyed, det, dep, partition_by=F.col("partition_key")
-        )
-        det_cols = C.fd_cols(det)
-        bad = fd.violations.select(
-            "partition_key",
-            *[
-                F.col(c).alias(f"_fd_k_{i}_{j}")
-                for j, c in enumerate(det_cols)
-            ],
-        ).persist()
-        fd_bad.append(bad)
-        contributions.append(
-            bad.selectExpr("partition_key", f"1 AS _fd_viol_{i}")
-        )
-        checks.append(
-            fused.count_check(
-                f"fd_{C.fd_label(det)}_{C.fd_label(dep)}",
-                f"_fd_viol_{i}",
-                E.FD_VIOLATION.format(C.fd_label(det), C.fd_label(dep)),
-            )
-        )
-    roll = fused.partition_rollup(
-        cube, contributions, partitioned=cfg.partition_by is not None
+    compiled = S.compile_checks(
+        keyed,
+        specs,
+        partitioned=cfg.partition_by is not None,
+        groups=fused.PAGES_GROUPS,
+        window_ts="warc_ts",
     )
-    rollup_verdicts = fused.rollup_verdicts(roll, checks)
+    cube = compiled.cube
+    profile = compiled.profiles[cfg.unique_key]
 
     verdict_frames = [
         C.check_column_presence(pages, PAGES_COLUMNS).verdicts,
-        rollup_verdicts,
+        compiled.verdicts,
     ]
     if cfg.expected_schema:
         verdict_frames.append(
             C.check_schema_types(pages, cfg.expected_schema).verdicts
         )
-    if cfg.freshness:
-        max_lag, ref_ts = cfg.freshness
-        verdict_frames.append(
-            C.check_freshness(
-                pages, "warc_ts", int(max_lag), reference_ts=ref_ts,
-                partition_by=cfg.partition_by,
-            ).verdicts
-        )
-    if cfg.json_schema:
-        verdict_frames.append(
-            C.check_json_schema(
-                pages,
-                cfg.json_schema["column"],
-                dict(cfg.json_schema["keys"]),
-                partition_by=cfg.partition_by,
-            ).verdicts
-        )
-    if agg_asserts:
+    if cfg.agg_asserts:
         # all agg-assert metrics share ONE extra aggregation pass
         verdict_frames.append(
             A.check_agg_asserts(
-                keyed, agg_asserts, partition_by=F.col("partition_key")
+                keyed, tuple(cfg.agg_asserts),
+                partition_by=F.col("partition_key"),
             ).verdicts
         )
 
     # violation ROWS must come from the input — extraction is inherent,
-    # but all row-addressable checks share ONE scan: probe the (small)
-    # broadcast duplicate-key and dimension sets, tag each row with every
-    # check it violates, explode. The DAG lives apart from the verdicts
-    # and is materialized only when the caller sinks violations.
-    tagged = keyed.withColumn(
-        "_is_dup", fused.is_dup_key(cfg.unique_key, profile)
-    )
-    tags = [
-        F.expr("CASE WHEN warc_ts IS NULL THEN 'not_null_warc_ts' END"),
-        F.expr(f"CASE WHEN _is_dup THEN {C.sql_string(uniq_name)} END"),
-        *A.row_assert_tags(row_asserts),
-    ]
-    if cfg.json_schema:
-        # pure-codegen per-row predicate — rides the shared scan free
-        tags.append(
-            F.when(
-                C.json_schema_reason(
-                    cfg.json_schema["column"], dict(cfg.json_schema["keys"])
-                ).isNotNull(),
-                F.lit(f"json_schema_{cfg.json_schema['column']}"),
-            )
-        )
-    for i, (det, dep) in enumerate(cfg.functional_deps):
-        # reuse the persisted violating-key frame from the verdict pass;
-        # the join is per (partition_key, determinant tuple) because a
-        # key may violate in one partition and not another (a NULL
-        # partition_key is a partition too, hence the null-safe match)
-        det_cols = C.fd_cols(det)
-        key_aliases = [f"_fd_k_{i}_{j}" for j in range(len(det_cols))]
-        bad = fd_bad[i].select(
-            F.col("partition_key").alias(f"_fd_pk_{i}"),
-            *key_aliases,
-            F.lit(True).alias(f"_fd_hit_{i}"),
-        )
-        cond = F.col("partition_key").eqNullSafe(F.col(f"_fd_pk_{i}"))
-        for c, a in zip(det_cols, key_aliases):
-            cond = cond & (F.col(c) == F.col(a))
-        tagged = tagged.join(F.broadcast(bad), cond, "left").drop(
-            f"_fd_pk_{i}", *key_aliases
-        )
-        tags.append(
-            F.when(
-                F.col(f"_fd_hit_{i}"),
-                F.lit(f"fd_{C.fd_label(det)}_{C.fd_label(dep)}"),
-            )
-        )
-    if domains is not None:
-        from anomalydetector_spark.operators.referential import dim_join
-
-        tagged = dim_join(
-            tagged,
-            domains,
-            "domain",
-            strategy=cfg.ref_strategy,
-            salts=cfg.ref_salts,
-            salt_on=F.col(cfg.unique_key),
-        )
-        tags.append(
-            F.expr(
-                "CASE WHEN domain IS NOT NULL AND _known IS NULL "
-                "THEN 'ref_domain' END"
-            )
-        )
-    hit = F.filter(F.array(*tags), lambda t: t.isNotNull())
+    # but all row-addressable checks share ONE scan: the tagged frame
+    # probes the (small) broadcast duplicate-key, violating-FD-key and
+    # dimension sets, every row is tagged with each check it violates,
+    # and the tags explode. The DAG lives apart from the verdicts and is
+    # materialized only when the caller sinks violations.
+    tagged, tags = compiled.tagged, compiled.tags
     violations = tagged.select(
-        F.explode(hit).alias("check_name"), "partition_key", cfg.unique_key
+        F.explode(compiled.hits()).alias("check_name"),
+        "partition_key",
+        cfg.unique_key,
     )
 
     def row_status() -> DataFrame:
@@ -565,5 +451,5 @@ def run_validation(
         ewma_scored=ewma_scored,
         lens_consensus=consensus,
         drift_attribution=attribution,
-        cached=[cube, profile, stat_series, scored, *fd_bad],
+        cached=[cube, profile, stat_series, scored, *compiled.cached[2:]],
     )

@@ -24,7 +24,7 @@ shapes cover that space:
 Scale contract (10^12 rows):
 
 * ALL row asserts of a suite ride the engine's existing fused counts-cube
-  scan (plans/fused.py) as extra ``sum(CASE...)`` aggregate columns —
+  scan as extra ``count_if`` counters (plans/suite.compile_checks) —
   adding a row assert never adds a scan, a shuffle, or cube rows.
 * ALL agg asserts of a suite share ONE additional aggregation pass
   (Deequ's analyzer-batching model): one ``groupBy(partition_key)``
@@ -74,9 +74,13 @@ class RowAssert:
                 f"{self.max_violation_fraction}"
             )
 
+    @property
+    def violation(self) -> str:
+        """SQL true iff the predicate is FALSE (SQL CHECK semantics)."""
+        return f"NOT coalesce(({self.expr}), true)"
+
     def violated(self) -> Column:
-        """True iff the predicate is FALSE (SQL CHECK semantics)."""
-        return ~F.coalesce(F.expr(self.expr), F.lit(True))
+        return F.expr(self.violation)
 
 
 @dataclass(frozen=True)
@@ -102,9 +106,8 @@ def _check_names_unique(asserts) -> None:
 
 
 def row_assert_counts(asserts: tuple[RowAssert, ...]) -> list[Column]:
-    """The fused-scan hooks: one ``sum(CASE WHEN violated)`` aggregate
-    column per assert, named ``_assert_{i}``. The engine appends these to
-    the counts-cube aggregation so row asserts ride the existing scan."""
+    """One ``sum(CASE WHEN violated)`` aggregate column per assert, named
+    ``_assert_{i}``: every assert's count in one aggregation."""
     return [
         F.sum(F.when(a.violated(), F.lit(1)).otherwise(F.lit(0))).alias(
             f"_assert_{i}"
@@ -139,8 +142,8 @@ def row_assert_verdicts(
 
 
 def row_assert_tags(asserts: tuple[RowAssert, ...]) -> list[Column]:
-    """Violation-row tag expressions for the engine's shared one-scan
-    extraction (engine.py): ``when(violated, 'assert_<name>')``."""
+    """Violation-row tag expressions for a one-scan extraction:
+    ``when(violated, 'assert_<name>')``."""
     return [
         F.when(a.violated(), F.lit(f"assert_{a.name}")) for a in asserts
     ]

@@ -12,10 +12,12 @@ Each check is a declarative DataFrame program that produces
 Design rules for 10^12-doc scale:
 * every check is a single aggregation or window pass over pruned columns
   (never reads ``html`` unless the check targets it),
-* the count-shaped verdicts (min rows, null timestamps, uniqueness,
-  referential integrity) are not here: they compile onto the shared
-  scans and one rollup (plans/fused.py), for the pages engine and for
-  the check suite (plans/suite.py) alike,
+* the count-shaped and row-predicate verdicts (min rows, nulls,
+  finiteness, bounds, float castability, patterns, JSON schema,
+  freshness, uniqueness, referential integrity) are not here: they
+  compile onto the shared scans, one rollup and one violation scan
+  (plans/suite.compile_checks), for the pages engine and for any
+  table's check suite alike,
 * violations are lazily-evaluated DataFrames — only materialized when the
   caller sinks them.
 """
@@ -27,11 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.kernel.sr import (
-    MIN_POINTS,
-    VALUE_LOWER_BOUND,
-    VALUE_UPPER_BOUND,
-)
+from anomalydetector_spark.kernel.sr import MIN_POINTS
 from anomalydetector_spark.operators import errors
 
 VERDICT_COLS = [
@@ -152,109 +150,6 @@ def check_schema_types(
             "; ".join(problems) if problems else None,
             len(problems),
         )
-    )
-
-
-def check_not_null(
-    df: DataFrame,
-    column: str,
-    partition_by: Column | str | None = None,
-    check_name: str | None = None,
-    message: str = errors.INVALID_TIMESTAMPS,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """P4 — null / unparseable values (invoker.py:55-59: NaT check after
-    to_datetime; a failed cast surfaces as null under try_cast semantics)."""
-    name = check_name or f"not_null_{column}"
-    p = _part(df, partition_by)
-    bad = F.col(column).isNull()
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(counted, name, message),
-        _violation_rows(p, bad, name, keep or []),
-    )
-
-
-def check_float_castable(
-    df: DataFrame,
-    column: str,
-    partition_by: Column | str | None = None,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """P7 — values parse as floats (invoker.py:71-74). ``try_cast`` gives
-    null on failure without aborting the job; non-null input that casts to
-    null is a violation."""
-    name = f"float_castable_{column}"
-    p = _part(df, partition_by)
-    bad = F.col(column).isNotNull() & F.col(column).cast("string").try_cast(
-        "double"
-    ).isNull()
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(
-            counted, name, errors.INVALID_VALUE_FORMAT.format(column)
-        ),
-        _violation_rows(p, bad, name, keep or [column]),
-    )
-
-
-def check_finite(
-    df: DataFrame,
-    column: str,
-    partition_by: Column | str | None = None,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """P8 — no NaN/±inf (invoker.py:76-77)."""
-    name = f"finite_{column}"
-    p = _part(df, partition_by)
-    # try_cast: unparseable values are P7's violation class, not this
-    # check's — and a strict cast would THROW under ANSI mode
-    c = F.col(column).cast("string").try_cast("double")
-    bad = c.isNotNull() & (F.isnan(c) | (F.abs(c) == F.lit(float("inf"))))
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(
-            counted, name, errors.INVALID_SERIES_VALUE.format(column)
-        ),
-        _violation_rows(p, bad, name, keep or [column]),
-    )
-
-
-def check_value_bounds(
-    df: DataFrame,
-    column: str,
-    partition_by: Column | str | None = None,
-    lower: float = VALUE_LOWER_BOUND,
-    upper: float = VALUE_UPPER_BOUND,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """P9 — magnitude bound |v| ≤ 1e100 (invoker.py:79-80,
-    constants.py:1-2)."""
-    name = f"value_bounds_{column}"
-    p = _part(df, partition_by)
-    c = F.col(column).cast("string").try_cast("double")
-    # non-finite values belong to check_finite, not here — each check owns
-    # exactly one violation class so counts never double-report
-    finite = c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))
-    bad = finite & ((c < lower) | (c > upper))
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(
-            counted, name, errors.VALUE_OVERFLOW.format(column)
-        ),
-        _violation_rows(p, bad, name, keep or [column]),
     )
 
 
@@ -509,121 +404,12 @@ def check_robust_outliers(
     )
 
 
-def check_freshness(
-    df: DataFrame,
-    ts_col: str,
-    max_lag_seconds: int,
-    reference_ts=None,
-    partition_by: Column | str | None = None,
-    check_name: str | None = None,
-) -> CheckResult:
-    """Freshness / staleness gate (dbt source-freshness, Deequ
-    ``Maximum(ts)`` compliance): per partition, the NEWEST ``ts_col``
-    value must lag ``reference_ts`` by at most ``max_lag_seconds`` — the
-    "did yesterday's crawl actually land in every partition" check that
-    row-shape constraints cannot see.
-
-    ``reference_ts`` is an explicit timestamp (string/datetime literal).
-    Pass one for deterministic runs (retry-stable verdicts, SQL-twin
-    oracles, resumable manifests diff cleanly); ``None`` falls back to
-    ``current_timestamp()`` for interactive use and is then
-    deliberately NOT deterministic.
-
-    Lag arithmetic is exact integer MICROseconds (``unix_micros`` both
-    sides), floored to whole seconds for the verdict message — a future
-    ``max(ts)`` (clock skew) gives a negative lag and always passes. A
-    partition with zero non-null timestamps FAILS with
-    ``NO_TIMESTAMPS`` — an absent feed must not read as fresh.
-
-    Verdict-only (staleness is not row-addressable); one aggregation
-    pass over (partition, ts).
-    """
-    name = check_name or f"freshness_{ts_col}"
-    ref = (
-        F.current_timestamp()
-        if reference_ts is None
-        else F.lit(reference_ts).cast("timestamp")
-    )
-    p = _part(df, partition_by)
-    agg = p.groupBy("partition_key").agg(
-        F.max(F.col(ts_col)).alias("_max_ts"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    # unix_micros rejects TIMESTAMP_NTZ — cast both sides through
-    # TIMESTAMP; with the session pinned to UTC (session.py) the cast is
-    # a reinterpretation and the DIFFERENCE is exact either way
-    lag_s = F.floor(
-        (
-            F.unix_micros(ref.cast("timestamp"))
-            - F.unix_micros(F.col("_max_ts").cast("timestamp"))
-        )
-        / F.lit(1_000_000.0)
-    ).cast("long")
-    has_ts = F.col("_max_ts").isNotNull()
-    fresh = has_ts & (lag_s <= F.lit(int(max_lag_seconds)))
-    verdicts = agg.select(
-        F.lit(name).alias("check_name"),
-        "partition_key",
-        fresh.alias("passed"),
-        F.when(
-            ~has_ts, F.lit(errors.NO_TIMESTAMPS.format(ts_col))
-        )
-        .when(
-            ~fresh,
-            F.format_string(
-                errors.STALE_PARTITION.replace("{0}", ts_col)
-                .replace("{1}", "%d")
-                .replace("{2}", str(int(max_lag_seconds))),
-                lag_s,
-            ),
-        )
-        .alias("error_message"),
-        F.when(fresh, F.lit(0)).otherwise(F.lit(1)).cast("long").alias(
-            "violation_count"
-        ),
-        "rows_scanned",
-    )
-    return CheckResult(verdicts)
-
-
-def json_schema_reason(column: str, required: dict[str, str]) -> Column:
-    """The per-row violation reason expression behind
-    :func:`check_json_schema` (NULL = compliant) — exposed so the engine
-    can ride it on the shared one-scan violation extraction as a tag
-    (pure codegen, like row asserts)."""
-    for k in required:
-        if any(ch in k for ch in ".[]'\""):
-            raise ValueError(f"unsupported character in JSON key: {k!r}")
-    col = F.col(column)
-    nn = col.isNotNull()
-    malformed = nn & F.try_parse_json(col).isNull()
-    valid = nn & ~malformed
-    reason = F.when(malformed, F.lit("malformed"))
-    for k, typ in required.items():
-        raw = F.get_json_object(col, f"$.{k}")
-        reason = reason.when(
-            valid & raw.isNull(), F.lit(f"missing:{k}")
-        ).when(
-            valid & raw.isNotNull() & raw.try_cast(typ).isNull(),
-            F.lit(f"type:{k}"),
-        )
-    return reason
-
-
-def check_json_schema(
-    df: DataFrame,
-    column: str,
-    required: dict[str, str],
-    partition_by: Column | str | None = None,
-    check_name: str | None = None,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """Semi-structured payload validation: every non-null value of
+def json_schema_reason(column: str, required: dict[str, str]) -> str:
+    """SQL of a row's JSON-schema violation reason (NULL = compliant)
+    for a check suite's ``json_schema`` spec: every non-null value of
     ``column`` must be (a) parseable JSON, and (b) carry each key in
     ``required`` (a ``{json_key: spark_type}`` mapping, e.g.
-    ``{"k": "bigint"}``) with a value castable to the declared type —
-    the events-pipeline staple that P3/P7 column checks cannot see
-    inside a JSON string column.
+    ``{"k": "bigint"}``) with a value castable to the declared type.
 
     Entirely JVM-side codegen: ``try_parse_json`` probes validity (the
     VARIANT parser — no Python, no UDF), ``get_json_object`` extracts,
@@ -635,26 +421,23 @@ def check_json_schema(
       and a required key whose value is null fails either way;
     * each violating row reports ONE reason — the first failure in
       declaration order: ``malformed``, then ``missing:<key>`` /
-      ``type:<key>`` per key — so the violation frame is deterministic;
+      ``type:<key>`` per key — so the violation rows are deterministic;
     * keys are used verbatim in the JSONPath (``$.<key>``) — keys
       containing ``.``/quotes/brackets are rejected loudly.
-
-    Violations are row-addressable: the frame carries ``json_reason``.
     """
-    name = check_name or f"json_schema_{column}"
-    p = _part(df, partition_by).withColumn(
-        "json_reason", json_schema_reason(column, required)
-    )
-    bad = F.col("json_reason").isNotNull()
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(
-            counted, name, errors.JSON_SCHEMA_VIOLATION.format(column)
-        ),
-        _violation_rows(
-            p, bad, name, ["json_reason", *(keep or [])]
-        ),
-    )
+    for k in required:
+        if any(ch in k for ch in ".[]'\""):
+            raise ValueError(f"unsupported character in JSON key: {k!r}")
+    col = f"`{column}`"
+    branches = [
+        f"WHEN {col} IS NULL THEN NULL",
+        f"WHEN try_parse_json({col}) IS NULL THEN 'malformed'",
+    ]
+    for k, typ in required.items():
+        raw = f"get_json_object({col}, {sql_string('$.' + k)})"
+        branches += [
+            f"WHEN {raw} IS NULL THEN {sql_string('missing:' + k)}",
+            f"WHEN try_cast({raw} AS {typ}) IS NULL "
+            f"THEN {sql_string('type:' + k)}",
+        ]
+    return f"CASE {' '.join(branches)} END"

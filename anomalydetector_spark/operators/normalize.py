@@ -84,7 +84,7 @@ def check_unicode_normalization(
     Byte identity (UTF-8 encode compare, same rule as
     ``check_text_extraction``) decides violation, so a normalization
     that changes bytes but not rendered appearance still flags. NULL
-    text is not a violation (that's ``check_not_null``'s job)."""
+    text is not a violation (that's the ``not_null`` check's job)."""
     name = f"unicode_{form.lower()}"
     p = _part(df, partition_by)
     normed = _normalizer(form)(F.col(text_col))

@@ -3,9 +3,9 @@ shape-of-the-string lens: ids, codes, dates and urls have a stable
 character-class silhouette ("AA-9999", "9999-99-99") long before any
 specific regex is written down. The profiler DISCOVERS the dominant
 signatures, ``suggest_value_patterns`` freezes them into an allowed
-set, and ``check_value_pattern`` enforces that set with row-addressable
-violations — the same discover → suggest → enforce loop as the JSON
-key profiler.
+set, and a check suite's ``pattern`` spec (plans/suite.py) enforces
+that set with row-addressable violations — the same discover → suggest
+→ enforce loop as the JSON key profiler.
 
 Signature alphabet (ASCII classes; applied in this order so classes
 never re-match their own output):
@@ -34,8 +34,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from anomalydetector_spark.operators.checks import sql_string
 
 # (pattern, replacement) — order matters; shared with the SQL twin
 SIGNATURE_STEPS: tuple[tuple[str, str], ...] = (
@@ -52,14 +54,13 @@ COLLAPSE_STEPS: tuple[tuple[str, str], ...] = (
 )
 
 
-def char_signature(col: Column, collapsed: bool = True) -> Column:
-    """The char-class signature of a string column (NULL → NULL)."""
-    out = col
-    for pat, rep in SIGNATURE_STEPS:
-        out = F.regexp_replace(out, pat, rep)
-    if collapsed:
-        for pat, rep in COLLAPSE_STEPS:
-            out = F.regexp_replace(out, pat, rep)
+def signature_sql(column: str, collapsed: bool = True) -> str:
+    """The char-class signature of string column ``column``, as SQL
+    (NULL → NULL)."""
+    out = f"`{column}`"
+    steps = SIGNATURE_STEPS + (COLLAPSE_STEPS if collapsed else ())
+    for pat, rep in steps:
+        out = f"regexp_replace({out}, {sql_string(pat)}, {sql_string(rep)})"
     return out
 
 
@@ -77,7 +78,7 @@ def value_pattern_profile(
 
     part = list(part_cols)
     sigs = df.filter(F.col(column).isNotNull()).select(
-        *part, char_signature(F.col(column), collapsed).alias("signature")
+        *part, F.expr(f"{signature_sql(column, collapsed)} AS signature")
     )
     counts = sigs.groupBy(*part, "signature").agg(
         F.count(F.lit(1)).alias("n_values")
@@ -105,7 +106,7 @@ def suggest_value_patterns(
     """Freeze the dominant signatures into an allowed set: the smallest
     rank-prefix of the GLOBAL profile (no part_cols) whose cumulative
     share reaches ``min_coverage``. The collect is by design (the
-    result is a config literal for :func:`check_value_pattern`) but it
+    result is a config literal for a suite's ``pattern`` check) but it
     is CAPPED at the ``max_patterns`` top-ranked signatures — a
     pathological free-text column can carry near-distinct signatures
     per row, and an uncapped collect of that profile would be
@@ -126,57 +127,3 @@ def suggest_value_patterns(
         if cum >= min_coverage:
             break
     return out
-
-
-def check_value_pattern(
-    df: DataFrame,
-    column: str,
-    allowed: Sequence[str],
-    partition_by=None,
-    collapsed: bool = True,
-    check_name: str | None = None,
-):
-    """Pattern compliance as a standard engine check: every non-null
-    value's signature must be in ``allowed`` (a literal set, broadcast
-    as an ``isin``). Violations are row-addressable ``(check_name,
-    partition_key, <column>, signature)`` rows."""
-    from anomalydetector_spark.operators.checks import (
-        CheckResult,
-        _part,
-    )
-
-    if not allowed:
-        raise ValueError("allowed signature set must not be empty")
-    name = check_name or f"pattern_{column}"
-    keyed = _part(df, partition_by)
-    sig = char_signature(F.col(column), collapsed)
-    tagged = keyed.withColumn("_sig", sig)
-    bad = F.col(column).isNotNull() & ~F.col("_sig").isin(list(allowed))
-    agg = tagged.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    ok = F.col("violation_count") == 0
-    verdicts = agg.select(
-        F.lit(name).alias("check_name"),
-        "partition_key",
-        ok.alias("passed"),
-        F.when(
-            ~ok,
-            F.format_string(
-                "%d value(s) of %s match none of the "
-                + f"{len(allowed)} allowed signature(s)",
-                F.col("violation_count"),
-                F.lit(column),
-            ),
-        ).alias("error_message"),
-        "violation_count",
-        "rows_scanned",
-    )
-    violations = tagged.filter(bad).select(
-        F.lit(name).alias("check_name"),
-        "partition_key",
-        F.col(column),
-        F.col("_sig").alias("signature"),
-    )
-    return CheckResult(verdicts, violations)

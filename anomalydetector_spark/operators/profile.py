@@ -419,7 +419,7 @@ def profile_json_keys(
 ) -> DataFrame:
     """Schema discovery for a semi-structured JSON string column — the
     profiler half of the ``json_schema`` check (the suggestion loop:
-    profile → human review → ``checks.check_json_schema`` enforces).
+    profile → human review → a suite's ``json_schema`` spec enforces).
 
     One pass: valid JSON OBJECTS parse to ``map<string,string>`` in the
     JVM (``from_json`` — non-objects and malformed payloads drop out,

@@ -82,8 +82,9 @@ def dim_join(
     strategy: str = "broadcast",
     salts: int = 16,
     salt_on: Column | str | None = None,
+    known: str = "_known",
 ) -> DataFrame:
-    """``fact`` with a ``_known`` column: True where ``child_col``'s value
+    """``fact`` with a ``known`` column: True where ``child_col``'s value
     is a key of ``parent[parent_col]``, NULL otherwise, under the chosen
     physical strategy. Every rung keeps each fact row once, whether or
     not the parent repeats a key."""
@@ -101,11 +102,11 @@ def dim_join(
             parent.selectExpr(f"`{parent_col}` AS `{child_col}`")
         )
         return fact.withColumn(
-            "_known", F.when(F.col(child_col).isin(keys), F.lit(True))
+            known, F.when(F.col(child_col).isin(keys), F.lit(True))
         )
 
     dim = _dim_keys(parent, parent_col, child_col).withColumn(
-        "_known", F.lit(True)
+        known, F.lit(True)
     )
     if strategy == "auto":
         return fact.join(dim, child_col, "left")
@@ -113,7 +114,7 @@ def dim_join(
         return fact.join(dim.hint("shuffle_hash"), child_col, "left")
 
     if strategy == "shuffle_bloom":
-        return _bloom_reduced_join(fact, dim, child_col)
+        return _bloom_reduced_join(fact, dim, child_col, known)
 
     # shuffle_salted: spread each hot fact key across `salts` tasks
     fact_s = fact.withColumn("_ref_salt", _salt_expr(salt_on, salts))
@@ -147,14 +148,14 @@ def _bloom_probe(key: Column, m_bits: int, n_hashes: int, seed: int) -> Column:
 
 
 def _bloom_reduced_join(
-    fact: DataFrame, dim: DataFrame, child_col: str
+    fact: DataFrame, dim: DataFrame, child_col: str, known: str
 ) -> DataFrame:
     """Semi-join reduction: probe every fact row against the dim's
     broadcast Bloom bitmap in codegen; only bloom-positive rows (true
     members + the FP fraction) reach the shuffle join. Bloom-negative
-    rows are definite non-members and get a NULL ``_known`` directly —
-    exact because the filter has no false negatives. ``dim`` carries
-    ``_known`` = True."""
+    rows are definite non-members and get a NULL ``known`` flag directly
+    — exact because the filter has no false negatives. ``dim`` carries
+    ``known`` = True."""
     from anomalydetector_spark.operators.bloom import bloom_params, build_bloom
 
     n_keys = dim.count()  # dim is already distinct; bounded action
@@ -175,5 +176,5 @@ def _bloom_reduced_join(
     negatives = probed.filter(~F.col("_maybe")).drop("_bloom", "_maybe")
     joined = candidates.join(dim.hint("shuffle_hash"), child_col, "left")
     return joined.unionByName(
-        negatives.withColumn("_known", F.lit(None).cast("boolean"))
+        negatives.withColumn(known, F.lit(None).cast("boolean"))
     )

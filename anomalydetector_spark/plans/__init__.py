@@ -8,8 +8,6 @@ scans out.
 """
 
 from anomalydetector_spark.plans.fused import (  # noqa: F401
-    FusedScans,
-    build_fused_scans,
     dup_rows,
     partition_rollup,
     url_profile,

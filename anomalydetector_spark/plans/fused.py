@@ -37,16 +37,16 @@ suite to its information-theoretic minimum:
   already paid for by the uniqueness check, so exactness is free and no
   HLL sketch is needed.
 
-Both verdict compilers build on these pieces: ``engine.run_validation``
-over the pages cube above, and ``plans/suite.run_suite`` over a cube of
-any table whose extra aggregates are its checks' counters.
-:func:`partition_rollup` gathers every counter per partition in one
-aggregation, and :func:`rollup_verdicts` turns it into every verdict row
-in one projection.
+Both ``engine.run_validation`` and ``plans/suite.run_suite`` compile
+their checks onto these pieces through one compiler
+(:func:`plans.suite.compile_checks`): every check's counter rides the
+cube (or a key profile), :func:`partition_rollup` gathers every counter
+per partition in one aggregation, and :func:`rollup_verdicts` turns it
+into every verdict row in one projection.
 
 Violation-row extraction still reads the input (it must — the rows are
-the output), but only in the violations DAG, which the caller
-materializes separately.
+the output), but once for all checks and only in the violations DAG,
+which the caller materializes separately.
 
 Planning runs on every validation, so the expressions here are mostly
 SQL text: the JVM parses one in a single py4j call, where a Column chain
@@ -55,7 +55,6 @@ costs a round trip per method.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -65,6 +64,10 @@ from anomalydetector_spark.operators import errors as E
 from anomalydetector_spark.operators.checks import sql_string
 
 DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
+
+# the pages engine's extra cube groups: exact text length and lang, the
+# grain every drift stat series is derived from
+PAGES_GROUPS = ("length(text) AS _len", "lang")
 
 # phase-1 salts of the salted key profile: one hot key's rows spread over
 # this many groups (operators/uniqueness.duplicate_key_counts salts alike)
@@ -88,19 +91,34 @@ def duration_seconds(duration: str) -> int:
     return int(n) * _UNIT_SECONDS[unit]
 
 
-def epoch_seconds_sql(df: DataFrame, ts_col: str) -> str:
-    """Column ``ts_col`` as epoch seconds, as SQL: NULL where the value is
+_TS_TYPES = ("timestamp", "timestamp_ntz", "date")
+
+
+def timestamp_sql(df: DataFrame, ts_col: str) -> str:
+    """Column ``ts_col`` as a TIMESTAMP, as SQL: NULL where the value is
     NULL or, for a non-timestamp column, does not parse as a timestamp.
     Malformed values surface as NULL (counted by the not-null check), not
     as ANSI cast errors; the string round-trip is only paid when the
     column isn't a timestamp already (this expression runs inside the hot
     cube scan)."""
-    dtype = df.schema[ts_col].dataType
-    if dtype.typeName() in ("timestamp", "timestamp_ntz", "date"):
-        return f"CAST(CAST(`{ts_col}` AS TIMESTAMP) AS DOUBLE)"
-    return (
-        f"CAST(try_cast(CAST(`{ts_col}` AS STRING) AS TIMESTAMP) AS DOUBLE)"
-    )
+    if df.schema[ts_col].dataType.typeName() in _TS_TYPES:
+        return f"CAST(`{ts_col}` AS TIMESTAMP)"
+    return f"try_cast(CAST(`{ts_col}` AS STRING) AS TIMESTAMP)"
+
+
+def epoch_seconds_sql(df: DataFrame, ts_col: str) -> str:
+    """Column ``ts_col`` as epoch seconds (:func:`timestamp_sql`), as
+    SQL."""
+    return f"CAST({timestamp_sql(df, ts_col)} AS DOUBLE)"
+
+
+def null_ts_sql(df: DataFrame, ts_col: str) -> str:
+    """SQL true where column ``ts_col`` is NULL or does not parse as a
+    timestamp (where :func:`timestamp_sql` is NULL). A timestamp or date
+    column is NULL-tested as is: its cast cannot fail."""
+    if df.schema[ts_col].dataType.typeName() in _TS_TYPES:
+        return f"`{ts_col}` IS NULL"
+    return f"{timestamp_sql(df, ts_col)} IS NULL"
 
 
 def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:
@@ -119,15 +137,6 @@ def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:
         f"CAST(timestamp_seconds(CAST(floor({epoch} / {sec}) * {sec} AS BIGINT))"
         f" AS {df.schema[ts_col].dataType.simpleString()})"
     )
-
-
-@dataclass
-class FusedScans:
-    """The two shared aggregates (callers should persist both: every
-    verdict/stat frame below is a rollup of one of them)."""
-
-    cube: DataFrame  # window_start, partition_key, _len, lang, _ok, _n
-    profile: DataFrame  # partition_key, window_start, key, cnt, _key_cnt
 
 
 def keyed_input(
@@ -186,9 +195,8 @@ def ref_flag(
         strategy=strategy,
         salts=salts,
         salt_on=salt_on,
+        known=known,
     )
-    if known != "_known":
-        flagged = flagged.withColumnRenamed("_known", known)
     return flagged, f"`{child_col}` IS NULL OR {known} IS NOT NULL"
 
 
@@ -201,9 +209,9 @@ def counts_cube(
     """The counts cube: row counts ``_n`` grouped by ``(window_start,
     partition_key, *groups, _ok)``, ``groups`` and the referential flag
     ``ok`` as SQL, and the ``aggs`` counters after ``_n``. The pages
-    engine groups by text length and lang for its drift series; a check
-    suite over any table groups by none and carries its checks' counters
-    as ``aggs``."""
+    engine groups by :data:`PAGES_GROUPS` for its drift series; a check
+    suite over any table groups by none. Either way the checks' counters
+    ride along as ``aggs``."""
     return flagged.groupBy(
         "window_start",
         "partition_key",
@@ -212,61 +220,21 @@ def counts_cube(
     ).agg(F.expr("count(1) AS _n"), *(aggs or []))
 
 
-def build_fused_scans(
-    keyed: DataFrame,
-    ref_dim: DataFrame | None = None,
-    ref_child_col: str = "domain",
-    ref_parent_col: str = "domain",
-    unique_key: str = "url",
-    extra_cube_aggs: list[Column] | None = None,
-    ref_strategy: str = "broadcast",
-    ref_salts: int = 16,
-) -> FusedScans:
-    """Build (lazily) the pages table's two shared aggregates from a keyed
-    input.
-
-    ``extra_cube_aggs`` rides additional aggregate columns on the cube
-    scan (e.g. per-row-assert violation counters from
-    operators/asserts.row_assert_counts) — zero extra scans, zero extra
-    cube rows, one extra long column each.
-
-    ``ref_strategy`` picks the dimension-join ladder rung
-    (operators/referential.dim_join): broadcast (default) / auto /
-    shuffle / shuffle_salted; the salted rung salts on ``unique_key`` so
-    the salt is deterministic under task retry."""
-    if ref_dim is not None:
-        flagged, ok = ref_flag(
-            keyed,
-            ref_dim,
-            ref_child_col,
-            ref_parent_col,
-            strategy=ref_strategy,
-            salts=ref_salts,
-            salt_on=F.col(unique_key),
-        )
-    else:
-        flagged, ok = keyed, "true"
-    return FusedScans(
-        cube=counts_cube(
-            flagged, ok, ("length(text) AS _len", "lang"), extra_cube_aggs
-        ),
-        profile=url_profile(keyed, unique_key),
-    )
-
-
 def partition_rollup(
     cube: DataFrame,
     extra: list[DataFrame] | tuple[DataFrame, ...] = (),
     partitioned: bool = True,
 ) -> DataFrame:
     """Per-partition counters for the cheap verdicts in ONE aggregation:
-    ``(partition_key, rows_scanned, null_ts, dangling)``, the sums of the
-    cube's counters after ``_n`` (e.g. per-assert ``_assert_*``), and the
-    sums of every counter column of the ``extra`` frames
-    (``partition_key`` plus counters, e.g. duplicate rows per partition)
-    — 0 where a partition has none. The frames are unioned and grouped
-    once, not joined, so a NULL ``partition_key`` keeps every one of its
-    counts.
+    ``(partition_key, rows_scanned, null_ts, dangling)``, the cube's
+    counters after ``_n`` (e.g. the checks' ``count_if`` counters), and
+    every counter column of the ``extra`` frames (``partition_key`` plus
+    counters, e.g. duplicate rows per partition). A counter is summed, 0
+    where a partition has none; a BIGINT counter whose name starts with
+    ``_max`` (a newest epoch-microsecond timestamp, say) is combined by
+    ``max`` and stays NULL where a partition has no value. The frames
+    are unioned and grouped once, not joined, so a NULL
+    ``partition_key`` keeps every one of its counts.
 
     The result has at least one row: an EMPTY input has no partitions,
     yet must fail min-row-count (reference contract, invoker.py:43-44 →
@@ -298,14 +266,21 @@ def partition_rollup(
         .groupBy("partition_key")
         .agg(
             *[
-                F.expr(f"CAST(coalesce(sum(`{c}`), 0) AS BIGINT) AS `{c}`")
+                F.expr(
+                    f"max(`{c}`) AS `{c}`"
+                    if c.startswith("_max")
+                    else f"CAST(coalesce(sum(`{c}`), 0) AS BIGINT) AS `{c}`"
+                )
                 for c in counters
             ]
         )
     )
     if not partitioned:
         return roll
-    zero = ", ".join(f"'{c}', 0L" for c in counters)
+    zero = ", ".join(
+        f"'{c}', " + ("CAST(NULL AS BIGINT)" if c.startswith("_max") else "0L")
+        for c in counters
+    )
     return roll.agg(F.expr("collect_list(struct(*)) AS _rows")).selectExpr(
         "inline(CASE WHEN size(_rows) > 0 THEN _rows ELSE "
         f"array(named_struct('partition_key', 'global', {zero})) END)"
@@ -321,16 +296,16 @@ def rollup_verdicts(
     however many checks run. Catalyst optimization and codegen are paid
     per fresh plan (every run builds new scans), so plan size is real
     per-run time. Each check is ``(check_name, failed, message,
-    violations)``, the last three SQL over the rollup's columns; the rows
-    have the verdict frame's columns in its order. The structs are SQL
-    text: the JVM parses each in one call, where a Column chain costs a
-    py4j round trip per method."""
+    violations)``, the last three SQL over the rollup's columns (so a
+    message can quote a count); the rows have the verdict frame's
+    columns in its order. The structs are SQL text: the JVM parses each
+    in one call, where a Column chain costs a py4j round trip per
+    method."""
     structs = [
         f"named_struct('check_name', {sql_string(name)}, "
         "'partition_key', partition_key, "
         f"'passed', NOT ({failed}), "
-        f"'error_message', CASE WHEN {failed} "
-        f"THEN {sql_string(message)} END, "
+        f"'error_message', CASE WHEN {failed} THEN {message} END, "
         f"'violation_count', CAST({viol} AS BIGINT), "
         "'rows_scanned', rows_scanned)"
         for name, failed, message, viol in checks
@@ -342,8 +317,9 @@ def count_check(
     name: str, counter: str, message: str
 ) -> tuple[str, str, str, str]:
     """A :func:`rollup_verdicts` check that fails when the rollup column
-    ``counter`` is positive and reports it as the violation count."""
-    return name, f"{counter} > 0", message, counter
+    ``counter`` is positive and reports it as the violation count, with
+    the fixed ``message``."""
+    return name, f"{counter} > 0", sql_string(message), counter
 
 
 def min_rows_check(min_points: int) -> tuple[str, str, str, str]:
@@ -354,7 +330,7 @@ def min_rows_check(min_points: int) -> tuple[str, str, str, str]:
     return (
         "min_row_count",
         short,
-        E.NOT_ENOUGH_POINTS.format(min_points),
+        sql_string(E.NOT_ENOUGH_POINTS.format(min_points)),
         f"CASE WHEN {short} THEN rows_scanned ELSE 0 END",
     )
 
@@ -451,8 +427,9 @@ def len_log2_bin(length: str) -> str:
 
 def drift_inputs(
     cube: DataFrame, profile: DataFrame, len_bins: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """The two tiny frames every drift stat series derives from.
+) -> DataFrame:
+    """The one tiny frame every drift stat series derives from: the union
+    of
 
     * the cube slice ``(partition_key, window_start, _w_us, _len, lang,
       _n[, _bin])`` — windowed rows only (null-timestamp rows carry no
@@ -461,32 +438,25 @@ def drift_inputs(
       microseconds (window pairs step in epoch time: pandas sees
       session-local wall clocks, which skip or repeat an hour at a DST
       switch), ``_bin`` is :func:`len_log2_bin` of ``_len``;
-    * ``(partition_key, window_start, _keys)`` — EXACT per-window
+    * ``(partition_key, window_start, _w_us, _keys)`` — EXACT per-window
       distinct-key counts (one profile row per distinct key per window),
       the ``distinct_url`` series.
+
+    A row is a key-count row iff its ``_keys`` is not NULL; the other
+    side's columns are NULL.
     """
-    cols = [
-        "partition_key",
-        "window_start",
-        # window_start keeps the input's timestamp type; NTZ (and date)
-        # starts are session-local wall clocks, so the cast recovers
-        # their instant (a no-op for TIMESTAMP input)
-        "unix_micros(CAST(window_start AS TIMESTAMP)) AS _w_us",
-        "_len",
-        "lang",
-        "_n",
-    ]
+    # window_start keeps the input's timestamp type; NTZ (and date)
+    # starts are session-local wall clocks, so the cast recovers their
+    # instant (a no-op for TIMESTAMP input)
+    w_us = "unix_micros(CAST(window_start AS TIMESTAMP)) AS _w_us"
+    cols = ["partition_key", "window_start", w_us, "_len", "lang", "_n"]
     if len_bins:
         cols.append(f"{len_log2_bin('_len')} AS _bin")
     cube_slice = cube.filter("window_start IS NOT NULL").selectExpr(*cols)
-    # both frames descend from one keyed input: re-alias the grouping
-    # columns so the cogroup's key attributes stay unambiguous
     keys = (
         profile.filter("window_start IS NOT NULL")
-        .groupBy(
-            F.expr("partition_key AS partition_key"),
-            F.expr("window_start AS window_start"),
-        )
+        .groupBy("partition_key", "window_start")
         .agg(F.expr("count(1) AS _keys"))
+        .selectExpr("partition_key", "window_start", w_us, "_keys")
     )
-    return cube_slice, keys
+    return cube_slice.unionByName(keys, allowMissingColumns=True)

@@ -2,19 +2,25 @@
 
 The reference hard-codes its validation gauntlet as sequential imperative
 checks with whole-job raises (aml_component/invoker.py:43-82). Here a
-suite is DATA: a list of :class:`CheckSpec`, compiled onto the minimal
-set of scans:
+suite is DATA: a list of :class:`CheckSpec`, compiled by
+:func:`compile_checks` — the compiler ``engine.run_validation`` uses for
+its own checks too — onto the minimal set of scans:
 
-* count-shaped specs (``min_rows``, ``not_null_ts``, ``referential``,
-  ``unique``) compile through the same planner as
-  ``engine.run_validation`` (plans/fused.py): each spec's counter rides
-  one counts cube (every dimension flag on one keyed frame) or, for
-  ``unique``, a salted key profile; one per-partition rollup gathers
-  them, and one ``inline(array(struct))`` projection of it
-  (:func:`fused.rollup_verdicts`) yields every one of their verdicts;
-* value-shaped specs (``finite``, ``bounds``, ``float_castable``,
-  ``ascending``, …) compile to the single-aggregation programs in
-  operators/checks.py — one scan each, still never a collect.
+* every count-shaped and row-predicate spec (``min_rows``,
+  ``not_null_ts``, ``not_null``, ``finite``, ``bounds``,
+  ``float_castable``, ``pattern``, ``json_schema``, ``freshness``,
+  ``referential``, ``unique``) is a counter: a ``count_if`` on ONE
+  counts cube (``freshness``: a newest-timestamp ``max``), or for
+  ``unique`` a duplicate-row count of a salted key profile. One
+  per-partition rollup gathers the counters and one
+  ``inline(array(struct))`` projection of it
+  (:func:`fused.rollup_verdicts`) yields every verdict;
+* every row-addressable spec tags the rows it rejects on ONE scan of the
+  input (``filter(array(tags))`` + ``explode``): a suite reads its table
+  once for its violation rows however many specs it holds;
+* ``ascending``, ``benford`` and ``robust_outliers`` (window and
+  per-partition-estimator programs) and the scan-free
+  ``column_presence`` keep their own programs.
 """
 
 from __future__ import annotations
@@ -28,11 +34,37 @@ from pyspark.sql import functions as F
 from anomalydetector_spark.kernel.sr import MIN_POINTS
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors as E
+from anomalydetector_spark.operators.asserts import (
+    ROW_ASSERT_FAILED,
+    RowAssert,
+)
+from anomalydetector_spark.operators.checks import sql_string
 from anomalydetector_spark.plans import fused
 
-# the kinds compiled onto the shared cube, key profiles and rollup
-ROLLUP_KINDS = {"min_rows", "not_null_ts", "referential", "unique"}
+# each kind's check_name; ``{}`` is the spec's column
+CHECK_NAMES = {
+    "min_rows": "min_row_count",
+    "not_null_ts": "not_null_{}",
+    "not_null": "not_null_{}",
+    "unique": "unique_{}",
+    "referential": "ref_{}",
+    "finite": "finite_{}",
+    "bounds": "value_bounds_{}",
+    "float_castable": "float_castable_{}",
+    "pattern": "pattern_{}",
+    "json_schema": "json_schema_{}",
+    "freshness": "freshness_{}",
+    "ascending": "ascending_{}",
+    "benford": "benford_{}",
+    "robust_outliers": "robust_outliers_{}",
+    "column_presence": "column_presence",
+}
 
+# the kinds that keep their own programs instead of compiling onto the
+# shared cube and violation scan
+OWN_PROGRAM_KINDS = {
+    "ascending", "benford", "robust_outliers", "column_presence"
+}
 
 @dataclass(frozen=True)
 class CheckSpec:
@@ -139,6 +171,9 @@ def benford(
 def pattern(
     column: str, allowed: list[str] | tuple[str, ...], collapsed: bool = True
 ) -> CheckSpec:
+    """Every non-null value's char-class signature
+    (operators/patterns.signature_sql) is in ``allowed``; a violation row
+    carries its ``signature``."""
     return CheckSpec(
         kind="pattern", column=column,
         allowed=tuple(allowed), collapsed=collapsed,
@@ -148,9 +183,14 @@ def pattern(
 def freshness(
     ts_col: str, max_lag_seconds: int, reference_ts: str | None = None
 ) -> CheckSpec:
-    """Staleness gate: per-partition max(ts) must lag ``reference_ts``
-    by ≤ ``max_lag_seconds`` (checks.check_freshness; pass an explicit
-    reference for deterministic verdicts)."""
+    """Staleness gate (dbt source-freshness, Deequ ``Maximum(ts)``): per
+    partition, the newest ``ts_col`` value must lag ``reference_ts`` by
+    ≤ ``max_lag_seconds``. Pass an explicit reference (an ISO string)
+    for retry-stable verdicts; ``None`` reads ``current_timestamp()``.
+    The lag is exact integer microseconds floored to whole seconds; a
+    newest value after the reference (clock skew) passes, and a
+    partition without any non-null timestamp fails: an absent feed must
+    not read as fresh. Verdict-only: staleness is not row-addressable."""
     return CheckSpec("freshness", column=ts_col,
                      max_lag_seconds=max_lag_seconds,
                      reference_ts=reference_ts)
@@ -159,7 +199,8 @@ def freshness(
 def json_schema(column: str, required: dict[str, str]) -> CheckSpec:
     """JSON payload validation: every non-null value of ``column`` must
     parse and carry each required key castable to its declared Spark
-    type (checks.check_json_schema)."""
+    type; a violation row carries its first failure as ``json_reason``
+    (checks.json_schema_reason)."""
     return CheckSpec("json_schema", column=column,
                      json_keys=tuple(required.items()))
 
@@ -175,7 +216,339 @@ class SuiteResult:
             df.unpersist()
 
 
-def _union(frames: list[DataFrame]) -> DataFrame | None:
+def check_name(spec) -> str:
+    """The verdict ``check_name`` of a spec: a :class:`CheckSpec`, a
+    :class:`~anomalydetector_spark.operators.asserts.RowAssert` or a
+    ``(determinant, dependent)`` functional-dependency pair."""
+    if isinstance(spec, RowAssert):
+        return f"assert_{spec.name}"
+    if isinstance(spec, tuple):
+        det, dep = spec
+        return f"fd_{C.fd_label(det)}_{C.fd_label(dep)}"
+    if spec.kind not in CHECK_NAMES:
+        raise ValueError(f"unknown check kind: {spec.kind!r}")
+    return CHECK_NAMES[spec.kind].format(spec.column)
+
+
+def reject_repeats(specs) -> None:
+    """Raise ``ValueError`` naming every check that occurs twice: two
+    specs of one name would emit its verdicts and violation rows twice."""
+    names = [check_name(s) for s in specs]
+    repeated = sorted({n for n in names if names.count(n) > 1})
+    if repeated:
+        raise ValueError(
+            f"repeated check(s) {repeated}: each check may appear once in "
+            "a suite (a repeat would emit its verdicts and violation rows "
+            "twice)"
+        )
+
+
+@dataclass
+class CompiledChecks:
+    """What :func:`compile_checks` builds, all lazily."""
+
+    verdicts: DataFrame  # every check's verdict rows: one rollup projection
+    tagged: DataFrame  # the keyed input plus every probe column
+    tags: list[Column]  # `CASE WHEN <violated> THEN <check_name> END` each
+    # violation column -> (check_name, SQL of its value), one per check
+    # that owns the column
+    owned: dict[str, list[tuple[str, str]]]
+    cube: DataFrame
+    profiles: dict[str, DataFrame]  # key column -> its key profile
+    # persisted frames: the cube, then the key profiles and the
+    # functional dependencies' violating keys in spec order
+    cached: list[DataFrame]
+
+    def hits(self) -> Column:
+        """The names of the checks a tagged row violates, as an array."""
+        return F.filter(F.array(*self.tags), lambda t: t.isNotNull())
+
+    def violation_rows(self) -> DataFrame | None:
+        """One row per (input row, violated check): ``check_name``,
+        ``partition_key`` and the violation columns, each set only on the
+        rows of the checks that own it (NULL on the others)."""
+        if not self.tags:
+            return None
+        cols = [
+            "CASE "
+            + " ".join(
+                f"WHEN check_name = {sql_string(n)} THEN {e}"
+                for n, e in owners
+            )
+            + f" END AS `{col}`"
+            for col, owners in self.owned.items()
+        ]
+        return self.tagged.select(
+            F.explode(self.hits()).alias("check_name"), "*"
+        ).selectExpr("check_name", "partition_key", *cols)
+
+
+_INF = "CAST('Infinity' AS DOUBLE)"
+
+
+def _double(v: float | None) -> str:
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _row_predicate(
+    s: CheckSpec, df: DataFrame, counter: str
+) -> tuple[str, str, tuple[tuple[str, str], ...]]:
+    """``(violated, message, owned)`` of a row-predicate spec: the SQL of
+    a row's violation, the verdict message as SQL (over the spec's
+    rollup column ``counter``) and its violation columns as ``(name,
+    SQL)``. A value that does not parse as a double is
+    ``float_castable``'s violation only, and a non-finite one
+    ``finite``'s only: each check owns one violation class."""
+    c = f"`{s.column}`"
+    x = f"try_cast(CAST({c} AS STRING) AS DOUBLE)"
+    own = ((s.column, c),)
+    if s.kind == "not_null_ts":
+        bad = fused.null_ts_sql(df, s.column)
+        return bad, sql_string(E.INVALID_TIMESTAMPS), ()
+    if s.kind == "not_null":
+        return f"{c} IS NULL", sql_string(E.INVALID_TIMESTAMPS), ()
+    if s.kind == "float_castable":
+        message = E.INVALID_VALUE_FORMAT.format(s.column)
+        return f"{c} IS NOT NULL AND {x} IS NULL", sql_string(message), own
+    if s.kind == "finite":
+        message = E.INVALID_SERIES_VALUE.format(s.column)
+        bad = f"{x} IS NOT NULL AND (isnan({x}) OR abs({x}) = {_INF})"
+        return bad, sql_string(message), own
+    if s.kind == "bounds":
+        message = E.VALUE_OVERFLOW.format(s.column)
+        bad = (
+            f"{x} IS NOT NULL AND NOT isnan({x}) AND abs({x}) != {_INF} AND "
+            f"({x} < {_double(s.lower)} OR {x} > {_double(s.upper)})"
+        )
+        return bad, sql_string(message), own
+    if s.kind == "pattern":
+        from anomalydetector_spark.operators.patterns import signature_sql
+
+        if not s.allowed:
+            raise ValueError("allowed signature set must not be empty")
+        sig = signature_sql(s.column, s.collapsed)
+        allowed = ", ".join(sql_string(a) for a in s.allowed)
+        fmt = (
+            "%d value(s) of %s match none of the "
+            f"{len(s.allowed)} allowed signature(s)"
+        )
+        message = (
+            f"format_string({sql_string(fmt)}, {counter}, "
+            f"{sql_string(s.column)})"
+        )
+        bad = f"{c} IS NOT NULL AND NOT ({sig} IN ({allowed}))"
+        return bad, message, (*own, ("signature", sig))
+    if s.kind == "json_schema":
+        reason = C.json_schema_reason(s.column, dict(s.json_keys))
+        message = E.JSON_SCHEMA_VIOLATION.format(s.column)
+        owns = (("json_reason", reason),)
+        return f"{reason} IS NOT NULL", sql_string(message), owns
+    raise ValueError(f"unknown check kind: {s.kind!r}")
+
+
+def _freshness_check(s: CheckSpec, newest: str) -> tuple[str, str, str, str]:
+    """The :func:`fused.rollup_verdicts` check of a freshness spec over
+    the rollup column ``newest``: the partition's newest timestamp in
+    epoch microseconds (``unix_micros`` through TIMESTAMP: it rejects
+    TIMESTAMP_NTZ, and with the session pinned to UTC the cast is a
+    reinterpretation). Lag arithmetic is exact integer microseconds."""
+    ref = (
+        "current_timestamp()"
+        if s.reference_ts is None
+        else f"CAST({sql_string(s.reference_ts)} AS TIMESTAMP)"
+    )
+    lag = (
+        f"CAST(floor((unix_micros(CAST({ref} AS TIMESTAMP)) - {newest}) "
+        "/ 1000000.0D) AS BIGINT)"
+    )
+    max_lag = int(s.max_lag_seconds)
+    fresh = f"{newest} IS NOT NULL AND {lag} <= {max_lag}"
+    stale = (
+        E.STALE_PARTITION.replace("{0}", s.column)
+        .replace("{1}", "%d")
+        .replace("{2}", str(max_lag))
+    )
+    message = (
+        f"CASE WHEN {newest} IS NULL "
+        f"THEN {sql_string(E.NO_TIMESTAMPS.format(s.column))} "
+        f"ELSE format_string({sql_string(stale)}, {lag}) END"
+    )
+    return (
+        check_name(s),
+        f"NOT ({fresh})",
+        message,
+        f"CASE WHEN {fresh} THEN 0 ELSE 1 END",
+    )
+
+
+def compile_checks(
+    keyed: DataFrame,
+    specs: list,
+    partitioned: bool,
+    groups: tuple[str, ...] = (),
+    window_ts: str | None = None,
+    persist: bool = True,
+) -> CompiledChecks:
+    r"""Compile ``specs`` onto one counts cube, one key profile per
+    ``unique`` spec, one rollup and one tagged violation scan of the
+    keyed input (:func:`fused.keyed_input`).
+
+    ``specs`` holds :class:`CheckSpec`\ s of the compiled kinds (not
+    :data:`OWN_PROGRAM_KINDS`), row asserts
+    (:class:`~anomalydetector_spark.operators.asserts.RowAssert`: a
+    ``count_if`` counter and a tag, failing beyond its tolerated
+    fraction) and ``(determinant, dependent)`` functional-dependency
+    pairs (one hash aggregate each, its violating keys persisted, counted
+    in the rollup and broadcast back onto the violation scan). Probe
+    columns and tags come in spec order. ``groups`` are the cube's extra
+    group columns (the pages engine's :data:`fused.PAGES_GROUPS`);
+    ``window_ts`` names the column the input's windows were keyed on,
+    whose ``not_null_ts`` count the cube's NULL windows already hold.
+    The first referential spec's flag is the cube's ``_ok`` group column
+    (counted as the rollup's ``dangling``); later ones count their own.
+    """
+    reject_repeats(specs)
+    salt_on = next(
+        (s.column for s in specs
+         if isinstance(s, CheckSpec) and s.kind == "unique"),
+        None,
+    )
+    used: set[str] = set()
+
+    def slot(base: str, i: int) -> str:
+        """``base`` for the first spec that asks, ``base<i>`` after."""
+        name = base if base not in used else f"{base}{i}"
+        used.add(name)
+        return name
+
+    flagged, ok, tagged = keyed, "true", keyed
+    aggs: list[Column] = []
+    rollups: list[DataFrame] = []
+    checks: list[tuple[str, str, str, str]] = []
+    tags: list[Column] = []
+    owned: dict[str, list[tuple[str, str]]] = {}
+    profiles: dict[str, DataFrame] = {}
+    cached: list[DataFrame] = []
+    for i, s in enumerate(specs):
+        name, counter = check_name(s), f"_v{i}"
+        bad, owns = None, ()
+        if isinstance(s, RowAssert):
+            bad = s.violation
+            aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
+            frac = float(s.max_violation_fraction)
+            checks.append((
+                name,
+                f"{counter} > rows_scanned * CAST({frac!r} AS DOUBLE)",
+                sql_string(ROW_ASSERT_FAILED.format(s.name, s.expr)),
+                counter,
+            ))
+        elif isinstance(s, tuple):
+            det, dep = s
+            det_cols = C.fd_cols(det)
+            keys = [f"_fd_k_{i}_{j}" for j in range(len(det_cols))]
+            bad_keys = C.check_functional_dependency(
+                keyed, det, dep, partition_by=F.col("partition_key")
+            ).violations.select(
+                "partition_key",
+                *[F.col(c).alias(k) for c, k in zip(det_cols, keys)],
+            )
+            if persist:
+                bad_keys = bad_keys.persist()
+                cached.append(bad_keys)
+            rollups.append(
+                bad_keys.selectExpr("partition_key", f"1 AS {counter}")
+            )
+            # the join is per (partition_key, determinant tuple): a key may
+            # violate in one partition and not another (a NULL
+            # partition_key is a partition too, hence the null-safe match)
+            bad = f"_fd_hit_{i}"
+            cond = F.col("partition_key").eqNullSafe(F.col(f"_fd_pk_{i}"))
+            for c, k in zip(det_cols, keys):
+                cond = cond & (F.col(c) == F.col(k))
+            probe = bad_keys.select(
+                F.col("partition_key").alias(f"_fd_pk_{i}"),
+                *keys,
+                F.lit(True).alias(bad),
+            )
+            tagged = tagged.join(F.broadcast(probe), cond, "left").drop(
+                f"_fd_pk_{i}", *keys
+            )
+            owns = tuple((c, f"`{c}`") for c in det_cols)
+            message = E.FD_VIOLATION.format(C.fd_label(det), C.fd_label(dep))
+            checks.append(fused.count_check(name, counter, message))
+        elif s.kind == "min_rows":
+            checks.append(fused.min_rows_check(s.min_points))
+        elif s.kind == "freshness":
+            counter = f"_max_v{i}"
+            ts = fused.timestamp_sql(keyed, s.column)
+            aggs.append(F.expr(f"max(unix_micros({ts})) AS {counter}"))
+            checks.append(_freshness_check(s, counter))
+        elif s.kind == "unique":
+            profile = fused.url_profile(keyed, s.column)
+            if persist:
+                profile = profile.persist()
+                cached.append(profile)
+            profiles[s.column] = profile
+            counter = slot("_dup_rows", i)
+            rollups.append(fused.dup_counts(profile, counter))
+            dup = slot("_is_dup", i)
+            tagged = tagged.withColumn(
+                dup, fused.is_dup_key(s.column, profile)
+            )
+            bad = f"`{dup}`"
+            owns = ((s.column, f"`{s.column}`"),)
+            message = E.DUPLICATE_KEY.format(s.column)
+            checks.append(fused.count_check(name, counter, message))
+        elif s.kind == "referential":
+            known = slot("_known", i)
+
+            def flag(frame: DataFrame) -> tuple[DataFrame, str]:
+                return fused.ref_flag(
+                    frame, s.dim, s.column, s.dim_column, strategy=s.strategy,
+                    salts=s.salts, salt_on=salt_on, known=known,
+                )
+
+            flagged, ref_ok = flag(flagged)
+            tagged, _ = flag(tagged)
+            if ok == "true":
+                ok, counter = ref_ok, "dangling"
+            else:
+                aggs.append(F.expr(f"count_if(NOT ({ref_ok})) AS {counter}"))
+            bad = f"NOT ({ref_ok})"
+            owns = ((s.column, f"`{s.column}`"),)
+            message = E.DANGLING_REFERENCE.format(s.column, s.dim_column)
+            checks.append(fused.count_check(name, counter, message))
+        else:
+            bad, message, owns = _row_predicate(s, keyed, counter)
+            if s.kind == "not_null_ts" and s.column == window_ts:
+                counter = "null_ts"
+            else:
+                aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
+            checks.append((name, f"{counter} > 0", message, counter))
+        if bad is not None:
+            tags.append(F.expr(f"CASE WHEN {bad} THEN {sql_string(name)} END"))
+        for col, sql in owns:
+            owned.setdefault(col, []).append((name, sql))
+
+    cube = fused.counts_cube(flagged, ok, groups, aggs)
+    if persist:
+        cube = cube.persist()
+        cached.insert(0, cube)
+    roll = fused.partition_rollup(cube, rollups, partitioned=partitioned)
+    return CompiledChecks(
+        verdicts=fused.rollup_verdicts(roll, checks),
+        tagged=tagged,
+        tags=tags,
+        owned=owned,
+        cube=cube,
+        profiles=profiles,
+        cached=cached,
+    )
+
+
+def _union(frames: list[DataFrame | None]) -> DataFrame | None:
     frames = [f for f in frames if f is not None]
     if not frames:
         return None
@@ -190,166 +563,51 @@ def run_suite(
 ) -> SuiteResult:
     """Compile and lazily build the suite's verdict + violation frames.
 
-    The count-shaped specs share one cube and one rollup however many of
-    them the suite holds, plus one key profile per ``unique`` spec;
-    value-shaped specs fall back to per-check single-aggregation
-    programs. ``persist_scans`` caches the cube and the profiles (worth
-    it when the verdicts and the violations are both read).
+    Every spec but the :data:`OWN_PROGRAM_KINDS` compiles through
+    :func:`compile_checks` onto one cube and one rollup (plus one key
+    profile per ``unique`` spec), and all their violation rows come from
+    one tagged scan of ``df``; the other kinds run their own programs,
+    unioned after. ``persist_scans`` caches the cube and the profiles
+    (worth it when the verdicts and the violations are both read; the
+    violation scan then reads the cached profiles, not the input again).
+    A repeated check raises ``ValueError``.
     """
+    reject_repeats(specs)
     verdicts: list[DataFrame] = []
-    violations: list[DataFrame] = []
+    violations: list[DataFrame | None] = []
     cached: list[DataFrame] = []
-
-    rolled = [s for s in specs if s.kind in ROLLUP_KINDS]
-    if rolled:
-        checks, rows, cached = _compile_rollup(
-            df, rolled, partition_by, persist_scans
+    shared = [s for s in specs if s.kind not in OWN_PROGRAM_KINDS]
+    if shared:
+        c = compile_checks(
+            fused.keyed_input(df, None, partition_by),
+            shared,
+            partitioned=partition_by is not None,
+            persist=persist_scans,
         )
-        verdicts.append(checks)
-        violations += rows
-
-    # value-shaped / metadata specs — per-check programs
+        verdicts.append(c.verdicts)
+        violations.append(c.violation_rows())
+        cached = c.cached
     for s in specs:
-        if s.kind in ROLLUP_KINDS:
-            continue
         if s.kind == "column_presence":
             r = C.check_column_presence(df, list(s.required))
-        elif s.kind == "not_null":
-            r = C.check_not_null(df, s.column, partition_by)
-        elif s.kind == "finite":
-            r = C.check_finite(df, s.column, partition_by)
-        elif s.kind == "bounds":
-            r = C.check_value_bounds(
-                df, s.column, partition_by, lower=s.lower, upper=s.upper
-            )
-        elif s.kind == "float_castable":
-            r = C.check_float_castable(df, s.column, partition_by)
         elif s.kind == "ascending":
             r = C.check_ascending_by(df, s.column, s.order_col, partition_by)
-        elif s.kind == "json_schema":
-            r = C.check_json_schema(
-                df, s.column, dict(s.json_keys), partition_by
-            )
-        elif s.kind == "freshness":
-            r = C.check_freshness(
-                df, s.column, s.max_lag_seconds,
-                reference_ts=s.reference_ts, partition_by=partition_by,
-            )
-        elif s.kind == "pattern":
-            from anomalydetector_spark.operators.patterns import (
-                check_value_pattern,
-            )
-
-            r = check_value_pattern(
-                df, s.column, list(s.allowed), partition_by,
-                collapsed=s.collapsed,
-            )
         elif s.kind == "benford":
             from anomalydetector_spark.operators.conformity import (
                 check_benford,
             )
 
-            r = check_benford(
-                df, s.column, partition_by, max_mad=s.max_mad
-            )
+            r = check_benford(df, s.column, partition_by, max_mad=s.max_mad)
         elif s.kind == "robust_outliers":
             r = C.check_robust_outliers(
                 df, s.column, partition_by,
                 k=s.k, max_outlier_frac=s.max_outlier_frac,
             )
         else:
-            raise ValueError(f"unknown check kind: {s.kind!r}")
-        verdicts.append(r.verdicts)
-        if r.violations is not None:
-            violations.append(r.violations)
-
-    return SuiteResult(_union(verdicts), _union(violations), cached)
-
-
-def _compile_rollup(
-    df: DataFrame,
-    specs: list[CheckSpec],
-    partition_by: str | None,
-    persist_scans: bool,
-) -> tuple[DataFrame, list[DataFrame], list[DataFrame]]:
-    """``(verdicts, violation frames, cached frames)`` of the count-shaped
-    specs. Each spec gets its own counter: ``_v<i>``, a cube aggregate
-    for ``not_null_ts`` and ``referential`` (one dimension flag per
-    referential spec on the one flagged frame), a profile contribution
-    for ``unique``; ``min_rows`` reads ``rows_scanned``. A table has no
-    stat series here, so the keyed frame has no windows."""
-    keyed = fused.keyed_input(df, None, partition_by)
-    # the salted referential rung salts on a unique key when the suite
-    # has one (deterministic under task retry)
-    salt_on = next((s.column for s in specs if s.kind == "unique"), None)
-    flagged = keyed
-    aggs: list[Column] = []
-    contributions: list[DataFrame] = []
-    checks: list[tuple[str, str, str, str]] = []
-    violations: list[DataFrame] = []
-    cached: list[DataFrame] = []
-    # cube-counted specs first: the unioned violation frame's columns come
-    # in order of first appearance
-    for i, s in enumerate(sorted(specs, key=lambda s: s.kind == "unique")):
-        counter = f"_v{i}"
-        if s.kind == "min_rows":
-            checks.append(fused.min_rows_check(s.min_points))
             continue
-        if s.kind == "not_null_ts":
-            name, message = f"not_null_{s.column}", E.INVALID_TIMESTAMPS
-            bad = f"{fused.epoch_seconds_sql(df, s.column)} IS NULL"
-            aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
-            violations.append(
-                keyed.filter(bad).selectExpr(
-                    f"{C.sql_string(name)} AS check_name", "partition_key"
-                )
-            )
-        elif s.kind == "referential":
-            name = f"ref_{s.column}"
-            message = E.DANGLING_REFERENCE.format(s.column, s.dim_column)
-            flagged, ok = fused.ref_flag(
-                flagged,
-                s.dim,
-                s.column,
-                s.dim_column,
-                strategy=s.strategy,
-                salts=s.salts,
-                salt_on=salt_on,
-                known=f"_known{i}",
-            )
-            aggs.append(F.expr(f"count_if(NOT ({ok})) AS {counter}"))
-            violations.append(
-                flagged.filter(f"NOT ({ok})").selectExpr(
-                    f"{C.sql_string(name)} AS check_name",
-                    "partition_key",
-                    f"`{s.column}`",
-                )
-            )
-        else:  # unique
-            name = f"unique_{s.column}"
-            message = E.DUPLICATE_KEY.format(s.column)
-            profile = fused.url_profile(keyed, s.column)
-            if persist_scans:
-                profile = profile.persist()
-                cached.append(profile)
-            contributions.append(fused.dup_counts(profile, counter))
-            violations.append(
-                keyed.filter(fused.is_dup_key(s.column, profile)).selectExpr(
-                    f"{C.sql_string(name)} AS check_name",
-                    "partition_key",
-                    f"`{s.column}`",
-                )
-            )
-        checks.append(fused.count_check(name, counter, message))
-
-    cube = fused.counts_cube(flagged, aggs=aggs)
-    if persist_scans:
-        cube = cube.persist()
-        cached.append(cube)
-    roll = fused.partition_rollup(
-        cube, contributions, partitioned=partition_by is not None
-    )
-    return fused.rollup_verdicts(roll, checks), violations, cached
+        verdicts.append(r.verdicts)
+        violations.append(r.violations)
+    return SuiteResult(_union(verdicts), _union(violations), cached)
 
 
 def specs_from_json(
@@ -407,4 +665,5 @@ def specs_from_json(
             out.append(CheckSpec(kind=kind, dim=dim, **kw))
         except TypeError as e:
             raise ValueError(f"checks[{i}] ({kind}): {e}") from None
+    reject_repeats(out)
     return out

@@ -52,14 +52,16 @@ def _finite_mask(s: pd.Series) -> pd.Series:
 )
 @given(_value_table())
 def test_finite_and_bounds_counts(spark, pdf):
-    from anomalydetector_spark.operators import checks as C
+    from anomalydetector_spark.plans import suite as S
 
     # tuple rows, not pandas: pandas→Spark conversion folds float NaN
     # into null, which would shift NaN rows from P8's class to P4's
     rows = [(None if v is None else float(v), p) for v, p in zip(pdf["v"], pdf["p"])]
     df = spark.createDataFrame(rows, "v double, p string")
 
-    finite = C.check_finite(df, "v", partition_by="p").verdicts.toPandas()
+    finite = S.run_suite(
+        df, [S.finite("v")], partition_by="p", persist_scans=False
+    ).verdicts.toPandas()
     got_f = finite.set_index("partition_key")["violation_count"]
     want_f = (
         pdf["v"]
@@ -74,8 +76,9 @@ def test_finite_and_bounds_counts(spark, pdf):
     for p, w in want_f.items():
         assert got_f[p] == w, (p, pdf)
 
-    bounds = C.check_value_bounds(
-        df, "v", partition_by="p", lower=-1e100, upper=1e100
+    bounds = S.run_suite(
+        df, [S.bounds("v", -1e100, 1e100)], partition_by="p",
+        persist_scans=False,
     ).verdicts.toPandas()
     got_b = bounds.set_index("partition_key")["violation_count"]
     fin = _finite_mask(pdf["v"])

@@ -6,6 +6,10 @@ exact matching verdict message — but per-partition, not a raise."""
 import pyspark.sql.functions as F
 import pytest
 
+from anomalydetector_spark.kernel.sr import (
+    VALUE_LOWER_BOUND,
+    VALUE_UPPER_BOUND,
+)
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors
 from anomalydetector_spark.operators.referential import REF_STRATEGIES
@@ -49,7 +53,7 @@ def test_not_null_check_counts_and_rows(spark):
         [("a", "2024-01-01"), ("a", None), ("b", "2024-01-02")],
         "k string, ts string",
     ).withColumn("ts", F.to_timestamp("ts"))
-    res = C.check_not_null(df, "ts", "k", keep=["ts"])
+    res = S.run_suite(df, [S.not_null("ts")], partition_by="k")
     v = {r.partition_key: r for r in res.verdicts.collect()}
     assert not v["a"].passed and v["a"].violation_count == 1
     assert v["a"].error_message == errors.INVALID_TIMESTAMPS
@@ -61,7 +65,7 @@ def test_float_castable(spark):
     df = spark.createDataFrame(
         [("a", "1.5"), ("a", "oops"), ("a", None)], "k string, v string"
     )
-    res = C.check_float_castable(df, "v", "k")
+    res = S.run_suite(df, [S.float_castable("v")], partition_by="k")
     r = _one(res.verdicts)
     assert not r.passed and r.violation_count == 1
     assert r.error_message == errors.INVALID_VALUE_FORMAT.format("v")
@@ -72,10 +76,16 @@ def test_finite_and_bounds(spark):
         [("a", 1.0), ("a", float("nan")), ("a", float("inf")), ("a", 1e200)],
         "k string, v double",
     )
-    fin = _one(C.check_finite(df, "v", "k").verdicts)
+    fin = _one(S.run_suite(df, [S.finite("v")], partition_by="k").verdicts)
     assert not fin.passed and fin.violation_count == 2
     assert fin.error_message == errors.INVALID_SERIES_VALUE.format("v")
-    bnd = _one(C.check_value_bounds(df, "v", "k").verdicts)
+    bnd = _one(
+        S.run_suite(
+            df,
+            [S.bounds("v", VALUE_LOWER_BOUND, VALUE_UPPER_BOUND)],
+            partition_by="k",
+        ).verdicts
+    )
     assert not bnd.passed and bnd.violation_count == 1  # inf excluded, 1e200 caught
     assert bnd.error_message == errors.VALUE_OVERFLOW.format("v")
 
@@ -416,7 +426,7 @@ def test_text_extraction_malformed_utf8(spark):
     assert [r.url for r in tx.violations.collect()] == ["https://bad.example.org/2"]
 
 
-# ---- freshness / staleness (check_freshness) ----
+# ---- freshness / staleness (the suite's freshness spec) ----
 
 
 def test_freshness_pass_and_stale_partitions(spark):
@@ -428,9 +438,10 @@ def test_freshness_pass_and_stale_partitions(spark):
         ],
         "src string, ts string",
     ).select("src", F.col("ts").cast("timestamp").alias("ts"))
-    res = C.check_freshness(
-        df, "ts", max_lag_seconds=2 * 86400,
-        reference_ts="2024-01-11 00:00:00", partition_by="src",
+    res = S.run_suite(
+        df,
+        [S.freshness("ts", 2 * 86400, "2024-01-11 00:00:00")],
+        partition_by="src",
     )
     got = {r.partition_key: r for r in res.verdicts.collect()}
     assert got["a"].passed and got["a"].error_message is None
@@ -448,8 +459,9 @@ def test_freshness_no_timestamps_fails(spark):
         [("a", None), ("a", None)], "src string, ts timestamp"
     )
     r = _one(
-        C.check_freshness(
-            df, "ts", 3600, reference_ts="2024-01-01 00:00:00",
+        S.run_suite(
+            df,
+            [S.freshness("ts", 3600, "2024-01-01 00:00:00")],
             partition_by="src",
         ).verdicts
     )
@@ -464,8 +476,8 @@ def test_freshness_future_timestamp_passes(spark):
         [("2024-01-02 00:00:30",)], "ts string"
     ).select(F.col("ts").cast("timestamp").alias("ts"))
     r = _one(
-        C.check_freshness(
-            df, "ts", 0, reference_ts="2024-01-02 00:00:00"
+        S.run_suite(
+            df, [S.freshness("ts", 0, "2024-01-02 00:00:00")]
         ).verdicts
     )
     assert r.passed
@@ -476,14 +488,14 @@ def test_freshness_boundary_exact_lag(spark):
         [("2024-01-01 00:00:00",)], "ts string"
     ).select(F.col("ts").cast("timestamp").alias("ts"))
     ok = _one(
-        C.check_freshness(
-            df, "ts", 3600, reference_ts="2024-01-01 01:00:00"
+        S.run_suite(
+            df, [S.freshness("ts", 3600, "2024-01-01 01:00:00")]
         ).verdicts
     )
     assert ok.passed  # lag == max_lag is fresh (<=)
     bad = _one(
-        C.check_freshness(
-            df, "ts", 3599, reference_ts="2024-01-01 01:00:00"
+        S.run_suite(
+            df, [S.freshness("ts", 3599, "2024-01-01 01:00:00")]
         ).verdicts
     )
     assert not bad.passed
@@ -506,7 +518,7 @@ def test_freshness_via_suite(spark):
     assert got == {"a": True, "b": False}
 
 
-# ---- JSON payload schema (check_json_schema) ----
+# ---- JSON payload schema (the suite's json_schema spec) ----
 
 
 def test_json_schema_reasons_and_verdicts(spark):
@@ -520,8 +532,10 @@ def test_json_schema_reasons_and_verdicts(spark):
         ("b", '{"k": 3, "u": 7}'),        # u numeric still casts to string
     ]
     df = spark.createDataFrame(rows, "src string, props string")
-    res = C.check_json_schema(
-        df, "props", {"k": "bigint", "u": "string"}, partition_by="src"
+    res = S.run_suite(
+        df,
+        [S.json_schema("props", {"k": "bigint", "u": "string"})],
+        partition_by="src",
     )
     got = {r.partition_key: r for r in res.verdicts.collect()}
     assert not got["a"].passed and got["a"].violation_count == 3
@@ -540,14 +554,18 @@ def test_json_schema_all_valid_passes(spark):
     df = spark.createDataFrame(
         [('{"k": %d}' % i,) for i in range(20)], "props string"
     )
-    r = _one(C.check_json_schema(df, "props", {"k": "bigint"}).verdicts)
+    r = _one(
+        S.run_suite(df, [S.json_schema("props", {"k": "bigint"})]).verdicts
+    )
     assert r.passed and r.violation_count == 0 and r.rows_scanned == 20
 
 
 def test_json_schema_first_reason_wins_in_declaration_order(spark):
     # row missing BOTH keys: reason must be the first declared key
     df = spark.createDataFrame([("{}",)], "props string")
-    res = C.check_json_schema(df, "props", {"a": "bigint", "b": "string"})
+    res = S.run_suite(
+        df, [S.json_schema("props", {"a": "bigint", "b": "string"})]
+    )
     v, = res.violations.collect()
     assert v.json_reason == "missing:a"
 
@@ -555,12 +573,12 @@ def test_json_schema_first_reason_wins_in_declaration_order(spark):
 def test_json_schema_rejects_pathy_keys(spark):
     df = spark.createDataFrame([("{}",)], "props string")
     with pytest.raises(ValueError):
-        C.check_json_schema(df, "props", {"a.b": "bigint"})
+        S.run_suite(df, [S.json_schema("props", {"a.b": "bigint"})])
 
 
 def test_json_schema_plan_is_codegen(spark):
     df = spark.createDataFrame([('{"k": 1}',)], "props string")
-    res = C.check_json_schema(df, "props", {"k": "bigint"})
+    res = S.run_suite(df, [S.json_schema("props", {"k": "bigint"})])
     plan = (
         res.verdicts._jdf.queryExecution().executedPlan().toString()
     )

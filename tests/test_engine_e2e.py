@@ -606,12 +606,14 @@ def test_null_partition_keeps_its_unique_and_fd_counts(spark):
 
 @pytest.mark.parametrize("partition_by", [None, "domain"])
 def test_warm_run_job_counts(spark, partition_by):
-    """The per-run fixed cost in Spark jobs: a warm run's verdicts action
-    and its violation count start at most these many jobs (each adaptive
-    query stage and each broadcast is one job). The verdict path is one
-    rollup over the cube and the profile's duplicate rows: no distinct
-    in front of the dimension broadcast, no duplicate-key shuffle, no
-    empty-input seed join."""
+    """The per-run fixed cost in Spark jobs: a warm run's verdicts action,
+    its violation count and its drift outputs start at most these many
+    jobs (each adaptive query stage and each broadcast is one job). The
+    verdict path is one rollup over the cube and the profile's duplicate
+    rows: no distinct in front of the dimension broadcast, no
+    duplicate-key shuffle, no empty-input seed join. The drift pass
+    groups one union of the cube slice and the per-window key counts:
+    each side shuffles once."""
     from anomalydetector_spark.plans.audit import spark_jobs
 
     pages = datagen.generate_pages(spark, 3_000, seed=5)
@@ -627,7 +629,11 @@ def test_warm_run_job_counts(spark, partition_by):
             .count()
             .collect(),
         )
+        _, drift_jobs = spark_jobs(
+            spark,
+            lambda: (res.drift_scored.count(), res.drift_verdicts.collect()),
+        )
         res.unpersist()
-        counts.append((verdict_jobs, viol_jobs))
-    want = {None: (8, 4), "domain": (9, 4)}[partition_by]
-    assert counts[-1][0] <= want[0] and counts[-1][1] <= want[1], counts
+        counts.append((verdict_jobs, viol_jobs, drift_jobs))
+    want = {None: (8, 4, 6), "domain": (9, 4, 6)}[partition_by]
+    assert all(n <= w for n, w in zip(counts[-1], want)), counts

@@ -6,11 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from anomalydetector_spark.operators.patterns import (
-    char_signature,
-    check_value_pattern,
+    signature_sql,
     suggest_value_patterns,
     value_pattern_profile,
 )
+from anomalydetector_spark.plans import suite as S
 
 
 def test_char_signature_cases(spark):
@@ -28,13 +28,13 @@ def test_char_signature_cases(spark):
     got_c = {
         r.v: r.s
         for r in df.select(
-            "v", char_signature(F.col("v"), True).alias("s")
+            "v", F.expr(signature_sql("v", True)).alias("s")
         ).collect()
     }
     got_e = {
         r.v: r.s
         for r in df.select(
-            "v", char_signature(F.col("v"), False).alias("s")
+            "v", F.expr(signature_sql("v", False)).alias("s")
         ).collect()
     }
     # mirror via the published steps
@@ -74,7 +74,7 @@ def test_profile_suggest_enforce_loop(spark):
     # suggest at 99% keeps the id + date shapes, drops the corruption
     allowed = suggest_value_patterns(prof, min_coverage=0.99)
     assert allowed == ["A+-9+", "9+-9+-9+"]
-    res = check_value_pattern(df, "code", allowed)
+    res = S.run_suite(df, [S.pattern("code", allowed)])
     v = res.verdicts.collect()[0]
     assert v.passed is False and v.violation_count == 5
     bad = res.violations.collect()
@@ -84,8 +84,6 @@ def test_profile_suggest_enforce_loop(spark):
 
 
 def test_pattern_suite_and_partitions(spark):
-    from anomalydetector_spark.plans import suite as S
-
     rows = [("good", f"X{i:04d}") for i in range(50)] + [
         ("bad", "X0001"),
         ("bad", "oops"),
@@ -103,7 +101,7 @@ def test_pattern_suite_and_partitions(spark):
     assert [(r.partition_key, r.id) for r in viol] == [("bad", "oops")]
 
     with pytest.raises(ValueError, match="empty"):
-        check_value_pattern(df, "id", [])
+        S.run_suite(df, [S.pattern("id", [])])
 
 
 def test_profile_partition_invariance(spark):

@@ -215,8 +215,8 @@ def test_suggestions_hold_on_source_data(frame):
 def test_profile_json_keys_discovery_and_types(spark):
     import pandas as pd
 
-    from anomalydetector_spark.operators.checks import check_json_schema
     from anomalydetector_spark.operators.profile import profile_json_keys
+    from anomalydetector_spark.plans import suite as S
 
     rows = (
         [{"p": '{"a": %d, "b": "s%d", "c": 1.5}' % (i, i)} for i in range(90)]
@@ -239,7 +239,7 @@ def test_profile_json_keys_discovery_and_types(spark):
     schema = {k: r.inferred_type for k, r in sorted(prof.items()) if r.required}
     assert schema == {"a": "bigint", "b": "string"}
     clean = df.filter(df.p.isNotNull() & df.p.startswith("{"))
-    res = check_json_schema(clean, "p", schema)
+    res = S.run_suite(clean, [S.json_schema("p", schema)])
     v, = res.verdicts.collect()
     # the json-null 'a' row is the single violation the profiler predicted
     assert v.violation_count == 1

@@ -64,14 +64,7 @@ ALLOWED = {
         for name in (
             "ascending",
             "benford",
-            "bounds",
             "column_presence",
-            "finite",
-            "float_castable",
-            "freshness",
-            "json_schema",
-            "not_null",
-            "pattern",
             "robust_outliers",
         )
     },

@@ -169,24 +169,40 @@ def test_suite_gives_each_spec_its_own_counter(spark):
     assert sum(r.check_name == "not_null_ts2" for r in rows) == 2
 
 
-def test_suite_verdicts_read_one_rollup(spark):
-    """The count-shaped specs compile like the engine's checks: above the
-    cached cube and key profile, the verdicts are one rollup aggregation
-    read through one generator, not a branch per spec."""
+def test_suite_verdicts_read_one_rollup(spark, tmp_path):
+    """Every compiled spec kind compiles like the engine's checks: above
+    the cached cube and key profile, the verdicts are one rollup
+    aggregation read through one generator, not a branch per spec, and
+    every violation row comes from one tagged scan of the input."""
     from anomalydetector_spark.plans.audit import plan_node_names
 
-    df = spark.createDataFrame(
-        [("u1", "a.com", "2024-01-01 00:00:00"), ("u1", "b.com", None)],
-        "url string, domain string, ts string",
-    )
+    spark.createDataFrame(
+        [
+            ("u1", "a.com", "2024-01-01 00:00:00", 1.0, "1.5", "X10",
+             '{"k": 1}'),
+            ("u1", "b.com", None, float("nan"), "oops", "bad id",
+             '{"k": "x"}'),
+            ("u3", "a.com", "2024-01-02 00:00:00", 1e9, None, "X22", "{}"),
+        ],
+        "url string, domain string, ts string, v double, s string, "
+        "code string, props string",
+    ).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
     doms = spark.createDataFrame([("a.com",)], "domain string")
     res = S.run_suite(
         df,
         [
             S.min_rows(1),
             S.not_null_ts("ts"),
+            S.not_null("s"),
             S.unique("url"),
             S.referential("domain", doms),
+            S.finite("v"),
+            S.bounds("v", 0.0, 100.0),
+            S.float_castable("s"),
+            S.pattern("code", ["A9+"]),
+            S.json_schema("props", {"k": "bigint"}),
+            S.freshness("ts", 86400, "2024-01-05 00:00:00"),
         ],
     )
     nodes = plan_node_names(res.verdicts, cached_inputs=False)
@@ -194,11 +210,62 @@ def test_suite_verdicts_read_one_rollup(spark):
     # one aggregation: its partial and final halves
     assert nodes.count("HashAggregateExec") == 2, nodes
     assert nodes.count("InMemoryTableScanExec") == 2, nodes
+    viol_nodes = plan_node_names(res.violations, cached_inputs=False)
+    assert viol_nodes.count("FileSourceScanExec") == 1, viol_nodes
     v = {r.check_name: r.violation_count for r in res.verdicts.collect()}
     assert v == {
         "min_row_count": 0,
         "not_null_ts": 1,
+        "not_null_s": 1,
         "unique_url": 2,
         "ref_domain": 1,
+        "finite_v": 1,
+        "value_bounds_v": 1,
+        "float_castable_s": 1,
+        "pattern_code": 1,
+        "json_schema_props": 2,
+        "freshness_ts": 1,
     }
+    rows = res.violations.collect()
+    listed = {}
+    for r in rows:
+        listed[r.check_name] = listed.get(r.check_name, 0) + 1
+    assert listed == {
+        n: c for n, c in v.items()
+        if c and n not in ("min_row_count", "freshness_ts")
+    }
+    # a row's columns are set only where its check owns them
+    assert sorted(
+        (r.check_name, r.code, r.signature) for r in rows if r.signature
+    ) == [("pattern_code", "bad id", "a+ a+")]
+    assert sorted(
+        r.json_reason for r in rows if r.check_name == "json_schema_props"
+    ) == ["missing:k", "type:k"]
+    assert all(r.v is None for r in rows if r.check_name == "unique_url")
     res.unpersist()
+
+
+def test_suite_rejects_repeated_check(spark):
+    """A check that occurs twice would emit its verdicts and violation
+    rows twice; the suite and its JSON loader reject it by name."""
+    import pytest
+
+    df = spark.createDataFrame([("a",), ("a",), ("b",)], "url string")
+    with pytest.raises(ValueError, match="unique_url"):
+        S.run_suite(df, [S.unique("url"), S.unique("url")])
+    # not_null and not_null_ts on one column share a check name
+    with pytest.raises(ValueError, match="not_null_url"):
+        S.run_suite(df, [S.not_null("url"), S.not_null_ts("url")])
+    with pytest.raises(ValueError, match="value_bounds_v"):
+        S.specs_from_json(
+            [
+                {"kind": "bounds", "column": "v", "lower": 0, "upper": 1},
+                {"kind": "bounds", "column": "v", "lower": 2, "upper": 3},
+            ]
+        )
+    # distinct columns stay distinct checks
+    res = S.run_suite(df, [S.unique("url"), S.not_null("url")])
+    assert sorted(r.check_name for r in res.violations.collect()) == [
+        "unique_url",
+        "unique_url",
+    ]

@@ -94,9 +94,12 @@ def _warm_rerun_compiles(spark, pages, domains, runs: int = 3) -> list[int]:
     return added
 
 
-def _warm_run_jobs(spark, pages, domains, partition_by) -> tuple[int, int]:
-    """Spark jobs of a warm validation's verdicts action and of its
-    violation count (the second of two identical runs)."""
+def _warm_run_jobs(
+    spark, pages, domains, partition_by
+) -> tuple[int, int, int]:
+    """Spark jobs of a warm validation's verdicts action, of its
+    violation count and of its drift outputs (the second of two
+    identical runs)."""
     from anomalydetector_spark.engine import ValidationConfig, run_validation
     from anomalydetector_spark.plans.audit import spark_jobs
 
@@ -111,8 +114,12 @@ def _warm_run_jobs(spark, pages, domains, partition_by) -> tuple[int, int]:
             .count()
             .collect(),
         )
+        _, drift_jobs = spark_jobs(
+            spark,
+            lambda: (res.drift_scored.count(), res.drift_verdicts.collect()),
+        )
         res.unpersist()
-    return verdict_jobs, viol_jobs
+    return verdict_jobs, viol_jobs, drift_jobs
 
 
 def check(name: str, ok: bool, detail: str = "") -> bool:
@@ -150,8 +157,10 @@ def main() -> None:
     )
     ok &= check("duplicate-violation join is broadcast", "Broadcast" in uniq_plan)
 
-    # the suite compiles its count-shaped checks like the engine: every
-    # verdict reads one rollup aggregation through one generator
+    # the suite compiles its checks like the engine: every verdict reads
+    # one rollup aggregation through one generator, and every violation
+    # row comes from one tagged scan of the input (the key profile read
+    # from its cache)
     from anomalydetector_spark.plans.audit import plan_node_names
 
     suite = S.run_suite(
@@ -159,8 +168,15 @@ def main() -> None:
         [
             S.min_rows(),
             S.not_null_ts("warc_ts"),
+            S.not_null("text"),
             S.unique("url"),
             S.referential("domain", domains),
+            S.finite("text"),
+            S.bounds("text", 0.0, 1.0),
+            S.float_castable("lang"),
+            S.pattern("lang", ["a+"]),
+            S.json_schema("text", {"k": "bigint"}),
+            S.freshness("warc_ts", 86400, "2024-01-01 00:00:00"),
         ],
     )
     suite_nodes = plan_node_names(suite.verdicts, cached_inputs=False)
@@ -170,16 +186,19 @@ def main() -> None:
         and suite_nodes.count("HashAggregateExec") == 2,
         ", ".join(suite_nodes),
     )
+    suite.verdicts.collect()
+    suite_viol_scans = _executed_parquet_scans(plan_of(suite.violations))
+    ok &= check(
+        "suite violations: one scan of the input for every check",
+        suite_viol_scans == 1,
+        f"{suite_viol_scans} executed parquet scans",
+    )
     suite.unpersist()
 
     # the fused engine path: cube + profile + one-scan violations
     from anomalydetector_spark.engine import ValidationConfig, run_validation
-    from anomalydetector_spark.plans import fused
 
-    keyed = fused.keyed_input(pages, "1 day", None)
-    cube_plan = plan_of(
-        fused.build_fused_scans(keyed, ref_dim=domains).cube
-    )
+    cube_plan = plan_of(run_validation(pages, domains).cached[0])
     ok &= check(
         "counts cube prunes html from the scan",
         "ReadSchema" in cube_plan
@@ -277,14 +296,17 @@ def main() -> None:
     # broadcast is one): the verdicts are one rollup over the cube and
     # the profile's duplicate rows (no distinct before the dimension
     # broadcast, no duplicate-key shuffle, no empty-input seed join); a
-    # partitioned run adds one stage that gathers the partition rows
-    for part, want in ((None, (8, 4)), ("domain", (9, 4))):
+    # partitioned run adds one stage that gathers the partition rows; the
+    # drift pass groups one union of the cube slice and the key counts
+    for part, want in ((None, (8, 4, 6)), ("domain", (9, 4, 6))):
         got = _warm_run_jobs(spark, pages, domains, part)
         ok &= check(
             f"warm run (partition_by={part}) starts <= {want[0]} verdict "
-            f"jobs and <= {want[1]} violation-count jobs",
-            got[0] <= want[0] and got[1] <= want[1],
-            f"jobs: verdicts {got[0]}, violation count {got[1]}",
+            f"jobs, <= {want[1]} violation-count jobs and <= {want[2]} "
+            "drift-output jobs",
+            all(n <= w for n, w in zip(got, want)),
+            f"jobs: verdicts {got[0]}, violation count {got[1]}, "
+            f"drift outputs {got[2]}",
         )
 
     # a warm rerun finds every generated class in the codegen cache
@@ -342,20 +364,18 @@ def main() -> None:
     # (identical executed-scan count with and without a suite of asserts)
     from anomalydetector_spark.operators.asserts import RowAssert
 
-    base_cube_plan = plan_of(fused.build_fused_scans(keyed, ref_dim=domains).cube)
-    from anomalydetector_spark.operators.asserts import row_assert_counts
-
-    asserted = fused.build_fused_scans(
-        keyed,
-        ref_dim=domains,
-        extra_cube_aggs=row_assert_counts(
-            (
+    base_cube_plan = plan_of(run_validation(pages, domains).cached[0])
+    asserted = run_validation(
+        pages,
+        domains,
+        ValidationConfig(
+            asserts=(
                 RowAssert("a1", "length(text) > 0"),
                 RowAssert("a2", "url like 'http%'"),
                 RowAssert("a3", "lang is not null"),
             )
         ),
-    ).cube
+    ).cached[0]
     assert_plan = plan_of(asserted)
     ok &= check(
         "row asserts ride the cube scan: same executed-scan count, no "
@@ -1653,15 +1673,17 @@ def main() -> None:
     )
 
     from anomalydetector_spark.operators.patterns import (
-        check_value_pattern,
         value_pattern_profile,
     )
 
     pages_str = pages.select(F.col("url"), F.col("domain"))
     pat_prof_plan = plan_of(value_pattern_profile(pages_str, "url"))
     pat_chk_plan = plan_of(
-        check_value_pattern(
-            pages_str, "url", ["a+://a+.a+/a+9+"], partition_by="domain"
+        S.run_suite(
+            pages_str,
+            [S.pattern("url", ["a+://a+.a+/a+9+"])],
+            partition_by="domain",
+            persist_scans=False,
         ).verdicts
     )
     ok &= check(

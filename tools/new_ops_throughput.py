@@ -180,19 +180,18 @@ def main():
         lambda: profile_json_keys(json_src, "p"),
     )
 
-    from anomalydetector_spark.operators.checks import check_freshness
+    from anomalydetector_spark.plans import suite as S
 
     bench(
-        "check_freshness (50 partitions)",
+        "suite freshness (50 partitions)",
         f"{N//1000}k rows",
-        lambda: check_freshness(
+        lambda: S.run_suite(
             base.withColumn(
                 "bucket", (F.col("doc_id") % 50).cast("string")
             ),
-            "ts",
-            3600,
-            reference_ts="2024-02-01 00:00:00",
+            [S.freshness("ts", 3600, "2024-02-01 00:00:00")],
             partition_by="bucket",
+            persist_scans=False,
         ).verdicts,
     )
 
@@ -360,9 +359,9 @@ def batch3(rows: int = 1_000_000):
     )
 
     from anomalydetector_spark.operators.patterns import (
-        check_value_pattern,
         value_pattern_profile,
     )
+    from anomalydetector_spark.plans import suite as S
     from anomalydetector_spark.operators.reconcile import (
         reconcile_aggregate,
     )
@@ -383,9 +382,11 @@ def batch3(rows: int = 1_000_000):
         lambda: value_pattern_profile(strs, "code"),
     )
     bench(
-        "check_value_pattern (1 allowed signature)",
+        "suite pattern (1 allowed signature)",
         f"{N//1000}k strings",
-        lambda: check_value_pattern(strs, "code", ["A+-9+"]).verdicts,
+        lambda: S.run_suite(
+            strs, [S.pattern("code", ["A+-9+"])], persist_scans=False
+        ).verdicts,
     )
     summ = (
         base.select((F.col("doc_id") % 100000).alias("k"))

@@ -126,26 +126,27 @@ def q_min_rows_verdict(spark, sf_dir):
 def q_custom_asserts(spark, sf_dir):
     """User-defined constraints (operators/asserts.py): three row-level
     SQL predicates (one with a violation-tolerance gate) + two
-    aggregate-metric gates, evaluated per event_type partition. All row
-    asserts share one aggregation scan; all agg asserts share one more.
+    aggregate-metric gates, evaluated per event_type partition. The row
+    asserts compile as a check suite (plans/suite.run_suite: counters on
+    one cube scan); all agg asserts share one more aggregation scan.
     NULL semantics under test: row predicates follow SQL CHECK (NULL
     passes), agg predicates fail on NULL metric."""
     from anomalydetector_spark.operators.asserts import (
         AggAssert,
         RowAssert,
         check_agg_asserts,
-        check_row_asserts,
     )
 
     ev = _t(spark, sf_dir, "events")
-    rv = check_row_asserts(
+    rv = S.run_suite(
         ev,
-        (
+        [
             RowAssert("value_positive", "value > 0"),
             RowAssert("value_le_300", "value <= 300", 0.002),
             RowAssert("user_known", "user_id is not null"),
-        ),
+        ],
         partition_by="event_type",
+        persist_scans=False,
     ).verdicts.withColumn("metric_value", F.lit(None).cast("double"))
     av = check_agg_asserts(
         ev,

@@ -1490,26 +1490,21 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
     w4 = None
     if getattr(args, "quarantine", False):
         # streaming dead-letter split: the batch engine's tag_rows is a
-        # pure codegen projection, so it streams as-is; only STATELESS
-        # checks apply per-row here (null ts + suite row asserts) —
-        # duplicate keys are the dedup stage's job, cross-partition
-        # checks remain batch. parquet sink + checkpoint = exactly-once
-        # per input file; partitionBy splits clean/quarantined in the
-        # same single pass as the batch path.
+        # pure codegen projection, so it streams as-is; only ROW-LOCAL
+        # checks apply per-row here (null/unparseable ts + suite row
+        # asserts) — duplicate keys are the dedup stage's job,
+        # cross-partition checks remain batch. parquet sink + checkpoint
+        # = exactly-once per input file; partitionBy splits
+        # clean/quarantined in the same single pass as the batch path.
         from anomalydetector_spark.operators import quarantine as Q
+        from anomalydetector_spark.plans import suite as S
 
-        st_asserts = ()
+        st_specs = [S.not_null_ts("warc_ts")]
         if getattr(args, "suite", None):
             from anomalydetector_spark.plans.spec import load_suite
 
-            st_asserts = tuple(load_suite(args.suite).asserts)
-        tagged = Q.tag_rows(
-            raw_pages,
-            st_asserts,
-            extra_tags=[
-                F.when(F.col("warc_ts").isNull(), F.lit("not_null_warc_ts"))
-            ],
-        )
+            st_specs += load_suite(args.suite).asserts
+        tagged = Q.tag_rows(raw_pages, st_specs)
         w4 = (
             tagged.writeStream.format("parquet")
             .partitionBy(Q.STATUS_COL)

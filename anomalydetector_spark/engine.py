@@ -51,9 +51,12 @@ class ValidationConfig:
     sr: SrParams = field(default_factory=SrParams)
     min_points: int = 12
     unique_key: str = "url"
-    # opt-in: the one check pair that must read the ``html`` binary /
-    # full ``text`` bytes (north-rule byte-identity invariant). Off by
-    # default so the standard suite never scans html.
+    # opt-in: the north-rule byte-identity pair, the only checks that
+    # read the ``html`` binary / full ``text`` bytes. ``text_extraction``
+    # is one more counter on the cube and one more tag on the violation
+    # scan (so row_status covers it); the per-url text consistency runs
+    # its own hash aggregate. Off by default so the standard suite
+    # never scans html.
     verify_text_extraction: bool = False
     # opt-in: Unicode normalization-form check (operators/normalize) —
     # like verify_text_extraction it must move full text bytes (one
@@ -172,10 +175,12 @@ class ValidationResult:
     def row_status(self) -> DataFrame | None:
         """Input rows + violated_checks array + validation_status — the
         quarantine split (operators/quarantine.py). Shares the violation
-        extraction's one-scan DAG (so it covers the row-addressable
-        checks: null ts, duplicate key, dangling dim, row asserts — not
-        the opt-in html byte-identity pair, which scans separately by
-        design); sink clean+quarantined in one pass with
+        extraction's one-scan DAG, so it covers every compiled
+        row-addressable check: null ts, duplicate key, dangling dim, row
+        asserts, JSON schema, functional dependencies and, when
+        verified, text extraction — not the per-url text consistency
+        or the Unicode normalization check, which run their own
+        programs; sink clean+quarantined in one pass with
         quarantine.write_split."""
         return self.row_status_of() if self.row_status_of else None
 
@@ -205,9 +210,6 @@ def run_validation(
         pages, cfg.window_duration, cfg.partition_by, extra=extra
     )
 
-    from anomalydetector_spark.operators import asserts as A
-
-    A._check_names_unique(tuple(cfg.asserts) + tuple(cfg.agg_asserts))
     fd_pairs = [tuple(pair) for pair in cfg.functional_deps]
     fd_names = [S.check_name(pair) for pair in fd_pairs]
     if len(set(fd_names)) != len(fd_names):
@@ -246,6 +248,10 @@ def run_validation(
                 salts=cfg.ref_salts,
             )
         )
+    if cfg.verify_text_extraction:
+        # byte-identity invariant (north rule): text == extract_text(html)
+        # per row — the one counter that makes the cube scan read html
+        specs.append(S.text_extraction())
     compiled = S.compile_checks(
         keyed,
         specs,
@@ -265,9 +271,11 @@ def run_validation(
             C.check_schema_types(pages, cfg.expected_schema).verdicts
         )
     if cfg.agg_asserts:
+        from anomalydetector_spark.operators.asserts import check_agg_asserts
+
         # all agg-assert metrics share ONE extra aggregation pass
         verdict_frames.append(
-            A.check_agg_asserts(
+            check_agg_asserts(
                 keyed, tuple(cfg.agg_asserts),
                 partition_by=F.col("partition_key"),
             ).verdicts
@@ -300,20 +308,13 @@ def run_validation(
         )
 
     if cfg.verify_text_extraction:
-        # byte-identity invariant (north rule): text == extract_text(html)
-        # per row, and rows sharing a url agree on text bytes. These are
-        # the only stages that read ``html``/full ``text``; their scans
-        # are separate from the fused cube/profile by design.
-        tx = C.check_text_extraction(
-            keyed, partition_by=F.col("partition_key"), keep=[cfg.unique_key]
-        )
+        # rows sharing a url agree on text bytes: one hash aggregate on
+        # the key, its violations the offending keys
         consistency = C.check_key_text_consistency(
             keyed, key_col=cfg.unique_key, partition_by=F.col("partition_key")
         )
-        verdict_frames += [tx.verdicts, consistency.verdicts]
+        verdict_frames.append(consistency.verdicts)
         violations = violations.unionByName(
-            tx.violations.select("check_name", "partition_key", cfg.unique_key)
-        ).unionByName(
             consistency.violations.select(
                 "check_name", "partition_key", cfg.unique_key
             )

@@ -1,4 +1,6 @@
-"""Column-expression helpers — pure ``pyspark.sql.functions`` compositions.
+"""Column-expression helpers — pure ``pyspark.sql.functions`` compositions
+(the text decode and extractor are SQL text, shared with the check
+compiler).
 
 Everything here stays JVM-side (whole-stage codegen); no Python UDFs.
 Where cross-engine determinism matters (DuckDB oracle parity), hashing is
@@ -91,23 +93,27 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def lenient_utf8(col: Column) -> Column:
-    """Binary → string with malformed UTF-8 becoming NULL rather than an
-    error: under Spark 4's default ANSI mode ``decode(col,'UTF-8')``
-    THROWS on the first bad byte — one corrupt page of 10^12 would kill
-    the job. The lenient binary→string cast + ``try_validate_utf8``
-    turns those rows into per-row violations instead. The ONE decode
-    idiom every text-bearing path shares (extractor, WET ingest), so the
-    decode semantics can never silently diverge between them."""
-    return F.try_validate_utf8(col.cast("string"))
+def lenient_utf8(col: str) -> str:
+    """SQL of the SQL expression ``col`` (binary) decoded as UTF-8, with
+    malformed UTF-8 becoming NULL rather than an error: under Spark 4's
+    default ANSI mode ``decode(col,'UTF-8')`` THROWS on the first bad
+    byte — one corrupt page of 10^12 would kill the job. The lenient
+    binary→string cast + ``try_validate_utf8`` turns those rows into
+    per-row violations instead. The ONE decode idiom every text-bearing
+    path shares (extractor, WET ingest), so the decode semantics can
+    never silently diverge between them. SQL text, so the check
+    compiler's predicates and ``F.expr`` callers share one definition."""
+    return f"try_validate_utf8(CAST({col} AS STRING))"
 
 
-def extract_text(html: Column) -> Column:
-    """Deterministic html → text extraction, entirely JVM-side: lenient
-    UTF-8 decode (:func:`lenient_utf8`) + tag strip. This is the
-    engine's canonical extractor; the per-url byte-identity invariant
-    (north rule) is defined against it — ``check_text_extraction``
+def extract_text(html: str) -> str:
+    """SQL of the deterministic html → text extraction of the SQL
+    expression ``html``, entirely JVM-side: lenient UTF-8 decode
+    (:func:`lenient_utf8`) + tag strip. This is the engine's canonical
+    extractor; the per-url byte-identity invariant (north rule) is
+    defined against it — the check suite's ``text_extraction`` spec
     re-runs it over stored ``html`` and flags any row whose ``text``
     column differs byte-wise. No Python UDF: at 10^12 docs the extractor
-    must live inside whole-stage codegen."""
-    return F.regexp_replace(lenient_utf8(html), "<[^>]+>", "")
+    must live inside whole-stage codegen. Column callers wrap it in
+    ``F.expr``."""
+    return f"regexp_replace({lenient_utf8(html)}, '<[^>]+>', '')"

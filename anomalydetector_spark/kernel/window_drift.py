@@ -5,9 +5,10 @@ window with its predecessor:
 
 * the batch engine's grouped drift pass (``drift.fused_drift``), which
   derives every stat series of one partition inside one pandas call,
-* the streaming twins (``streaming/shape_stream``,
-  ``streaming/numeric_stream``), which pair finalized windows as they
-  arrive.
+* the streaming shape-drift twin (``streaming/shape_stream``), which
+  pairs finalized windows as they arrive,
+* the streaming seasonal check (``streaming/seasonal_stream``), which
+  quantizes values with :func:`half_up_micro`.
 
 The histogram distances mirror the batch Spark operators in
 ``operators/divergence.py`` term for term: per-bin cross-multiplied

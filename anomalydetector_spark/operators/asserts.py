@@ -38,8 +38,14 @@ ANSI note: Spark 4 runs ANSI-on here, so a predicate like
 NULL. Write defensive expressions with ``try_cast`` / ``try_divide`` —
 the engine deliberately does not mask user-expression errors.
 
-Standalone use (outside the engine) is one scan per family via
-:func:`check_row_asserts` / :func:`check_agg_asserts`.
+Standalone use (outside the engine): row asserts are specs of any
+table's check suite (plans/suite.run_suite — one cube scan for the
+verdicts, one tagged scan for the violation rows) and of the quarantine
+split (operators/quarantine.tag_rows); agg asserts run in one scan via
+:func:`check_agg_asserts`. A row assert's violation rows in
+``run_suite`` carry ``(check_name, partition_key)`` only, no row
+identity: ``tag_rows`` (or the engine's ``row_status``) is the
+row-addressable view.
 """
 
 from __future__ import annotations
@@ -79,9 +85,6 @@ class RowAssert:
         """SQL true iff the predicate is FALSE (SQL CHECK semantics)."""
         return f"NOT coalesce(({self.expr}), true)"
 
-    def violated(self) -> Column:
-        return F.expr(self.violation)
-
 
 @dataclass(frozen=True)
 class AggAssert:
@@ -103,77 +106,6 @@ def _check_names_unique(asserts) -> None:
     dup = sorted({n for n in names if names.count(n) > 1})
     if dup:
         raise ValueError(f"duplicate assert name(s): {dup}")
-
-
-def row_assert_counts(asserts: tuple[RowAssert, ...]) -> list[Column]:
-    """One ``sum(CASE WHEN violated)`` aggregate column per assert, named
-    ``_assert_{i}``: every assert's count in one aggregation."""
-    return [
-        F.sum(F.when(a.violated(), F.lit(1)).otherwise(F.lit(0))).alias(
-            f"_assert_{i}"
-        )
-        for i, a in enumerate(asserts)
-    ]
-
-
-def row_assert_verdicts(
-    rolled: DataFrame, asserts: tuple[RowAssert, ...]
-) -> list[DataFrame]:
-    """Verdict frames from a per-partition rollup carrying
-    ``rows_scanned`` and the ``_assert_{i}`` violation counts."""
-    out = []
-    for i, a in enumerate(asserts):
-        v = F.coalesce(F.col(f"_assert_{i}"), F.lit(0))
-        budget = F.col("rows_scanned") * F.lit(a.max_violation_fraction)
-        out.append(
-            rolled.select(
-                F.lit(f"assert_{a.name}").alias("check_name"),
-                "partition_key",
-                (v <= budget).alias("passed"),
-                F.when(
-                    v > budget,
-                    F.lit(ROW_ASSERT_FAILED.format(a.name, a.expr)),
-                ).alias("error_message"),
-                v.alias("violation_count"),
-                "rows_scanned",
-            )
-        )
-    return out
-
-
-def row_assert_tags(asserts: tuple[RowAssert, ...]) -> list[Column]:
-    """Violation-row tag expressions for a one-scan extraction:
-    ``when(violated, 'assert_<name>')``."""
-    return [
-        F.when(a.violated(), F.lit(f"assert_{a.name}")) for a in asserts
-    ]
-
-
-def check_row_asserts(
-    df: DataFrame,
-    asserts: tuple[RowAssert, ...] | list[RowAssert],
-    partition_by: Column | str | None = None,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """Standalone evaluation: ALL row asserts in one aggregation scan
-    (plus the violation DAG, materialized only if the caller sinks it)."""
-    asserts = tuple(asserts)
-    _check_names_unique(asserts)
-    from anomalydetector_spark.operators.checks import _part
-
-    keyed = _part(df, partition_by)
-    rolled = keyed.groupBy("partition_key").agg(
-        F.count(F.lit(1)).alias("rows_scanned"), *row_assert_counts(asserts)
-    )
-    verdicts = row_assert_verdicts(rolled, asserts)
-    hit = F.filter(F.array(*row_assert_tags(asserts)), lambda t: t.isNotNull())
-    violations = keyed.select(
-        F.explode(hit).alias("check_name"), "partition_key", *(keep or [])
-    )
-    out = verdicts[0]
-    for v in verdicts[1:]:
-        out = out.unionByName(v)
-    return CheckResult(out, violations)
 
 
 def check_agg_asserts(

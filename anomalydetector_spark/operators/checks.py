@@ -13,11 +13,12 @@ Design rules for 10^12-doc scale:
 * every check is a single aggregation or window pass over pruned columns
   (never reads ``html`` unless the check targets it),
 * the count-shaped and row-predicate verdicts (min rows, nulls,
-  finiteness, bounds, float castability, patterns, JSON schema,
-  freshness, uniqueness, referential integrity) are not here: they
-  compile onto the shared scans, one rollup and one violation scan
-  (plans/suite.compile_checks), for the pages engine and for any
-  table's check suite alike,
+  finiteness, bounds, float castability, patterns, JSON schema, text
+  byte identity against the html's extraction, row asserts, freshness,
+  uniqueness, referential integrity, functional dependencies) are not
+  here: they compile onto the shared scans, one rollup and one
+  violation scan (plans/suite.compile_checks), for the pages engine and
+  for any table's check suite alike,
 * violations are lazily-evaluated DataFrames — only materialized when the
   caller sinks them.
 """
@@ -212,44 +213,6 @@ def validate_batch_size(batch_size: int, min_points: int = MIN_POINTS) -> None:
     """P2 — config validation, driver-side (invoker.py:46-47)."""
     if 0 < batch_size < min_points:
         raise ValueError(errors.INVALID_BATCH_SIZE.format(min_points))
-
-
-def check_text_extraction(
-    df: DataFrame,
-    html_col: str = "html",
-    text_col: str = "text",
-    partition_by: Column | str | None = None,
-    keep: list[str] | None = None,
-) -> CheckResult:
-    """North-rule invariant — stored ``text`` must be byte-identical to
-    the canonical extraction of ``html`` (functions.extract_text) for
-    every row with non-null text. Entirely JVM-side (decode + regexp in
-    whole-stage codegen); opt-in at the engine level because it is the
-    one check that must read the ``html`` binary column.
-
-    Byte identity is asserted by comparing UTF-8 encodings, not string
-    equality, so a lossy decode can never mask a mismatch."""
-    from anomalydetector_spark.functions import extract_text
-
-    name = "text_extraction"
-    p = _part(df, partition_by)
-    extracted = extract_text(F.col(html_col))
-    # malformed-UTF-8 html extracts to NULL (functions.extract_text) —
-    # with non-null stored text that is a violation, not a skip
-    bad = F.col(text_col).isNotNull() & (
-        extracted.isNull()
-        | (F.encode(extracted, "UTF-8") != F.encode(F.col(text_col), "UTF-8"))
-    )
-    counted = p.groupBy("partition_key").agg(
-        F.sum(bad.cast("long")).alias("violation_count"),
-        F.count(F.lit(1)).alias("rows_scanned"),
-    )
-    return CheckResult(
-        _verdict_from_violation_count(
-            counted, name, errors.TEXT_EXTRACTION_MISMATCH.format(text_col, html_col)
-        ),
-        _violation_rows(p, bad, name, keep or ["url", text_col]),
-    )
 
 
 def fd_cols(side: str | list[str] | tuple) -> list[str]:

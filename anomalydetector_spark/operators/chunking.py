@@ -56,8 +56,8 @@ def chunk_documents(
     ``chunk_text`` is the window's tokens rejoined with single spaces
     (chunking is token-level, so intra-document whitespace runs are
     normalized — the per-row invariant is on the token SEQUENCE, not
-    raw bytes; byte-level fidelity checks live in
-    ``checks.check_text_extraction``).
+    raw bytes; byte-level fidelity is the check suite's
+    ``text_extraction`` spec).
 
     Empty or NULL ``text_col`` emits no rows (filter upstream if
     empty documents must be surfaced — ``operators/quality`` already

@@ -81,8 +81,8 @@ def check_unicode_normalization(
 ) -> CheckResult:
     """Verdict + violation rows for text not already in ``form``.
 
-    Byte identity (UTF-8 encode compare, same rule as
-    ``check_text_extraction``) decides violation, so a normalization
+    Byte identity (UTF-8 encode compare, same rule as the check
+    suite's ``text_extraction`` spec) decides violation, so a normalization
     that changes bytes but not rendered appearance still flags. NULL
     text is not a violation (that's the ``not_null`` check's job)."""
     name = f"unicode_{form.lower()}"

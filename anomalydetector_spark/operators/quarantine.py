@@ -5,10 +5,12 @@ aml_component/invoker.py:43-82; a 10^12-row pipeline instead routes bad
 rows aside and keeps going).
 
 Spark-first shape: the tagging is ONE pure projection (an array of
-``when(violated, name)`` expressions filtered to non-null, fully codegen,
-zero shuffle), and the split is NOT two filtered writes (two scans) but
-one ``partitionBy(validation_status)`` write — one scan, two output
-directories.
+``CASE WHEN <violated> THEN <check_name> END`` tags filtered to non-null,
+fully codegen, zero shuffle), and the split is NOT two filtered writes
+(two scans) but one ``partitionBy(validation_status)`` write — one scan,
+two output directories. Each tag is the one the check compiler puts on
+its violation scan (plans/suite.row_tag), so a row is quarantined here
+exactly when a check suite lists it as a violation.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.operators.asserts import RowAssert, row_assert_tags
+from anomalydetector_spark.plans import suite as S
 
 STATUS_COL = "validation_status"
 VIOLATED_COL = "violated_checks"
@@ -36,21 +38,19 @@ def status_columns(tags: list[Column]) -> dict[str, Column]:
     }
 
 
-def tag_rows(
-    df: DataFrame,
-    asserts: tuple[RowAssert, ...] | list[RowAssert],
-    extra_tags: list[Column] | None = None,
-) -> DataFrame:
+def tag_rows(df: DataFrame, specs: list) -> DataFrame:
     """Append ``violated_checks`` and ``validation_status``
-    (:func:`status_columns`).
-
-    ``extra_tags`` lets callers ride additional ``when(cond, name)``
-    columns beside the asserts' tags, so the status is one projection
-    over the scan the violation rows come from."""
-    if not asserts and not extra_tags:
-        raise ValueError("tag_rows needs at least one assert or extra tag")
-    tags = row_assert_tags(tuple(asserts)) + list(extra_tags or [])
-    return df.withColumns(status_columns(tags))
+    (:func:`status_columns`) for ``specs``: row asserts and the check
+    suite's row-local kinds (``not_null_ts``, ``not_null``, ``finite``,
+    ``bounds``, ``float_castable``, ``pattern``, ``json_schema``,
+    ``text_extraction``). A spec that needs an aggregate or a join
+    (``unique``, ``referential``, a functional dependency,
+    ``freshness``, ``min_rows``) raises ``ValueError``, and so does a
+    repeated check."""
+    if not specs:
+        raise ValueError("tag_rows needs at least one check")
+    S.reject_repeats(specs)
+    return df.withColumns(status_columns([S.row_tag(s, df) for s in specs]))
 
 
 def split_counts(tagged: DataFrame) -> DataFrame:

@@ -129,9 +129,7 @@ def series_cusum(
     ``(*part_cols, mu, sigma)`` frame (see :func:`cusum_reference` —
     typically frozen from an in-control period) and
     ``z = (v − mu)/sigma`` — the ONLINE form whose walk is a pure
-    left-to-right function of the prefix, which is what the streaming
-    twin (:mod:`~anomalydetector_spark.streaming.cusum_stream`)
-    replays bit-for-bit. ``k`` is the slack and ``h`` the alarm
+    left-to-right function of the prefix. ``k`` is the slack and ``h`` the alarm
     threshold, both in σ units. Output per input row::
 
         (*part_cols, order_col, value, z, s_pos, s_neg,

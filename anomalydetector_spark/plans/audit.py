@@ -105,20 +105,20 @@ _WRAPPERS = ("InputAdapter", "WholeStageCodegenExec", "ColumnarToRowExec")
 GROUPED_PANDAS_NODES = ("FlatMapGroupsInPandasExec", "FlatMapCoGroupsInPandasExec")
 
 
-def plan_node_names(df: DataFrame, cached_inputs: bool = True) -> list[str]:
-    """Class names of every physical node behind ``df``, adaptive plans
-    read through their initial (pre-stage) plan. A persisted ``df`` is
-    walked through its own cache; the other cached frames it reads are
-    walked too unless ``cached_inputs=False``, which confines the walk to
-    the work ``df`` adds on top of them."""
-    names: list[str] = []
+def _plan_nodes(df: DataFrame, cached_inputs: bool = True) -> list:
+    """``(class name, node)`` of every physical node behind ``df``,
+    adaptive plans read through their initial (pre-stage) plan. A
+    persisted ``df`` is walked through its own cache; the other cached
+    frames it reads are walked too unless ``cached_inputs=False``, which
+    confines the walk to the work ``df`` adds on top of them."""
+    nodes: list = []
 
     def walk(node, own: bool) -> None:
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             walk(node.inputPlan(), own)
             return
-        names.append(name)
+        nodes.append((name, node))
         if name == "InMemoryTableScanExec":
             if own or cached_inputs:
                 walk(node.relation().cachedPlan(), False)
@@ -127,7 +127,24 @@ def plan_node_names(df: DataFrame, cached_inputs: bool = True) -> list[str]:
             walk(c, own and name in _WRAPPERS)
 
     walk(df._jdf.queryExecution().executedPlan(), True)
-    return names
+    return nodes
+
+
+def plan_node_names(df: DataFrame, cached_inputs: bool = True) -> list[str]:
+    """Class names of every physical node behind ``df`` (walked as
+    :func:`_plan_nodes` walks it)."""
+    return [name for name, _ in _plan_nodes(df, cached_inputs)]
+
+
+def scan_columns(df: DataFrame) -> list[list[str]]:
+    """The columns each file scan behind ``df`` reads (its pruned read
+    schema), cached inputs included: which scans pay for a wide column
+    such as ``html``."""
+    return [
+        list(node.requiredSchema().fieldNames())
+        for name, node in _plan_nodes(df)
+        if name == "FileSourceScanExec"
+    ]
 
 
 def python_or_rdd_nodes(df: DataFrame) -> list[str]:

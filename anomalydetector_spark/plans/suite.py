@@ -8,8 +8,9 @@ its own checks too — onto the minimal set of scans:
 
 * every count-shaped and row-predicate spec (``min_rows``,
   ``not_null_ts``, ``not_null``, ``finite``, ``bounds``,
-  ``float_castable``, ``pattern``, ``json_schema``, ``freshness``,
-  ``referential``, ``unique``) is a counter: a ``count_if`` on ONE
+  ``float_castable``, ``pattern``, ``json_schema``,
+  ``text_extraction``, ``freshness``, ``referential``, ``unique``), row
+  assert and functional dependency is a counter: a ``count_if`` on ONE
   counts cube (``freshness``: a newest-timestamp ``max``), or for
   ``unique`` a duplicate-row count of a salted key profile. One
   per-partition rollup gathers the counters and one
@@ -17,7 +18,9 @@ its own checks too — onto the minimal set of scans:
   (:func:`fused.rollup_verdicts`) yields every verdict;
 * every row-addressable spec tags the rows it rejects on ONE scan of the
   input (``filter(array(tags))`` + ``explode``): a suite reads its table
-  once for its violation rows however many specs it holds;
+  once for its violation rows however many specs it holds. A row-local
+  spec's tag (:func:`row_tag`) is also the quarantine split's
+  (operators/quarantine.tag_rows);
 * ``ascending``, ``benford`` and ``robust_outliers`` (window and
   per-partition-estimator programs) and the scan-free
   ``column_presence`` keep their own programs.
@@ -58,6 +61,14 @@ CHECK_NAMES = {
     "benford": "benford_{}",
     "robust_outliers": "robust_outliers_{}",
     "column_presence": "column_presence",
+    "text_extraction": "text_extraction",
+}
+
+# the kinds whose violation is a predicate of one row alone (with
+# row asserts, the specs :func:`row_tag` tags)
+ROW_KINDS = {
+    "not_null_ts", "not_null", "finite", "bounds", "float_castable",
+    "pattern", "json_schema", "text_extraction",
 }
 
 # the kinds that keep their own programs instead of compiling onto the
@@ -71,7 +82,7 @@ class CheckSpec:
     """One declarative check. ``kind`` ∈ {min_rows, not_null_ts,
     not_null, unique, referential, finite, bounds, float_castable,
     ascending, column_presence, robust_outliers, freshness, benford, pattern,
-    json_schema}."""
+    json_schema, text_extraction}."""
 
     kind: str
     column: str | None = None
@@ -100,6 +111,15 @@ class CheckSpec:
     # (operators/referential.dim_join)
     strategy: str = "broadcast"
     salts: int = 16
+
+    def __post_init__(self) -> None:
+        # a missing limit would compare against NULL: the check could
+        # never fail
+        if self.kind == "bounds" and (self.lower is None or self.upper is None):
+            raise ValueError(
+                f"bounds check on {self.column!r} needs both 'lower' and "
+                "'upper'"
+            )
 
 
 # -- spec constructors (the public vocabulary) ------------------------------
@@ -196,6 +216,15 @@ def freshness(
                      reference_ts=reference_ts)
 
 
+def text_extraction(text_col: str = "text") -> CheckSpec:
+    """North-rule byte identity: every non-null ``text_col`` value is
+    byte-identical (UTF-8) to ``functions.extract_text`` of the row's
+    ``html``; html that is not valid UTF-8 extracts to NULL, which a
+    non-null text violates. Reads the ``html`` binary, so the pages
+    engine runs it only under ``verify_text_extraction``."""
+    return CheckSpec("text_extraction", column=text_col)
+
+
 def json_schema(column: str, required: dict[str, str]) -> CheckSpec:
     """JSON payload validation: every non-null value of ``column`` must
     parse and carry each required key castable to its declared Spark
@@ -237,10 +266,20 @@ def reject_repeats(specs) -> None:
     repeated = sorted({n for n in names if names.count(n) > 1})
     if repeated:
         raise ValueError(
-            f"repeated check(s) {repeated}: each check may appear once in "
+            f"duplicate check(s) {repeated}: each check may appear once in "
             "a suite (a repeat would emit its verdicts and violation rows "
             "twice)"
         )
+
+
+def _own_program(spec) -> bool:
+    return isinstance(spec, CheckSpec) and spec.kind in OWN_PROGRAM_KINDS
+
+
+def _row_local(spec) -> bool:
+    return isinstance(spec, RowAssert) or (
+        isinstance(spec, CheckSpec) and spec.kind in ROW_KINDS
+    )
 
 
 @dataclass
@@ -286,43 +325,65 @@ class CompiledChecks:
 _INF = "CAST('Infinity' AS DOUBLE)"
 
 
-def _double(v: float | None) -> str:
-    if v is None:
-        return "CAST(NULL AS DOUBLE)"
+def _double(v: float) -> str:
     return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 def _row_predicate(
-    s: CheckSpec, df: DataFrame, counter: str
-) -> tuple[str, str, tuple[tuple[str, str], ...]]:
-    """``(violated, message, owned)`` of a row-predicate spec: the SQL of
-    a row's violation, the verdict message as SQL (over the spec's
-    rollup column ``counter``) and its violation columns as ``(name,
-    SQL)``. A value that does not parse as a double is
+    s: CheckSpec | RowAssert, df: DataFrame, counter: str
+) -> tuple[str, str, str, tuple[tuple[str, str], ...]]:
+    """``(violated, failed, message, owned)`` of a row-local spec (a
+    :data:`ROW_KINDS` spec or a row assert): the SQL of a row's
+    violation, the verdict's failure condition and message as SQL (over
+    the spec's rollup column ``counter``) and its violation columns as
+    ``(name, SQL)``. A value that does not parse as a double is
     ``float_castable``'s violation only, and a non-finite one
     ``finite``'s only: each check owns one violation class."""
+    failed = f"{counter} > 0"
+    if isinstance(s, RowAssert):
+        frac = float(s.max_violation_fraction)
+        return (
+            s.violation,
+            f"{counter} > rows_scanned * CAST({frac!r} AS DOUBLE)",
+            sql_string(ROW_ASSERT_FAILED.format(s.name, s.expr)),
+            (),
+        )
     c = f"`{s.column}`"
     x = f"try_cast(CAST({c} AS STRING) AS DOUBLE)"
     own = ((s.column, c),)
     if s.kind == "not_null_ts":
         bad = fused.null_ts_sql(df, s.column)
-        return bad, sql_string(E.INVALID_TIMESTAMPS), ()
+        return bad, failed, sql_string(E.INVALID_TIMESTAMPS), ()
     if s.kind == "not_null":
-        return f"{c} IS NULL", sql_string(E.INVALID_TIMESTAMPS), ()
+        return f"{c} IS NULL", failed, sql_string(E.INVALID_TIMESTAMPS), ()
     if s.kind == "float_castable":
         message = E.INVALID_VALUE_FORMAT.format(s.column)
-        return f"{c} IS NOT NULL AND {x} IS NULL", sql_string(message), own
+        bad = f"{c} IS NOT NULL AND {x} IS NULL"
+        return bad, failed, sql_string(message), own
     if s.kind == "finite":
         message = E.INVALID_SERIES_VALUE.format(s.column)
         bad = f"{x} IS NOT NULL AND (isnan({x}) OR abs({x}) = {_INF})"
-        return bad, sql_string(message), own
+        return bad, failed, sql_string(message), own
     if s.kind == "bounds":
         message = E.VALUE_OVERFLOW.format(s.column)
         bad = (
             f"{x} IS NOT NULL AND NOT isnan({x}) AND abs({x}) != {_INF} AND "
             f"({x} < {_double(s.lower)} OR {x} > {_double(s.upper)})"
         )
-        return bad, sql_string(message), own
+        return bad, failed, sql_string(message), own
+    if s.kind == "text_extraction":
+        from anomalydetector_spark.functions import extract_text
+
+        # malformed-UTF-8 html extracts to NULL: with a non-null text
+        # that is a violation, not a skip. Bytes are compared, not
+        # strings, so a lossy decode cannot mask a mismatch.
+        ex = extract_text("`html`")
+        bad = (
+            f"{c} IS NOT NULL AND ({ex} IS NULL OR "
+            f"encode({ex}, 'UTF-8') != encode({c}, 'UTF-8'))"
+        )
+        message = E.TEXT_EXTRACTION_MISMATCH.format(s.column, "html")
+        return bad, failed, sql_string(message), own
     if s.kind == "pattern":
         from anomalydetector_spark.operators.patterns import signature_sql
 
@@ -339,13 +400,32 @@ def _row_predicate(
             f"{sql_string(s.column)})"
         )
         bad = f"{c} IS NOT NULL AND NOT ({sig} IN ({allowed}))"
-        return bad, message, (*own, ("signature", sig))
+        return bad, failed, message, (*own, ("signature", sig))
     if s.kind == "json_schema":
         reason = C.json_schema_reason(s.column, dict(s.json_keys))
         message = E.JSON_SCHEMA_VIOLATION.format(s.column)
         owns = (("json_reason", reason),)
-        return f"{reason} IS NOT NULL", sql_string(message), owns
+        return f"{reason} IS NOT NULL", failed, sql_string(message), owns
     raise ValueError(f"unknown check kind: {s.kind!r}")
+
+
+def _tag(name: str, bad: str) -> Column:
+    return F.expr(f"CASE WHEN {bad} THEN {sql_string(name)} END")
+
+
+def row_tag(spec, df: DataFrame) -> Column:
+    """``CASE WHEN <violated> THEN <check_name> END`` of a row-local spec
+    (a :data:`ROW_KINDS` spec or a row assert) over ``df``: the tag
+    :func:`compile_checks` puts on the violation scan. A spec that needs
+    an aggregate or a join (``unique``, ``referential``, a functional
+    dependency, ``freshness``, ``min_rows``, ...) raises ``ValueError``."""
+    name = check_name(spec)
+    if not _row_local(spec):
+        raise ValueError(
+            f"{name} needs an aggregate or a join: only row-local checks "
+            "tag a row by itself"
+        )
+    return _tag(name, _row_predicate(spec, df, "_v")[0])
 
 
 def _freshness_check(s: CheckSpec, newest: str) -> tuple[str, str, str, str]:
@@ -434,17 +514,7 @@ def compile_checks(
     for i, s in enumerate(specs):
         name, counter = check_name(s), f"_v{i}"
         bad, owns = None, ()
-        if isinstance(s, RowAssert):
-            bad = s.violation
-            aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
-            frac = float(s.max_violation_fraction)
-            checks.append((
-                name,
-                f"{counter} > rows_scanned * CAST({frac!r} AS DOUBLE)",
-                sql_string(ROW_ASSERT_FAILED.format(s.name, s.expr)),
-                counter,
-            ))
-        elif isinstance(s, tuple):
+        if isinstance(s, tuple):
             det, dep = s
             det_cols = C.fd_cols(det)
             keys = [f"_fd_k_{i}_{j}" for j in range(len(det_cols))]
@@ -478,6 +548,17 @@ def compile_checks(
             owns = tuple((c, f"`{c}`") for c in det_cols)
             message = E.FD_VIOLATION.format(C.fd_label(det), C.fd_label(dep))
             checks.append(fused.count_check(name, counter, message))
+        elif _row_local(s):
+            if (
+                isinstance(s, CheckSpec)
+                and s.kind == "not_null_ts"
+                and s.column == window_ts
+            ):
+                counter = "null_ts"
+            bad, failed, message, owns = _row_predicate(s, keyed, counter)
+            if counter != "null_ts":
+                aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
+            checks.append((name, failed, message, counter))
         elif s.kind == "min_rows":
             checks.append(fused.min_rows_check(s.min_points))
         elif s.kind == "freshness":
@@ -521,14 +602,9 @@ def compile_checks(
             message = E.DANGLING_REFERENCE.format(s.column, s.dim_column)
             checks.append(fused.count_check(name, counter, message))
         else:
-            bad, message, owns = _row_predicate(s, keyed, counter)
-            if s.kind == "not_null_ts" and s.column == window_ts:
-                counter = "null_ts"
-            else:
-                aggs.append(F.expr(f"count_if({bad}) AS {counter}"))
-            checks.append((name, f"{counter} > 0", message, counter))
+            raise ValueError(f"{name} runs its own program, not a compiled one")
         if bad is not None:
-            tags.append(F.expr(f"CASE WHEN {bad} THEN {sql_string(name)} END"))
+            tags.append(_tag(name, bad))
         for col, sql in owns:
             owned.setdefault(col, []).append((name, sql))
 
@@ -557,26 +633,31 @@ def _union(frames: list[DataFrame | None]) -> DataFrame | None:
 
 def run_suite(
     df: DataFrame,
-    specs: list[CheckSpec],
+    specs: list,
     partition_by: str | None = None,
     persist_scans: bool = True,
 ) -> SuiteResult:
-    """Compile and lazily build the suite's verdict + violation frames.
+    r"""Compile and lazily build the suite's verdict + violation frames.
 
-    Every spec but the :data:`OWN_PROGRAM_KINDS` compiles through
+    ``specs`` holds :class:`CheckSpec`\ s, row asserts and
+    ``(determinant, dependent)`` functional-dependency pairs. Every spec
+    but the :data:`OWN_PROGRAM_KINDS` compiles through
     :func:`compile_checks` onto one cube and one rollup (plus one key
     profile per ``unique`` spec), and all their violation rows come from
     one tagged scan of ``df``; the other kinds run their own programs,
     unioned after. ``persist_scans`` caches the cube and the profiles
     (worth it when the verdicts and the violations are both read; the
     violation scan then reads the cached profiles, not the input again).
-    A repeated check raises ``ValueError``.
+    Violation rows of row asserts, ``not_null`` and ``not_null_ts`` own
+    no column, so they carry no row identity; ``quarantine.tag_rows``
+    is the row-addressable view of those checks. A repeated check
+    raises ``ValueError``.
     """
     reject_repeats(specs)
     verdicts: list[DataFrame] = []
     violations: list[DataFrame | None] = []
     cached: list[DataFrame] = []
-    shared = [s for s in specs if s.kind not in OWN_PROGRAM_KINDS]
+    shared = [s for s in specs if not _own_program(s)]
     if shared:
         c = compile_checks(
             fused.keyed_input(df, None, partition_by),
@@ -587,7 +668,7 @@ def run_suite(
         verdicts.append(c.verdicts)
         violations.append(c.violation_rows())
         cached = c.cached
-    for s in specs:
+    for s in filter(_own_program, specs):
         if s.kind == "column_presence":
             r = C.check_column_presence(df, list(s.required))
         elif s.kind == "ascending":
@@ -598,13 +679,11 @@ def run_suite(
             )
 
             r = check_benford(df, s.column, partition_by, max_mad=s.max_mad)
-        elif s.kind == "robust_outliers":
+        else:
             r = C.check_robust_outliers(
                 df, s.column, partition_by,
                 k=s.k, max_outlier_frac=s.max_outlier_frac,
             )
-        else:
-            continue
         verdicts.append(r.verdicts)
         violations.append(r.violations)
     return SuiteResult(_union(verdicts), _union(violations), cached)
@@ -663,7 +742,7 @@ def specs_from_json(
             dim = spark.read.parquet(p)
         try:
             out.append(CheckSpec(kind=kind, dim=dim, **kw))
-        except TypeError as e:
+        except (TypeError, ValueError) as e:
             raise ValueError(f"checks[{i}] ({kind}): {e}") from None
     reject_repeats(out)
     return out

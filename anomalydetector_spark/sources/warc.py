@@ -220,7 +220,7 @@ def warc_to_pages(records: DataFrame, ok_status_only: bool = True) -> DataFrame:
         kept = kept.filter(
             F.col("http_status").between(200, 299)
         )
-    text = extract_text(F.col("html"))
+    text = F.expr(extract_text("`html`"))
     return (
         kept.select("url", "warc_ts", "html", text.alias("text"))
         .withColumn("lang", lang_id(F.col("text")))
@@ -237,14 +237,14 @@ def wet_to_pages(records: DataFrame) -> DataFrame:
     re-extract from) and ``text`` the record payload decoded leniently
     (malformed UTF-8 → NULL text, a per-row violation downstream —
     never a job-killing ANSI decode error). Note the byte-identity
-    check (``check_text_extraction``) does not apply to WET rows: with
+    check (the suite's ``text_extraction`` spec) does not apply to WET rows: with
     no ``html`` there is nothing to re-run the extractor on; rows
     instead hit the NULL/size checks like any other text column.
     """
     from anomalydetector_spark.functions import lenient_utf8
     from anomalydetector_spark.operators.text import lang_id
 
-    text = lenient_utf8(F.col("html"))
+    text = F.expr(lenient_utf8("`html`"))
     return (
         records.filter(F.col("warc_type") == "conversion")
         .select(

@@ -16,19 +16,13 @@ chaining inside one query):
 Plus :func:`dedup_ingest_stream` (exactly-once url dedup at ingest),
 :func:`js_divergence_stream` (shape drift: per-window lang-distribution
 JS divergence vs the previous window, constant-size reorder-buffer
-state, batch-identical values), and the numeric twin
-:func:`streaming_window_histogram` → :func:`numeric_drift_stream`
-(per-window histogram L∞/TVD/EMD vs the previous window, bit-equal to
-the batch operator), and :func:`cusum_walk_stream` (the sustained-
-level-shift CUSUM walk with a frozen reference — O(1) state per series,
-bit-equal to batch ``series_cusum(..., reference=...)``).
+state, batch-identical values), :func:`seasonal_expectation_stream`
+(each window vs its same-phase history), :func:`topk_churn_stream`
+(top-k membership churn) and :func:`streaming_window_corr` (exact
+per-window correlation of two columns), each bit-equal to its batch
+operator.
 """
 
-from anomalydetector_spark.streaming.cusum_stream import (  # noqa: F401
-    CUSUM_SCHEMA,
-    CUSUM_STATE_SCHEMA,
-    cusum_walk_stream,
-)
 from anomalydetector_spark.streaming.seasonal_stream import (  # noqa: F401
     SEASONAL_SCHEMA,
     SEASONAL_STATE_SCHEMA,
@@ -51,11 +45,7 @@ from anomalydetector_spark.streaming.ingest import (  # noqa: F401
 )
 from anomalydetector_spark.streaming.numeric_stream import (  # noqa: F401
     CORR_SCHEMA,
-    HIST_SCHEMA,
-    NUMERIC_DRIFT_SCHEMA,
-    numeric_drift_stream,
     streaming_window_corr,
-    streaming_window_histogram,
 )
 from anomalydetector_spark.streaming.shape_stream import (  # noqa: F401
     DIV_SCHEMA,

@@ -1,199 +1,20 @@
-"""Streaming numeric-histogram drift: L∞ / TVD / EMD of a numeric
-column's per-window histogram vs the previous window, the streaming twin
-of :func:`anomalydetector_spark.operators.divergence.numeric_window_drift`
-(TFDV ships L∞ as its numeric-drift comparator; reference scope:
-distribution-drift checks over per-window column stats, the same family
-as msanomalydetector's SR input series).
+"""Streaming windowed correlation: the exact per-window Pearson
+coefficient between two numeric columns, the streaming twin of
+:func:`anomalydetector_spark.operators.divergence.numeric_window_corr`
+(the coupling monitor: a bug that breaks a relation between two columns
+moves it before either marginal drifts).
 
-Two storage-chained stages, mirroring the stats→SR and stats→shape
-pipelines (Spark restricts arbitrary stateful-op chaining inside one
-query):
-
-1. :func:`streaming_window_histogram` — a watermarked tumbling-window
-   aggregation emitting ONE row per finalized window carrying the full
-   fixed-width bin-count vector (``n_bins`` conditional sums packed into
-   an array; n_bins is a config in the tens, so the agg is a plain
-   codegen windowed aggregate, and a window can never arrive split
-   across micro-batches the way long-format rows could).
-2. :func:`numeric_drift_stream` — per contiguous (previous, current)
-   window pair, emitted exactly once via the shared reorder-buffer +
-   ledger machine (:mod:`~anomalydetector_spark.streaming.pairs`), the
-   three batch distances computed with the SAME exact integer arithmetic
-   as the batch operator: per-bin cross-multiplied terms
-   ``c_i·T_q − d_i·T_p`` in unbounded Python ints with ONE final
-   cast-to-double division, so streaming values equal the batch
-   operator's decimal(38,0) pipeline BIT-FOR-BIT (pinned by test, ==).
-   The per-pair math lives in :mod:`~anomalydetector_spark.kernel.
-   window_drift`, shared with the batch engine's grouped drift pass.
-
-NULL and NaN values are excluded from the histogram exactly like the
-batch operator (``floor(NaN)`` would count every NaN in bin 0 and read
-as phantom drift); out-of-range values clamp into the edge bins.
+One watermarked built-in windowed aggregation, append mode: each
+finalized window is emitted exactly once, and its five integer sums are
+order-independent under any micro-batch composition, so the stream
+needs no state machine of its own to stay bit-equal to the batch
+operator.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from anomalydetector_spark.kernel.window_drift import histogram_distances
-from anomalydetector_spark.operators.divergence import numeric_bin
-from anomalydetector_spark.streaming.pairs import (
-    PAIR_STATE_SCHEMA,
-    duration_us as _duration_us,
-    window_pairs,
-)
-
-HIST_SCHEMA = (
-    "partition_key string, window_start timestamp, "
-    "bin_counts array<bigint>"
-)
-
-NUMERIC_DRIFT_SCHEMA = (
-    "partition_key string, window_start timestamp, "
-    "linf double, tvd double, emd double, n_bins_hit bigint"
-)
-
-
-def streaming_window_histogram(
-    stream: DataFrame,
-    value_col: str = "value",
-    lo: float = 0.0,
-    hi: float = 1.0,
-    n_bins: int = 20,
-    window_duration: str = "1 day",
-    watermark_delay: str | None = "2 days",
-    partition_by: str | None = None,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window fixed-width histogram of
-    ``value_col``: one row per FINALIZED (window, partition) with the
-    full ``n_bins``-long count vector (append mode — emitted exactly
-    once when the watermark passes the window's end).
-
-    ``watermark_delay=None`` skips the ``withWatermark`` call — required
-    when chaining after another stateful stage that already set it
-    (Spark disallows redefining the watermark inside one query).
-    """
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else F.col(partition_by).cast("string")
-    )
-    v = F.col(value_col)
-    src = (
-        stream.withWatermark(ts_col, watermark_delay)
-        if watermark_delay is not None
-        else stream
-    )
-    binned = (
-        src.filter(v.isNotNull() & ~F.isnan(v))
-        .withColumn("partition_key", part)
-        .withColumn("_bin", numeric_bin(v, lo, hi, n_bins))
-    )
-    aggs = [
-        F.sum((F.col("_bin") == i).cast("long")).alias(f"_b{i}")
-        for i in range(n_bins)
-    ]
-    return (
-        binned.groupBy(
-            F.window(F.col(ts_col), window_duration).alias("w"),
-            "partition_key",
-        )
-        .agg(*aggs)
-        .select(
-            "partition_key",
-            F.col("w.start").alias("window_start"),
-            F.array(*[f"_b{i}" for i in range(n_bins)]).alias(
-                "bin_counts"
-            ),
-        )
-    )
-
-
-def _make_drift_fn(n_bins: int, dur_us: int, buffer_windows: int):
-    import numpy as np
-
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        out = []
-        if not pdf.empty:
-            pdf = pdf.sort_values("window_start")
-            # counts ride the shared float64 state buffer — exact up to
-            # 2^53 per (window, bin), far past any real micro-batch
-            vecs = np.stack(
-                [
-                    np.asarray(b, dtype="float64")
-                    for b in pdf["bin_counts"]
-                ]
-            )
-            if vecs.shape[1] != n_bins:
-                raise ValueError(
-                    f"bin_counts width {vecs.shape[1]} != n_bins {n_bins}"
-                )
-            ts_us = (
-                pdf["window_start"]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
-            )
-            for t, prev, cur in window_pairs(
-                state, ts_us, vecs, n_bins, dur_us, buffer_windows
-            ):
-                # exact integer arithmetic, mirroring the batch
-                # decimal(38,0) pipeline term for term
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        *histogram_distances(cur, prev),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "partition_key",
-                "window_start",
-                "linf",
-                "tvd",
-                "emd",
-                "n_bins_hit",
-            ],
-        )
-
-    return fn
-
-
-def numeric_drift_stream(
-    hist_stream: DataFrame,
-    window_duration: str = "1 day",
-    n_bins: int = 20,
-    buffer_windows: int = 64,
-) -> DataFrame:
-    """Numeric-drift scores from a stream of finalized window histograms
-    (the output of :func:`streaming_window_histogram`): one row per
-    contiguous (previous, current) window pair per partition, emitted
-    exactly once when both windows have arrived, values bit-equal to the
-    batch ``numeric_window_drift`` on the same rows."""
-    return hist_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_drift_fn(
-            n_bins, _duration_us(window_duration), buffer_windows
-        ),
-        outputStructType=NUMERIC_DRIFT_SCHEMA,
-        stateStructType=PAIR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 CORR_SCHEMA = (
     "partition_key string, window_start timestamp, "

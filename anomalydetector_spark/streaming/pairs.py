@@ -1,12 +1,13 @@
 """Shared consecutive-window pairing state machine for stage-2 drift
 streams.
 
-Both shape drift (:mod:`~anomalydetector_spark.streaming.shape_stream`)
-and numeric drift (:mod:`~anomalydetector_spark.streaming.numeric_stream`)
-consume a stream of FINALIZED per-window vectors (a lang-fraction
-distribution there, a histogram bin-count vector here) and emit one
-comparison row per contiguous (previous, current) window pair, exactly
-once.  The mechanics are identical and live here:
+Shape drift (:mod:`~anomalydetector_spark.streaming.shape_stream`)
+consumes a stream of FINALIZED per-window vectors (a lang-fraction
+distribution) and emits one comparison row per contiguous (previous,
+current) window pair, exactly once; the order-sensitive seasonal walk
+(:mod:`~anomalydetector_spark.streaming.seasonal_stream`) shares the
+window-duration parsing and :func:`ordered_drain`.  The pairing
+mechanics:
 
 * Stage 1 finalizes windows in event-time order, but its commit writes
   several unordered part files and the stage-2 file source replays them
@@ -137,7 +138,7 @@ def ordered_drain(
     buf: dict, last_ts: int, dur_us: int, horizon: int,
     trust_first: bool = False,
 ) -> tuple[list, int]:
-    """Shared consume rule for ORDER-SENSITIVE walks (CUSUM, seasonal):
+    """Consume rule for ORDER-SENSITIVE walks (the seasonal stream):
     pop buffered ``{ts_us: value}`` windows in strict timestamp order —
     the oldest window is consumable when it is contiguous with the last
     consumed one (``last_ts + dur_us``, the fast path) or when more

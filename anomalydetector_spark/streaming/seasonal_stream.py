@@ -12,8 +12,8 @@ integer ``(m·vq − s)`` numerators, the same pinned double chains, the
 same zero-history / all-zero-history conventions.
 
 Ordering/exactly-once: the shared ``ordered_drain`` consume rule with
-the consume pointer as the ledger (the CUSUM machinery) — the
-row-index walk is order-sensitive by definition.
+the consume pointer as the ledger — the row-index walk is
+order-sensitive by definition.
 """
 
 from __future__ import annotations
@@ -32,7 +32,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from anomalydetector_spark.streaming.cusum_stream import _half_up_micro
+from anomalydetector_spark.kernel.window_drift import (
+    half_up_micro as _half_up_micro,
+)
 from anomalydetector_spark.streaming.pairs import (
     ORDERED_NONE as _NONE,
     duration_us as _duration_us,

@@ -1,18 +1,20 @@
 """User-defined constraints (operators/asserts.py): SQL CHECK null
-semantics, tolerance gating, agg-metric gates, suite-spec translation,
-and engine integration on the fused scans."""
+semantics, tolerance gating (row asserts compiled as a check suite,
+plans/suite.run_suite), agg-metric gates, suite-spec translation, and
+engine integration on the fused scans."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from anomalydetector_spark.operators import quarantine as Q
 from anomalydetector_spark.operators.asserts import (
     AggAssert,
     RowAssert,
     check_agg_asserts,
-    check_row_asserts,
 )
+from anomalydetector_spark.plans import suite as S
 
 
 @pytest.fixture(scope="module")
@@ -32,13 +34,13 @@ def frame(spark):
 
 def test_null_passes_like_sql_check(frame):
     """Row 3 (value NULL): `value >= 0` is unknown -> NOT a violation."""
-    res = check_row_asserts(frame, [RowAssert("nonneg", "value >= 0")], "grp")
+    res = S.run_suite(frame, [RowAssert("nonneg", "value >= 0")], "grp")
     v = {r.partition_key: r for r in res.verdicts.collect()}
     assert v["a"].violation_count == 1  # only id=2, not the NULL
     assert v["b"].violation_count == 2
     assert not v["a"].passed and not v["b"].passed
     # explicit non-null assert catches it instead
-    res2 = check_row_asserts(
+    res2 = S.run_suite(
         frame, [RowAssert("vnn", "value is not null")], "grp"
     )
     v2 = {r.partition_key: r for r in res2.verdicts.collect()}
@@ -48,7 +50,7 @@ def test_null_passes_like_sql_check(frame):
 def test_tolerance_gate_boundary(frame):
     """passed iff violations <= fraction * rows (boundary inclusive)."""
     # grp a: 1 violation / 3 rows
-    at = check_row_asserts(
+    at = S.run_suite(
         frame, [RowAssert("t", "value >= 0", 1 / 3)], "grp"
     ).verdicts
     v = {r.partition_key: r.passed for r in at.collect()}
@@ -57,13 +59,15 @@ def test_tolerance_gate_boundary(frame):
 
 
 def test_violation_rows_tagged(frame):
-    res = check_row_asserts(
+    tagged = Q.tag_rows(
         frame,
         [RowAssert("nonneg", "value >= 0"), RowAssert("small", "value < 6")],
-        "grp",
-        keep=["id"],
     )
-    got = {(r.check_name, r.id) for r in res.violations.collect()}
+    got = {
+        (name, r.id)
+        for r in tagged.collect()
+        for name in r[Q.VIOLATED_COL]
+    }
     assert got == {
         ("assert_nonneg", 2),
         ("assert_nonneg", 5),
@@ -74,8 +78,11 @@ def test_violation_rows_tagged(frame):
 
 def test_one_scan_for_all_row_asserts(frame):
     """All row asserts share one aggregation: exactly one Exchange."""
-    res = check_row_asserts(
-        frame, [RowAssert(f"a{i}", "value >= 0") for i in range(5)], "grp"
+    res = S.run_suite(
+        frame,
+        [RowAssert(f"a{i}", "value >= 0") for i in range(5)],
+        "grp",
+        persist_scans=False,
     )
     import io
     from contextlib import redirect_stdout
@@ -117,7 +124,7 @@ def test_agg_asserts(frame):
 
 def test_duplicate_names_rejected(frame):
     with pytest.raises(ValueError, match="duplicate"):
-        check_row_asserts(
+        S.run_suite(
             frame, [RowAssert("x", "1=1"), RowAssert("x", "2=2")]
         )
 

@@ -371,7 +371,11 @@ def test_text_extraction_check(spark):
         "url", F.encode("html_s", "UTF-8").alias("html"), "text", "part"
     )
 
-    tx = C.check_text_extraction(df, partition_by="part", keep=["url"])
+    from anomalydetector_spark.operators import quarantine as Q
+
+    tx = S.run_suite(
+        df, [S.text_extraction()], partition_by="part", persist_scans=False
+    )
     verdicts = {r.partition_key: r for r in tx.verdicts.collect()}
     assert verdicts["p0"].passed is False
     assert verdicts["p0"].violation_count == 1
@@ -379,7 +383,13 @@ def test_text_extraction_check(spark):
     assert verdicts["p0"].error_message == E.TEXT_EXTRACTION_MISMATCH.format(
         "text", "html"
     )
-    bad = [r.url for r in tx.violations.collect()]
+    assert [r.text for r in tx.violations.collect()] == ["TAMPERED"]
+    bad = [
+        r.url
+        for r in Q.tag_rows(df, [S.text_extraction()])
+        .filter(F.col(Q.STATUS_COL) == Q.QUARANTINED)
+        .collect()
+    ]
     assert bad == ["https://a.example.org/2"]
 
     cons = C.check_key_text_consistency(df, key_col="url", partition_by="part")
@@ -412,18 +422,15 @@ def test_engine_text_parity_opt_in(spark):
 def test_text_extraction_malformed_utf8(spark):
     """A page whose html is not valid UTF-8 must become a per-row
     violation, never a job failure (Spark 4 ANSI decode would throw)."""
-    from pyspark.sql import functions as F
-    from anomalydetector_spark.operators import checks as C
-
     rows = [
         ("https://ok.example.org/1", bytearray(b"<p>fine</p>"), "fine"),
         ("https://bad.example.org/2", bytearray(b"<p>\xff\xfe</p>"), "anything"),
     ]
     df = spark.createDataFrame(rows, "url string, html binary, text string")
-    tx = C.check_text_extraction(df, keep=["url"])
+    tx = S.run_suite(df, [S.text_extraction()], persist_scans=False)
     v = tx.verdicts.first()
     assert v.passed is False and v.violation_count == 1
-    assert [r.url for r in tx.violations.collect()] == ["https://bad.example.org/2"]
+    assert [r.text for r in tx.violations.collect()] == ["anything"]
 
 
 # ---- freshness / staleness (the suite's freshness spec) ----

@@ -1,8 +1,7 @@
-"""Streaming CUSUM must equal batch ``series_cusum(..., reference=...)``
-bit for bit on emitted windows (same HALF_UP micro-z quantization, same
-integer walk, same argmin changepoint convention), consume windows in
-timestamp order through the reorder buffer, and never double-walk a
-replayed window (the consume pointer is the ledger)."""
+"""Order-sensitive streams (seasonal expectation, top-k churn) must equal
+their batch operators bit for bit on emitted windows, consume windows in
+timestamp order through the reorder buffer (``pairs.ordered_drain``), and
+never walk a replayed window twice (the consume pointer is the ledger)."""
 
 import datetime as dt
 import glob
@@ -14,24 +13,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from anomalydetector_spark.operators.trend import (
-    cusum_reference,
-    series_cusum,
-)
-from anomalydetector_spark.streaming import cusum_walk_stream
-from anomalydetector_spark.streaming.cusum_stream import (
-    CUSUM_STATE_SCHEMA,
-    _make_walk_fn,
-)
+from anomalydetector_spark.streaming.seasonal_stream import _make_seasonal_fn
 
 T0 = dt.datetime(2024, 1, 1)
 N_DAYS = 24
-K, H = 0.5, 4.0
 
 
 def _series_rows():
-    """One shifted series + one flat series; reference stats frozen
-    from the first 10 days (the in-control period)."""
+    """One series with a level shift at day 15 + one flat series."""
     rnd = random.Random(21)
     rows = []
     for d in range(N_DAYS):
@@ -42,8 +31,8 @@ def _series_rows():
 
 
 @pytest.fixture(scope="module")
-def cusum_stream_env(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("cusumstream")
+def series_stream_env(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("orderedstream")
     in_dir = str(root / "stats_in")
     os.makedirs(in_dir)
     df = spark.createDataFrame(
@@ -62,90 +51,8 @@ def cusum_stream_env(spark, tmp_path_factory):
         chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
         src = glob.glob(f"{tmp}/part-*.parquet")[0]
         shutil.copy(src, f"{in_dir}/{i:04d}.parquet")
-    ref = cusum_reference(
-        df.filter(
-            F.col("window_start") < T0 + dt.timedelta(days=10)
-        ),
-        ["partition_key", "stat_name"],
-        "value",
-    ).cache()
-    ref.count()
-    yield {"in": in_dir, "root": str(root), "series": df, "ref": ref}
+    yield {"in": in_dir, "root": str(root), "series": df}
     df.unpersist()
-    ref.unpersist()
-
-
-def test_cusum_stream_matches_batch_reference_bit_for_bit(
-    spark, cusum_stream_env
-):
-    env = cusum_stream_env
-    stream = (
-        spark.readStream.schema(
-            "partition_key string, stat_name string, "
-            "window_start timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(env["in"])
-    )
-    out_dir = f"{env['root']}/walk_out"
-    q = (
-        cusum_walk_stream(
-            stream, env["ref"], k=K, h=H,
-            window_duration="1 day", buffer_windows=4,
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{env['root']}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.stat_name, r.window_start): r
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    exp = {
-        (r.stat_name, r.window_start): r
-        for r in series_cusum(
-            env["series"],
-            ["partition_key", "stat_name"],
-            "window_start",
-            "value",
-            k=K,
-            h=H,
-            reference=env["ref"],
-        ).collect()
-    }
-    # every series emits at least the pre-horizon prefix and the shift
-    # must be visible in the emitted range
-    m1 = [k for k in got if k[0] == "m1"]
-    assert len(m1) >= N_DAYS - 4  # trailing buffer lag only
-    assert any(got[k].alarm_pos for k in m1)
-    for key, g in got.items():
-        e = exp[key]
-        assert (g.value, g.z, g.s_pos, g.s_neg) == (
-            e.value, e.z, e.s_pos, e.s_neg,
-        ), key  # bit-for-bit
-        assert (g.alarm_pos, g.alarm_neg, g.alarm) == (
-            e.alarm_pos, e.alarm_neg, e.alarm,
-        )
-        assert (g.cp_pos, g.cp_neg) == (e.cp_pos, e.cp_neg), key
-    # the flat series: z defined (sigma>0? flat -> sigma 0) -> NULL walk
-    flat = [got[k] for k in got if k[0] == "flat"]
-    assert flat and all(r.z is None and not r.alarm for r in flat)
-    # changepoint of the first alarm sits at/just before the shift day
-    first_alarm = min(
-        (k[1] for k in m1 if got[k].alarm_pos), default=None
-    )
-    assert first_alarm is not None
-    cp = got[("m1", first_alarm)].cp_pos
-    # the cp estimate is the walk's last floor touch — with ±1.7σ
-    # in-control noise that can sit well before the shift, but never
-    # after the alarm fires
-    assert cp is not None and cp < first_alarm
-    assert (first_alarm - T0).days >= 15  # alarm fires at/after shift
 
 
 class StubState:
@@ -178,9 +85,9 @@ DUR = 86_400_000_000
 
 
 def _fn():
-    return _make_walk_fn(
-        {("global", "m"): (10.0, 2.0)}, K, H, DUR, buffer_windows=3
-    )
+    """The seasonal stream's per-series state function: one emitted row
+    per consumed window."""
+    return _make_seasonal_fn(1, 1, 0.5, DUR, buffer_windows=3)
 
 
 def test_replay_is_dropped_by_the_pointer():
@@ -238,96 +145,8 @@ def test_gap_consumes_after_horizon():
     assert ts2 == [5, 6, 7, 8]  # days 4..7
 
 
-def test_kill_and_resume_continues_the_walk(spark, tmp_path):
-    """Two separate availableNow runs against the same checkpoint: the
-    second resumes the walk state (pointer, cumulative sums, anchors)
-    and its emissions splice seamlessly into the first run's — equal to
-    one uninterrupted batch walk."""
-    import pyspark.sql.functions as F  # noqa: F811
-
-    root = str(tmp_path)
-    in_dir = f"{root}/in"
-    os.makedirs(in_dir)
-    df = spark.createDataFrame(
-        _series_rows(),
-        "partition_key string, stat_name string, "
-        "window_start timestamp, value double",
-    ).cache()
-    ref = cusum_reference(
-        df.filter(F.col("window_start") < T0 + dt.timedelta(days=10)),
-        ["partition_key", "stat_name"],
-        "value",
-    )
-    ref.cache().count()
-
-    def write_chunk(i, lo, hi):
-        chunk = df.filter(
-            (F.dayofyear("window_start") - 1 >= lo)
-            & (F.dayofyear("window_start") - 1 < hi)
-        )
-        tmp = f"{root}/c{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0],
-            f"{in_dir}/{i:04d}.parquet",
-        )
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(
-                "partition_key string, stat_name string, "
-                "window_start timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = (
-            cusum_walk_stream(
-                stream, ref, k=K, h=H,
-                window_duration="1 day", buffer_windows=2,
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{root}/out")
-            .option("checkpointLocation", f"{root}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    write_chunk(0, 0, 8)
-    write_chunk(1, 8, 12)
-    run_once()  # first life: days 0..11
-    n_first = spark.read.parquet(f"{root}/out").count()
-    assert n_first > 0
-
-    write_chunk(2, 12, 18)
-    write_chunk(3, 18, 24)
-    run_once()  # second life resumes from the checkpointed walk
-
-    got = {
-        (r.stat_name, r.window_start): r
-        for r in spark.read.parquet(f"{root}/out").collect()
-    }
-    exp = {
-        (r.stat_name, r.window_start): r
-        for r in series_cusum(
-            df, ["partition_key", "stat_name"], "window_start",
-            "value", k=K, h=H, reference=ref,
-        ).collect()
-    }
-    m1 = sorted(k[1] for k in got if k[0] == "m1")
-    assert len(m1) >= N_DAYS - 2  # only trailing buffer lag
-    for key, g in got.items():
-        e = exp[key]
-        assert (g.s_pos, g.s_neg, g.cp_pos, g.alarm) == (
-            e.s_pos, e.s_neg, e.cp_pos, e.alarm,
-        ), key
-    df.unpersist()
-
-
 def test_seasonal_stream_matches_batch_bit_for_bit(
-    spark, cusum_stream_env
+    spark, series_stream_env
 ):
     """The streaming seasonal-expectation check equals the batch
     operator bit for bit on every emitted window (exact integer
@@ -335,7 +154,7 @@ def test_seasonal_stream_matches_batch_bit_for_bit(
     from anomalydetector_spark.operators.trend import seasonal_expectation
     from anomalydetector_spark.streaming import seasonal_expectation_stream
 
-    env = cusum_stream_env
+    env = series_stream_env
     stream = (
         spark.readStream.schema(
             "partition_key string, stat_name string, "

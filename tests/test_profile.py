@@ -198,14 +198,14 @@ def test_cli_profile_workflow(spark, tmp_path):
 def test_suggestions_hold_on_source_data(frame):
     """Every suggested assert must pass on the data it was derived from
     (the enforce-what-you-observe invariant)."""
-    from anomalydetector_spark.operators.asserts import check_row_asserts
+    from anomalydetector_spark.plans.suite import run_suite
 
     prof = profile_columns(frame, columns=["k", "s", "v"], exact=True)
     suggested = suggest_row_asserts(prof)
     names = {a.name for a in suggested}
     assert "v_not_null" in names and "k_floor" in names
     assert "k_not_null" not in names  # k has a null -> not suggested
-    res = check_row_asserts(frame, suggested)
+    res = run_suite(frame, suggested)
     assert all(r.passed for r in res.verdicts.collect())
 
 

@@ -104,3 +104,91 @@ def test_engine_row_status(spark):
     }
     assert from_status == from_violations and from_status
     r.unpersist()
+
+
+def test_engine_row_status_covers_text_extraction(spark, tmp_path):
+    """With verify_text_extraction on, the text-extraction check compiles
+    onto the shared scans: the quarantine split sets aside exactly the
+    rows it lists as violations (tampered text and html that is not
+    valid UTF-8), and neither the verdicts nor the violations read the
+    input for it separately (3 file scans each: cube or tagged scan,
+    key profile, per-url text consistency; html read by one)."""
+    from anomalydetector_spark import datagen
+    from anomalydetector_spark.engine import ValidationConfig, run_validation
+    from anomalydetector_spark.functions import extract_text
+    from anomalydetector_spark.plans.audit import (
+        plan_node_names,
+        scan_columns,
+    )
+
+    h = F.xxhash64("url") % 40
+    path = str(tmp_path / "pages")
+    datagen.generate_pages(spark, 400, seed=3).withColumn(
+        "text", F.when(h == 0, F.lit("TAMPERED")).otherwise(F.col("text"))
+    ).withColumn(
+        "html",
+        F.when(h == 1, F.unhex(F.lit("3C703EFFFE3C2F703E"))).otherwise(
+            F.col("html")
+        ),
+    ).write.parquet(path)
+    pages = spark.read.parquet(path)
+    ex = F.expr(extract_text("html"))
+    expected = sorted(
+        r.url
+        for r in pages.filter(
+            F.col("text").isNotNull()
+            & (ex.isNull() | (F.encode(ex, "UTF-8") != F.encode("text", "UTF-8")))
+        ).collect()
+    )
+    assert len(expected) >= 8 and any(
+        r.html[3:5] == b"\xff\xfe" for r in pages.filter(h == 1).collect()
+    )
+
+    r = run_validation(
+        pages, config=ValidationConfig(verify_text_extraction=True)
+    )
+    (v,) = r.verdicts.filter("check_name = 'text_extraction'").collect()
+    assert not v.passed and v.violation_count == len(expected)
+    listed = sorted(
+        x.url
+        for x in r.violations.filter("check_name = 'text_extraction'").collect()
+    )
+    assert listed == expected
+    tagged = r.row_status.filter(
+        F.array_contains(Q.VIOLATED_COL, "text_extraction")
+    ).collect()
+    assert sorted(x.url for x in tagged) == expected
+    assert all(x[Q.STATUS_COL] == Q.QUARANTINED for x in tagged)
+
+    assert plan_node_names(r.verdicts).count("FileSourceScanExec") == 3
+    assert plan_node_names(r.violations).count("FileSourceScanExec") == 3
+    assert sum("html" in cols for cols in scan_columns(r.verdicts)) == 1
+    r.unpersist()
+
+
+def test_tag_rows_rejects_checks_that_need_an_aggregate(spark, docs):
+    """Only row-local checks tag a row by itself: uniqueness, referential
+    integrity, functional dependencies, freshness and min-row-count need
+    an aggregate or a join, and a repeated check would tag twice."""
+    from anomalydetector_spark.plans import suite as S
+
+    for spec in (
+        S.unique("doc_id"),
+        S.referential("doc_id", docs.select("doc_id")),
+        ("doc_id", "text"),
+        S.freshness("doc_id", 60, "2024-01-01 00:00:00"),
+        S.min_rows(1),
+    ):
+        with pytest.raises(ValueError, match="aggregate or a join"):
+            Q.tag_rows(docs, [spec])
+    with pytest.raises(ValueError, match="duplicate"):
+        Q.tag_rows(docs, [ASSERTS[0], ASSERTS[0]])
+    # the suite's row-local kinds tag like row asserts
+    tagged = Q.tag_rows(docs, [S.not_null("text"), S.bounds("n_chars", 0, 100)])
+    rows = {r.doc_id: list(r.violated_checks) for r in tagged.collect()}
+    assert rows == {
+        1: [],
+        2: [],
+        3: ["not_null_text"],
+        4: ["value_bounds_n_chars"],
+    }

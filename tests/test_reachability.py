@@ -81,13 +81,6 @@ ALLOWED = {
     "operators.layout.write_clustered": "Z-order layout: the clustered write",
     "operators.patterns.suggest_value_patterns": "pattern profiling: suggested allow-list",
     "operators.robots.parse_sitemaps": "robots.txt: sitemap URLs",
-    # Streaming twins of batch drift lenses, checked bit-for-bit against
-    # them; no CLI flag starts them.
-    "streaming.cusum_stream.cusum_walk_stream": "streaming CUSUM walk",
-    "streaming.cusum_stream._make_walk_fn": "streaming CUSUM walk: per-group state",
-    "streaming.numeric_stream.numeric_drift_stream": "streaming numeric drift",
-    "streaming.numeric_stream.streaming_window_histogram": "streaming numeric drift: window histograms",
-    "streaming.numeric_stream._make_drift_fn": "streaming numeric drift: per-group state",
 }
 
 

@@ -234,14 +234,15 @@ def test_stream_validate_cli_quarantine(spark, tmp_path):
         r[Q.STATUS_COL]: r.n_rows for r in Q.split_counts(rows).collect()
     }
     # batch twin over the same delivered rows
-    import pyspark.sql.functions as F  # noqa: F811
     from anomalydetector_spark.operators.asserts import RowAssert
+    from anomalydetector_spark.plans import suite as S
 
     batch = Q.tag_rows(
         spark.read.parquet(in_dir),
-        (RowAssert("text_nonempty", "text IS NOT NULL AND length(text) > 0"),),
-        extra_tags=[F.when(F.col("warc_ts").isNull(),
-                           F.lit("not_null_warc_ts"))],
+        [
+            RowAssert("text_nonempty", "text IS NOT NULL AND length(text) > 0"),
+            S.not_null_ts("warc_ts"),
+        ],
     )
     batch_counts = {
         r[Q.STATUS_COL]: r.n_rows for r in Q.split_counts(batch).collect()

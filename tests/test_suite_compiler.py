@@ -269,3 +269,44 @@ def test_suite_rejects_repeated_check(spark):
         "unique_url",
         "unique_url",
     ]
+
+
+def test_bounds_needs_both_limits():
+    """A bounds check without a limit would compare against NULL and
+    never fail: the JSON loader and direct construction reject it."""
+    import pytest
+
+    with pytest.raises(ValueError, match="checks\\[0\\].*lower"):
+        S.specs_from_json([{"kind": "bounds", "column": "v"}])
+    with pytest.raises(ValueError, match="upper"):
+        S.specs_from_json([{"kind": "bounds", "column": "v", "lower": 0}])
+    with pytest.raises(ValueError, match="lower"):
+        S.CheckSpec("bounds", column="v", upper=1.0)
+    assert S.bounds("v", 0.0, 1.0).upper == 1.0
+
+
+def test_suite_takes_row_asserts_and_fd_pairs(spark):
+    """Row asserts and functional-dependency pairs are suite specs like
+    any CheckSpec: counters on the one cube, rows on the one tagged
+    scan."""
+    from anomalydetector_spark.operators.asserts import RowAssert
+
+    df = spark.createDataFrame(
+        [("u1", "a.com", 1.0), ("u1", "b.com", -1.0), ("u2", "a.com", 2.0)],
+        "url string, domain string, v double",
+    )
+    res = S.run_suite(
+        df,
+        [RowAssert("pos", "v > 0"), ("url", "domain"), S.not_null("v")],
+        persist_scans=False,
+    )
+    v = {r.check_name: r.violation_count for r in res.verdicts.collect()}
+    assert v == {"assert_pos": 1, "fd_url_domain": 1, "not_null_v": 0}
+    rows = sorted(
+        (r.check_name, r.url) for r in res.violations.collect()
+    )
+    assert rows == [
+        ("assert_pos", None),
+        ("fd_url_domain", "u1"),
+        ("fd_url_domain", "u1"),
+    ]

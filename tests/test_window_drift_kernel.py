@@ -42,5 +42,9 @@ def test_histogram_distances_hand_computed():
     # all mass moves two bins right: EMD = 2 bins, TVD = L∞ = 1
     linf, tvd, emd, hit = histogram_distances([0, 0, 4], [4, 0, 0])
     assert (linf, tvd, emd, hit) == (1.0, 1.0, 2.0, 2)
+    # partial overlap, equal totals: x_i = 4·(c_i − d_i) = [-12, 4, 8, 0]
+    # over den 16; cumulative -12, -8, 0, 0 → Σ|cum| = 20
+    linf, tvd, emd, hit = histogram_distances([0, 2, 2, 0], [3, 1, 0, 0])
+    assert (linf, tvd, emd, hit) == (12 / 16, (12 + 4 + 8) / 16 / 2, 20 / 16, 3)
     # disjoint supports: JS divergence is exactly 1 bit
     assert js_tvd(np.array([1.0, 0.0]), np.array([0.0, 1.0])) == (1.0, 1.0)

@@ -5,6 +5,8 @@ assert the plan properties that matter at 100 TB:
   partial-aggregates map-side before its shuffle,
 * referential + duplicate-violation joins go broadcast, and a check
   suite's verdicts read one rollup through one generator,
+* with ``verify_text_extraction`` on, ``html`` is read by one scan of
+  the verdicts (the cube's),
 * filters on the scan are pushed (PushedFilters),
 * the drift tail is one grouped pandas pass (no Window / sort-merge
   join) and the verdict path runs no Python,
@@ -222,6 +224,21 @@ def main() -> None:
         n_scans == 1 and "InMemoryTableScan" in viol_plan,
         f"{n_scans} executed parquet scans + cached profile",
     )
+    # the opt-in text-extraction check is a counter on the cube: html is
+    # read by the cube's scan and by no other scan of the verdicts
+    from anomalydetector_spark.plans.audit import scan_columns
+
+    tx = run_validation(
+        pages, domains, ValidationConfig(verify_text_extraction=True)
+    )
+    html_scans = [c for c in scan_columns(tx.verdicts) if "html" in c]
+    ok &= check(
+        "verify_text_extraction: html is read by one verdicts scan, the cube's",
+        len(html_scans) == 1
+        and any("html" in c for c in scan_columns(tx.cached[0])),
+        f"{len(html_scans)} verdicts scans read html",
+    )
+    tx.unpersist()
     # the drift tail derives and scores every stat series in ONE grouped
     # pandas pass over the cached cube + profile; Window nodes or a
     # sort-merge join here mean series derivation moved back into Catalyst
